@@ -36,7 +36,8 @@ def register_subjects(
         ids_long,
         registry,
         batch_salt=batch_salt,
-        # Python literal: stable across every action on this lazy plan
+        # one constant per batch; the result is materialized, so every
+        # action on the response reads the same minted GSIDs
         mint_ts_ms=F.lit(int(_time.time() * 1000)),
     )
     linked = ids_long.groupBy("record_key").agg(

@@ -41,7 +41,8 @@ from idhub_spark.functions.expressions import gsid_expr, null_normalize_expr
 
 
 def _cc_runtime(df: DataFrame, checkpoint_dir: str | None):
-    """Checkpoint strategy for the CC loops.
+    """Checkpoint strategy for the CC loops and for resolve_identities'
+    materialization points.
 
     Default (checkpoint_dir=None): localCheckpoint — truncates lineage
     into executor-local block storage. Fast, but on a real cluster a
@@ -481,6 +482,14 @@ def resolve_identities(
       (record_key, action, global_subject_id, matched_gsids,
        requires_review, component)
 
+    The returned frame is MATERIALIZED: the call runs its jobs eagerly
+    and returns a lineage-truncated frame (checkpointed through
+    _cc_runtime, like the CC loop: localCheckpoint by default, reliable
+    checkpoint under spark.idhub.cc.checkpointDir). Every action on it
+    reads the same rows without re-running the resolution, so a
+    pipeline's report, conflict check and sinks agree on every minted
+    GSID, and their plans stay small.
+
     create_new components mint ONE deterministic GSID per component,
     so two records sharing an unseen identifier inside the batch agree
     on the minted GSID — matching the reference's sequential semantics
@@ -503,7 +512,9 @@ def resolve_identities(
     (e.g. unix_millis(current_timestamp())) in production jobs so the
     GSID timestamp prefix is the true mint time.
     """
-    matched = match_registry(ids_long, registry, aliases)
+    ckpt, _ = _cc_runtime(ids_long, checkpoint_dir)
+    # materialized once: read by dispatch, the CC edges and the mint seeds
+    matched = ckpt(match_registry(ids_long, registry, aliases))
     dispatched = dispatch_matches(matched)
 
     if within_batch_cc:
@@ -571,6 +582,8 @@ def resolve_identities(
             (F.col("requires_review") | multi).alias("requires_review"),
             "component",
         )
+        # the mint chain below reads dispatched three times
+        dispatched = ckpt(dispatched)
     else:
         dispatched = dispatched.withColumn("component", F.col("record_key")).drop(
             "_oldest"
@@ -645,7 +658,7 @@ def resolve_identities(
             F.col("_hit").isNotNull().alias("_mint_collision"),
         )
     )
-    return (
+    return ckpt(
         dispatched.join(cand, "component", "left")
         .select(
             "record_key",

@@ -40,6 +40,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.errors import AnalysisException, UnsupportedOperationException
+from pyspark.sql.types import IntegralType
 
 from idhub_spark.operators.merge import MODES, merge_upsert
 
@@ -371,15 +372,31 @@ def partition_pruned_upsert(
     # overwrite, trivially.
     fs_root, jroot = _hadoop_fs(spark, table_root)
     _pfx = f"{bucket_col}="
+    # directory names parse to bucket_of's output type, so on_disk
+    # compares equal to bucket_of values (touched, delete buckets)
+    int_buckets = isinstance(inc.schema[bucket_col].dataType, IntegralType)
     on_disk = set()
     for _st in fs_root.listStatus(jroot):
         _nm = _st.getPath().getName()
-        if _st.isDirectory() and _nm.startswith(_pfx):
-            _v = _nm[len(_pfx):]
-            # bucket values are ints throughout this engine (pmod
-            # expressions); keep the raw name as a fallback so an
-            # exotic layout still round-trips against bucket_of output
-            on_disk.add(int(_v) if _v.lstrip("-").isdigit() else _v)
+        if not (_st.isDirectory() and _nm.startswith(_pfx)):
+            continue
+        _v = _nm[len(_pfx):]
+        if _v == "__HIVE_DEFAULT_PARTITION__":
+            # null bucket: no bucket_of value maps here, so it is never
+            # scanned, rewritten or counted
+            continue
+        if not int_buckets:
+            on_disk.add(_v)
+        elif _v.lstrip("-").isdigit() and str(int(_v)) == _v:
+            on_disk.add(int(_v))
+        else:
+            # Spark reads bucket=05 as bucket 5, but the overwrite
+            # writes bucket=5: the same keys would live in two dirs
+            raise ValueError(
+                f"non-canonical bucket directory {_nm!r} under {table_root}: "
+                f"{bucket_col} is an integer bucket id, written as "
+                f"{bucket_col}=<int>; repair or reseed the layout"
+            )
     n_total = len(on_disk)
     if widen:
         # widen every bucket in this pass: pruning is disabled for the
@@ -449,49 +466,50 @@ def partition_pruned_upsert(
     # write's merged image (three union branches over the same
     # classified frame) re-executed the join's stage tails per branch
     # (exchange reuse shares exchanges, not tails). The cache is
-    # bounded by batch + touched-bucket rows; released before phase 2.
+    # bounded by batch + touched-bucket rows.
     cls = mr.classified.persist()
-    if widen:
-        # evolving batch: every bucket rewrites so the new columns /
-        # types exist uniformly, changes or not
-        rewrite = touched
-    else:
-        active = (
-            cls.filter(F.col("change_type").isin(take))
-            .select(bucket_of(cls).alias(bucket_col))
-            .distinct()
-        )
-        rewrite = [r[0] for r in active.collect()]
-        # deletion-only buckets rewrite as well
-        rewrite = rewrite + [b for b in del_buckets if b not in set(rewrite)]
-    merged = mr.merged.withColumn(
-        bucket_col, F.coalesce(F.col(bucket_col), bucket_of(mr.merged))
-    )
-    to_write = merged.filter(F.col(bucket_col).isin(rewrite))
     rows_rewritten = 0
-    if rewrite:
-        # Two-phase write: the merged image's lineage READS the very
-        # partitions the overwrite replaces (self-overwrite — task
-        # re-execution after commit would find its input files gone).
-        # Stage the touched-bucket image to a sibling dir, then
-        # dynamic-overwrite FROM the staged copy. Cost: 2x the touched
-        # partitions' write I/O — still bounded by the batch, never by
-        # table size — and the staged copy doubles as the crash-recovery
-        # artifact (rerunning phase 2 is idempotent).
-        staging = table_root.rstrip("/") + "_staging"
-        # row count + present-bucket set are observed as side effects
-        # of the phase-1 write itself (aggregate metrics over the rows
-        # flowing through), replacing a full read-back count() of the
-        # staged data — one fewer scan of the touched buckets per
-        # upsert; collect_set is bounded by n_buckets values
-        from pyspark.sql import Observation
+    present: set = set()
+    staging = table_root.rstrip("/") + "_staging"
+    try:
+        if widen:
+            # evolving batch: every bucket rewrites so the new columns /
+            # types exist uniformly, changes or not
+            rewrite = touched
+        else:
+            active = (
+                cls.filter(F.col("change_type").isin(take))
+                .select(bucket_of(cls).alias(bucket_col))
+                .distinct()
+            )
+            rewrite = [r[0] for r in active.collect()]
+            # deletion-only buckets rewrite as well
+            rewrite = rewrite + [b for b in del_buckets if b not in set(rewrite)]
+        if rewrite:
+            # Two-phase write: the merged image's lineage READS the very
+            # partitions the overwrite replaces (self-overwrite — task
+            # re-execution after commit would find its input files gone).
+            # Stage the touched-bucket image to a sibling dir, then
+            # dynamic-overwrite FROM the staged copy. Cost: 2x the touched
+            # partitions' write I/O — still bounded by the batch, never by
+            # table size — and the staged copy doubles as the crash-recovery
+            # artifact (rerunning phase 2 is idempotent).
+            merged = mr.merged.withColumn(
+                bucket_col, F.coalesce(F.col(bucket_col), bucket_of(mr.merged))
+            )
+            to_write = merged.filter(F.col(bucket_col).isin(rewrite))
+            # row count + present-bucket set are observed as side effects
+            # of the phase-1 write itself (aggregate metrics over the rows
+            # flowing through), replacing a full read-back count() of the
+            # staged data — one fewer scan of the touched buckets per
+            # upsert; collect_set is bounded by n_buckets values
+            from pyspark.sql import Observation
 
-        obs = Observation()
-        # co-partition on the bucket before writing: one task -> one
-        # bucket directory -> one file, instead of every shuffle task
-        # spraying a sliver into every touched bucket (small-files
-        # explosion: tasks x buckets files per batch)
-        try:
+            obs = Observation()
+            # co-partition on the bucket before writing: one task -> one
+            # bucket directory -> one file, instead of every shuffle task
+            # spraying a sliver into every touched bucket (small-files
+            # explosion: tasks x buckets files per batch)
             (
                 to_write.observe(
                     obs,
@@ -507,14 +525,15 @@ def partition_pruned_upsert(
                 .parquet(staging)
             )
             rows_rewritten = obs.get["rows"]
-            present: set = set(obs.get["bkts"])
-        finally:
-            # release the classification cache whether or not the
-            # staged write survived (a long-running ingest loop must
-            # not leak a cache per failed trigger), and always BEFORE
-            # the phase-2 overwrite (its lineage reads the files phase
-            # 2 replaces; nothing consumes it past this point)
-            cls.unpersist()
+            present = set(obs.get["bkts"])
+    finally:
+        # release the classification cache on every exit path (a
+        # long-running ingest loop must not leak a cache per failed
+        # trigger), and always BEFORE the phase-2 overwrite (its
+        # lineage reads the files phase 2 replaces; nothing consumes it
+        # past this point)
+        cls.unpersist()
+    if rewrite:
         if rows_rewritten:
             (
                 spark.read.parquet(staging)
@@ -540,8 +559,6 @@ def partition_pruned_upsert(
         # hadoop fs delete (not shutil): table_root may be s3a://
         jpath = jsc._jvm.org.apache.hadoop.fs.Path(staging)
         jpath.getFileSystem(jsc._jsc.hadoopConfiguration()).delete(jpath, True)
-    else:
-        cls.unpersist()
     return PrunedUpsertStats(
         n_buckets_total=n_total,
         n_buckets_touched=len(touched),

@@ -77,9 +77,10 @@ def redcap_sync(
 
     # identity resolution (the one join that replaces per-record HTTP)
     ids_long = unpivot_candidates(mapped, record_key, mapping.subject_id_candidates)
-    # Python-literal mint time: one value across ALL output sinks of
-    # this lazy plan (current_timestamp() re-freezes per execution and
-    # would mint different GSIDs per sink for the same record)
+    # resolve_identities returns a materialized frame: every output sink
+    # below reads one execution of the mint, so a record's GSID is the
+    # same in subjects, local ids, specimen and sequence. The mint time
+    # stays a Python literal: one constant per batch.
     import time as _time
 
     resolved = resolve_identities(

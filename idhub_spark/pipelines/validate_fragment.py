@@ -2,17 +2,22 @@
 fragment-validator/main.py -> validator.process_local_file,
 services/validator.py:33-178).
 
-One job instead of the reference's read -> per-row ThreadPool HTTP ->
-pandas pipeline:
+One batch dataflow instead of the reference's read -> per-row
+ThreadPool HTTP -> pandas pipeline:
 
   csv_scan -> mapping projection -> schema validation ->
   unpivot candidates -> batch identity resolution (the join IS the
   parallelism) -> conflict detection vs the live registry ->
   staging write + validation report.
 
-Scale: the only shuffles are the resolution join (on the normalized
-identifier) and the conflict join (same key — the exchange is
-reusable); everything else is projection over the fragment scan.
+Where the resolution is materialized: resolve_identities runs its
+jobs inside this call and returns a checkpointed, lineage-truncated
+frame (its registry match, its component-adopted dispatch and its
+result are each materialized once; operators/identity.py). The
+conflict count, the report's stats and the staged sinks (`mapped`,
+`local_id_records`) all read that frame: what each of them executes
+is the fragment scan, the unpivot and joins onto the resolved rows,
+never the resolution itself.
 """
 
 from __future__ import annotations
@@ -94,12 +99,13 @@ def validate_fragment(
     # 4) identity resolution as one batch join (replaces the
     # ThreadPool HTTP fan-out, subject_id_resolver.py:20-188)
     ids_long = unpivot_candidates(mapped, record_key, mapping.subject_id_candidates)
-    # batch_salt makes mint seeds batch-globally unique; the mint
-    # timestamp is captured ONCE as a Python literal — current_timestamp()
-    # would re-freeze per query execution, and the pipeline's several
-    # output sinks (subjects write, link-back, report) are separate
-    # executions of this lazy plan, which would mint DIFFERENT GSIDs
-    # for the same record in different sinks
+    # batch_salt makes mint seeds batch-globally unique.
+    # resolve_identities returns a materialized frame, so the conflict
+    # check, the report and both staged sinks read ONE execution of the
+    # mint: a record carries the same GSID in every sink
+    # (tests/test_operators.py pins it even for a per-execution
+    # current_timestamp() mint time). The mint time stays a Python
+    # literal: one constant per batch, taken when the batch starts.
     import time as _time
 
     resolved = resolve_identities(

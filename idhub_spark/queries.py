@@ -198,7 +198,8 @@ _DRIVER_ORDER = [
     # (ann_topk_ivf, ann_topk_multiprobe, redcap_dictionary_scan,
     # rest_paginated_scan, exact_dedup, embedding_norm_stats) — their
     # r18 evidence is inside the <=3-round policy (due r21), their r20
-    # plans are A/B-dump-proven invariant (plans/r20/*_noop_*.txt), and
+    # plans are A/B-dump-proven invariant (plans/r20/*_planAB_*.txt,
+    # plans/r20/planAB_README.md), and
     # every slot they could take belongs to a row that is either
     # r20-CHANGED or policy-DUE now.
 ]

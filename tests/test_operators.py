@@ -317,6 +317,70 @@ def test_mint_registry_collision_remints(spark):
     assert not second.requires_review
 
 
+def _mixed_batch(spark):
+    """Link, conflict, a lone mint and a two-record mint component."""
+    return spark.createDataFrame(
+        [
+            (1, "IBDGC-001", "consortium"),
+            (2, "IBDGC-003", "consortium"),
+            (2, "SHARED-X", "site"),
+            (3, "NEW-LONE", "consortium"),
+            (4, "NEW-PAIR", "consortium"),
+            (5, "NEW-PAIR", "consortium"),
+            (5, "NEW-OTHER", "site"),
+        ],
+        ["record_key", "local_subject_id", "identifier_type"],
+    )
+
+
+def test_resolution_result_is_materialized(spark):
+    """resolve_identities returns a materialized frame: the mint runs
+    once, so a per-query mint time (current_timestamp() freezes when a
+    query is planned) yields the same GSIDs in every query over the
+    result. A derived frame is planned anew, as each pipeline sink is."""
+    import time
+
+    res = resolve_identities(
+        _mixed_batch(spark),
+        _registry(spark),
+        batch_salt="b",
+        mint_ts_ms=F.unix_millis(F.current_timestamp()),
+    )
+    first = sorted(res.collect())
+    time.sleep(0.05)
+    second = sorted(res.select("*").collect())
+    assert first == second
+    assert {r.action for r in first} >= {"create_new", "link_existing"}
+
+
+def test_resolution_reliable_checkpoint_same_rows(spark, tmp_path):
+    """With spark.idhub.cc.checkpointDir set, the resolution's
+    materialization points checkpoint reliably like the CC loop does,
+    and the rows match the executor-local default."""
+    import os
+
+    reg = _registry(spark)
+
+    def run(**kw):
+        return sorted(resolve_identities(_mixed_batch(spark), reg, batch_salt="b", **kw).collect())
+
+    local, local_no_cc = run(), run(within_batch_cc=False)
+    ck = tmp_path / "ckpt_no_cc"
+    try:
+        spark.conf.set("spark.idhub.cc.checkpointDir", str(tmp_path / "ckpt"))
+        reliable = run()
+        # without the CC loop every checkpoint written is one of the
+        # resolution's own materialization points
+        spark.conf.set("spark.idhub.cc.checkpointDir", str(ck))
+        reliable_no_cc = run(within_batch_cc=False)
+    finally:
+        spark.conf.unset("spark.idhub.cc.checkpointDir")
+    assert reliable == local
+    assert reliable_no_cc == local_no_cc
+    rdds = [d for _, dirs, _ in os.walk(ck) for d in dirs if d.startswith("rdd-")]
+    assert rdds, "the materialization points ignored the reliable mode"
+
+
 # --- change classification / merge ----------------------------------------
 
 

@@ -454,6 +454,30 @@ def test_mint_consistent_across_sinks(spark):
     assert g1 == g2 == g3
 
 
+def test_validate_fragment_sinks_read_materialized_resolution(spark):
+    """The staged sinks read the materialized resolution: neither sink
+    plan carries the mint's Window or the dispatch/seed collect_set
+    aggregates, either of which would mean the sink re-executes the
+    whole resolution."""
+    res = validate_fragment(
+        spark,
+        _fragment(spark),
+        _MAPPING,
+        registry=_registry(spark),
+        existing_ids=_registry(spark).select(
+            "local_subject_id",
+            "global_subject_id",
+            F.lit("consortium").alias("identifier_type"),
+            F.lit(5).alias("center_id"),
+        ),
+        batch_id="bplan",
+    )
+    for name in ("mapped", "local_id_records"):
+        plan = getattr(res, name)._jdf.queryExecution().executedPlan().toString()
+        assert not re.search(r"\bWindow\b", plan), (name, plan)
+        assert "collect_set" not in plan, (name, plan)
+
+
 def test_load_mappings_by_table_multi_table_config():
     """The REAL gap_field_mappings.json shape: five target tables, 46
     specimen sample columns all targeting 'sample_id'. Grouped

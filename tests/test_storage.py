@@ -634,6 +634,104 @@ def test_partition_pruned_upsert_rejects_layout_mismatch(spark, tmp_path):
         )
 
 
+def test_partition_pruned_upsert_releases_cache_on_failure(spark, tmp_path, monkeypatch):
+    """The classification cache is released on every exit path: a
+    failure inside the rewrite-set collect must not leave it pinned
+    in the cache manager."""
+    import pytest
+    from pyspark.storagelevel import StorageLevel
+
+    from idhub_spark.operators.merge_into import partition_pruned_upsert
+
+    root = str(tmp_path / "reg_leak")
+    _seed_small_registry(spark, root)
+    incoming = spark.createDataFrame([(0, "name0", 99.0)], ["k", "name", "val"])
+    frame_cls = type(incoming)
+    persisted = []
+    real_persist = frame_cls.persist
+
+    def tracking_persist(self, *a, **kw):
+        persisted.append(self)
+        return real_persist(self, *a, **kw)
+
+    monkeypatch.setattr(frame_cls, "persist", tracking_persist)
+
+    def failing_bucket_of(df):
+        # the classified frame (it carries change_type) fails at
+        # execution, i.e. inside the rewrite-set collect
+        if "change_type" in df.columns:
+            return F.raise_error(F.lit("injected bucket failure")).cast("int")
+        return (F.col("k") % 8).cast("int")
+
+    with pytest.raises(Exception, match="injected bucket failure"):
+        partition_pruned_upsert(
+            spark, root, incoming, ["k"], n_buckets=8, bucket_of=failing_bucket_of
+        )
+    assert persisted, "the upsert persisted nothing"
+    assert all(df.storageLevel == StorageLevel.NONE for df in persisted)
+
+
+def test_partition_pruned_upsert_skips_null_bucket_dir(spark, tmp_path):
+    """A bucket_col=__HIVE_DEFAULT_PARTITION__ directory (null bucket)
+    is no bucket: it neither counts toward n_buckets_total nor joins
+    the widened rewrite set, where it would mix a string into the
+    int bucket ids."""
+    import os
+
+    from idhub_spark.operators.merge_into import partition_pruned_upsert
+
+    bucket_of = lambda df: (F.col("k") % 8).cast("int")  # noqa: E731
+    root = str(tmp_path / "reg_null_bucket")
+    _seed_small_registry(spark, root)
+    spark.createDataFrame([(999, "orphan", 0.0)], ["k", "name", "val"]).write.parquet(
+        os.path.join(root, "_bucket=__HIVE_DEFAULT_PARTITION__")
+    )
+    s = partition_pruned_upsert(
+        spark, root,
+        spark.createDataFrame([(0, "name0", 99.0)], ["k", "name", "val"]),
+        ["k"], n_buckets=8, bucket_of=bucket_of,
+    )
+    assert s.n_buckets_total == 8 and s.n_buckets_rewritten == 1
+    s = partition_pruned_upsert(
+        spark, root,
+        spark.createDataFrame([(1, "name1", 5.0, "s1")], ["k", "name", "val", "src"]),
+        ["k"], n_buckets=8, bucket_of=bucket_of, evolve="rewrite",
+    )
+    assert s.n_buckets_total == 8 and s.n_buckets_rewritten == 8
+    rows = {r.k: r.val for r in spark.read.parquet(root).filter("_bucket IS NOT NULL").collect()}
+    assert rows[0] == 99.0 and rows[1] == 5.0 and len(rows) == 16
+
+
+def test_partition_pruned_upsert_rejects_non_canonical_bucket_dir(spark, tmp_path):
+    """Under the default bucket_of the bucket ids are ints, whose
+    directory names are canonical: bucket=05 is not written by this
+    engine, and reading it as bucket 5 would let the overwrite create
+    a second bucket=5 directory holding the same keys."""
+    import glob
+    import os
+
+    import pytest
+
+    from idhub_spark.operators.merge_into import (
+        partition_pruned_upsert,
+        seed_bucketed_table,
+    )
+
+    root = str(tmp_path / "reg_noncanon")
+    seed_bucketed_table(
+        spark.createDataFrame(
+            [(k, f"name{k}", float(k)) for k in range(64)], ["k", "name", "val"]
+        ),
+        root, ["k"], n_buckets=8,
+    )
+    d = sorted(glob.glob(os.path.join(root, "_bucket=*")))[0]
+    b = d.rsplit("=", 1)[1]
+    os.rename(d, os.path.join(root, f"_bucket=0{b}"))
+    incoming = spark.createDataFrame([(0, "name0", 99.0)], ["k", "name", "val"])
+    with pytest.raises(ValueError, match="non-canonical"):
+        partition_pruned_upsert(spark, root, incoming, ["k"], n_buckets=8)
+
+
 def test_compact_small_files_shrinks_and_preserves(spark, tmp_path):
     """Compaction must reduce the file count to ceil(total/target)
     and preserve every row byte-exactly (verified the way production
