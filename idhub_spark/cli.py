@@ -395,9 +395,9 @@ def _cmd_dedup_index(args) -> int:
         n_hashes, bands, pb, db = _load_params(spark, args.index.rstrip("/"))
         rows = minhash_index_stats(spark, args.index).collect()
         from idhub_spark.operators.dedup_index import _RERUN_MARKER
-        from idhub_spark.operators.merge_into import _hadoop_fs
+        from idhub_spark import commit
 
-        fs_m, jmark = _hadoop_fs(
+        fs_m, jmark = commit.hadoop_fs(
             spark, f"{args.index.rstrip('/')}/{_RERUN_MARKER}"
         )
         print(json.dumps({

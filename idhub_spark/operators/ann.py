@@ -56,17 +56,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-# one source of truth for ingest-log retention (rationale documented
-# at the constant's definition); no import cycle — dedup_index never
-# imports ann
-from idhub_spark.operators.dedup_index import (
-    INGEST_LOG_HORIZON_S,
-    _ingest_log_has,
-    _marker_name,
-    _marker_parse,
-    _prune_ingest_log,
-    _record_ingest_entries,
-)
+from idhub_spark import commit
 
 # assignment quantization: round(x * 1000) — exact-integer cluster
 # geometry at 1e-3 resolution
@@ -952,151 +942,91 @@ def _ivf_index_materialize(
         # new index would mix codec generations) and the ingest log's
         # batch ids name batches of the old corpus — clear both, the
         # minhash_index_write discipline
-        from idhub_spark.operators.merge_into import _hadoop_fs
-
         spark = vectors.sparkSession
-        fs, _ = _hadoop_fs(spark, path)
-        for stale in (_APPEND_STAGING, _INGEST_LOG):
-            jst = _hadoop_fs(spark, f"{path.rstrip('/')}/{stale}")[1]
+        fs, _ = commit.hadoop_fs(spark, path)
+        for stale in (_APPEND_STAGING, commit.INGEST_LOG):
+            jst = commit.hadoop_fs(spark, f"{path.rstrip('/')}/{stale}")[1]
             if fs.exists(jst):
                 fs.delete(jst, True)
         _enc(centroids).write.mode(mode).partitionBy("cluster").parquet(path)
         return None
 
-    # STAGED append (r15 — the dedup index's exactly-once protocol):
-    # the old direct write.mode('append') was job-atomic but left no
-    # record, so an at-least-once retry of an append that committed
-    # without being acknowledged landed the batch twice under
-    # duplicate vec_ids. Stage the batch's partition tree, mark
-    # _BATCH_<key> (when batch_id given) then _COMMITTED, and promote
-    # by file renames — the ingest-log entry is created after the
-    # renames and before the staging delete, so it exists iff the
-    # batch's rows are fully live at every crash point
-    # (_promote_append_staging), and a retry whose key is logged
-    # returns 'duplicate' without reading the batch.
-    from idhub_spark.operators.dedup_index import _batch_key
-    from idhub_spark.operators.merge_into import _hadoop_fs
-
+    # STAGED append — the exactly-once protocol of the dedup index:
+    # stage the batch's partition tree, commit (with _BATCH_<key> when a
+    # batch_id is given), apply by file renames; a retry whose key is
+    # logged returns 'duplicate' without reading the batch.
     spark = vectors.sparkSession
     root = path.rstrip("/")
-    # MANDATORY maintenance settle (ADVICE r15 medium): the append is a
-    # writer, and _settle_append_staging's own contract says writers
-    # must never act on an index they can't fully see. Without this, an
-    # append after a merge/split crashed mid-phase-2 would (a) promote
-    # new vectors into a still-present recorded cold/victim directory —
-    # the NEXT settle resumes the maintenance and re-deletes that dir,
-    # silently destroying the appended rows (the staged reassignment
-    # predates the append) — or (b) assign against caller-passed
-    # centroids that predate the resume, re-creating a deleted cluster
-    # dir as a zombie no probe ever routes to. Resuming first closes
-    # both; when a resume ran, its centroid set is the authoritative
-    # one for this batch's assignment (the caller's frame predates it).
-    # Runs BEFORE the append-staging settle (the ordering argument in
-    # _settle_append_staging's docstring).
-    resumed = _settle_pending_maintenance(spark, root)
+    # the append is a writer: every pending staging settles first, and
+    # a resumed split/merge's centroid set is authoritative for this
+    # batch's assignment (the caller's frame predates it — assigning
+    # against it could recreate a deleted cluster dir as a zombie)
+    _, resumed = _recover(spark, root)
     if resumed is not None:
         centroids = resumed
-    _settle_append_staging(spark, root)
-    if batch_id is not None and _ingest_log_has(
-        spark, root, _batch_key(batch_id)
+    if batch_id is not None and commit.ingest_log_has(
+        spark, root, commit.batch_key(batch_id)
     ):
         return "duplicate"
-    staging = f"{root}/{_APPEND_STAGING}"
+    sc = commit.StagedCommit(spark, root, _APPEND_STAGING)
     _enc(centroids).write.mode("overwrite").partitionBy("cluster").parquet(
-        f"{staging}/data"
+        f"{sc.path}/data"
     )
-    fs, jmark = _hadoop_fs(spark, f"{staging}/_COMMITTED")
-    if batch_id is not None:
-        # part of the staging BEFORE the commit marker: a discarded
-        # (uncommitted) staging must never leave a log entry
-        _, jb = _hadoop_fs(spark, f"{staging}/_BATCH_{_batch_key(batch_id)}")
-        fs.create(jb, True).close()
-    fs.create(jmark, True).close()
-    _promote_append_staging(spark, root)
+    sc.commit(batch_id=batch_id)
+    sc.settle(lambda: _apply_append_staging(spark, root))
     return "appended"
 
 
 _APPEND_STAGING = "_append_staging"
-_INGEST_LOG = "_ingest_log"
+_SPLIT_STAGING = "_split_staging"
+_MERGE_STAGING = "_merge_staging"
 
 
-def _promote_append_staging(spark, root: str) -> None:
-    """Rename a committed append staging's files into the live cluster
-    directories (append-only: existing files never touched — the
-    staged part-file names are write-unique, _move_tree raises on any
-    collision with the staging intact). _BATCH_<key> markers become
-    <root>/_ingest_log/<key>.<accept_ms> entries (accept time in the
-    name — storage-independent age, dedup_index._marker_parse) AFTER
-    the renames and BEFORE the
-    staging delete: a crash between renames and log write re-promotes
-    (no-op) then writes the log; between log write and staging delete
-    both steps are idempotent — so the log entry exists iff the
-    batch's rows are fully live, the exactly-once test the retry
-    path needs."""
-    from idhub_spark.operators.dedup_index import _move_tree
-    from idhub_spark.operators.merge_into import _hadoop_fs
-
-    staging = f"{root}/{_APPEND_STAGING}"
-    fs, jstag = _hadoop_fs(spark, staging)
-    batch_keys = [
-        st.getPath().getName()[len("_BATCH_"):]
-        for st in fs.listStatus(jstag)
-        if st.getPath().getName().startswith("_BATCH_")
-    ]
-    _, jdata = _hadoop_fs(spark, f"{staging}/data")
-    if fs.exists(jdata):
-        _move_tree(spark, fs, f"{staging}/data", root)
-    _record_ingest_entries(spark, fs, root, batch_keys)
-    fs.delete(jstag, True)
+def _apply_append_staging(spark, root: str) -> None:
+    """Apply step of a committed append: rename the staged files into
+    the live cluster directories (append-only — staged part-file names
+    are write-unique, and move_tree raises on any failed rename)."""
+    commit.move_tree(spark, f"{root}/{_APPEND_STAGING}/data", root)
 
 
-def _settle_append_staging(spark, root: str, *, best_effort: bool = False) -> None:
-    """Append crash protocol (the dedup index's, ported r15): a
-    staging WITH the _COMMITTED marker was fully written and is
-    promoted (finishing an interrupted rename-in); one without can
-    never have been applied — discard. Every IVF entry point settles
-    first: writers (append/delete/compact/split/merge) mandatorily —
-    they must never act on an index they can't fully see — readers
-    (search/stats) best-effort, degrading to live-files-only with a
-    warning on read-only replicas. Two fs.exists when clean.
+def _recover(spark, root: str, *, best_effort: bool = False):
+    """Settle every pending IVF staging through commit.StagedCommit, in
+    this order: split, merge, then append. Maintenance goes first
+    because an append staging's cluster assignment may predate a
+    crashed split/merge: applying it first could rename its rows into
+    a cold/victim directory the maintenance apply then deletes.
+    best_effort: read-only entry points warn and read live files only.
 
-    ORDER (r16): runs AFTER the split/merge maintenance settles at
-    every entry point that does both. A committed append staging can
-    coexist with a pending maintenance staging only when the append
-    ran after the maintenance crashed (maintenance writers promote any
-    append staging at entry, single-writer assumed) — i.e. only via a
-    pre-r16 append that didn't settle maintenance first, so its
-    cluster assignment may predate the crashed merge/split. Promoting
-    it FIRST would rename its rows into a recorded cold/victim
-    directory the maintenance resume then deletes — silently
-    DESTROYING them; resuming the maintenance first leaves the worst
-    case at 'promoted into a no-longer-routed cluster dir' — rows
-    visible to stats/compact and recoverable by re-assignment, never
-    silently gone. Appends staged by the r16 protocol settled
-    maintenance before assigning, so for them the two orders are
-    equivalent."""
-    from idhub_spark.operators.merge_into import _hadoop_fs
+    Returns (split_cluster, centroids): the source cluster of a resumed
+    split and the freshest resumed centroid set, each None when nothing
+    was resumed (a caller's centroid frame predates a resume)."""
+    split = commit.StagedCommit(spark, root, _SPLIT_STAGING, record="_source_cluster")
+    merge = commit.StagedCommit(spark, root, _MERGE_STAGING, record="_cold_clusters")
+    out = [None, None]
 
-    staging = f"{root}/{_APPEND_STAGING}"
-    try:
-        fs, jstag = _hadoop_fs(spark, staging)
-        if not fs.exists(jstag):
-            return
-        if fs.exists(_hadoop_fs(spark, f"{staging}/_COMMITTED")[1]):
-            _promote_append_staging(spark, root)
-        else:
-            fs.delete(jstag, True)
-    except Exception:
-        if not best_effort:
-            raise
-        import warnings
+    def apply_split():
+        (src,) = split.record_ids()
+        out[:] = [src, _staged_centroids(spark, split)]
+        _apply_split_staging(spark, root, src, out[1])
 
-        warnings.warn(
-            f"ivf index {root!r}: could not settle pending append "
-            "staging (concurrent writer or read-only storage); reading "
-            "live files only",
-            stacklevel=2,
-        )
+    def apply_merge():
+        out[1] = _staged_centroids(spark, merge)
+        _apply_merge_staging(spark, root, merge.record_ids(), out[1])
+
+    split.settle(apply_split, best_effort=best_effort)
+    merge.settle(apply_merge, best_effort=best_effort)
+    commit.StagedCommit(spark, root, _APPEND_STAGING).settle(
+        lambda: _apply_append_staging(spark, root), best_effort=best_effort
+    )
+    return out[0], out[1]
+
+
+def _staged_centroids(spark, sc: commit.StagedCommit) -> DataFrame:
+    """A staged maintenance's centroid set, pinned before the apply step
+    overwrites _fits/centroids (its lineage may read that parquet)."""
+    return spark.read.parquet(f"{sc.path}/_new_centroids").localCheckpoint(
+        eager=True
+    )
 
 
 def _ivf_index_search(
@@ -1138,10 +1068,10 @@ def _ivf_index_search(
     Deterministic output contract (query_id, neighbor_id, cosine,
     rank); equivalence tests pin byte-identical results vs the
     in-memory compositions."""
-    # settle a pending append staging best-effort (read-only entry
-    # point): a committed-but-unpromoted batch would otherwise be
-    # invisible to the scan until the next writer runs
-    _settle_append_staging(spark, path.rstrip("/"), best_effort=True)
+    # settle best-effort (read-only entry point): a committed but
+    # unapplied batch would otherwise be invisible to the scan until
+    # the next writer runs
+    _recover(spark, path.rstrip("/"), best_effort=True)
     vec_d = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     q = queries.select(F.col(id_col).alias("_id"), vec_d.alias("_v"))
     probes = _assign(q, centroids, nprobe=nprobe)
@@ -1619,14 +1549,12 @@ def ivf_index_load_fits(spark, path: str) -> dict[str, DataFrame]:
     present keys. Raises if the index carries no _fits at all (an
     index written before save_fits was adopted: pass the fits
     explicitly)."""
-    from idhub_spark.operators.merge_into import _hadoop_fs
-
     root = f"{path.rstrip('/')}/_fits"
-    fs, jroot = _hadoop_fs(spark, root)
+    fs, jroot = commit.hadoop_fs(spark, root)
     out: dict[str, DataFrame] = {}
     for name in ("centroids", "bounds", "codebook"):
         d = f"{root}/{name}"
-        _, jd = _hadoop_fs(spark, d)
+        _, jd = commit.hadoop_fs(spark, d)
         if fs.exists(jd):
             out[name] = spark.read.parquet(d)
     if not out:
@@ -1647,27 +1575,15 @@ def ivf_index_stats(spark, path: str) -> DataFrame:
     a re-fit with more clusters or splitting hot clusters). The row
     count reads ONLY the partition column (parquet metadata-weight
     scan); file counts come from input_file_name over the same scan —
-    one job, no vector bytes read. Settles any pending split/merge
-    staging first (ADVICE r12) so the counts never miss rows that live
-    only in a crashed apply's staging; free (four fs.exists) when
-    nothing is pending. The settle is BEST-EFFORT here (read-only
-    entry point — ADVICE r13): losing the race to a concurrent
-    maintenance writer, or reading a read-only replica, degrades to a
+    one job, no vector bytes read. Settles any pending staging first
+    so the counts never miss rows that live only in a committed
+    staging; three fs.exists when nothing is pending. The settle is
+    BEST-EFFORT here (read-only entry point): losing the race to a
+    concurrent writer, or reading a read-only replica, degrades to a
     warning + live-files-only counts instead of failing a health
-    check. Writers (delete/merge/split/compact) keep the mandatory
-    settle; like them, stats assumes a SINGLE maintenance writer."""
-    try:
-        _settle_pending_maintenance(spark, path.rstrip("/"))
-    except Exception:
-        import warnings
-
-        warnings.warn(
-            f"ivf index {path!r}: could not settle pending maintenance "
-            "staging (concurrent writer or read-only storage); counting "
-            "live files only",
-            stacklevel=2,
-        )
-    _settle_append_staging(spark, path.rstrip("/"), best_effort=True)
+    check. Writers keep the mandatory settle; like them, stats assumes
+    a SINGLE maintenance writer."""
+    _recover(spark, path.rstrip("/"), best_effort=True)
     idx = spark.read.parquet(path).select(
         "cluster", F.input_file_name().alias("_f")
     )
@@ -1689,7 +1605,7 @@ def ivf_index_compact(
     dst_path: str,
     *,
     target_bytes: int = 128 * 1024 * 1024,
-    ingest_log_horizon_s: float | None = INGEST_LOG_HORIZON_S,
+    ingest_log_horizon_s: float | None = commit.INGEST_LOG_HORIZON_S,
 ) -> tuple[int, int]:
     """Compact an on-disk IVF index's append debris AND carry its
     _fits sidecar to the compacted copy. The generic
@@ -1709,10 +1625,7 @@ def ivf_index_compact(
     copy. Returns (n_source_files, n_output_files)."""
     from idhub_spark.storage import compact_partitioned
 
-    # maintenance settles BEFORE the append-staging settle (ordering
-    # argument in _settle_append_staging's docstring)
-    _settle_pending_maintenance(spark, src_path.rstrip("/"))
-    _settle_append_staging(spark, src_path.rstrip("/"))
+    _recover(spark, src_path.rstrip("/"))
     n_src, n_out = compact_partitioned(
         spark, src_path, dst_path, "cluster", target_bytes=target_bytes
     )
@@ -1722,227 +1635,40 @@ def ivf_index_compact(
         fits = {}  # externally-managed fits: nothing to carry
     if fits:
         ivf_index_save_fits(spark, dst_path, **fits)
-    # carry the ingest log (r15): the compacted copy holds the same
-    # accepted batches, so their idempotency keys must keep rejecting
-    # retries — each entry is an empty marker file, recreated at dst.
-    # Only entries inside the retry horizon carry (r16, the VERDICT
-    # r15 size bound — minhash_index_compact's twin): the per-entry
-    # driver loop is O(batch_rate x horizon), not O(total batches
-    # ever). Carried entries keep the source's accept time in the dst
-    # FILENAME (r17 — the old fs.setTimes carry silently no-ops on
-    # object stores, resetting the horizon clock at every compact);
-    # legacy bare-key entries canonicalize to the named form with
-    # their source mtime as the accept time.
-    import time
-
-    from idhub_spark.operators.merge_into import _hadoop_fs
-
-    fs, jlog_src = _hadoop_fs(spark, f"{src_path.rstrip('/')}/{_INGEST_LOG}")
-    if fs.exists(jlog_src):
-        cutoff = (
-            int(time.time() * 1000) - int(ingest_log_horizon_s * 1000)
-            if ingest_log_horizon_s is not None
-            else None
-        )
-        for st in fs.listStatus(jlog_src):
-            key, accept_ms = _marker_parse(
-                st.getPath().getName(), st.getModificationTime()
-            )
-            if cutoff is not None and accept_ms < cutoff:
-                continue
-            _, jd = _hadoop_fs(
-                spark,
-                f"{dst_path.rstrip('/')}/{_INGEST_LOG}/"
-                f"{_marker_name(key, accept_ms)}",
-            )
-            fs.create(jd, True).close()
+    # the compacted copy holds the same accepted batches: their
+    # in-horizon keys must keep rejecting retries
+    commit.carry_ingest_log(spark, src_path, dst_path, ingest_log_horizon_s)
     return n_src, n_out
 
 
-def _apply_split_staging(spark, root: str, new_centroids_df) -> None:
-    """Phase 2 of a staged cluster split: FS-rename the staged
-    sub-cluster directories into the index, refresh _fits/centroids
-    when it is persisted, remove the staging. File-level renames are
-    idempotent (each file lives in exactly one place), so a crash
-    anywhere in here is resumable by _settle_split_staging."""
-    from idhub_spark.operators.merge_into import _hadoop_fs
-
-    staging = f"{root}/_split_staging"
-    fs, jst = _hadoop_fs(spark, staging)
-    for status in fs.listStatus(jst):
-        name = status.getPath().getName()
-        if name.startswith("cluster="):
-            _, jdst = _hadoop_fs(spark, f"{root}/{name}")
-            fs.rename(status.getPath(), jdst)
-    _, jfits = _hadoop_fs(spark, f"{root}/_fits/centroids")
+def _refresh_fits(spark, root: str, centroids: DataFrame) -> None:
+    """Overwrite _fits/centroids with `centroids` when it is persisted
+    (a stale copy would route no-arg searches to a deleted cluster)."""
+    fs, jfits = commit.hadoop_fs(spark, f"{root}/_fits/centroids")
     if fs.exists(jfits):
-        ivf_index_save_fits(spark, root, centroids=new_centroids_df)
-    fs.delete(jst, True)
+        ivf_index_save_fits(spark, root, centroids=centroids)
 
 
-def _settle_split_staging(spark, root: str):
-    """Resume-or-discard a pending _split_staging (the
-    ivf_index_split_cluster crash protocol, factored out so EVERY
-    maintenance entry point can run it — ADVICE r12 medium: after a
-    crashed split the old cluster dir is gone and its members live
-    ONLY in staging, so a delete/stats/merge/compact that scans the
-    index without settling first misses those rows, and a later split
-    resume would rename retracted vectors back in).
-
-    Keying is unchanged from the in-line original: a staging whose
-    _source_cluster marker is absent/corrupt, or whose recorded source
-    directory still exists, can never have been applied — discard; a
-    marker-valid staging whose source dir is gone crashed mid-apply —
-    resume (finish renames + fits from the staged centroid set).
-    Returns (staged_cluster, resumed_centroids) when a resume ran,
-    else None. Two fs.exists calls when nothing is pending."""
-    from idhub_spark.operators.merge_into import _hadoop_fs
-
-    staging = f"{root}/_split_staging"
-    fs, jstag = _hadoop_fs(spark, staging)
-    if not fs.exists(jstag):
-        return None
-    _, jmark = _hadoop_fs(spark, f"{staging}/_source_cluster")
-    staged_cluster = None
-    if fs.exists(jmark):
-        try:
-            staged_cluster = int(
-                spark.read.parquet(f"{staging}/_source_cluster")
-                .collect()[0]
-                .cluster
-            )
-        except Exception:
-            # a partial/corrupt marker means its write never completed,
-            # and the delete only runs AFTER that write returns — so
-            # the staging is provably unapplied
-            staged_cluster = None
-    if staged_cluster is None:
-        fs.delete(jstag, True)
-        return None
-    _, jold = _hadoop_fs(spark, f"{root}/cluster={staged_cluster}")
-    if fs.exists(jold):
-        # crashed before the delete: nothing was applied — discard
-        fs.delete(jstag, True)
-        return None
-    resumed = spark.read.parquet(f"{staging}/_new_centroids").localCheckpoint(
-        eager=True
-    )
-    _apply_split_staging(spark, root, resumed)
-    return staged_cluster, resumed
+def _apply_split_staging(spark, root: str, src: int, centroids) -> None:
+    """Apply step of a committed split: delete the source cluster dir,
+    rename the staged sub-cluster files in, refresh the fits. Each step
+    is idempotent, so a committed split always resumes — however much
+    of a non-atomic recursive delete had already run."""
+    fs, jold = commit.hadoop_fs(spark, f"{root}/cluster={src}")
+    fs.delete(jold, True)
+    commit.move_tree(spark, f"{root}/{_SPLIT_STAGING}", root)
+    _refresh_fits(spark, root, centroids)
 
 
-def _apply_merge_staging(spark, root: str, new_centroids_df, cold_ids) -> None:
-    """Phase 2 of a staged cold-cluster merge: delete the recorded
-    cold directories, FS-rename the staged re-assigned rows INTO the
-    surviving target directories, refresh _fits/centroids when
-    persisted, remove the staging. Idempotent file-level renames —
-    resumable by _settle_merge_staging.
-
-    The _applying sentinel is written BEFORE the first cold-dir
-    delete (ADVICE r13): a directory delete is not atomic, so a crash
-    mid-delete of the first dir can leave it present with part-files
-    missing — which would pass the settle's all-cold-dirs-present
-    'provably unapplied' test and discard the staged reassigned rows
-    over a half-deleted cluster. The sentinel makes phase-2 entry an
-    explicit fact instead of an inference from directory presence;
-    re-touching it on resume is idempotent."""
-    from idhub_spark.operators.dedup_index import _move_tree
-    from idhub_spark.operators.merge_into import _hadoop_fs
-
-    staging = f"{root}/_merge_staging"
-    fs, jstag = _hadoop_fs(spark, staging)
-    _, japply = _hadoop_fs(spark, f"{staging}/_applying")
-    fs.create(japply, True).close()
+def _apply_merge_staging(spark, root: str, cold_ids, centroids) -> None:
+    """Apply step of a committed cold-merge/adoption: delete the
+    recorded source dirs, rename the staged re-assigned rows INTO the
+    surviving target dirs, refresh the fits. Idempotent."""
     for c in cold_ids:
-        _, jdir = _hadoop_fs(spark, f"{root}/cluster={c}")
+        fs, jdir = commit.hadoop_fs(spark, f"{root}/cluster={c}")
         fs.delete(jdir, True)
-    _, jdata = _hadoop_fs(spark, f"{staging}/data")
-    if fs.exists(jdata):
-        _move_tree(spark, fs, f"{staging}/data", root)
-    _, jfits = _hadoop_fs(spark, f"{root}/_fits/centroids")
-    if fs.exists(jfits):
-        ivf_index_save_fits(spark, root, centroids=new_centroids_df)
-    fs.delete(jstag, True)
-
-
-def _settle_merge_staging(spark, root: str):
-    """Resume-or-discard a pending _merge_staging (the
-    ivf_index_merge_cold_clusters crash protocol, factored out for the
-    same ADVICE r12 reason as _settle_split_staging). Keyed on the
-    _applying PHASE SENTINEL, not directory presence (ADVICE r13 —
-    a crash mid-delete of the first cold dir leaves it present but
-    half-emptied, which a presence test would misread as 'unapplied'
-    and discard the staged rows): sentinel present + readable
-    _cold_clusters → resume (deletes + renames + fits are all
-    idempotent); sentinel absent → phase 2 never started → discard;
-    sentinel present but the cold list unreadable → raise (the
-    sentinel is only written after the cold list's write returned, so
-    this is real corruption, never a benign partial write). Returns
-    the resumed centroid frame, else None."""
-    from idhub_spark.operators.merge_into import _hadoop_fs
-
-    staging = f"{root}/_merge_staging"
-    fs, jstag = _hadoop_fs(spark, staging)
-    if not fs.exists(jstag):
-        return None
-    applying = fs.exists(_hadoop_fs(spark, f"{staging}/_applying")[1])
-    try:
-        staged_cold = [
-            int(r.cluster)
-            for r in spark.read.parquet(f"{staging}/_cold_clusters").collect()
-        ]
-    except Exception:
-        staged_cold = None
-    if staged_cold is None and applying:
-        raise RuntimeError(
-            f"ivf index {root!r}: _merge_staging has the _applying "
-            "sentinel but an unreadable _cold_clusters list — phase 2 "
-            "started against a cold set this settle cannot recover; "
-            "refusing to guess (staging left in place)"
-        )
-    if staged_cold and not applying:
-        # legacy-upgrade fallback (ADVICE r14): stagings written before
-        # the sentinel existed never carry one, so 'sentinel absent'
-        # cannot mean 'phase 2 never started' for them — a pre-upgrade
-        # merge that crashed after deleting cold dirs would be
-        # discarded here WITH the only copy of its re-assigned rows.
-        # A recorded cold dir being MISSING is the old presence-based
-        # proof that phase 2 ran (deletes happen first); resume it.
-        # All-dirs-present keeps the discard: for a legacy staging
-        # that is exactly the old settle's own behavior, and for a
-        # sentinel-era staging phase 2 provably never started.
-        if any(
-            not fs.exists(_hadoop_fs(spark, f"{root}/cluster={c}")[1])
-            for c in staged_cold
-        ):
-            applying = True
-    if not staged_cold or not applying:
-        fs.delete(jstag, True)
-        return None
-    resumed = spark.read.parquet(f"{staging}/_new_centroids").localCheckpoint(
-        eager=True
-    )
-    _apply_merge_staging(spark, root, resumed, staged_cold)
-    return resumed
-
-
-def _settle_pending_maintenance(spark, root: str):
-    """Settle ANY pending split/merge staging before a maintenance op
-    scans the index (ADVICE r12 medium). A marker-valid staging means
-    the index is temporarily missing committed rows (they live only in
-    staging); resuming first makes the subsequent scan complete — the
-    delete path in particular must never report success over an index
-    it couldn't fully see, because the eventual resume would silently
-    reinstate the retracted vectors. Returns the freshest resumed
-    centroid set when any resume ran (callers holding a caller-passed
-    or _fits frame must prefer it — theirs predates the resume), else
-    None. Four fs.exists calls when nothing is pending."""
-    res = _settle_split_staging(spark, root)
-    cents = res[1] if res is not None else None
-    merged = _settle_merge_staging(spark, root)
-    if merged is not None:
-        cents = merged
-    return cents
+    commit.move_tree(spark, f"{root}/{_MERGE_STAGING}/data", root)
+    _refresh_fits(spark, root, centroids)
 
 
 def ivf_index_split_cluster(
@@ -1981,59 +1707,31 @@ def ivf_index_split_cluster(
     a stale persisted copy would route later no-arg searches to the
     deleted cluster (silent empty results).
 
-    Crash safety — a two-phase STAGED apply, never a live append:
-    (1) the re-assigned members, the full updated centroid set, AND a
-    _source_cluster marker recording WHICH cluster is being split are
-    written under <path>/_split_staging (underscore — invisible to
-    every data scan); (2) the old cluster directory is deleted;
-    (3) staged sub-cluster directories are FS-renamed into the index;
-    (4) fits refresh; (5) staging removed. A crash before (2) leaves
-    the index untouched (a rerun discards the stale staging and starts
-    over); a crash after (2) leaves the index temporarily MISSING the
-    split members — detectable, never duplicated — and a rerun resumes
-    from the staging (finishes the renames + fits from the staged
-    centroid set). The unstaged variant could double every member of
-    the cluster on a rerun after a mid-failure, with no way to tell
-    duplicates from data.
+    Crash safety — a commit.StagedCommit under <path>/_split_staging,
+    never a live append: the re-assigned members, the full updated
+    centroid set and a _source_cluster record naming the split cluster
+    are staged, then _COMMITTED is written last. The staging is
+    complete iff _COMMITTED exists. The apply step deletes the source
+    dir, renames the staged sub-cluster files in and refreshes the
+    fits; each step is idempotent, so a committed split is always
+    resumed — even after a crash half-way through the (non-atomic)
+    recursive delete — and an uncommitted one is discarded with the
+    index untouched. A committed staging whose _source_cluster cannot
+    be read raises instead of guessing.
 
-    The discard-vs-resume decision keys on the id RECORDED IN the
-    staging, never on this call's `cluster` argument: after a crash
-    mid-apply splitting cluster A, a rerun targeting any other cluster
-    B would find root/cluster=B present and — keyed on the argument —
-    wrongly take the 'crashed before delete' branch, silently deleting
-    the staging that holds A's only surviving copy (and the CLI's
-    auto-pick makes that rerun shape the DEFAULT: A is absent from
-    post-crash stats, so it picks a different cluster). Keyed on the
-    marker, such a rerun first RESUMES A's interrupted split, then
-    proceeds with the requested split of B on the resumed centroid set
-    (any caller-passed set predates the resume and would keep routing
-    to the deleted directory). A staging without the marker can never
-    have been applied — the marker write precedes the delete — so it
-    is always safe to discard. A pending _merge_staging is settled
-    first for the same reason (a crashed merge's rows live only in its
-    staging — the member scan below must see the complete index)."""
-    from idhub_spark.operators.merge_into import _hadoop_fs
-
+    Every entry settles pending stagings first (split, merge, append —
+    the order in _recover), keyed on the RECORDED source cluster, never
+    on this call's `cluster` argument: a rerun targeting another
+    cluster B after a crashed split of A first finishes A, then splits
+    B on the resumed centroid set (any caller-passed set predates the
+    resume and would keep routing to the deleted directory)."""
     root = path.rstrip("/")
-    staging = f"{root}/_split_staging"
-    jvm_path = lambda p: _hadoop_fs(spark, p)  # noqa: E731
-    fs, _ = jvm_path(staging)
-
-    # maintenance settles BEFORE the append-staging settle (ordering
-    # argument in _settle_append_staging's docstring)
-    merged = _settle_merge_staging(spark, root)
-    if merged is not None:
-        # any caller-passed set predates the resumed merge
-        centroids = merged
-    res = _settle_split_staging(spark, root)
-    _settle_append_staging(spark, root)
-    if res is not None:
-        staged_cluster, resumed = res
+    staged_cluster, resumed = _recover(spark, root)
+    if resumed is not None:
         if staged_cluster == cluster:
             return resumed
-        # caller asked for a DIFFERENT cluster: the interrupted
-        # split is now complete; proceed with the requested one
-        # on the resumed (authoritative) centroid set
+        # the interrupted maintenance is complete; proceed with the
+        # requested split on the resumed (authoritative) centroid set
         centroids = resumed
 
     if centroids is None:
@@ -2069,10 +1767,10 @@ def ivf_index_split_cluster(
         # trap)
         .localCheckpoint(eager=True)
     )
-    # phase 1 — STAGE: re-assign the members among the new
-    # sub-centroids (codes/vectors ride along unchanged) and persist
-    # the updated centroid set alongside, so a resume never needs the
-    # (soon-deleted) old directory
+    # STAGE: re-assign the members among the new sub-centroids
+    # (codes/vectors ride along unchanged) and persist the updated
+    # centroid set alongside, so a resume never needs the (soon-
+    # deleted) old directory
     vec_d = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     assigned = _assign(
         members.select(F.col(id_col).alias("_id"), vec_d.alias("_v")), sub_renum
@@ -2089,25 +1787,14 @@ def ivf_index_split_cluster(
     # member write overwrites the staging ROOT itself — clearing the
     # directory a concurrent _new_centroids write would land in — so
     # the sequential order is load-bearing here
-    out.write.mode("overwrite").partitionBy("cluster").parquet(staging)
+    sc = commit.StagedCommit(spark, root, _SPLIT_STAGING, record="_source_cluster")
+    out.write.mode("overwrite").partitionBy("cluster").parquet(sc.path)
     new_centroids.coalesce(1).write.mode("overwrite").parquet(
-        f"{staging}/_new_centroids"
+        f"{sc.path}/_new_centroids"
     )
-    # the marker is the LAST staging write and precedes the delete: its
-    # presence certifies a complete staging; its content keys a later
-    # rerun's discard-vs-resume decision to THIS cluster. Driver-side
-    # parquet bytes (r20): no Spark job at all — the literal_frame
-    # write was still a ~0.2-0.3 s job per split iteration; readers
-    # (spark.read.parquet in _settle_split_staging) are unchanged.
-    from idhub_spark.operators.dedup_index import _write_small_parquet
-
-    _write_small_parquet(
-        spark, f"{staging}/_source_cluster", [(int(cluster),)], "cluster int"
-    )
-    # phase 2 — APPLY: delete old, rename staged dirs in, refresh fits
-    _, jold = jvm_path(f"{root}/cluster={cluster}")
-    fs.delete(jold, True)
-    _apply_split_staging(spark, root, new_centroids)
+    sc.write_record([cluster])
+    sc.commit()
+    sc.settle(lambda: _apply_split_staging(spark, root, cluster, new_centroids))
     return new_centroids
 
 
@@ -2146,7 +1833,7 @@ def split_hot_clusters(
 
     Each iteration reuses the crash-staged single-cluster split, so an
     interruption anywhere leaves the index recoverable by ANY rerun
-    (the staged _source_cluster marker keys the resume); the returned
+    (a committed split staging is resumed); the returned
     centroid frame threads through iterations so only the first may
     read _fits. Returns (final centroids, report) where report is one
     dict per attempted split: {cluster, rows_before, share_before,
@@ -2238,20 +1925,14 @@ def ivf_index_delete(
 
     Returns {"rows_deleted", "clusters_rewritten", "clusters_dropped"}.
     """
-    from idhub_spark.operators.merge_into import _hadoop_fs
     from idhub_spark.session import literal_frame
 
     root = path.rstrip("/")
-    # settle any pending split/merge staging FIRST (ADVICE r12 medium):
-    # after a crashed split the victims' rows may live ONLY in staging;
-    # scanning without settling would report the delete complete while
-    # a later resume renamed the retracted vectors back in — the one
-    # failure mode a takedown path must never have. The append staging
-    # is a retraction surface for the same reason (r15): a committed
-    # batch's rows live only there until promoted. Maintenance settles
-    # first (ordering argument in _settle_append_staging's docstring).
-    _settle_pending_maintenance(spark, root)
-    _settle_append_staging(spark, root)
+    # settle every pending staging FIRST: a committed split/merge/append
+    # holds rows only in its staging, and scanning without settling
+    # would report the delete complete while a later apply renamed the
+    # retracted vectors back in
+    _recover(spark, root)
     if isinstance(ids, DataFrame):
         # materialized once (r19): the hits semi-join and the survivor
         # anti-join would each re-run the caller's id lineage + the
@@ -2271,7 +1952,14 @@ def ivf_index_delete(
         ids_df = literal_frame(
             spark, [(i,) for i in ids], f"{id_col} {dtype}"
         ).distinct()
+    try:
+        return _delete_ids(spark, root, ids_df, id_col)
+    finally:
+        ids_df.unpersist()
 
+
+def _delete_ids(spark, root: str, ids_df: DataFrame, id_col: str) -> dict:
+    """ivf_index_delete's body over the materialized id set."""
     hits = (
         spark.read.parquet(root)
         .select(id_col, "cluster")
@@ -2301,7 +1989,7 @@ def ivf_index_delete(
     # on the write: observing a write that lands ZERO rows (every row
     # of every touched cluster deleted) never fires the metric row and
     # the retrieval throws — the listing is free and empty-safe
-    fs0, jstag0 = _hadoop_fs(spark, staging)
+    fs0, jstag0 = commit.hadoop_fs(spark, staging)
     present = {
         int(st.getPath().getName().split("=", 1)[1])
         for st in fs0.listStatus(jstag0)
@@ -2315,10 +2003,10 @@ def ivf_index_delete(
             .partitionBy("cluster")
             .parquet(root)
         )
-    fs, jstag = _hadoop_fs(spark, staging)
+    fs, jstag = commit.hadoop_fs(spark, staging)
     dropped = set(touched) - present
     for c in dropped:
-        _, jdir = _hadoop_fs(spark, f"{root}/cluster={c}")
+        _, jdir = commit.hadoop_fs(spark, f"{root}/cluster={c}")
         fs.delete(jdir, True)
     fs.delete(jstag, True)
     return {
@@ -2336,7 +2024,7 @@ def ivf_index_merge_cold_clusters(
     centroids: DataFrame | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    ingest_log_horizon_s: float | None = INGEST_LOG_HORIZON_S,
+    ingest_log_horizon_s: float | None = commit.INGEST_LOG_HORIZON_S,
 ) -> tuple[DataFrame, dict]:
     """The split policy's inverse — fold every cluster holding FEWER
     than min_rows rows into its members' nearest SURVIVING cluster.
@@ -2353,48 +2041,35 @@ def ivf_index_merge_cold_clusters(
     cold centroid rows are dropped; _fits/centroids refreshes whenever
     it exists on disk.
 
-    Crash safety — the split's staged two-phase apply, adapted to
-    many-source/existing-target geometry: (1) re-assigned members
-    (partitioned by target cluster), the surviving centroid set
-    (_new_centroids), and a _cold_clusters marker listing the source
-    ids are staged under <path>/_merge_staging — the marker is the
-    LAST staging write; (2) the cold directories are deleted; (3) the
-    staged part-files are FS-renamed INTO the target directories
-    (file-level, idempotent — each file lives in exactly one place);
-    (4) fits refresh; (5) staging removed. On entry, existing staging
-    is keyed on the MARKER: unreadable/absent marker, or every
-    recorded cold directory still present → provably unapplied →
-    discard; any recorded cold directory missing → resume (finish the
-    deletes + renames + fits), then proceed with the requested merge
+    Crash safety — a commit.StagedCommit under <path>/_merge_staging:
+    the re-assigned members (partitioned by target cluster), the
+    surviving centroid set (_new_centroids) and a _cold_clusters
+    record of the source ids are staged, then _COMMITTED is written
+    last. The staging is complete iff _COMMITTED exists. The apply
+    step deletes the cold directories, renames the staged part-files
+    INTO the target directories (each file lives in exactly one place)
+    and refreshes the fits; every step is idempotent, so a committed
+    merge is always resumed and an uncommitted one discarded. A
+    committed staging whose _cold_clusters cannot be read raises
+    instead of guessing. After a resume, the requested merge proceeds
     on the resumed centroid set.
 
     Returns (final centroids frame, report) with report =
     {"merged_clusters": [...], "rows_moved": n}; a no-op merge (no
     cluster below min_rows) returns the current centroids and an
-    empty report. A pending _split_staging is settled FIRST (ADVICE
-    r12): a crashed split's members live only in its staging, so the
-    stats scan below would otherwise judge coldness over an index
-    missing committed rows."""
+    empty report. Pending stagings are settled FIRST: a committed
+    split's members live only in its staging, so the stats scan below
+    would otherwise judge coldness over an index missing rows."""
     root = path.rstrip("/")
-    staging = f"{root}/_merge_staging"
 
     # the cold-merge IS the IVF periodic-maintenance cadence (the
     # dedup fold's analog), so it also bounds the ingest log —
-    # retention rationale at dedup_index.INGEST_LOG_HORIZON_S. The
-    # horizon is a kwarg, not hardcoded (ADVICE r16): an operator who
-    # disabled pruning at compact must be able to disable it here too,
-    # or cold-merge silently re-admits post-horizon retries.
-    _prune_ingest_log(spark, root, ingest_log_horizon_s)
-    # maintenance settles BEFORE the append-staging settle (ordering
-    # argument in _settle_append_staging's docstring)
-    split_res = _settle_split_staging(spark, root)
-    if split_res is not None:
-        # any caller-passed set predates the resumed split
-        centroids = split_res[1]
-    resumed = _settle_merge_staging(spark, root)
+    # retention rationale at commit.INGEST_LOG_HORIZON_S. None
+    # disables it, as at compact.
+    commit.prune_ingest_log(spark, root, ingest_log_horizon_s)
+    _, resumed = _recover(spark, root)
     if resumed is not None:
-        centroids = resumed
-    _settle_append_staging(spark, root)
+        centroids = resumed  # any caller-passed set predates the resume
 
     if centroids is None:
         fits = ivf_index_load_fits(spark, path)
@@ -2449,32 +2124,24 @@ def ivf_index_merge_cold_clusters(
     ).select(F.col("_id").alias(id_col), "cluster")
     out = members.drop("cluster").join(assigned, id_col).persist()
     rows_moved = int(out.count())
-    # both staged writes precede the marker and land under disjoint
-    # paths — overlap them (r19, the dedup index's _par_jobs pattern)
+    # both staged writes precede the commit and land under disjoint
+    # paths — overlap them (the dedup index's _par_jobs pattern)
     from idhub_spark.operators.dedup_index import _par_jobs
 
+    sc = commit.StagedCommit(spark, root, _MERGE_STAGING, record="_cold_clusters")
     _par_jobs(
         lambda: out.repartition(F.col("cluster"))
         .write.mode("overwrite")
         .partitionBy("cluster")
-        .parquet(f"{staging}/data"),
+        .parquet(f"{sc.path}/data"),
         lambda: survivors.coalesce(1)
         .write.mode("overwrite")
-        .parquet(f"{staging}/_new_centroids"),
+        .parquet(f"{sc.path}/_new_centroids"),
     )
     out.unpersist()
-    # marker LAST: its presence + a missing cold dir is the resume key.
-    # Driver-side parquet bytes (r20): no Spark job; the reader
-    # (_settle_merge_staging's spark.read.parquet) is unchanged.
-    from idhub_spark.operators.dedup_index import _write_small_parquet
-
-    _write_small_parquet(
-        spark,
-        f"{staging}/_cold_clusters",
-        [(int(c),) for c in cold],
-        "cluster int",
-    )
-    _apply_merge_staging(spark, root, survivors, cold)
+    sc.write_record(cold)
+    sc.commit()
+    sc.settle(lambda: _apply_merge_staging(spark, root, cold, survivors))
     return survivors, {"merged_clusters": cold, "rows_moved": rows_moved}
 
 
@@ -2491,7 +2158,7 @@ def ivf_index_adopt_unrouted(
     in stats and compactions. The known producer is a LEGACY append
     staging promoted after a maintenance resume (the recoverable
     worst case the r16 settle ordering chose — see
-    _settle_append_staging); a manually restored backup directory
+    _recover); a manually restored backup directory
     lands in the same state. ivf_index_merge_cold_clusters cannot
     help: it judges coldness over the CENTROID set, so an on-disk id
     without a centroid row is never selected.
@@ -2500,10 +2167,10 @@ def ivf_index_adopt_unrouted(
     valid (SQ8/PQ codes depend only on bounds/codebook, never on the
     cluster), so no codec knowledge is needed: read ONLY the zombie
     directories, assign each row to its nearest live centroid, and
-    run the exact staged cold-merge protocol (staged reassigned rows,
-    recorded source dirs, _applying sentinel, FS-rename promotion)
-    with the centroid set unchanged — a crash at any point resumes
-    through _settle_merge_staging like any merge. I/O ∝ zombie rows;
+    run the exact staged cold-merge commit (staged reassigned rows,
+    recorded source dirs, _COMMITTED, FS-rename apply) with the
+    centroid set unchanged — a crash at any point settles like any
+    merge. I/O ∝ zombie rows;
     the zombie scan is a directory listing (no Spark job) and the
     centroid collect is k-bounded. Adoption is per PHYSICAL row with
     no uniqueness assumption on the stored ids (ADVICE r16): the same
@@ -2513,16 +2180,12 @@ def ivf_index_adopt_unrouted(
     Returns {"adopted_rows", "dropped_clusters"} (empty when the
     index is clean — the common case costs the entry settles plus one
     listStatus)."""
-    from idhub_spark.operators.merge_into import _hadoop_fs
-
     root = path.rstrip("/")
-    staging = f"{root}/_merge_staging"
-    # writer discipline: maintenance first (its resume can CREATE the
-    # zombie this operator exists to fix), then the append staging
-    resumed = _settle_pending_maintenance(spark, root)
+    # writer discipline: settle first (an append applied after a
+    # maintenance resume can CREATE the zombie this operator fixes)
+    _, resumed = _recover(spark, root)
     if resumed is not None:
         centroids = resumed
-    _settle_append_staging(spark, root)
 
     if centroids is None:
         fits = ivf_index_load_fits(spark, path)
@@ -2534,7 +2197,7 @@ def ivf_index_adopt_unrouted(
         centroids = fits["centroids"]
 
     cent_ids = {int(r.cluster) for r in centroids.select("cluster").collect()}
-    fs, jroot = _hadoop_fs(spark, root)
+    fs, jroot = commit.hadoop_fs(spark, root)
     on_disk = {
         int(st.getPath().getName().split("=", 1)[1])
         for st in fs.listStatus(jroot)
@@ -2567,29 +2230,23 @@ def ivf_index_adopt_unrouted(
         .persist()
     )
     adopted = int(out.count())
+    sc = commit.StagedCommit(spark, root, _MERGE_STAGING, record="_cold_clusters")
     (
         out.repartition(F.col("cluster"))
         .write.mode("overwrite")
         .partitionBy("cluster")
-        .parquet(f"{staging}/data")
+        .parquet(f"{sc.path}/data")
     )
     out.unpersist()
     # cents is pinned (k rows) before _fits/centroids is overwritten in
-    # the apply phase — its lineage may read that parquet
+    # the apply step — its lineage may read that parquet
     cents = centroids.localCheckpoint(eager=True)
     cents.coalesce(1).write.mode("overwrite").parquet(
-        f"{staging}/_new_centroids"
+        f"{sc.path}/_new_centroids"
     )
-    # driver-side parquet bytes (r20): no Spark job; reader unchanged
-    from idhub_spark.operators.dedup_index import _write_small_parquet
-
-    _write_small_parquet(
-        spark,
-        f"{staging}/_cold_clusters",
-        [(int(c),) for c in zombies],
-        "cluster int",
-    )
-    _apply_merge_staging(spark, root, cents, zombies)
+    sc.write_record(zombies)
+    sc.commit()
+    sc.settle(lambda: _apply_merge_staging(spark, root, zombies, cents))
     return {"adopted_rows": adopted, "dropped_clusters": zombies}
 
 
@@ -2598,7 +2255,7 @@ def ivf_index_fsck(
     path: str,
     *,
     centroids: DataFrame | None = None,
-    ingest_log_horizon_s: float | None = INGEST_LOG_HORIZON_S,
+    ingest_log_horizon_s: float | None = commit.INGEST_LOG_HORIZON_S,
 ) -> dict:
     """READ-ONLY health check of an on-disk IVF index —
     minhash_index_fsck's twin, zero mutations (safe on a read-only
@@ -2614,12 +2271,11 @@ def ivf_index_fsck(
       wastes one of every matching search's nprobe slots; fix =
       ivf_index_merge_cold_clusters, which folds 0-row clusters).
 
-    Classification mirrors _settle_append_staging /
-    _settle_split_staging / _settle_merge_staging exactly (their
-    docstrings hold the protocol arguments), including the merge
-    settle's legacy no-sentinel upgrade rule; the 'ambiguous' merge
-    state (sentinel present, cold list unreadable) is the one the
-    settle refuses to guess on — fsck reports it instead of raising.
+    Each staging's state and settle action come from
+    commit.StagedCommit.state() — the same call the settle acts on:
+    uncommitted -> discard, committed -> apply, unreadable (committed
+    but its record cannot be read) -> the settle raises; fsck reports
+    it instead.
 
     Returns {"healthy", "findings": [str...], "pending_append_staging",
     "pending_split_staging", "pending_merge_staging",
@@ -2628,117 +2284,20 @@ def ivf_index_fsck(
     informational rows (prunable ingest entries) never flag by
     themselves. Cost: a handful of fs calls + k-bounded centroid
     collect + tiny marker reads when stagings exist; no data scan."""
-    from idhub_spark.operators.dedup_index import (
-        _fsck_guard,
-        _ingest_log_report,
-    )
-    from idhub_spark.operators.merge_into import _hadoop_fs
-
     root = path.rstrip("/")
-    fs, jroot = _hadoop_fs(spark, root)
+    fs, jroot = commit.hadoop_fs(spark, root)
     findings: list[str] = []
 
-    staging = f"{root}/{_APPEND_STAGING}"
-    append_state = None
-    with _fsck_guard(findings, "append staging"):
-        if fs.exists(_hadoop_fs(spark, staging)[1]):
-            committed = fs.exists(
-                _hadoop_fs(spark, f"{staging}/_COMMITTED")[1]
-            )
-            batch_keys = [
-                st.getPath().getName()[len("_BATCH_"):]
-                for st in fs.listStatus(_hadoop_fs(spark, staging)[1])
-                if st.getPath().getName().startswith("_BATCH_")
-            ]
-            append_state = {
-                "state": "committed" if committed else "uncommitted",
-                "settle_action": "promote" if committed else "discard",
-                "batch_keys": batch_keys,
-            }
-            findings.append(
-                f"append staging pending ({append_state['state']}; settle "
-                f"would {append_state['settle_action']})"
-            )
+    pending = {}
+    for name, record in ((_APPEND_STAGING, None),
+                         (_SPLIT_STAGING, "_source_cluster"),
+                         (_MERGE_STAGING, "_cold_clusters")):
+        sc = commit.StagedCommit(spark, root, name, record=record)
+        pending[name] = None
+        with commit.fsck_guard(findings, sc.label):
+            pending[name] = sc.report(findings)
 
-    split_state = None
-    sstag = f"{root}/_split_staging"
-    with _fsck_guard(findings, "split staging"):
-        if fs.exists(_hadoop_fs(spark, sstag)[1]):
-            src_cluster = None
-            if fs.exists(_hadoop_fs(spark, f"{sstag}/_source_cluster")[1]):
-                try:
-                    src_cluster = int(
-                        spark.read.parquet(f"{sstag}/_source_cluster")
-                        .collect()[0]
-                        .cluster
-                    )
-                except Exception:
-                    src_cluster = None
-            if src_cluster is None:
-                split_state = {"state": "unapplied",
-                               "settle_action": "discard",
-                               "source_cluster": None}
-            elif fs.exists(
-                _hadoop_fs(spark, f"{root}/cluster={src_cluster}")[1]
-            ):
-                split_state = {"state": "unapplied",
-                               "settle_action": "discard",
-                               "source_cluster": src_cluster}
-            else:
-                split_state = {"state": "mid-apply",
-                               "settle_action": "resume",
-                               "source_cluster": src_cluster}
-            findings.append(
-                f"split staging pending ({split_state['state']}; settle "
-                f"would {split_state['settle_action']})"
-            )
-
-    merge_state = None
-    mstag = f"{root}/_merge_staging"
-    with _fsck_guard(findings, "merge staging"):
-        if fs.exists(_hadoop_fs(spark, mstag)[1]):
-            applying = fs.exists(_hadoop_fs(spark, f"{mstag}/_applying")[1])
-            try:
-                staged_cold = [
-                    int(r.cluster)
-                    for r in spark.read.parquet(
-                        f"{mstag}/_cold_clusters"
-                    ).collect()
-                ]
-            except Exception:
-                staged_cold = None
-            if staged_cold is None and applying:
-                merge_state = {
-                    "state": "ambiguous",
-                    "settle_action": "raise (manual inspection — phase 2 "
-                    "started but the cold list is unreadable)",
-                    "cold_clusters": None,
-                }
-            else:
-                if staged_cold and not applying:
-                    # the settle's legacy upgrade rule: a recorded cold
-                    # dir missing proves phase 2 ran pre-sentinel
-                    if any(
-                        not fs.exists(
-                            _hadoop_fs(spark, f"{root}/cluster={c}")[1]
-                        )
-                        for c in staged_cold
-                    ):
-                        applying = True
-                if staged_cold and applying:
-                    merge_state = {"state": "mid-apply",
-                                   "settle_action": "resume",
-                                   "cold_clusters": staged_cold}
-                else:
-                    merge_state = {"state": "unapplied",
-                                   "settle_action": "discard",
-                                   "cold_clusters": staged_cold}
-            findings.append(
-                f"merge staging pending ({merge_state['state']}; settle "
-                f"would {merge_state['settle_action']})"
-            )
-
-    stale_del = fs.exists(_hadoop_fs(spark, f"{root}/_delete_staging")[1])
+    stale_del = fs.exists(commit.hadoop_fs(spark, f"{root}/_delete_staging")[1])
     if stale_del:
         findings.append(
             "delete staging present (a retraction crashed mid-run or is "
@@ -2748,12 +2307,12 @@ def ivf_index_fsck(
     fits_present = []
     on_disk = set()
     zombies, orphans = None, None
-    with _fsck_guard(findings, "fits / cluster layout"):
+    with commit.fsck_guard(findings, "fits / cluster layout"):
         fits_present = sorted(
             st.getPath().getName()
             for st in (
-                fs.listStatus(_hadoop_fs(spark, f"{root}/_fits")[1])
-                if fs.exists(_hadoop_fs(spark, f"{root}/_fits")[1])
+                fs.listStatus(commit.hadoop_fs(spark, f"{root}/_fits")[1])
+                if fs.exists(commit.hadoop_fs(spark, f"{root}/_fits")[1])
                 else []
             )
             if not st.getPath().getName().startswith(("_", "."))
@@ -2792,15 +2351,15 @@ def ivf_index_fsck(
             )
 
     log_report = None
-    with _fsck_guard(findings, "ingest log"):
-        log_report = _ingest_log_report(spark, root, ingest_log_horizon_s)
+    with commit.fsck_guard(findings, "ingest log"):
+        log_report = commit.ingest_log_report(spark, root, ingest_log_horizon_s)
 
     return {
         "healthy": not findings,
         "findings": findings,
-        "pending_append_staging": append_state,
-        "pending_split_staging": split_state,
-        "pending_merge_staging": merge_state,
+        "pending_append_staging": pending[_APPEND_STAGING],
+        "pending_split_staging": pending[_SPLIT_STAGING],
+        "pending_merge_staging": pending[_MERGE_STAGING],
         "stale_delete_staging": stale_del,
         "zombie_clusters": zombies,
         "orphan_centroids": orphans,

@@ -59,19 +59,18 @@ is small (the common case) and falls back to a shuffle join for bulk
 backfills; NO forced hint (the batch side is not bounded by
 construction — the r11 broadcast-boundedness rule).
 
-Crash safety: a batch append stages its two tables under
-<path>/_append_staging, writes a _COMMITTED marker as the LAST
-staging write, then FS-renames the staged part-files into the live
-partition directories (append-only: existing files never touched).
-A crash before the marker leaves provably-unapplied staging (the next
-append discards it); a crash during the rename-in is resumed by the
-next append (each file lives in exactly one place, so the promotion
-is idempotent and rows are never duplicated). A full rebuild
-(minhash_index_write) deletes _params FIRST and rewrites it LAST, so
-a crashed rebuild raises 'no _params' on the next probe instead of
-serving a half-old, half-new index. Reference anchor: the reference
-has no dedup at all — this extends plans/dedup_q.py's training-data
-operators to the incremental regime.
+Crash safety: every append and every fold is a commit.StagedCommit
+under <path>/_append_staging — the staged tables, then any
+_BATCH_<key> / _FOLD_DELTA marker, then _COMMITTED last. The staging
+is complete iff _COMMITTED exists: the next entry point applies a
+committed staging (FS-renames its files into the live layout —
+append-only, each file lives in exactly one place, so the apply is
+idempotent and rows are never duplicated) and discards an uncommitted
+one. A full rebuild (minhash_index_write) deletes _params FIRST and
+rewrites it LAST, so a crashed rebuild raises 'no _params' on the next
+probe instead of serving a half-old, half-new index. Reference
+anchor: the reference has no dedup at all — this extends
+plans/dedup_q.py's training-data operators to the incremental regime.
 
 LSM delta buffer (r14 — the fix for the r13 audit's append finding):
 a DIRECT append creates ~min(batch_band_rows, pb) +
@@ -115,11 +114,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from idhub_spark import commit
+
 _STAGING = "_append_staging"
-_COMMITTED = "_COMMITTED"
 _DELTA = "delta"
 _FOLD = "_FOLD_DELTA"
-_INGEST_LOG = "_ingest_log"
 # root-level flag (dot-prefixed: invisible to every parquet scan) set
 # by _settle_delta_rewrite's rollback branch — the one settle outcome
 # that RESTORES rows a crashed delete had already retracted. Root-level
@@ -275,86 +274,21 @@ _PARAMS_META = "_META"
 
 
 def _write_params_meta(spark, root: str, vals: tuple[int, int, int, int]) -> None:
-    from idhub_spark.operators.merge_into import _hadoop_fs
-
     name = ".".join(str(int(v)) for v in vals)
     # use the fs RESOLVED FOR THIS PATH, never a caller's (ADVICE r19:
     # compact passed its src-resolved fs while creating the marker
     # under dst — a cross-filesystem compact threw 'Wrong FS' after
     # dst data and _params were already written)
-    fs, jm = _hadoop_fs(spark, f"{root}/_params/{_PARAMS_META}.{name}")
+    fs, jm = commit.hadoop_fs(spark, f"{root}/_params/{_PARAMS_META}.{name}")
     fs.create(jm, True).close()
-
-
-def _write_small_parquet(
-    spark, dir_path: str, rows: list[tuple], schema: str
-) -> None:
-    """Land a TINY all-integer control-plane parquet directory WITHOUT
-    a Spark job (r20 — VERDICT r19 candidate #3): even the
-    literal_frame + coalesce(1) write is a full job (~0.2-0.3 s), paid
-    by every index write/compact (_params) and every staged split/merge
-    marker. The bytes are built driver-side with pyarrow — int32 for
-    'int', int64 for 'bigint', schema-exact to what the Spark write
-    produced — and streamed through the Hadoop FileSystem API, so the
-    path stays storage-independent (object stores included) and every
-    reader is unchanged: spark.read.parquet over the directory. The
-    directory is cleared first (mode='overwrite' semantics). Falls back
-    to the literal_frame Spark write on any pyarrow/stream failure —
-    never silently (the caller would otherwise re-pay the job forever
-    without a signal)."""
-    from idhub_spark.operators.merge_into import _hadoop_fs
-
-    fields = [f.strip().rsplit(" ", 1) for f in schema.split(",")]
-    try:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        pa_types = {"int": pa.int32(), "bigint": pa.int64(), "long": pa.int64()}
-        table = pa.table(
-            {
-                name.strip(): pa.array(
-                    [int(row[i]) for row in rows], pa_types[typ]
-                )
-                for i, (name, typ) in enumerate(fields)
-            }
-        )
-        sink = pa.BufferOutputStream()
-        pq.write_table(table, sink)
-        data = sink.getvalue().to_pybytes()
-        fs, jdir = _hadoop_fs(spark, dir_path)
-        if fs.exists(jdir):
-            fs.delete(jdir, True)
-        _, jf = _hadoop_fs(
-            spark, f"{dir_path.rstrip('/')}/part-00000-driver.snappy.parquet"
-        )
-        out = fs.create(jf, True)
-        try:
-            out.write(data)
-        finally:
-            out.close()
-    except Exception as e:
-        import warnings
-
-        warnings.warn(
-            f"driver-side parquet write of {dir_path!r} failed "
-            f"({type(e).__name__}: {e}); falling back to the Spark "
-            "parquet write",
-            stacklevel=2,
-        )
-        from idhub_spark.session import literal_frame
-
-        literal_frame(spark, rows, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(dir_path)
 
 
 def _write_params_parquet(
     spark, root: str, vals: tuple[int, int, int, int]
 ) -> None:
     """The authoritative 1-row _params parquet, driver-side (no Spark
-    job; format, the delete-first/rewrite-last commit protocol and
-    every pre-r19 reader unchanged — see _write_small_parquet)."""
-    _write_small_parquet(
+    job — commit.write_small_parquet)."""
+    commit.write_small_parquet(
         spark,
         f"{root}/_params",
         [tuple(int(v) for v in vals)],
@@ -363,18 +297,16 @@ def _write_params_parquet(
 
 
 def _load_params(spark, root: str) -> tuple[int, int, int, int]:
-    from idhub_spark.operators.merge_into import _hadoop_fs
-
-    fs, jp = _hadoop_fs(spark, f"{root}/_params")
+    fs, jp = commit.hadoop_fs(spark, f"{root}/_params")
     if not fs.exists(jp):
         raise ValueError(
             f"minhash index at {root!r} has no _params — not an index, "
             "or a rebuild crashed mid-write (rerun minhash_index_write)"
         )
     # fast path: parameters from the marker filename (glob-escaped
-    # root — caller path, the _ingest_log_has discipline)
-    _, jglob = _hadoop_fs(
-        spark, f"{_glob_escape(root.rstrip('/'))}/_params/{_PARAMS_META}.*"
+    # root — a caller path)
+    _, jglob = commit.hadoop_fs(
+        spark, f"{commit.glob_escape(root.rstrip('/'))}/_params/{_PARAMS_META}.*"
     )
     matches = fs.globStatus(jglob)
     if matches is not None and len(matches) == 1:
@@ -383,10 +315,8 @@ def _load_params(spark, root: str) -> tuple[int, int, int, int]:
             n_hashes, bands, pb, db = (int(p) for p in parts)
             return n_hashes, bands, pb, db
     row = spark.read.parquet(f"{root}/_params").collect()[0]
-    # pre-r12 indexes carry no bucket columns: flat layout, no pruning
-    pb = int(getattr(row, "pb_buckets", 0) or 0)
-    db = int(getattr(row, "db_buckets", 0) or 0)
-    return int(row.n_hashes), int(row.bands), pb, db
+    return (int(row.n_hashes), int(row.bands), int(row.pb_buckets),
+            int(row.db_buckets))
 
 
 def _tables(
@@ -445,283 +375,35 @@ def _par_jobs(*thunks) -> None:
             f.result()
 
 
-def _move_tree(spark, fs, src: str, dst: str) -> None:
-    """Rename every data file under src into the mirrored path under
-    dst (creating directories as needed). Files are never overwritten
-    or copied — each lives in exactly one place, so a crashed promotion
-    resumes idempotently.
-
-    The renames run on a driver THREAD POOL (r14, measured honestly
-    in scale_audit_r14.md §3b): on LOCAL disk the pool buys only
-    ~1.3× (renames are ~3 ms of GIL-bound Py4J marshalling, not I/O
-    wait — and the direct path's wall is dominated by the staged
-    parquet write itself, not the promotion). The pool's real target
-    is high-latency filesystems (object stores, remote HDFS) where
-    each rename is a 50-200 ms NETWORK round-trip that releases the
-    GIL — there 16 workers approach 16×, and that is where the
-    promotion term would otherwise dominate. Py4J allocates one
-    gateway connection per Python thread and Hadoop FileSystem
-    instances are thread-safe; semantics are identical to the
-    sequential loop: destination dirs are pre-created sequentially
-    (few), each file still lands via a single atomic rename, and ANY
-    rename returning false raises with the staging intact (order
-    between files never mattered — resume is file-idempotent)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from idhub_spark.operators.merge_into import _hadoop_fs
-
-    pairs = []
-
-    def walk(s: str, d: str) -> None:
-        _, js = _hadoop_fs(spark, s)
-        for st in fs.listStatus(js):
-            name = st.getPath().getName()
-            if name.startswith(("_", ".")):
-                continue
-            if st.isFile():
-                pairs.append((st.getPath(), d, f"{d}/{name}", f"{s}/{name}"))
-            else:
-                walk(f"{s}/{name}", f"{d}/{name}")
-
-    walk(src, dst)
-    if not pairs:
-        return
-    for d in sorted({p[1] for p in pairs}):
-        fs.mkdirs(_hadoop_fs(spark, d)[1])
-
-    def _rename(pair):
-        jsrc_file, _, dst_file, src_file = pair
-        # Hadoop rename signals failure by RETURNING false (e.g. a
-        # same-named dst already exists) — ignoring it and then
-        # deleting the staging would silently lose the batch's rows.
-        # Part-file names are write-unique UUIDs, so this should never
-        # fire; if it does, fail loudly with the staging intact (the
-        # next append resumes it).
-        if not fs.rename(jsrc_file, _hadoop_fs(spark, dst_file)[1]):
-            raise RuntimeError(
-                f"dedup-index staging promotion: rename failed for "
-                f"{src_file} -> {dst_file}; staging left in place for "
-                "resume"
-            )
-
-    with ThreadPoolExecutor(max_workers=16) as ex:
-        list(ex.map(_rename, pairs))
-
-
-def _resume_or_discard_staging(spark, root: str, *, best_effort: bool = False) -> None:
-    """Append crash protocol: a staging WITH the _COMMITTED marker was
-    fully written and is promoted (finishing an interrupted rename-in);
-    a staging without it can never have been applied — discard.
-
-    best_effort=True (probe/stats — the read-only entry points,
-    ADVICE r13): a settle that fails (a concurrent writer won the
-    promotion race mid-iteration, or the index is a read-only
-    replica) degrades to a warning and the caller reads the live
-    files only, instead of failing a healthy read. Writers (append,
-    delete, compact) keep the mandatory settle — they must never act
-    on an index they couldn't fully see."""
-    from idhub_spark.operators.merge_into import _hadoop_fs
-
-    staging = f"{root}/{_STAGING}"
-    fs, jstag = _hadoop_fs(spark, staging)
-    if not fs.exists(jstag):
-        return
-    try:
-        _, jmark = _hadoop_fs(spark, f"{staging}/{_COMMITTED}")
-        if fs.exists(jmark):
-            _promote_staging(spark, root)
-        else:
-            fs.delete(jstag, True)
-    except Exception:
-        if not best_effort:
-            raise
-        import warnings
-
-        warnings.warn(
-            f"dedup index {root!r}: could not settle pending append "
-            "staging (concurrent writer or read-only storage); reading "
-            "live files only",
-            stacklevel=2,
-        )
-
-
-def _batch_key(batch_id: str) -> str:
-    """Filesystem-safe ingest-log key for a caller batch id (hashed —
-    ids are caller strings, never trusted as path components)."""
-    import hashlib
-
-    return hashlib.sha256(batch_id.encode("utf-8")).hexdigest()[:32]
-
-
-def _marker_parse(name: str, mtime_ms: int) -> tuple[str, int]:
-    """(key, accept_ms) of one ingest-log entry. r17 entries encode
-    the accept time in the FILENAME (<key>.<accept_ms>) so the horizon
-    clock is storage-independent — Hadoop's base FileSystem.setTimes is
-    a silent no-op and S3A doesn't override it, so an mtime-dated entry
-    carried by compact was reborn with mtime=now on object stores and
-    never aged out (VERDICT r16 what's-wrong #1; over-retention only,
-    but it voided the size bound exactly on the tier it targets).
-    Legacy bare-key entries (pre-r17) fall back to the file's mtime;
-    the compact carry canonicalizes them to the named form."""
-    stem, _, suffix = name.rpartition(".")
-    if stem and suffix.isdigit():
-        return stem, int(suffix)
-    return name, mtime_ms
-
-
-def _marker_name(key: str, accept_ms: int) -> str:
-    return f"{key}.{accept_ms}"
-
-
-# Hadoop glob metacharacters (org.apache.hadoop.fs.GlobPattern).
-# Backslash is itself a metachar and must be IN the set so literal
-# backslashes get escaped too; _glob_escape maps each character
-# independently, so ordering within this string is irrelevant.
-_GLOB_SPECIALS = "\\*?[]{}"
-
-
-def _glob_escape(path: str) -> str:
-    """Backslash-escape Hadoop glob metacharacters so a literal path
-    can be embedded in a globStatus pattern. Hadoop's Globber
-    unescapes during matching, so an escaped component matches the
-    literal directory name."""
-    return "".join(
-        ("\\" + ch) if ch in _GLOB_SPECIALS else ch for ch in path
-    )
-
-
-def _ingest_log_has(spark, root: str, key: str) -> bool:
-    """True iff the ingest log records `key` — one globStatus RPC over
-    <escaped-root>/_ingest_log/<key>* (matches both the named r17 form
-    and legacy bare keys; keys are fixed-length sha256 prefixes, so no
-    other key shares a prefix). The index ROOT is a caller path, so it
-    is glob-ESCAPED before interpolation — a root containing glob
-    metacharacters ([, ], *, ?, {}) would otherwise silently misdirect
-    the duplicate check and re-admit retried batches (ADVICE r17; the
-    key itself is safe hex and stays unescaped). globStatus, not
-    listStatus + driver-side prefix match: the matching must stay
-    JVM-side — iterating FileStatus names through Py4J measured
-    563-790 ms/call at the documented ~700-entry log bound vs 26-29 ms
-    for the escaped glob (docs/scale_audit_r18.md §1), and on object
-    stores both issue the same LIST. Null glob result = log dir
-    absent."""
-    from idhub_spark.operators.merge_into import _hadoop_fs
-
-    fs, jglob = _hadoop_fs(
-        spark, f"{_glob_escape(root.rstrip('/'))}/{_INGEST_LOG}/{key}*"
-    )
-    matches = fs.globStatus(jglob)
-    return matches is not None and len(matches) > 0
-
-
-def _record_ingest_entries(spark, fs, root: str, keys: list[str]) -> None:
-    """Create the named ingest-log entry for each batch key, skipping
-    keys already logged (a crash-resumed promotion re-enters here; the
-    skip keeps the log single-entry-per-key instead of minting a second
-    accept time)."""
-    import time
-
-    from idhub_spark.operators.merge_into import _hadoop_fs
-
-    now_ms = int(time.time() * 1000)
-    for key in keys:
-        if _ingest_log_has(spark, root, key):
-            continue
-        _, jlog = _hadoop_fs(
-            spark, f"{root}/{_INGEST_LOG}/{_marker_name(key, now_ms)}"
-        )
-        fs.create(jlog, True).close()
-
-
-# Ingest-log retention (ADVICE/VERDICT r15: the log was the one r15
-# structure with NO size bound — one empty marker per accepted batch,
-# forever, carried entry-by-entry by every compact). Exactly-once only
-# needs the log to cover the caller's at-least-once RETRY window: a
-# retry that arrives after every queue/driver/orchestrator timeout has
-# expired is a new ingest decision, not a replay. Entries older than
-# the horizon are pruned at the maintenance cadence (fold + compact —
-# never on the hot append path, which stays O(1) fs calls), so the
-# log's size is bounded by batch_rate x horizon (~700 entries at the
-# engine's stated ~100 batches/day and the 7-day default) instead of
-# total batches ever (~36k/year). docs/operations.md §ingest-log.
-INGEST_LOG_HORIZON_S = 7 * 24 * 3600.0
-
-
-def _prune_ingest_log(
-    spark, root: str, horizon_s: float | None, *, now_ms: int | None = None
-) -> int:
-    """Delete ingest-log entries whose ACCEPT time is older than the
-    retry horizon. The accept time is read from the entry's filename
-    (<key>.<accept_ms> — storage-independent, see _marker_parse) with
-    the file mtime as the legacy fallback. One listStatus + one delete
-    per expired entry — amortized O(batches accepted since the last
-    prune) when run at the fold/compact cadence. horizon_s=None
-    disables (a caller that truly needs replay protection over
-    unbounded history keeps every entry and accepts the growth).
-    Returns the number pruned."""
-    if horizon_s is None:
-        return 0
-    import time
-
-    from idhub_spark.operators.merge_into import _hadoop_fs
-
-    fs, jlog = _hadoop_fs(spark, f"{root.rstrip('/')}/{_INGEST_LOG}")
-    if not fs.exists(jlog):
-        return 0
-    if now_ms is None:
-        now_ms = int(time.time() * 1000)
-    cutoff = now_ms - int(horizon_s * 1000)
-    pruned = 0
-    for st in fs.listStatus(jlog):
-        _, accept_ms = _marker_parse(
-            st.getPath().getName(), st.getModificationTime()
-        )
-        if accept_ms < cutoff:
-            fs.delete(st.getPath(), False)
-            pruned += 1
-    return pruned
+def _append_commit(spark, root: str) -> commit.StagedCommit:
+    """The staging every append and fold commits through."""
+    return commit.StagedCommit(spark, root, _STAGING)
 
 
 def _promote_staging(spark, root: str) -> None:
-    """Rename a committed staging's files into the live layout. A
-    staging carrying the _FOLD_DELTA marker is a minor compaction
-    (minhash_index_fold_delta): its staged partition trees ARE the
-    delta's rows re-laid-out, so after the rename-in the delta dir is
-    deleted — in that order, and the delta delete precedes the staging
-    delete, so every crash point resumes idempotently (re-promote
-    moves nothing, re-deletes nothing, then clears the staging).
-
-    A staging carrying a _BATCH_<key> marker (an append with an
-    idempotency batch_id, r15) additionally records
-    <root>/_ingest_log/<key>.<accept_ms> AFTER the renames and BEFORE
-    the staging delete (accept time in the NAME — storage-independent
-    age, _marker_parse): a crash between renames and log write
-    re-promotes (no-op) then writes the log; between log write and
-    staging delete the re-promote and log record are both idempotent
-    (_record_ingest_entries skips keys already logged) — so the log
-    entry exists iff the batch's rows are fully live, which is exactly
-    the exactly-once test the retry path needs."""
-    from idhub_spark.operators.merge_into import _hadoop_fs
-
+    """Apply step of a committed append/fold staging: rename its files
+    into the live layout (docs/bands partition trees, or the delta/
+    subtree of a buffered append). A fold staging (_FOLD_DELTA marker)
+    holds the delta's rows re-laid-out, so the delta dir is deleted
+    after the renames. Both steps are idempotent."""
     staging = f"{root}/{_STAGING}"
-    fs, jstag = _hadoop_fs(spark, staging)
-    folding = fs.exists(_hadoop_fs(spark, f"{staging}/{_FOLD}")[1])
-    batch_keys = [
-        st.getPath().getName()[len("_BATCH_"):]
-        for st in fs.listStatus(jstag)
-        if st.getPath().getName().startswith("_BATCH_")
-    ]
-    # 'delta' last: its staged subtree mirrors delta/{docs,bands}, so
-    # _move_tree lands the buffered batch's two files in one recursion
     for table in ("docs", "bands", _DELTA):
-        _, jsrc = _hadoop_fs(spark, f"{staging}/{table}")
-        if fs.exists(jsrc):
-            _move_tree(spark, fs, f"{staging}/{table}", f"{root}/{table}")
-    if folding:
-        _, jdelta = _hadoop_fs(spark, f"{root}/{_DELTA}")
+        commit.move_tree(spark, f"{staging}/{table}", f"{root}/{table}")
+    if _append_commit(spark, root).exists(_FOLD):
+        fs, jdelta = commit.hadoop_fs(spark, f"{root}/{_DELTA}")
         fs.delete(jdelta, True)
-    _record_ingest_entries(spark, fs, root, batch_keys)
-    fs.delete(jstag, True)
+
+
+def _recover(spark, root: str, *, best_effort: bool = False) -> None:
+    """Entry settle of every dedup-index operation: the delete's pending
+    delta rewrite first (a promoted buffered append re-creates the live
+    delta dir, which would make its aside+live state ambiguous), then
+    the append/fold staging. best_effort: read-only entry points warn
+    and read live files only."""
+    _settle_delta_rewrite(spark, root, best_effort=best_effort)
+    _append_commit(spark, root).settle(
+        lambda: _promote_staging(spark, root), best_effort=best_effort
+    )
 
 
 def _read_state_table(
@@ -740,13 +422,11 @@ def _read_state_table(
     the live prune: a row whose pb/db is outside the batch's set
     cannot join. Every reader goes through here so bands∪delta is
     byte-equivalent to the folded layout by construction."""
-    from idhub_spark.operators.merge_into import _hadoop_fs
-
     df = spark.read.parquet(f"{root}/{table}")
     if prune_col and prune_vals is not None and prune_col in df.columns:
         df = df.filter(F.col(prune_col).isin(prune_vals))
     delta = f"{root}/{_DELTA}/{table}"
-    fs, jd = _hadoop_fs(spark, delta)
+    fs, jd = commit.hadoop_fs(spark, delta)
     if fs.exists(jd):
         d = spark.read.parquet(delta)
         if prune_col and prune_vals is not None and prune_col in d.columns:
@@ -789,21 +469,19 @@ def _settle_delta_rewrite(spark, root: str, *, best_effort: bool = False) -> Non
     dir additively, which would make the aside+live state ambiguous —
     settling the rewrite first keeps each state's meaning exact. Two
     fs.exists calls when nothing is pending. best_effort mirrors
-    _resume_or_discard_staging (read-only entry points warn and read
+    the append-staging settle (read-only entry points warn and read
     the live files only)."""
-    from idhub_spark.operators.merge_into import _hadoop_fs
-
     staging = f"{root}/_delete_staging"
     for table in ("docs", "bands"):
         aside = f"{root}/{_DELTA}/._old_{table}"
         try:
-            fs, jaside = _hadoop_fs(spark, aside)
+            fs, jaside = commit.hadoop_fs(spark, aside)
             if not fs.exists(jaside):
                 continue
             live = f"{root}/{_DELTA}/{table}"
             st = f"{staging}/delta_{table}"
-            _, jlive = _hadoop_fs(spark, live)
-            _, jst = _hadoop_fs(spark, st)
+            _, jlive = commit.hadoop_fs(spark, live)
+            _, jst = commit.hadoop_fs(spark, st)
             if fs.exists(jlive):
                 fs.delete(jaside, True)
             elif fs.exists(jst):
@@ -823,7 +501,7 @@ def _settle_delta_rewrite(spark, root: str, *, best_effort: bool = False) -> Non
                 # re-creates it — idempotent overwrite) and warn here;
                 # minhash_index_stats re-warns while the flag stands,
                 # and the next completed delete clears it.
-                _, jmark = _hadoop_fs(spark, f"{root}/{_RERUN_MARKER}")
+                _, jmark = commit.hadoop_fs(spark, f"{root}/{_RERUN_MARKER}")
                 fs.create(jmark, True).close()
                 if not fs.rename(jaside, jlive):
                     raise RuntimeError(
@@ -885,19 +563,17 @@ def minhash_index_write(
     and the lossless-pruning invariant. The old staging's batch was
     part of the old index generation; the rebuild's input corpus is
     the new truth."""
-    from idhub_spark.operators.merge_into import _hadoop_fs
-
     root = path.rstrip("/")
     spark = docs.sparkSession
-    fs, jparams = _hadoop_fs(spark, f"{root}/_params")
+    fs, jparams = commit.hadoop_fs(spark, f"{root}/_params")
     # the delta buffer belongs to the OLD generation too: its rows
     # carry the old parameters' signatures, and docs/bands overwrite
     # writes would never touch the sibling delta dir — clear it first;
     # the ingest log likewise (its batch ids name batches of the old
     # corpus — a post-rebuild retry of one is a NEW ingest decision)
-    for stale in (_STAGING, "_delete_staging", _DELTA, _INGEST_LOG,
+    for stale in (_STAGING, "_delete_staging", _DELTA, commit.INGEST_LOG,
                   _RERUN_MARKER):
-        _, jst = _hadoop_fs(spark, f"{root}/{stale}")
+        _, jst = commit.hadoop_fs(spark, f"{root}/{stale}")
         if fs.exists(jst):
             fs.delete(jst, True)
     if fs.exists(jparams):
@@ -953,7 +629,7 @@ def minhash_index_append(
     I/O strictly ∝ batch (the batch's state is checkpointed once and
     both tables derive from it — history is never read), build
     parameters from the index itself, crash-safe via the staged
-    _COMMITTED-marker promotion (see module docstring). Existing files
+    commit.StagedCommit (see module docstring). Existing files
     are never rewritten — promotion RENAMES the batch's files into
     the live layout. Returns the route taken ('direct' | 'delta' |
     'empty') so callers/audits can assert placement.
@@ -982,10 +658,9 @@ def minhash_index_append(
     again — violating the doc_ids-unique-for-life discipline with no
     error. With a caller idempotency key, promotion records
     <root>/_ingest_log/<sha256(batch_id)>.<accept_ms> (accept time in
-    the name — storage-independent age, _marker_parse) atomically
-    within the
-    existing marker protocol (log entry exists iff the batch's rows
-    are fully live — see _promote_staging), and an append whose key
+    the name — storage-independent age) within the staged commit (the
+    log entry exists iff the batch's rows are fully live), and an
+    append whose key
     is already logged returns 'duplicate' without reading the batch.
     The log is one empty marker file per batch (pure file-existence
     metadata, invisible to scans); minhash_index_compact carries it
@@ -997,13 +672,10 @@ def minhash_index_append(
     root = path.rstrip("/")
     spark = docs.sparkSession
     n_hashes, bands, pb_buckets, db_buckets = _load_params(spark, root)
-    _settle_delta_rewrite(spark, root)
-    _resume_or_discard_staging(spark, root)
+    _recover(spark, root)
 
-    from idhub_spark.operators.merge_into import _hadoop_fs
-
-    if batch_id is not None and _ingest_log_has(
-        spark, root, _batch_key(batch_id)
+    if batch_id is not None and commit.ingest_log_has(
+        spark, root, commit.batch_key(batch_id)
     ):
         return "duplicate"
 
@@ -1055,16 +727,9 @@ def minhash_index_append(
             ),
         )
     state.unpersist()
-    fs, jmark = _hadoop_fs(spark, f"{staging}/{_COMMITTED}")
-    if batch_id is not None:
-        # part of the staging BEFORE the commit marker: a discarded
-        # (uncommitted) staging must never leave a log entry
-        _, jb = _hadoop_fs(
-            spark, f"{staging}/_BATCH_{_batch_key(batch_id)}"
-        )
-        fs.create(jb, True).close()
-    fs.create(jmark, True).close()
-    _promote_staging(spark, root)
+    sc = _append_commit(spark, root)
+    sc.commit(batch_id=batch_id)
+    sc.settle(lambda: _promote_staging(spark, root))
     return route
 
 
@@ -1072,7 +737,7 @@ def minhash_index_fold_delta(
     spark,
     path: str,
     *,
-    ingest_log_horizon_s: float | None = INGEST_LOG_HORIZON_S,
+    ingest_log_horizon_s: float | None = commit.INGEST_LOG_HORIZON_S,
 ) -> dict:
     """MINOR compaction — the LSM flush: re-lay ONLY the delta
     buffer's rows into the partitioned Hive layout (one file per
@@ -1083,11 +748,11 @@ def minhash_index_fold_delta(
     remains the MAJOR compaction: it glues a year of append debris
     AND folds the delta, but reads and rewrites everything).
 
-    Protocol: the buffered rows are staged in the direct layout, the
-    _FOLD_DELTA marker is written, then _COMMITTED last; promotion
-    renames the staged files in and — because of the marker — deletes
-    the delta dir before clearing the staging. Every crash point
-    resumes through the ordinary settle (the staged files and the
+    Protocol: the buffered rows are staged in the direct layout and
+    committed with the _FOLD_DELTA marker; the apply step renames the
+    staged files in and — because of the marker — deletes the delta
+    dir. Every crash point resumes through the ordinary settle (the
+    staged files and the
     delta never hold a row visible TWICE except in the narrow
     half-promoted window, which only a failed best-effort settle on a
     concurrent read-only replica could observe — the single-writer
@@ -1106,17 +771,14 @@ def minhash_index_fold_delta(
     production regime a 100 TB corpus index lives in.
 
     Returns {"folded_rows", "files_written"}."""
-    from idhub_spark.operators.merge_into import _hadoop_fs
-
     root = path.rstrip("/")
     _, _, pb_buckets, db_buckets = _load_params(spark, root)
-    _settle_delta_rewrite(spark, root)
-    _resume_or_discard_staging(spark, root)
+    _recover(spark, root)
     # the fold IS the maintenance cadence, so it also bounds the
-    # ingest log (retention rationale at INGEST_LOG_HORIZON_S) — runs
-    # even when the buffer turns out empty below
-    _prune_ingest_log(spark, root, ingest_log_horizon_s)
-    fs, jdelta = _hadoop_fs(spark, f"{root}/{_DELTA}")
+    # ingest log (retention rationale at commit.INGEST_LOG_HORIZON_S)
+    # — runs even when the buffer turns out empty below
+    commit.prune_ingest_log(spark, root, ingest_log_horizon_s)
+    fs, jdelta = commit.hadoop_fs(spark, f"{root}/{_DELTA}")
     if not fs.exists(jdelta):
         return {"folded_rows": 0, "files_written": 0}
     # gate per SUBTABLE, not just the parent dir (ADVICE r14): a
@@ -1129,8 +791,8 @@ def minhash_index_fold_delta(
     # surv==0 branch drops a dir), so folding would push retracted
     # doc rows into the live layout — the crashed delete's rerun is
     # the resume path for that state, exactly as for the live tables.
-    have_docs = fs.exists(_hadoop_fs(spark, f"{root}/{_DELTA}/docs")[1])
-    have_bands = fs.exists(_hadoop_fs(spark, f"{root}/{_DELTA}/bands")[1])
+    have_docs = fs.exists(commit.hadoop_fs(spark, f"{root}/{_DELTA}/docs")[1])
+    have_bands = fs.exists(commit.hadoop_fs(spark, f"{root}/{_DELTA}/bands")[1])
     if not have_docs and not have_bands:
         fs.delete(jdelta, True)
         return {"folded_rows": 0, "files_written": 0}
@@ -1171,14 +833,12 @@ def minhash_index_fold_delta(
         return n
 
     files_written = sum(
-        _count_staged(_hadoop_fs(spark, f"{staging}/{t}")[1])
+        _count_staged(commit.hadoop_fs(spark, f"{staging}/{t}")[1])
         for t in ("docs", "bands")
     )
-    _, jfold = _hadoop_fs(spark, f"{staging}/{_FOLD}")
-    fs.create(jfold, True).close()
-    _, jmark = _hadoop_fs(spark, f"{staging}/{_COMMITTED}")
-    fs.create(jmark, True).close()
-    _promote_staging(spark, root)
+    sc = _append_commit(spark, root)
+    sc.commit(markers=(_FOLD,))
+    sc.settle(lambda: _promote_staging(spark, root))
     return {"folded_rows": int(n_rows), "files_written": int(files_written)}
 
 
@@ -1250,8 +910,7 @@ def minhash_index_probe(
     calls when no staging exists."""
     root = path.rstrip("/")
     n_hashes, bands, pb_buckets, db_buckets = _load_params(spark, root)
-    _settle_delta_rewrite(spark, root, best_effort=True)
-    _resume_or_discard_staging(spark, root, best_effort=True)
+    _recover(spark, root, best_effort=True)
     # LAZY persist (r20): the pb prune-set collect below is the state's
     # first action and materializes it into the cache in the SAME job —
     # the standalone eager-checkpoint job is gone (on a flat index the
@@ -1401,12 +1060,9 @@ def minhash_index_stats(spark, path: str) -> DataFrame:
     single scan per table. Settles any pending append staging first,
     BEST-EFFORT (read-only entry point — ADVICE r13), so the counts
     never read the single writer's half-promoted crash debris."""
-    from idhub_spark.operators.merge_into import _hadoop_fs
-
     root = path.rstrip("/")
-    _settle_delta_rewrite(spark, root, best_effort=True)
-    _resume_or_discard_staging(spark, root, best_effort=True)
-    fs_m, jmark = _hadoop_fs(spark, f"{root}/{_RERUN_MARKER}")
+    _recover(spark, root, best_effort=True)
+    fs_m, jmark = commit.hadoop_fs(spark, f"{root}/{_RERUN_MARKER}")
     if fs_m.exists(jmark):
         import warnings
 
@@ -1439,7 +1095,7 @@ def minhash_index_stats(spark, path: str) -> DataFrame:
 
         agg = sel(df, False)
         delta = f"{root}/{_DELTA}/{tbl}"
-        fs, jd = _hadoop_fs(spark, delta)
+        fs, jd = commit.hadoop_fs(spark, delta)
         if fs.exists(jd):
             agg = agg.unionByName(sel(spark.read.parquet(delta), True))
         base = agg.agg(
@@ -1527,8 +1183,7 @@ def minhash_index_delete(
     # (or fully) staged would miss its rows — the doomed-doc scan must
     # see every accepted document. The delta-rewrite settle runs FIRST
     # (its docstring's ordering argument).
-    _settle_delta_rewrite(spark, root)
-    _resume_or_discard_staging(spark, root)
+    _recover(spark, root)
     if isinstance(ids, DataFrame):
         # materialize the retraction set ONCE (r19): it feeds the db
         # prune collect, the doomed semi-join, the delta semi count,
@@ -1550,7 +1205,23 @@ def minhash_index_delete(
         ids_df = literal_frame(
             spark, [(i,) for i in ids], f"doc_id {dtype}"
         ).distinct()
+    held = [ids_df]  # every frame this delete persists, released on exit
+    try:
+        return _delete_ids(
+            spark, root, ids_df, held,
+            n_hashes=n_hashes, bands=bands, pb_buckets=pb_buckets,
+            db_buckets=db_buckets,
+        )
+    finally:
+        for df in held:
+            df.unpersist()
 
+
+def _delete_ids(
+    spark, root: str, ids_df: DataFrame, held: list, *,
+    n_hashes: int, bands: int, pb_buckets: int, db_buckets: int,
+) -> dict:
+    """minhash_index_delete's body over the materialized id set."""
     staging = f"{root}/_delete_staging"
 
     def _pruned(table, part_col, buckets, parts):
@@ -1561,8 +1232,6 @@ def minhash_index_delete(
 
     def _rewrite(table, part_col, buckets, parts, survivors):
         """Stage survivors, dynamic-overwrite live, drop emptied dirs."""
-        from idhub_spark.operators.merge_into import _hadoop_fs
-
         st = f"{staging}/{table}"
         if buckets:
             (
@@ -1575,7 +1244,7 @@ def minhash_index_delete(
             # Observation on a ZERO-row staged write (every row of
             # every touched partition deleted) never fires its metric
             # row and the retrieval throws; the listing is empty-safe
-            fs_st, jst = _hadoop_fs(spark, st)
+            fs_st, jst = commit.hadoop_fs(spark, st)
             present = {
                 int(s.getPath().getName().split("=", 1)[1])
                 for s in fs_st.listStatus(jst)
@@ -1589,15 +1258,15 @@ def minhash_index_delete(
                     .partitionBy(part_col)
                     .parquet(f"{root}/{table}")
                 )
-            fs, _ = _hadoop_fs(spark, root)
+            fs, _ = commit.hadoop_fs(spark, root)
             for p in set(parts) - present:
-                _, jdir = _hadoop_fs(spark, f"{root}/{table}/{part_col}={p}")
+                _, jdir = commit.hadoop_fs(spark, f"{root}/{table}/{part_col}={p}")
                 fs.delete(jdir, True)
         else:
             # flat layout: whole-table rewrite through the staged copy
             # (never overwrite a path the plan also reads)
             survivors.write.mode("overwrite").parquet(st)
-            fs_st, jst = _hadoop_fs(spark, st)
+            fs_st, jst = commit.hadoop_fs(spark, st)
             has_data = any(
                 not s.getPath().getName().startswith(("_", "."))
                 for s in fs_st.listStatus(jst)
@@ -1622,14 +1291,12 @@ def minhash_index_delete(
                 ).repartition(1)
             staged.write.mode("overwrite").parquet(f"{root}/{table}")
 
-    from idhub_spark.operators.merge_into import _hadoop_fs
-
     def _delta_df(table):
         """The delta buffer's image of one table (None when absent),
         db-pruned where computable — the delta is one tiny file per
         buffered append, so a row filter is all the pruning it needs."""
         p = f"{root}/{_DELTA}/{table}"
-        fs, jp = _hadoop_fs(spark, p)
+        fs, jp = commit.hadoop_fs(spark, p)
         if not fs.exists(jp):
             return None
         return spark.read.parquet(p)
@@ -1674,7 +1341,7 @@ def minhash_index_delete(
         fails every read until manual repair."""
         live = f"{root}/{_DELTA}/{table}"
         st = f"{staging}/delta_{table}"
-        fs, jlive = _hadoop_fs(spark, live)
+        fs, jlive = commit.hadoop_fs(spark, live)
         if not fs.exists(jlive):
             return
         from pyspark.sql import Observation
@@ -1690,19 +1357,21 @@ def minhash_index_delete(
         # getOrEmpty is the NON-BLOCKING presence probe (obs.get would
         # wait forever if a plan shape ever pruned the metrics node);
         # once present, obs.get returns immediately
+        try:
+            observed = not obs._jo.getOrEmpty().isEmpty()
+        except Exception:  # private handle absent: take the read-back
+            observed = False
         n_surv = (
-            int(obs.get["n"])
-            if not obs._jo.getOrEmpty().isEmpty()
-            else spark.read.parquet(st).count()
+            int(obs.get["n"]) if observed else spark.read.parquet(st).count()
         )
         if n_surv == 0:
             fs.delete(jlive, True)
-            _, jst_dir = _hadoop_fs(spark, st)
+            _, jst_dir = commit.hadoop_fs(spark, st)
             fs.delete(jst_dir, True)
             return
         aside = f"{root}/{_DELTA}/._old_{table}"
-        _, jaside = _hadoop_fs(spark, aside)
-        _, jst = _hadoop_fs(spark, st)
+        _, jaside = commit.hadoop_fs(spark, aside)
+        _, jst = commit.hadoop_fs(spark, st)
         if not fs.rename(jlive, jaside):
             raise RuntimeError(
                 f"dedup index {root!r}: delta rewrite could not rename "
@@ -1733,6 +1402,7 @@ def minhash_index_delete(
     # the Hive layout — appends write both tables to one place), the
     # sum is the logical retraction count.
     doomed = docs_tbl.join(ids_df, "doc_id", "semi").persist()
+    held.append(doomed)
     res: dict = {}
 
     def _doomed_stats():
@@ -1816,15 +1486,14 @@ def minhash_index_delete(
     # 'present' buffer hit absent subtables. Both tables empty
     # together by construction (appends write them as one batch,
     # deletes remove the same ids).
-    fs, jdelta = _hadoop_fs(spark, f"{root}/{_DELTA}")
+    fs, jdelta = commit.hadoop_fs(spark, f"{root}/{_DELTA}")
     if fs.exists(jdelta):
-        fs_d, jdd = _hadoop_fs(spark, f"{root}/{_DELTA}/docs")
-        fs_b, jdb = _hadoop_fs(spark, f"{root}/{_DELTA}/bands")
+        fs_d, jdd = commit.hadoop_fs(spark, f"{root}/{_DELTA}/docs")
+        fs_b, jdb = commit.hadoop_fs(spark, f"{root}/{_DELTA}/bands")
         if not fs_d.exists(jdd) and not fs_b.exists(jdb):
             fs.delete(jdelta, True)
-    doomed.unpersist()
 
-    fs, jstag = _hadoop_fs(spark, staging)
+    fs, jstag = commit.hadoop_fs(spark, staging)
     fs.delete(jstag, True)
     # a COMPLETED delete is the rerun the rollback flag demands (the
     # at-least-once retry discipline: the caller retries the same
@@ -1842,9 +1511,9 @@ def minhash_index_delete(
     # only the documented same-takedown retry contract
     # (docs/operations.md §dedup-index) can vouch for coverage — the
     # pre-r17 any-delete-clears semantics, now confined to that case.
-    _, jmark = _hadoop_fs(spark, f"{root}/{_RERUN_MARKER}")
+    _, jmark = commit.hadoop_fs(spark, f"{root}/{_RERUN_MARKER}")
     if fs.exists(jmark):
-        _, jdelta_m = _hadoop_fs(spark, f"{root}/{_DELTA}")
+        _, jdelta_m = commit.hadoop_fs(spark, f"{root}/{_DELTA}")
         if rows_delta > 0 or not fs.exists(jdelta_m):
             fs.delete(jmark, False)
     return {
@@ -1865,7 +1534,7 @@ def minhash_index_compact(
     dst_path: str,
     *,
     target_bytes: int = 128 * 1024 * 1024,
-    ingest_log_horizon_s: float | None = INGEST_LOG_HORIZON_S,
+    ingest_log_horizon_s: float | None = commit.INGEST_LOG_HORIZON_S,
 ) -> tuple[int, int]:
     """Compact a dedup index's append debris AND carry its _params to
     the compacted copy — ivf_index_compact's twin. Every append lands
@@ -1892,15 +1561,13 @@ def minhash_index_compact(
     compacted copy has NO delta dir; probes against it read the Hive
     layout alone. Delta files count as source files. Returns summed
     (n_source_files, n_output_files)."""
-    from idhub_spark.operators.merge_into import _hadoop_fs
     from idhub_spark.storage import compact_partitioned, compact_small_files
 
     src = src_path.rstrip("/")
     dst = dst_path.rstrip("/")
-    _settle_delta_rewrite(spark, src)
-    _resume_or_discard_staging(spark, src)
+    _recover(spark, src)
     n_hashes, bands, pb_buckets, db_buckets = _load_params(spark, src)
-    fs, _ = _hadoop_fs(spark, src)
+    fs, _ = commit.hadoop_fs(spark, src)
     # one-sided delta = crashed-delete debris (bands dropped with docs
     # still present, reachable only on the all-buffered-docs-doomed
     # path — fold docstring's proof): the remaining delta rows are all
@@ -1908,8 +1575,8 @@ def minhash_index_compact(
     # the takedown (ADVICE r14's 'silently folded back' gap). Exclude
     # the debris — the compacted copy completes the retraction — and
     # say so.
-    _dd = fs.exists(_hadoop_fs(spark, f"{src}/{_DELTA}/docs")[1])
-    _db = fs.exists(_hadoop_fs(spark, f"{src}/{_DELTA}/bands")[1])
+    _dd = fs.exists(commit.hadoop_fs(spark, f"{src}/{_DELTA}/docs")[1])
+    _db = fs.exists(commit.hadoop_fs(spark, f"{src}/{_DELTA}/bands")[1])
     skip_delta = _dd != _db
     if skip_delta:
         import warnings
@@ -1927,7 +1594,7 @@ def minhash_index_compact(
     ):
         delta_tbl = f"{src}/{_DELTA}/{table}"
         has_delta = not skip_delta and fs.exists(
-            _hadoop_fs(spark, delta_tbl)[1]
+            commit.hadoop_fs(spark, delta_tbl)[1]
         )
         if buckets:
             s, o = compact_partitioned(
@@ -1947,7 +1614,7 @@ def minhash_index_compact(
             def _data_files(p):
                 return [
                     st
-                    for st in fs.listStatus(_hadoop_fs(spark, p)[1])
+                    for st in fs.listStatus(commit.hadoop_fs(spark, p)[1])
                     if st.isFile()
                     and not st.getPath().getName().startswith(("_", "."))
                 ]
@@ -1970,120 +1637,32 @@ def minhash_index_compact(
             )
         n_src += s
         n_out += o
-    # params for the copy: driver-side parquet bytes, no Spark job
-    # (r20 — the values were already loaded above; a pre-r12 source's
-    # 2-column row canonicalizes to the 4-column form with zeros, the
-    # same values _load_params returned for it). Parquet first, marker
-    # second — the write-side ordering contract.
+    # params for the copy (driver-side, no Spark job): parquet first,
+    # marker second — the write-side ordering contract
     _write_params_parquet(
         spark, dst, (n_hashes, bands, pb_buckets, db_buckets)
     )
     _write_params_meta(
         spark, dst, (n_hashes, bands, pb_buckets, db_buckets)
     )
-    # carry the ingest log (r15): the compacted copy holds the same
-    # accepted batches, so their idempotency keys must keep rejecting
-    # retries — each entry is an empty marker file, recreated at dst.
-    # Only entries still inside the retry horizon carry (r16, the
-    # VERDICT r15 size bound): the per-entry driver loop is thereby
-    # O(batch_rate x horizon), not O(total batches ever), and the dst
-    # log is born pruned. Carried entries keep the SOURCE's accept time
-    # in the dst FILENAME (r17 — storage-independent: the old
-    # fs.setTimes carry was a silent no-op on object stores, so every
-    # compact there reset the horizon clock and carried entries never
-    # aged out); legacy bare-key entries are canonicalized to the named
-    # form with their source mtime as the accept time.
-    jlog_src = _hadoop_fs(spark, f"{src}/{_INGEST_LOG}")[1]
-    if fs.exists(jlog_src):
-        import time
-
-        cutoff = (
-            int(time.time() * 1000) - int(ingest_log_horizon_s * 1000)
-            if ingest_log_horizon_s is not None
-            else None
-        )
-        for st in fs.listStatus(jlog_src):
-            key, accept_ms = _marker_parse(
-                st.getPath().getName(), st.getModificationTime()
-            )
-            if cutoff is not None and accept_ms < cutoff:
-                continue
-            _, jd = _hadoop_fs(
-                spark,
-                f"{dst}/{_INGEST_LOG}/{_marker_name(key, accept_ms)}",
-            )
-            fs.create(jd, True).close()
+    # the compacted copy holds the same accepted batches: their
+    # in-horizon keys must keep rejecting retries
+    commit.carry_ingest_log(spark, src, dst, ingest_log_horizon_s)
     # carry the delete-rerun flag (ADVICE r15): the compacted copy
     # holds the same rows, restored-doomed included — the pending
     # takedown transfers with them
-    jmark_src = _hadoop_fs(spark, f"{src}/{_RERUN_MARKER}")[1]
+    jmark_src = commit.hadoop_fs(spark, f"{src}/{_RERUN_MARKER}")[1]
     if fs.exists(jmark_src):
-        _, jmark_dst = _hadoop_fs(spark, f"{dst}/{_RERUN_MARKER}")
+        _, jmark_dst = commit.hadoop_fs(spark, f"{dst}/{_RERUN_MARKER}")
         fs.create(jmark_dst, True).close()
     return n_src, n_out
-
-
-def _ingest_log_report(spark, root: str, horizon_s: float | None) -> dict:
-    """Read-only profile of an index's ingest log (shared by both
-    fsck surfaces): entry count, how many are legacy bare-key form
-    (pre-r17, mtime-dated), the oldest/newest accept age, and how many
-    are past the retry horizon (prunable at the next maintenance
-    cadence). One listStatus; no Spark job; never mutates."""
-    import time
-
-    from idhub_spark.operators.merge_into import _hadoop_fs
-
-    fs, jlog = _hadoop_fs(spark, f"{root.rstrip('/')}/{_INGEST_LOG}")
-    if not fs.exists(jlog):
-        return {"n_entries": 0, "n_legacy": 0, "oldest_age_s": None,
-                "newest_age_s": None, "n_past_horizon": 0}
-    now_ms = int(time.time() * 1000)
-    ages, n_legacy = [], 0
-    for st in fs.listStatus(jlog):
-        name = st.getPath().getName()
-        key, accept_ms = _marker_parse(name, st.getModificationTime())
-        if key == name:
-            n_legacy += 1
-        ages.append((now_ms - accept_ms) / 1000.0)
-    past = (
-        sum(1 for a in ages if a > horizon_s) if horizon_s is not None else 0
-    )
-    return {
-        "n_entries": len(ages),
-        "n_legacy": n_legacy,
-        "oldest_age_s": round(max(ages), 3) if ages else None,
-        "newest_age_s": round(min(ages), 3) if ages else None,
-        "n_past_horizon": past,
-    }
-
-
-def _fsck_guard(findings: list, label: str):
-    """Context manager shared by both fsck surfaces: a concurrent
-    writer settling/promoting debris between an fsck's exists and its
-    follow-up listing/read must degrade to a FINDING ('rerun fsck'),
-    never crash the check — fsck is advisory and documented safe to
-    run while the single writer runs, so transient races are expected
-    states, not errors."""
-    import contextlib
-
-    @contextlib.contextmanager
-    def _cm():
-        try:
-            yield
-        except Exception:
-            findings.append(
-                f"could not inspect {label} (changed under the check — "
-                "concurrent writer? — or unreadable): rerun fsck"
-            )
-
-    return _cm()
 
 
 def minhash_index_fsck(
     spark,
     path: str,
     *,
-    ingest_log_horizon_s: float | None = INGEST_LOG_HORIZON_S,
+    ingest_log_horizon_s: float | None = commit.INGEST_LOG_HORIZON_S,
 ) -> dict:
     """READ-ONLY health check of a persisted dedup index — the
     diagnosis half of every settle/maintenance surface, with zero
@@ -2103,56 +1682,37 @@ def minhash_index_fsck(
     holding more than one docs row across live ∪ delta — one bounded
     aggregate, the only Spark job fsck runs.
 
-    States mirror _resume_or_discard_staging and _settle_delta_rewrite
-    exactly (see their docstrings for the protocol arguments):
-    append staging committed -> 'committed (settle promotes)' else
-    'uncommitted (settle discards)'; delta rewrite aside+live ->
+    The append staging's state and settle action come from
+    commit.StagedCommit.state() — the same call the settle acts on
+    (uncommitted -> discard, committed -> apply). The delta rewrite's
+    states mirror _settle_delta_rewrite: aside+live ->
     'aside drop pending', aside+staged -> 'promote pending',
     aside-only -> 'ROLLBACK pending (restores retracted rows — rerun
     the takedown after settling)'."""
-    from idhub_spark.operators.merge_into import _hadoop_fs
-
     root = path.rstrip("/")
     # raises the clear no-_params error on a non-index path
     n_hashes, bands, pb_buckets, db_buckets = _load_params(spark, root)
-    fs, _ = _hadoop_fs(spark, root)
+    fs, _ = commit.hadoop_fs(spark, root)
     findings: list[str] = []
 
-    staging = f"{root}/{_STAGING}"
     append_state = None
-    with _fsck_guard(findings, "append staging"):
-        if fs.exists(_hadoop_fs(spark, staging)[1]):
-            committed = fs.exists(
-                _hadoop_fs(spark, f"{staging}/{_COMMITTED}")[1]
-            )
-            folding = fs.exists(_hadoop_fs(spark, f"{staging}/{_FOLD}")[1])
-            batch_keys = [
-                st.getPath().getName()[len("_BATCH_"):]
-                for st in fs.listStatus(_hadoop_fs(spark, staging)[1])
-                if st.getPath().getName().startswith("_BATCH_")
-            ]
-            append_state = {
-                "state": "committed" if committed else "uncommitted",
-                "settle_action": "promote" if committed else "discard",
-                "is_fold": folding,
-                "batch_keys": batch_keys,
-            }
-            findings.append(
-                f"append staging pending ({append_state['state']}; settle "
-                f"would {append_state['settle_action']})"
-            )
+    with commit.fsck_guard(findings, "append staging"):
+        sc = _append_commit(spark, root)
+        append_state = sc.report(findings)
+        if append_state is not None:
+            append_state["is_fold"] = sc.exists(_FOLD)
 
     rewrite = {}
     for table in ("docs", "bands"):
-        with _fsck_guard(findings, f"delta rewrite state of {table!r}"):
+        with commit.fsck_guard(findings, f"delta rewrite state of {table!r}"):
             aside = f"{root}/{_DELTA}/._old_{table}"
-            if not fs.exists(_hadoop_fs(spark, aside)[1]):
+            if not fs.exists(commit.hadoop_fs(spark, aside)[1]):
                 continue
             live_ok = fs.exists(
-                _hadoop_fs(spark, f"{root}/{_DELTA}/{table}")[1]
+                commit.hadoop_fs(spark, f"{root}/{_DELTA}/{table}")[1]
             )
             staged_ok = fs.exists(
-                _hadoop_fs(spark, f"{root}/_delete_staging/delta_{table}")[1]
+                commit.hadoop_fs(spark, f"{root}/_delete_staging/delta_{table}")[1]
             )
             if live_ok:
                 rewrite[table] = "aside drop pending"
@@ -2167,25 +1727,25 @@ def minhash_index_fsck(
                 f"delta rewrite pending on {table!r}: {rewrite[table]}"
             )
 
-    rerun = fs.exists(_hadoop_fs(spark, f"{root}/{_RERUN_MARKER}")[1])
+    rerun = fs.exists(commit.hadoop_fs(spark, f"{root}/{_RERUN_MARKER}")[1])
     if rerun:
         findings.append(
             "delete rerun needed (a rollback restored retracted rows)"
         )
-    stale_del = fs.exists(_hadoop_fs(spark, f"{root}/_delete_staging")[1])
+    stale_del = fs.exists(commit.hadoop_fs(spark, f"{root}/_delete_staging")[1])
     if stale_del:
         findings.append(
             "delete staging present (a retraction crashed mid-run or is "
             "in flight — rerun the takedown to completion)"
         )
 
-    jdelta = _hadoop_fs(spark, f"{root}/{_DELTA}")[1]
+    jdelta = commit.hadoop_fs(spark, f"{root}/{_DELTA}")[1]
     delta_info = {"present": False, "files": 0}
-    with _fsck_guard(findings, "delta buffer"):
+    with commit.fsck_guard(findings, "delta buffer"):
         if fs.exists(jdelta):
             n = 0
             for table in ("docs", "bands"):
-                jt = _hadoop_fs(spark, f"{root}/{_DELTA}/{table}")[1]
+                jt = commit.hadoop_fs(spark, f"{root}/{_DELTA}/{table}")[1]
                 if fs.exists(jt):
                     n += sum(
                         1
@@ -2195,8 +1755,8 @@ def minhash_index_fsck(
             delta_info = {"present": True, "files": n}
 
     log_report = None
-    with _fsck_guard(findings, "ingest log"):
-        log_report = _ingest_log_report(spark, root, ingest_log_horizon_s)
+    with commit.fsck_guard(findings, "ingest log"):
+        log_report = commit.ingest_log_report(spark, root, ingest_log_horizon_s)
 
     # duplicate doc_ids (VERDICT/ADVICE r19): the r19 per-row _doc_state
     # emits one index row per input row where the old groupBy
@@ -2207,7 +1767,7 @@ def minhash_index_fsck(
     # no hot-path cost. Non-zero flags the index unhealthy (the fix is
     # a retract-and-reingest of the offending ids, or a rebuild).
     dup_doc_ids = None
-    with _fsck_guard(findings, "docs table (duplicate-id check)"):
+    with commit.fsck_guard(findings, "docs table (duplicate-id check)"):
         dup_doc_ids = int(
             _read_state_table(spark, root, "docs")
             .groupBy("doc_id")

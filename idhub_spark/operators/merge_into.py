@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.errors import AnalysisException, UnsupportedOperationException
 from pyspark.sql.types import IntegralType
 
+from idhub_spark import commit
 from idhub_spark.operators.merge import MODES, merge_upsert
 
 
@@ -75,19 +76,13 @@ _LAYOUT_FILE = "_layout.json"
 _MERGE_VIEW_SEQ = itertools.count()
 
 
-def _hadoop_fs(spark: SparkSession, path: str):
-    jvm = spark.sparkContext._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), jpath
-
-
 def _write_layout(spark: SparkSession, table_root: str, meta: dict) -> None:
     """Persist the bucket-layout contract next to the data, through the
     Hadoop FileSystem API so it lands on s3a://-style roots too (one
     small PUT). Failure to write only disables the mismatch guard, so
     best-effort."""
     try:
-        fs, jpath = _hadoop_fs(spark, os.path.join(table_root, _LAYOUT_FILE))
+        fs, jpath = commit.hadoop_fs(spark, os.path.join(table_root, _LAYOUT_FILE))
         out = fs.create(jpath, True)
         out.write(bytearray(json.dumps(meta).encode("utf-8")))
         out.close()
@@ -98,7 +93,7 @@ def _write_layout(spark: SparkSession, table_root: str, meta: dict) -> None:
 def read_layout(spark: SparkSession, table_root: str) -> dict | None:
     """The seeded layout contract, or None for a pre-sidecar table."""
     try:
-        fs, jpath = _hadoop_fs(spark, os.path.join(table_root, _LAYOUT_FILE))
+        fs, jpath = commit.hadoop_fs(spark, os.path.join(table_root, _LAYOUT_FILE))
         if not fs.exists(jpath):
             return None
         stream = fs.open(jpath)
@@ -370,7 +365,7 @@ def partition_pruned_upsert(
     # ran per upsert (r20, guide §1.2 — same values, zero jobs; an
     # object store answers this with a single LIST). Listed BEFORE the
     # overwrite, trivially.
-    fs_root, jroot = _hadoop_fs(spark, table_root)
+    fs_root, jroot = commit.hadoop_fs(spark, table_root)
     _pfx = f"{bucket_col}="
     # directory names parse to bucket_of's output type, so on_disk
     # compares equal to bucket_of values (touched, delete buckets)

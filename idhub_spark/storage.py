@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from idhub_spark import commit
+
 
 def write_bucketed(
     df: DataFrame,
@@ -223,7 +225,7 @@ def compact_small_files(
     system), at the cost of not fixing skew (skewed inputs go through
     size_bucketed_repartition instead). File sizes are listed via the
     Hadoop FS API so s3a:// roots work identically
-    (operators/merge_into.py:_hadoop_fs pattern).
+    (commit.hadoop_fs).
 
     PARTITIONED layouts are handled by recursion: every directory
     level is walked, and each LEAF directory (one Hive partition,
@@ -243,8 +245,6 @@ def compact_small_files(
     import math
     import posixpath
 
-    from idhub_spark.operators.merge_into import _hadoop_fs
-
     src_n, dst_n = posixpath.normpath(src_dir), posixpath.normpath(dst_dir)
     if (
         dst_n == src_n
@@ -258,7 +258,7 @@ def compact_small_files(
             "under dynamic partition overwrite); compact into a sibling "
             "and swap"
         )
-    fs, jpath = _hadoop_fs(spark, src_dir)
+    fs, jpath = commit.hadoop_fs(spark, src_dir)
 
     def leaves(jp, rel):
         files, out = [], []
@@ -347,10 +347,6 @@ def compact_partitioned(
     import math
     import posixpath
 
-    from pyspark.sql import functions as F
-
-    from idhub_spark.operators.merge_into import _hadoop_fs
-
     src_n, dst_n = posixpath.normpath(src_dir), posixpath.normpath(dst_dir)
     if (
         dst_n == src_n
@@ -360,7 +356,7 @@ def compact_partitioned(
         raise ValueError(
             "compact_partitioned: dst_dir must be disjoint from src_dir"
         )
-    fs, jsrc = _hadoop_fs(spark, src_dir)
+    fs, jsrc = commit.hadoop_fs(spark, src_dir)
 
     def walk(jp):
         for st in fs.listStatus(jp):
@@ -387,7 +383,7 @@ def compact_partitioned(
                 "compact_partitioned: extra_paths must be disjoint from "
                 "dst_dir"
             )
-        fs_e, jep = _hadoop_fs(spark, ep)
+        fs_e, jep = commit.hadoop_fs(spark, ep)
         extra_files.extend(
             st
             for st in fs_e.listStatus(jep)
@@ -429,7 +425,7 @@ def compact_partitioned(
             ),
         )
     out.write.mode("overwrite").partitionBy(part_col).parquet(dst_dir)
-    fs_d, jdst = _hadoop_fs(spark, dst_dir)
+    fs_d, jdst = commit.hadoop_fs(spark, dst_dir)
 
     def walk_d(jp):
         for st in fs_d.listStatus(jp):

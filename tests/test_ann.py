@@ -889,10 +889,10 @@ def test_ivf_index_split_resume_after_crash(spark, vectors, tmp_path):
     stats = {r.cluster: r.n_rows for r in ivf_index_stats(spark, path).collect()}
     hot = max((c for c in stats if c >= 0), key=lambda c: stats[c])
 
-    # run the split fully, then rewind it to the crashed-mid-apply
+    # run the split fully, then rewind it to the committed-mid-apply
     # state: new sub-cluster dirs back into staging (+ the staged
-    # centroid set + the _source_cluster marker the real phase-1
-    # writes before the delete), old dir still absent
+    # centroid set, the _source_cluster record and _COMMITTED, all
+    # written before the apply's delete), old dir still absent
     done = ivf_index_split_cluster(spark, path, hot, k2=2)
     staging = os.path.join(path, "_split_staging")
     os.makedirs(staging)
@@ -904,6 +904,7 @@ def test_ivf_index_split_resume_after_crash(spark, vectors, tmp_path):
     spark.createDataFrame([(int(hot),)], "cluster int").coalesce(
         1
     ).write.parquet(f"{staging}/_source_cluster")
+    open(os.path.join(staging, "_COMMITTED"), "w").close()
     # sanity: the index is now missing the split members
     assert spark.read.parquet(path).count() < n_total
 
@@ -959,6 +960,7 @@ def test_ivf_index_split_rerun_other_cluster_resumes_first(
     spark.createDataFrame([(int(hot),)], "cluster int").coalesce(
         1
     ).write.parquet(f"{staging}/_source_cluster")
+    open(os.path.join(staging, "_COMMITTED"), "w").close()
     lost_rows = n_total - spark.read.parquet(path).count()
     assert lost_rows > 0  # A's members live only in staging
 
@@ -1150,10 +1152,11 @@ def test_ivf_index_delete(spark, vectors, tmp_path):
 def test_ivf_index_split_discards_corrupt_marker_staging(
     spark, vectors, tmp_path
 ):
-    """A staging whose _source_cluster marker exists but is unreadable
-    (crash DURING the marker write) is provably unapplied — the marker
-    write completes before the old-dir delete runs — so the split must
-    discard it and proceed normally, not crash on the parquet read."""
+    """An UNCOMMITTED staging whose _source_cluster record is unreadable
+    (crash DURING the record write) is discarded like any uncommitted
+    staging — _COMMITTED is written after the record — and the split
+    proceeds normally. A COMMITTED staging with an unreadable record
+    raises instead of guessing, leaving the staging in place."""
     import os
 
     from idhub_spark.operators.ann import (
@@ -1174,7 +1177,12 @@ def test_ivf_index_split_discards_corrupt_marker_staging(
     marker = tmp_path / "idx" / "_split_staging" / "_source_cluster"
     marker.mkdir(parents=True)
     (marker / "part-corrupt.parquet").write_bytes(b"not parquet")
+    (marker.parent / "_COMMITTED").touch()
+    with pytest.raises(RuntimeError, match="refusing to guess"):
+        ivf_index_split_cluster(spark, path, hot, k2=2)
+    assert os.path.isdir(f"{path}/_split_staging")
 
+    (marker.parent / "_COMMITTED").unlink()
     out = ivf_index_split_cluster(spark, path, hot, k2=2)
     assert out.count() == 5
     assert not os.path.isdir(f"{path}/_split_staging")
@@ -1303,13 +1311,12 @@ def test_ivf_index_merge_resume_after_crash(spark, tmp_path):
     literal_frame(spark, [(2,), (3,)], "cluster int").coalesce(1).write.parquet(
         f"{staging}/_cold_clusters"
     )
-    # the crash: phase 2 entered (the _applying sentinel is the FIRST
-    # phase-2 write — ADVICE r13 keying), cluster=3 already deleted,
+    # the crash: committed, apply entered — cluster=3 already deleted,
     # cluster=2 not yet
     import pathlib
     import shutil
 
-    pathlib.Path(staging, "_applying").touch()
+    pathlib.Path(staging, "_COMMITTED").touch()
     shutil.rmtree(f"{path}/cluster=3")
     assert spark.read.parquet(path).count() == 192  # temporarily missing
 
@@ -1447,6 +1454,7 @@ def test_maintenance_entry_points_settle_pending_split(
         spark.createDataFrame([(int(hot),)], "cluster int").coalesce(
             1
         ).write.parquet(f"{staging}/_source_cluster")
+        open(os.path.join(staging, "_COMMITTED"), "w").close()
 
     # (a) stats settles: the report must count the staged rows
     _rewind()
@@ -1533,7 +1541,7 @@ def test_split_entry_settles_pending_merge(spark, tmp_path):
     )
     import pathlib
 
-    pathlib.Path(staging, "_applying").touch()  # phase 2 entered
+    pathlib.Path(staging, "_COMMITTED").touch()  # apply entered
     shutil.rmtree(f"{path}/cluster=3")
     assert spark.read.parquet(path).count() == 192  # 8 rows only staged
 
@@ -1590,6 +1598,7 @@ def test_compact_settles_pending_split(spark, vectors, tmp_path):
     spark.createDataFrame([(int(hot),)], "cluster int").coalesce(
         1
     ).write.parquet(f"{staging}/_source_cluster")
+    open(os.path.join(staging, "_COMMITTED"), "w").close()
     assert spark.read.parquet(path).count() < n_total
 
     packed = str(tmp_path / "idx_packed")
@@ -1599,9 +1608,9 @@ def test_compact_settles_pending_split(spark, vectors, tmp_path):
 
 
 def _fabricate_merge_staging(spark, path, centroids):
-    """Phase-1 merge staging for cold clusters {2,3}, exactly as
-    ivf_index_merge_cold_clusters writes it (no _applying sentinel —
-    phase 2 not yet entered)."""
+    """Uncommitted merge staging for cold clusters {2,3}, exactly as
+    ivf_index_merge_cold_clusters stages it before writing
+    _COMMITTED."""
     from idhub_spark.operators.ann import _assign
     from idhub_spark.session import literal_frame
 
@@ -1628,16 +1637,13 @@ def _fabricate_merge_staging(spark, path, centroids):
     return staging
 
 
-def test_merge_settle_keys_on_applying_sentinel(spark, tmp_path):
-    """ADVICE r13: _apply_merge_staging's cold-dir delete is not
-    atomic — a crash mid-delete of the FIRST dir leaves it present
-    with part-files missing, which the old all-cold-dirs-present test
-    misread as 'provably unapplied' and DISCARDED the staged rows over
-    a half-deleted cluster. The settle now keys on the _applying
-    phase sentinel: (a) sentinel present + every cold dir present but
-    one half-emptied -> RESUME (rows restored, nothing lost);
-    (b) sentinel absent + all dirs present -> discard (phase 2 never
-    started) — the pre-existing semantics for a phase-1-only crash."""
+def test_merge_settle_keys_on_commit_marker(spark, tmp_path):
+    """The apply step's cold-dir delete is not atomic — a crash
+    mid-delete of the FIRST dir leaves it present with part-files
+    missing, so directory presence proves nothing. The settle keys on
+    _COMMITTED alone: (a) committed + a half-emptied cold dir ->
+    RESUME (rows restored, nothing lost); (b) uncommitted + all dirs
+    present -> discard, and the merge re-runs from live state."""
     import glob as _glob
     import os
     import pathlib
@@ -1651,11 +1657,11 @@ def test_merge_settle_keys_on_applying_sentinel(spark, tmp_path):
 
     vectors, centroids = _merge_fixture(spark)
 
-    # (a) half-deleted first cold dir, sentinel present -> resume
+    # (a) half-deleted first cold dir, committed -> resume
     path = str(tmp_path / "idx_half")
     ivf_sq8_index_write(vectors, centroids, sq8_fit(vectors), path)
     staging = _fabricate_merge_staging(spark, path, centroids)
-    pathlib.Path(staging, "_applying").touch()
+    pathlib.Path(staging, "_COMMITTED").touch()
     # the crash: some (not all) part-files of cluster=2 already gone —
     # the dir still EXISTS, so a presence test would say 'unapplied'
     part_files = _glob.glob(f"{path}/cluster=2/*.parquet")
@@ -1669,8 +1675,8 @@ def test_merge_settle_keys_on_applying_sentinel(spark, tmp_path):
     # half-deleted cold dirs removed — nothing lost, nothing doubled
     assert s[-1] == 200 and set(s) == {-1, 0, 1}
 
-    # (b) sentinel absent, all cold dirs intact -> provably unapplied,
-    # staging discarded and the merge re-runs from live state
+    # (b) uncommitted, all cold dirs intact -> staging discarded and
+    # the merge re-runs from live state
     path2 = str(tmp_path / "idx_clean")
     ivf_sq8_index_write(vectors, centroids, sq8_fit(vectors), path2)
     staging2 = _fabricate_merge_staging(spark, path2, centroids)
@@ -1679,51 +1685,6 @@ def test_merge_settle_keys_on_applying_sentinel(spark, tmp_path):
     assert sorted(rep2["merged_clusters"]) == [2, 3]  # fresh merge ran
     assert rep2["rows_moved"] == 20
     assert not os.path.isdir(staging2)
-    s2 = {r.cluster: r.n_rows for r in ivf_index_stats(spark, path2).collect()}
-    assert s2[-1] == 200 and set(s2) == {-1, 0, 1}
-
-
-def test_merge_settle_legacy_staging_fallback(spark, tmp_path):
-    """ADVICE r14: stagings written before the _applying sentinel
-    existed never carry one, so 'sentinel absent' cannot mean 'phase 2
-    never started' for them. (a) legacy staging + a recorded cold dir
-    MISSING (the old presence-based proof that phase 2 ran) -> RESUME:
-    the staged re-assigned rows are the only copy of the deleted
-    cluster's vectors and must be renamed in, not discarded.
-    (b) legacy staging + every cold dir intact stays a discard (the
-    old settle's own behavior for a phase-1 crash)."""
-    import os
-    import shutil
-
-    from idhub_spark.operators.ann import (
-        ivf_index_merge_cold_clusters,
-        ivf_index_stats,
-        ivf_sq8_index_write,
-        sq8_fit,
-    )
-
-    vectors, centroids = _merge_fixture(spark)
-
-    # (a) pre-upgrade crash after deleting ONE cold dir (no sentinel)
-    path = str(tmp_path / "idx_legacy")
-    ivf_sq8_index_write(vectors, centroids, sq8_fit(vectors), path)
-    _fabricate_merge_staging(spark, path, centroids)
-    shutil.rmtree(f"{path}/cluster=2")
-    cents, rep = ivf_index_merge_cold_clusters(spark, path, min_rows=20)
-    assert rep == {"merged_clusters": [], "rows_moved": 0}  # resumed
-    assert not os.path.isdir(f"{path}/_merge_staging")
-    s = {r.cluster: r.n_rows for r in ivf_index_stats(spark, path).collect()}
-    # nothing lost: cluster=2's 10 rows live on via the staged
-    # re-assignment (a discard would have left 190)
-    assert s[-1] == 200 and set(s) == {-1, 0, 1}
-
-    # (b) is test_merge_settle_keys_on_applying_sentinel's case (b) —
-    # re-pinned here against the fallback: all dirs intact -> discard
-    path2 = str(tmp_path / "idx_legacy_clean")
-    ivf_sq8_index_write(vectors, centroids, sq8_fit(vectors), path2)
-    _fabricate_merge_staging(spark, path2, centroids)
-    cents2, rep2 = ivf_index_merge_cold_clusters(spark, path2, min_rows=20)
-    assert sorted(rep2["merged_clusters"]) == [2, 3]  # fresh merge ran
     s2 = {r.cluster: r.n_rows for r in ivf_index_stats(spark, path2).collect()}
     assert s2[-1] == 200 and set(s2) == {-1, 0, 1}
 
@@ -1776,85 +1737,11 @@ def test_ivf_append_batch_id_exactly_once(spark, vectors, tmp_path):
         new, centroids, bounds, path, batch_id="v-7") == "appended"
 
 
-def test_ivf_append_crash_injection_sweep(spark, vectors, tmp_path,
-                                          monkeypatch):
-    """The staged IVF append killed at every strided driver fs-call
-    boundary, then retried with the same batch_id, must land the
-    batch exactly once — crash before _COMMITTED discards and the
-    retry re-ingests; after it, the retry's entry settle promotes and
-    logs, and the append returns 'duplicate'. Search after each
-    retry sees a complete index (the best-effort settle heals a
-    committed-but-unpromoted staging)."""
-    import shutil
-
-    from idhub_spark.operators import merge_into
-    from idhub_spark.operators.ann import (
-        ivf_sq8_index_append,
-        ivf_sq8_index_write,
-        kmeans_fit,
-        sq8_fit,
-    )
-
-    old = vectors.filter(F.col("vec_id") >= 100)
-    new = vectors.filter(F.col("vec_id") < 100)
-    centroids = kmeans_fit(old, k=8, max_iter=2)
-    bounds = sq8_fit(old)
-    n_all = vectors.count()
-    tpl = str(tmp_path / "idx_sweep_tpl")
-    ivf_sq8_index_write(old, centroids, bounds, tpl)
-    real_fs = merge_into._hadoop_fs
-
-    counter = {"n": 0}
-
-    def counting(s, p):
-        counter["n"] += 1
-        return real_fs(s, p)
-
-    cnt = str(tmp_path / "idx_sweep_cnt")
-    shutil.copytree(tpl, cnt)
-    monkeypatch.setattr(merge_into, "_hadoop_fs", counting)
-    assert ivf_sq8_index_append(
-        new, centroids, bounds, cnt, batch_id="b1") == "appended"
-    monkeypatch.setattr(merge_into, "_hadoop_fs", real_fs)
-    total = counter["n"]
-    assert total > 5
-
-    ks = sorted(set(range(1, total + 1, max(1, total // 8))) | {1, total})
-    for k in ks:
-        idx = str(tmp_path / f"idx_sweep_k{k}")
-        shutil.copytree(tpl, idx)
-        calls = {"n": 0}
-
-        def crashing(s, p, _limit=k):
-            calls["n"] += 1
-            if calls["n"] > _limit:
-                raise _InjectedCrash(f"fs call {calls['n']}")
-            return real_fs(s, p)
-
-        monkeypatch.setattr(merge_into, "_hadoop_fs", crashing)
-        try:
-            ivf_sq8_index_append(new, centroids, bounds, idx, batch_id="b1")
-            crashed = False
-        except (_InjectedCrash, RuntimeError):
-            crashed = True
-        finally:
-            monkeypatch.setattr(merge_into, "_hadoop_fs", real_fs)
-        assert crashed or k == total, f"K={k}"
-
-        route = ivf_sq8_index_append(
-            new, centroids, bounds, idx, batch_id="b1")
-        assert route in ("appended", "duplicate"), f"K={k}"
-        got = spark.read.parquet(idx).count()
-        assert got == n_all, f"K={k}: {got} rows (exactly-once violated)"
-        assert not os.path.isdir(f"{idx}/_append_staging"), f"K={k}"
-        shutil.rmtree(idx, ignore_errors=True)
-
-
 def test_append_settles_pending_merge(spark, tmp_path):
     """ADVICE r15 medium: the staged append is a WRITER — it settles
     pending split/merge maintenance MANDATORILY before assigning, and
     assigns against the RESUMED centroid set. A crashed mid-phase-2
-    merge (_applying sentinel, one cold dir half-deleted) followed by
+    merge (committed, one cold dir half-deleted) followed by
     an append of vectors nearest the COLD centroid (passed the STALE
     pre-merge centroids) must resume the merge first and land the
     batch in the surviving cluster — the old behavior either promoted
@@ -1878,7 +1765,7 @@ def test_append_settles_pending_merge(spark, tmp_path):
     bounds = sq8_fit(vectors)
     ivf_sq8_index_write(vectors, centroids, bounds, path)
     staging = _fabricate_merge_staging(spark, path, centroids)
-    pathlib.Path(staging, "_applying").touch()
+    pathlib.Path(staging, "_COMMITTED").touch()
     part_files = _glob.glob(f"{path}/cluster=2/*.parquet")
     assert part_files
     os.remove(part_files[0])
@@ -1929,7 +1816,7 @@ def test_ivf_ingest_log_horizon(spark, tmp_path):
         ivf_sq8_index_write,
         sq8_fit,
     )
-    from idhub_spark.operators.dedup_index import _batch_key
+    from idhub_spark.commit import batch_key
 
     from tests.test_dedup_index import _age_entry, _log_entry
 
@@ -1946,17 +1833,17 @@ def test_ivf_ingest_log_horizon(spark, tmp_path):
         n1, centroids, bounds, path, batch_id="a") == "appended"
     assert ivf_sq8_index_append(
         n2, centroids, bounds, path, batch_id="b") == "appended"
-    _age_entry(path, _batch_key("a"), 8 * 24 * 3600 * 1000)
+    _age_entry(path, batch_key("a"), 8 * 24 * 3600 * 1000)
 
     # ADVICE r16: horizon=None disables the prune at the merge cadence
     # (no cluster is cold at min_rows=1 — only the entry prune runs)
     ivf_index_merge_cold_clusters(
         spark, path, min_rows=1, ingest_log_horizon_s=None)
-    assert _log_entry(path, _batch_key("a"))[0] is not None
+    assert _log_entry(path, batch_key("a"))[0] is not None
     # the default horizon prunes it in place, fresh mtime ignored
     ivf_index_merge_cold_clusters(spark, path, min_rows=1)
-    assert _log_entry(path, _batch_key("a"))[0] is None
-    assert _log_entry(path, _batch_key("b"))[0] is not None
+    assert _log_entry(path, batch_key("a"))[0] is None
+    assert _log_entry(path, batch_key("b"))[0] is not None
     assert ivf_sq8_index_append(
         n2, centroids, bounds, path, batch_id="b") == "duplicate"
 
@@ -1966,12 +1853,12 @@ def test_ivf_ingest_log_horizon(spark, tmp_path):
         [(902, [5.0] * dim)], "vec_id long, embedding array<double>")
     assert ivf_sq8_index_append(
         n3, centroids, bounds, path, batch_id="c") == "appended"
-    _age_entry(path, _batch_key("c"), 8 * 24 * 3600 * 1000)
-    b_ms = _log_entry(path, _batch_key("b"))[1]
+    _age_entry(path, batch_key("c"), 8 * 24 * 3600 * 1000)
+    b_ms = _log_entry(path, batch_key("b"))[1]
     dst = str(tmp_path / "idx_log_packed")
     ivf_index_compact(spark, path, dst)
-    assert _log_entry(dst, _batch_key("c"))[0] is None
-    assert _log_entry(dst, _batch_key("b"))[1] == b_ms
+    assert _log_entry(dst, batch_key("c"))[0] is None
+    assert _log_entry(dst, batch_key("b"))[1] == b_ms
 
 
 def test_legacy_append_staging_with_pending_merge_not_destroyed(
@@ -2002,7 +1889,7 @@ def test_legacy_append_staging_with_pending_merge_not_destroyed(
     bounds = sq8_fit(vectors)
     ivf_sq8_index_write(vectors, centroids, bounds, path)
     staging = _fabricate_merge_staging(spark, path, centroids)
-    pathlib.Path(staging, "_applying").touch()
+    pathlib.Path(staging, "_COMMITTED").touch()
     part_files = _glob.glob(f"{path}/cluster=2/*.parquet")
     assert part_files
     os.remove(part_files[0])  # the mid-phase-2 merge crash
@@ -2070,7 +1957,7 @@ def test_ivf_index_adopt_unrouted(spark, tmp_path):
     bounds = sq8_fit(vectors)
     ivf_sq8_index_write(vectors, centroids, bounds, path)
     staging = _fabricate_merge_staging(spark, path, centroids)
-    pathlib.Path(staging, "_applying").touch()
+    pathlib.Path(staging, "_COMMITTED").touch()
     os.remove(_glob.glob(f"{path}/cluster=2/*.parquet")[0])
     dim = 8
     new = spark.createDataFrame(
@@ -2169,103 +2056,6 @@ def test_adopt_unrouted_duplicate_ids_no_fanout(spark, tmp_path):
     assert after[-1] == before[-1] + 2
 
 
-def test_adopt_unrouted_crash_injection_sweep(spark, tmp_path, monkeypatch):
-    """ivf_index_adopt_unrouted killed at every strided driver fs-call
-    boundary, then rerun, must converge: every row adopted exactly
-    once (no loss, no doubling — distinct vec_ids checked), zombie dir
-    and staging gone. The adoption rides the staged merge protocol, so
-    each crash window resolves through _settle_merge_staging exactly
-    like a crashed cold-merge."""
-    import glob as _glob
-    import os
-    import pathlib
-    import shutil
-
-    from idhub_spark.operators import merge_into
-    from idhub_spark.operators.ann import (
-        ivf_index_adopt_unrouted,
-        ivf_index_stats,
-        ivf_sq8_index_write,
-        sq8_encode,
-        sq8_fit,
-    )
-
-    # template: the settled zombie state (cluster=2 holds 5 rows, live
-    # centroids are {0, 1}) — same fabrication as the adopt test
-    vectors, centroids = _merge_fixture(spark)
-    tpl = str(tmp_path / "idx_az_tpl")
-    bounds = sq8_fit(vectors)
-    ivf_sq8_index_write(vectors, centroids, bounds, tpl)
-    staging = _fabricate_merge_staging(spark, tpl, centroids)
-    pathlib.Path(staging, "_applying").touch()
-    os.remove(_glob.glob(f"{tpl}/cluster=2/*.parquet")[0])
-    dim = 8
-    new = spark.createDataFrame(
-        [(500 + i, [10.0 + i * 0.01] * dim) for i in range(5)],
-        "vec_id long, embedding array<double>",
-    )
-    vec_d = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    enc = sq8_encode(
-        new.select(
-            "vec_id", "embedding", vec_d.alias("_v"), F.lit(2).alias("cluster")
-        ),
-        bounds,
-        vec_col="_v",
-    ).select("vec_id", "embedding", "code", "cluster")
-    enc.repartition(1).write.mode("overwrite").partitionBy("cluster").parquet(
-        f"{tpl}/_append_staging/data"
-    )
-    pathlib.Path(tpl, "_append_staging", "_COMMITTED").touch()
-    ivf_index_stats(spark, tpl).collect()  # settle -> zombie in place
-    assert os.path.isdir(f"{tpl}/cluster=2")
-
-    real_fs = merge_into._hadoop_fs
-    counter = {"n": 0}
-
-    def counting(s, p):
-        counter["n"] += 1
-        return real_fs(s, p)
-
-    cnt = str(tmp_path / "idx_az_cnt")
-    shutil.copytree(tpl, cnt)
-    monkeypatch.setattr(merge_into, "_hadoop_fs", counting)
-    assert ivf_index_adopt_unrouted(spark, cnt)["adopted_rows"] == 5
-    monkeypatch.setattr(merge_into, "_hadoop_fs", real_fs)
-    total = counter["n"]
-    assert total > 5
-
-    ks = sorted(set(range(1, total + 1, max(1, total // 8))) | {1, total})
-    for k in ks:
-        idx = str(tmp_path / f"idx_az_k{k}")
-        shutil.copytree(tpl, idx)
-        calls = {"n": 0}
-
-        def crashing(s, p, _limit=k):
-            calls["n"] += 1
-            if calls["n"] > _limit:
-                raise _InjectedCrash(f"fs call {calls['n']}")
-            return real_fs(s, p)
-
-        monkeypatch.setattr(merge_into, "_hadoop_fs", crashing)
-        try:
-            ivf_index_adopt_unrouted(spark, idx)
-            crashed = False
-        except (_InjectedCrash, RuntimeError):
-            crashed = True
-        finally:
-            monkeypatch.setattr(merge_into, "_hadoop_fs", real_fs)
-        assert crashed or k == total, f"K={k}"
-
-        rep = ivf_index_adopt_unrouted(spark, idx)  # the rerun
-        assert rep["adopted_rows"] in (0, 5), f"K={k}: {rep}"
-        got = spark.read.parquet(idx)
-        assert got.count() == 205, f"K={k}: row loss/doubling"
-        assert got.select("vec_id").distinct().count() == 205, f"K={k}"
-        assert not os.path.isdir(f"{idx}/cluster=2"), f"K={k}"
-        assert not os.path.isdir(f"{idx}/_merge_staging"), f"K={k}"
-        shutil.rmtree(idx, ignore_errors=True)
-
-
 def test_ivf_index_fsck(spark, tmp_path, monkeypatch):
     """ivf_index_fsck: READ-ONLY classification — healthy on a clean
     index; names zombies (adopt-unrouted's case), orphan centroids
@@ -2319,30 +2109,30 @@ def test_ivf_index_fsck(spark, tmp_path, monkeypatch):
     assert rep["orphan_centroids"] == [0]
     assert any("merge-cold" in f for f in rep["findings"])
 
-    # a committed append staging: classified 'promote', left in place
+    # a committed append staging: classified 'apply', left in place
     os.makedirs(f"{path}/_append_staging/data")
     open(f"{path}/_append_staging/_COMMITTED", "w").close()
     rep = ivf_index_fsck(spark, path)
     assert rep["pending_append_staging"]["state"] == "committed"
-    assert rep["pending_append_staging"]["settle_action"] == "promote"
+    assert rep["pending_append_staging"]["settle_action"] == "apply"
     assert os.path.isdir(f"{path}/_append_staging")  # not settled
     shutil.rmtree(f"{path}/_append_staging")
 
     # concurrent-writer race: a staging vanishing mid-inspection must
     # degrade to a 'rerun fsck' finding, never crash the check
-    import idhub_spark.operators.merge_into as merge_into
+    from idhub_spark import commit
 
     os.makedirs(f"{path}/_merge_staging")
-    real_fs = merge_into._hadoop_fs
+    real_fs = commit.hadoop_fs
 
     def racy(s, p):
-        if p.endswith("_applying"):
+        if p.endswith("_merge_staging/_COMMITTED"):
             raise RuntimeError("vanished under the check")
         return real_fs(s, p)
 
-    monkeypatch.setattr(merge_into, "_hadoop_fs", racy)
+    monkeypatch.setattr(commit, "hadoop_fs", racy)
     rep = ivf_index_fsck(spark, path)
-    monkeypatch.setattr(merge_into, "_hadoop_fs", real_fs)
+    monkeypatch.setattr(commit, "hadoop_fs", real_fs)
     assert rep["healthy"] is False
     assert any(
         "could not inspect merge staging" in f for f in rep["findings"]
@@ -2350,21 +2140,20 @@ def test_ivf_index_fsck(spark, tmp_path, monkeypatch):
     assert rep["pending_merge_staging"] is None  # classification aborted
 
 
-def test_merge_staging_empty_cold_with_sentinel(spark, tmp_path):
-    """Empty staged_cold ([] — readable, zero rows) WITH the _applying
-    sentinel: both the fsck classification and _settle_merge_staging
-    must treat it as 'unapplied → discard' (ADVICE r17 — the agreement
-    was incidental; pin it so a future settle change can't silently
-    diverge from the fsck report). An empty cold list means phase 2
-    has nothing it could have half-applied: no cold dir was ever
-    deleted, no staged rows exist outside _new_centroids, so the
-    discard loses nothing even though the sentinel says phase 2
-    began."""
+def test_merge_staging_empty_cold_committed(spark, tmp_path):
+    """A committed merge staging whose _cold_clusters record is readable
+    but EMPTY: fsck classifies it committed/apply and the settle does
+    exactly that — nothing to delete, nothing to move, staging cleared,
+    every row intact. A committed staging whose record is UNREADABLE is
+    classified 'unreadable' and the settle raises, leaving it in
+    place."""
     import os
+    import shutil
 
     from idhub_spark.operators.ann import (
-        _settle_merge_staging,
+        ivf_index_compact,
         ivf_index_fsck,
+        ivf_index_stats,
         ivf_sq8_index_write,
         sq8_fit,
     )
@@ -2376,20 +2165,31 @@ def test_merge_staging_empty_cold_with_sentinel(spark, tmp_path):
 
     staging = f"{path}/_merge_staging"
     centroids.coalesce(1).write.parquet(f"{staging}/_new_centroids")
-    # readable but EMPTY cold list (schema-only parquet), sentinel set
     spark.createDataFrame([], "cluster int").write.parquet(
         f"{staging}/_cold_clusters"
     )
-    open(f"{staging}/_applying", "w").close()
+    open(f"{staging}/_COMMITTED", "w").close()
 
-    # fsck first (read-only): classified unapplied/discard, not touched
+    # fsck first (read-only): committed/apply, not touched
     rep = ivf_index_fsck(spark, path)
-    assert rep["pending_merge_staging"]["state"] == "unapplied"
-    assert rep["pending_merge_staging"]["settle_action"] == "discard"
+    assert rep["pending_merge_staging"]["state"] == "committed"
+    assert rep["pending_merge_staging"]["settle_action"] == "apply"
     assert rep["pending_merge_staging"]["cold_clusters"] == []
     assert os.path.isdir(staging)  # read-only proof
 
-    # the settle does exactly what fsck predicted: discard, no resume
-    assert _settle_merge_staging(spark, path) is None
+    # the settle does what fsck predicted
+    ivf_index_stats(spark, path).collect()
     assert not os.path.isdir(staging)
     assert spark.read.parquet(path).count() == n_before
+
+    # unreadable record: fsck says so, a writer's settle refuses
+    os.makedirs(f"{staging}/_cold_clusters")
+    with open(f"{staging}/_cold_clusters/part-0.parquet", "wb") as f:
+        f.write(b"not parquet")
+    open(f"{staging}/_COMMITTED", "w").close()
+    rep = ivf_index_fsck(spark, path)
+    assert rep["pending_merge_staging"]["state"] == "unreadable"
+    with pytest.raises(RuntimeError, match="refusing to guess"):
+        ivf_index_compact(spark, path, str(tmp_path / "idx_packed"))
+    assert os.path.isdir(staging)
+    shutil.rmtree(staging)

@@ -525,7 +525,7 @@ def test_cli_dedup_index_roundtrip(spark, tmp_path, capsys):
     # every entry — an aged key survives the keep-all fold and still
     # rejects its retry; the default-horizon fold then prunes it
     from tests.test_dedup_index import _age_entry, _log_entry
-    from idhub_spark.operators.dedup_index import _batch_key
+    from idhub_spark.commit import batch_key
 
     b2 = docs.filter(F.col("doc_id") == 9).select(
         (F.col("doc_id") + 2000).alias("doc_id"), "text"
@@ -536,16 +536,16 @@ def test_cli_dedup_index_roundtrip(spark, tmp_path, capsys):
                    b2src, "--batch-id", "cli-b2"])
     assert rc == 0
     capsys.readouterr()
-    _age_entry(idx, _batch_key("cli-b2"), 8 * 24 * 3600 * 1000)
+    _age_entry(idx, batch_key("cli-b2"), 8 * 24 * 3600 * 1000)
     rc = cli.main(["dedup-index", "fold", "--index", idx,
                    "--ingest-log-horizon-s", "0"])
     assert rc == 0
     capsys.readouterr()
-    assert _log_entry(idx, _batch_key("cli-b2"))[0] is not None
+    assert _log_entry(idx, batch_key("cli-b2"))[0] is not None
     rc = cli.main(["dedup-index", "fold", "--index", idx])
     assert rc == 0
     capsys.readouterr()
-    assert _log_entry(idx, _batch_key("cli-b2"))[0] is None
+    assert _log_entry(idx, batch_key("cli-b2"))[0] is None
 
 
 def test_cli_fsck_honors_ingest_log_horizon(spark, tmp_path, capsys):
@@ -557,7 +557,7 @@ def test_cli_fsck_honors_ingest_log_horizon(spark, tmp_path, capsys):
     action warns instead of silently ignoring."""
     import sys as _sys
 
-    from idhub_spark.operators.dedup_index import _batch_key
+    from idhub_spark.commit import batch_key
     from tests.test_dedup_index import _age_entry
 
     docs = spark.createDataFrame(
@@ -579,7 +579,7 @@ def test_cli_fsck_honors_ingest_log_horizon(spark, tmp_path, capsys):
          "--batch-id", "fh-1"]
     ) == 0
     capsys.readouterr()
-    _age_entry(idx, _batch_key("fh-1"), 8 * 24 * 3600 * 1000)  # 8 days
+    _age_entry(idx, batch_key("fh-1"), 8 * 24 * 3600 * 1000)  # 8 days
 
     # default horizon (7 d): the aged entry profiles past it
     assert cli.main(["dedup-index", "fsck", "--index", idx]) == 0
@@ -629,7 +629,7 @@ def test_cli_fsck_honors_ingest_log_horizon(spark, tmp_path, capsys):
     assert ivf_sq8_index_append(
         vbatch, centroids, bounds, vidx, batch_id="fh-ivf"
     ) == "appended"
-    _age_entry(vidx, _batch_key("fh-ivf"), 8 * 24 * 3600 * 1000)
+    _age_entry(vidx, batch_key("fh-ivf"), 8 * 24 * 3600 * 1000)
     assert cli.main(["index-fsck", "--index", vidx]) == 0
     rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert rep["ingest_log"]["n_past_horizon"] == 1

@@ -197,8 +197,8 @@ def test_append_crash_protocol(spark, docs, tmp_path):
     NEXT append — rows restored, never duplicated."""
     import pathlib
 
+    from idhub_spark.commit import COMMITTED as _COMMITTED
     from idhub_spark.operators.dedup_index import (
-        _COMMITTED,
         _STAGING,
         _doc_state,
         _load_params,
@@ -497,8 +497,8 @@ def test_rebuild_clears_stale_committed_staging(spark, docs, tmp_path):
     probes and the lossless-pruning invariant."""
     import pathlib
 
+    from idhub_spark.commit import COMMITTED as _COMMITTED
     from idhub_spark.operators.dedup_index import (
-        _COMMITTED,
         _STAGING,
         _doc_state,
         _load_params,
@@ -551,8 +551,8 @@ def test_probe_and_delete_settle_committed_staging(spark, docs, tmp_path):
     join (probe) or misses doomed rows (delete)."""
     import pathlib
 
+    from idhub_spark.commit import COMMITTED as _COMMITTED
     from idhub_spark.operators.dedup_index import (
-        _COMMITTED,
         _STAGING,
         _doc_state,
         _load_params,
@@ -720,8 +720,8 @@ def test_delta_append_crash_protocol(spark, docs, tmp_path):
     probe-visible."""
     import pathlib
 
+    from idhub_spark.commit import COMMITTED as _COMMITTED
     from idhub_spark.operators.dedup_index import (
-        _COMMITTED,
         _STAGING,
         _doc_state,
         _load_params,
@@ -925,8 +925,8 @@ def test_fold_delta_crash_protocol(spark, docs, tmp_path):
     restored exactly once, never duplicated."""
     import pathlib
 
+    from idhub_spark.commit import COMMITTED as _COMMITTED
     from idhub_spark.operators.dedup_index import (
-        _COMMITTED,
         _FOLD,
         _STAGING,
         _write_table,
@@ -1247,12 +1247,12 @@ def test_delete_crash_injection_sweep(spark, docs, tmp_path, monkeypatch):
     aside/staging debris, delta dir either gone or whole. The hand-
     built window tests above pin the named crash states; this sweep
     proves there are no UNNAMED ones. Injection wraps
-    merge_into._hadoop_fs (imported at call time by every dedup_index
-    fs touchpoint) to raise after K calls; Spark write jobs sit
+    commit.hadoop_fs (called through the module attribute by every
+    dedup_index fs touchpoint) to raise after K calls; Spark write jobs sit
     between those calls, so every write/fs boundary is crossed."""
     import shutil
 
-    from idhub_spark.operators import merge_into
+    from idhub_spark import commit
     from idhub_spark.operators.dedup_index import (
         _read_state_table,
         minhash_index_delete,
@@ -1268,7 +1268,7 @@ def test_delete_crash_injection_sweep(spark, docs, tmp_path, monkeypatch):
     minhash_index_write(base, tpl, n_hashes=8, bands=2, pb_buckets=4,
                         db_buckets=4)
     assert minhash_index_append(appended, tpl) == "delta"
-    real_fs = merge_into._hadoop_fs
+    real_fs = commit.hadoop_fs
 
     def state_sets(path):
         d = {tuple(sorted(r.doc_id for r in
@@ -1298,9 +1298,9 @@ def test_delete_crash_injection_sweep(spark, docs, tmp_path, monkeypatch):
 
         probe_run = str(tmp_path / f"mh_count_{name}")
         shutil.copytree(tpl, probe_run)
-        monkeypatch.setattr(merge_into, "_hadoop_fs", counting)
+        monkeypatch.setattr(commit, "hadoop_fs", counting)
         minhash_index_delete(spark, probe_run, victims)
-        monkeypatch.setattr(merge_into, "_hadoop_fs", real_fs)
+        monkeypatch.setattr(commit, "hadoop_fs", real_fs)
         total = counter["n"]
         assert total > 10, f"{name}: expected a real fs-call sweep"
 
@@ -1317,16 +1317,16 @@ def test_delete_crash_injection_sweep(spark, docs, tmp_path, monkeypatch):
                     raise _InjectedCrash(f"fs call {calls['n']}")
                 return real_fs(s, p)
 
-            monkeypatch.setattr(merge_into, "_hadoop_fs", crashing)
+            monkeypatch.setattr(commit, "hadoop_fs", crashing)
             try:
                 minhash_index_delete(spark, idx, victims)
                 crashed = False
             except (_InjectedCrash, RuntimeError):
-                # RuntimeError: _move_tree/_settle raise their own
+                # RuntimeError: move_tree/the settle raise their own
                 # wrapper around an injected failure — still a crash
                 crashed = True
             finally:
-                monkeypatch.setattr(merge_into, "_hadoop_fs", real_fs)
+                monkeypatch.setattr(commit, "hadoop_fs", real_fs)
             assert crashed or k == total, f"{name} K={k}"
 
             minhash_index_delete(spark, idx, victims)  # the rerun
@@ -1390,100 +1390,6 @@ def test_append_batch_id_exactly_once(spark, docs, tmp_path):
                         db_buckets=4)
     assert not os.path.isdir(f"{path}/_ingest_log")
     assert minhash_index_append(appended, path, batch_id="crawl-7") == "delta"
-
-
-def test_append_batch_id_crash_injection_sweep(spark, docs, tmp_path,
-                                               monkeypatch):
-    """The exactly-once guarantee under crashes, swept like the delete
-    test: an append with a batch_id killed at every strided driver
-    fs-call boundary, then RETRIED with the same key, must land the
-    batch exactly once — a crash before the commit marker discards
-    and the retry re-ingests; after it, the retry's entry settle
-    promotes+logs and the append returns 'duplicate'. Without the
-    key, the post-commit crash window double-ingests silently (the
-    gap this feature closes — pinned as the final control)."""
-    import shutil
-
-    from idhub_spark.operators import merge_into
-    from idhub_spark.operators.dedup_index import _read_state_table
-
-    base = docs.filter(F.col("doc_id") % 2 == 0)
-    appended = docs.filter(F.col("doc_id") % 2 == 1)
-    n_all = docs.count()
-    tpl = str(tmp_path / "mh_once_tpl")
-    minhash_index_write(base, tpl, n_hashes=8, bands=2, pb_buckets=4,
-                        db_buckets=4)
-    real_fs = merge_into._hadoop_fs
-
-    counter = {"n": 0}
-
-    def counting(s, p):
-        counter["n"] += 1
-        return real_fs(s, p)
-
-    cnt_idx = str(tmp_path / "mh_once_cnt")
-    shutil.copytree(tpl, cnt_idx)
-    monkeypatch.setattr(merge_into, "_hadoop_fs", counting)
-    assert minhash_index_append(appended, cnt_idx, batch_id="b1") == "delta"
-    monkeypatch.setattr(merge_into, "_hadoop_fs", real_fs)
-    total = counter["n"]
-    assert total > 5
-
-    ks = sorted(set(range(1, total + 1, max(1, total // 8))) | {1, total})
-    for k in ks:
-        idx = str(tmp_path / f"mh_once_k{k}")
-        shutil.copytree(tpl, idx)
-        calls = {"n": 0}
-
-        def crashing(s, p, _limit=k):
-            calls["n"] += 1
-            if calls["n"] > _limit:
-                raise _InjectedCrash(f"fs call {calls['n']}")
-            return real_fs(s, p)
-
-        monkeypatch.setattr(merge_into, "_hadoop_fs", crashing)
-        try:
-            minhash_index_append(appended, idx, batch_id="b1")
-            crashed = False
-        except (_InjectedCrash, RuntimeError):
-            crashed = True
-        finally:
-            monkeypatch.setattr(merge_into, "_hadoop_fs", real_fs)
-        assert crashed or k == total, f"K={k}"
-
-        route = minhash_index_append(appended, idx, batch_id="b1")
-        assert route in ("delta", "direct", "duplicate"), f"K={k}"
-        got = _read_state_table(spark, idx, "docs").count()
-        assert got == n_all, f"K={k}: {got} docs (exactly-once violated)"
-        shutil.rmtree(idx, ignore_errors=True)
-
-    # the control: WITHOUT a batch_id, the post-commit crash window
-    # double-ingests on retry — the documented gap, kept honest here.
-    # The no-key append makes fewer fs calls, so count its own run.
-    cnt2 = str(tmp_path / "mh_once_cnt2")
-    shutil.copytree(tpl, cnt2)
-    counter["n"] = 0
-    monkeypatch.setattr(merge_into, "_hadoop_fs", counting)
-    assert minhash_index_append(appended, cnt2) == "delta"
-    monkeypatch.setattr(merge_into, "_hadoop_fs", real_fs)
-    total_nokey = counter["n"]
-
-    idx = str(tmp_path / "mh_once_nokey")
-    shutil.copytree(tpl, idx)
-    calls = {"n": 0}
-
-    def crash_late(s, p, _limit=total_nokey - 1):
-        calls["n"] += 1
-        if calls["n"] > _limit:
-            raise _InjectedCrash(f"fs call {calls['n']}")
-        return real_fs(s, p)
-
-    monkeypatch.setattr(merge_into, "_hadoop_fs", crash_late)
-    with pytest.raises((_InjectedCrash, RuntimeError)):
-        minhash_index_append(appended, idx)
-    monkeypatch.setattr(merge_into, "_hadoop_fs", real_fs)
-    minhash_index_append(appended, idx)  # the naive retry
-    assert _read_state_table(spark, idx, "docs").count() > n_all
 
 
 def test_delta_rewrite_rollback_warns_and_flags(spark, docs, tmp_path):
@@ -1580,8 +1486,7 @@ def test_delta_rewrite_rollback_warns_and_flags(spark, docs, tmp_path):
 
 def _log_entry(path, key):
     """(fullpath, accept_ms | None) of the ingest-log entry for key,
-    (None, None) when absent — r17 entries are named <key>.<accept_ms>
-    (accept_ms None = legacy bare-key form)."""
+    (None, None) when absent — entries are named <key>.<accept_ms>."""
     import glob as _glob
 
     hits = _glob.glob(f"{path}/_ingest_log/{key}*")
@@ -1595,7 +1500,7 @@ def _log_entry(path, key):
 def _age_entry(path, key, delta_ms):
     """Rewind an entry's NAMED accept time by delta_ms while forcing
     its file mtime to NOW — age must come from the name alone (the
-    storage-independence contract, _marker_parse)."""
+    storage-independence contract, commit.marker_parse)."""
     import time
 
     p, ms = _log_entry(path, key)
@@ -1611,35 +1516,31 @@ def test_ingest_log_dup_check_glob_metachar_root(spark, tmp_path):
     '<root>/_ingest_log/<key>*' with a root containing glob
     metacharacters ([, ], *, {}) matched a DIFFERENT directory (e.g.
     '[1]' matches the single character '1'), silently re-admitting
-    every retried batch. _ingest_log_has now glob-ESCAPES the root
+    every retried batch. commit.ingest_log_has glob-ESCAPES the root
     before interpolation (one RPC, JVM-side match — the driver-side
     listStatus alternative measured 20-30x dearer at the log's entry
     bound, docs/scale_audit_r18.md §1), so only the LEAF is ever
     pattern-sensitive (and keys are fixed-length hex). Unit-level: a
     full index can't live under such a root anyway (Spark read paths
     glob too), but the marker protocol itself must stay correct."""
-    from idhub_spark.operators.dedup_index import (
-        _batch_key,
-        _ingest_log_has,
-        _marker_name,
-    )
+    from idhub_spark.commit import batch_key, ingest_log_has, marker_name
 
     for weird in ("mh[1]idx", "mh{a}idx", "mh*idx"):
         root = str(tmp_path / weird)
-        key = _batch_key("crawl-7")
+        key = batch_key("crawl-7")
         os.makedirs(f"{root}/_ingest_log")
-        open(f"{root}/_ingest_log/{_marker_name(key, 1755000000000)}",
+        open(f"{root}/_ingest_log/{marker_name(key, 1755000000000)}",
              "w").close()
-        assert _ingest_log_has(spark, root, key) is True, weird
-        assert _ingest_log_has(spark, root, _batch_key("other")) is False
+        assert ingest_log_has(spark, root, key) is True, weird
+        assert ingest_log_has(spark, root, batch_key("other")) is False
     # absent log dir (fresh index): False, no error
-    assert _ingest_log_has(
-        spark, str(tmp_path / "mh[2]fresh"), _batch_key("x")
+    assert ingest_log_has(
+        spark, str(tmp_path / "mh[2]fresh"), batch_key("x")
     ) is False
 
 
 def test_glob_escape_properties(spark, tmp_path):
-    """Property-pin _glob_escape beyond the three hand-picked roots
+    """Property-pin commit.glob_escape beyond the three hand-picked roots
     above: (1) pure codec — every Hadoop glob metachar in the output
     is backslash-escaped and stripping the escapes recovers the input
     (no character is lost or duplicated); (2) end-to-end — for an
@@ -1650,18 +1551,18 @@ def test_glob_escape_properties(spark, tmp_path):
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from idhub_spark.operators.dedup_index import (
+    from idhub_spark.commit import (
         _GLOB_SPECIALS,
-        _batch_key,
-        _glob_escape,
-        _ingest_log_has,
-        _marker_name,
+        batch_key,
+        glob_escape,
+        ingest_log_has,
+        marker_name,
     )
 
     @settings(max_examples=200, deadline=None)
     @given(path=st.text(min_size=0, max_size=80))
     def codec(path):
-        esc = _glob_escape(path)
+        esc = glob_escape(path)
         # every metachar occurrence is immediately preceded by the
         # escape; walking the escaped form recovers the original
         out, i = [], 0
@@ -1690,15 +1591,15 @@ def test_glob_escape_properties(spark, tmp_path):
     @given(weird=name, batch_id=st.text(min_size=1, max_size=16))
     def dup_check_literal_root(weird, batch_id):
         root = str(tmp_path / "h" / weird)
-        key = _batch_key(batch_id)
+        key = batch_key(batch_id)
         log = f"{root}/_ingest_log"
         os.makedirs(log, exist_ok=True)
-        marker = f"{log}/{_marker_name(key, 1755000000000)}"
+        marker = f"{log}/{marker_name(key, 1755000000000)}"
         open(marker, "w").close()
         try:
-            assert _ingest_log_has(spark, root, key) is True, weird
-            absent = _batch_key(batch_id + "~other")
-            assert _ingest_log_has(spark, root, absent) is False, weird
+            assert ingest_log_has(spark, root, key) is True, weird
+            absent = batch_key(batch_id + "~other")
+            assert ingest_log_has(spark, root, absent) is False, weird
         finally:
             os.remove(marker)
 
@@ -1712,13 +1613,10 @@ def test_ingest_log_horizon_bounds_fold_and_compact(spark, docs, tmp_path):
     aging step here rewinds the NAME while forcing the file mtime to
     NOW, the object-store worst case the old setTimes carry lost to.
     Fold prunes aged entries in place; compact carries only in-horizon
-    entries under their canonical name; legacy bare-key entries
-    mtime-age and canonicalize at first carry; and a post-horizon
-    retry is a new ingest decision by documented contract."""
-    import time
-
+    entries under their canonical name; and a post-horizon retry is a
+    new ingest decision by documented contract."""
+    from idhub_spark.commit import batch_key
     from idhub_spark.operators.dedup_index import (
-        _batch_key,
         minhash_index_compact,
         minhash_index_fold_delta,
     )
@@ -1731,41 +1629,31 @@ def test_ingest_log_horizon_bounds_fold_and_compact(spark, docs, tmp_path):
                         db_buckets=4)
     assert minhash_index_append(b1, path, batch_id="old-batch") == "delta"
     assert minhash_index_append(b2, path, batch_id="new-batch") == "delta"
-    assert _log_entry(path, _batch_key("old-batch"))[1] is not None
-    assert _log_entry(path, _batch_key("new-batch"))[1] is not None
+    assert _log_entry(path, batch_key("old-batch"))[1] is not None
+    assert _log_entry(path, batch_key("new-batch"))[1] is not None
 
     # age the first entry beyond the 7-day default horizon (by NAME;
     # mtime forced fresh — the prune must ignore it)
-    _age_entry(path, _batch_key("old-batch"), 8 * 24 * 3600 * 1000)
+    _age_entry(path, batch_key("old-batch"), 8 * 24 * 3600 * 1000)
 
     # fold prunes it in place; the fresh entry survives and still
     # rejects its retry; the aged key is a NEW ingest decision now
     minhash_index_fold_delta(spark, path)
-    assert _log_entry(path, _batch_key("old-batch"))[0] is None
-    assert _log_entry(path, _batch_key("new-batch"))[0] is not None
+    assert _log_entry(path, batch_key("old-batch"))[0] is None
+    assert _log_entry(path, batch_key("new-batch"))[0] is not None
     assert minhash_index_append(b2, path, batch_id="new-batch") == "duplicate"
     assert minhash_index_append(
         b1.select((F.col("doc_id") + 700_000).alias("doc_id"), "text"),
         path, batch_id="old-batch") == "delta"
 
     # compact: aged-by-name entries don't carry even at fresh mtime;
-    # in-horizon entries carry under the SAME canonical name; a legacy
-    # bare-key entry (pre-r17 form) still rejects its retry via the
-    # name-prefix dup check and canonicalizes at carry with its mtime
-    # as the accept time
-    _age_entry(path, _batch_key("old-batch"), 8 * 24 * 3600 * 1000)
-    legacy_key = _batch_key("legacy-batch")
-    legacy_p = f"{path}/_ingest_log/{legacy_key}"
-    open(legacy_p, "w").close()
-    legacy_s = int(time.time()) - 3600  # inside the horizon
-    os.utime(legacy_p, (legacy_s, legacy_s))
-    assert minhash_index_append(b2, path, batch_id="legacy-batch") == "duplicate"
-    new_ms = _log_entry(path, _batch_key("new-batch"))[1]
+    # in-horizon entries carry under the SAME canonical name
+    _age_entry(path, batch_key("old-batch"), 8 * 24 * 3600 * 1000)
+    new_ms = _log_entry(path, batch_key("new-batch"))[1]
     dst = str(tmp_path / "mh_log_packed")
     minhash_index_compact(spark, path, dst)
-    assert _log_entry(dst, _batch_key("old-batch"))[0] is None
-    assert _log_entry(dst, _batch_key("new-batch"))[1] == new_ms
-    assert _log_entry(dst, legacy_key)[1] == legacy_s * 1000
+    assert _log_entry(dst, batch_key("old-batch"))[0] is None
+    assert _log_entry(dst, batch_key("new-batch"))[1] == new_ms
 
 
 def test_ingest_log_horizon_survives_mtime_reset(spark, docs, tmp_path):
@@ -1778,12 +1666,12 @@ def test_ingest_log_horizon_survives_mtime_reset(spark, docs, tmp_path):
     the NAMED accept time alone."""
     import time
 
-    from idhub_spark.operators.dedup_index import (
+    from idhub_spark.commit import (
         INGEST_LOG_HORIZON_S,
-        _batch_key,
-        _prune_ingest_log,
-        minhash_index_compact,
+        batch_key,
+        prune_ingest_log,
     )
+    from idhub_spark.operators.dedup_index import minhash_index_compact
 
     path = str(tmp_path / "mh_s3")
     base = docs.filter(F.col("doc_id") % 2 == 0)
@@ -1792,21 +1680,21 @@ def test_ingest_log_horizon_survives_mtime_reset(spark, docs, tmp_path):
                         db_buckets=4)
     assert minhash_index_append(b1, path, batch_id="batch-x") == "delta"
     # 6 days old by name — inside the 7-day horizon, so it carries
-    _age_entry(path, _batch_key("batch-x"), 6 * 24 * 3600 * 1000)
-    near_ms = _log_entry(path, _batch_key("batch-x"))[1]
+    _age_entry(path, batch_key("batch-x"), 6 * 24 * 3600 * 1000)
+    near_ms = _log_entry(path, batch_key("batch-x"))[1]
     dst = str(tmp_path / "mh_s3_packed")
     minhash_index_compact(spark, path, dst)
-    d, dms = _log_entry(dst, _batch_key("batch-x"))
+    d, dms = _log_entry(dst, batch_key("batch-x"))
     assert dms == near_ms  # accept time rode the carry in the NAME
     now = time.time()
     os.utime(d, (now, now))  # object-store rebirth: mtime = write time
     # two more days pass -> past the horizon; prune must drop it
-    pruned = _prune_ingest_log(
+    pruned = prune_ingest_log(
         spark, dst, INGEST_LOG_HORIZON_S,
         now_ms=int(now * 1000) + 2 * 24 * 3600 * 1000,
     )
     assert pruned == 1
-    assert _log_entry(dst, _batch_key("batch-x"))[0] is None
+    assert _log_entry(dst, batch_key("batch-x"))[0] is None
 
 
 def test_minhash_index_fsck(spark, docs, tmp_path, monkeypatch):
@@ -1837,7 +1725,7 @@ def test_minhash_index_fsck(spark, docs, tmp_path, monkeypatch):
     rep = minhash_index_fsck(spark, path)
     assert rep["healthy"] is True
     log = rep["ingest_log"]
-    assert log["n_entries"] == 1 and log["n_legacy"] == 0
+    assert log["n_entries"] == 1
     assert log["n_past_horizon"] == 0 and log["oldest_age_s"] < 3600
     assert rep["delta"] == {"present": True, "files": 2}
 
@@ -1878,19 +1766,19 @@ def test_minhash_index_fsck(spark, docs, tmp_path, monkeypatch):
     # concurrent-writer race: a settle promoting the staging between
     # fsck's exists and its follow-up calls must degrade to a
     # 'rerun fsck' finding, never crash the advisory check
-    import idhub_spark.operators.merge_into as merge_into
+    from idhub_spark import commit
 
     os.makedirs(f"{path}/_append_staging/docs", exist_ok=True)
-    real_fs = merge_into._hadoop_fs
+    real_fs = commit.hadoop_fs
 
     def racy(s, p):
         if p.endswith("_COMMITTED"):
             raise RuntimeError("vanished under the check")
         return real_fs(s, p)
 
-    monkeypatch.setattr(merge_into, "_hadoop_fs", racy)
+    monkeypatch.setattr(commit, "hadoop_fs", racy)
     rep = minhash_index_fsck(spark, path)
-    monkeypatch.setattr(merge_into, "_hadoop_fs", real_fs)
+    monkeypatch.setattr(commit, "hadoop_fs", real_fs)
     assert rep["healthy"] is False
     assert any(
         "could not inspect append staging" in f for f in rep["findings"]
@@ -1900,37 +1788,29 @@ def test_minhash_index_fsck(spark, docs, tmp_path, monkeypatch):
 
 def test_marker_parse_roundtrip_properties():
     """Property-pin the r17 marker-name codec (no Spark): the named
-    form round-trips exactly for every hex key and accept_ms; legacy
-    bare keys (pure hex, no dot) always fall back to the supplied
-    mtime; and the batch-key alphabet guarantees the bare/named forms
-    can never be confused (a sha256-prefix key contains no '.')."""
+    form round-trips exactly for every hex key and accept_ms; a bare
+    key (no accept time) is rejected loudly; and the batch-key alphabet
+    guarantees a key never contains the '.' separator."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from idhub_spark.operators.dedup_index import (
-        _batch_key,
-        _marker_name,
-        _marker_parse,
-    )
+    from idhub_spark.commit import batch_key, marker_name, marker_parse
 
     hex_key = st.text(alphabet="0123456789abcdef", min_size=32, max_size=32)
 
     @settings(max_examples=200, deadline=None)
-    @given(key=hex_key, accept_ms=st.integers(min_value=0, max_value=2**53),
-           mtime=st.integers(min_value=0, max_value=2**53))
-    def roundtrip(key, accept_ms, mtime):
-        assert _marker_parse(_marker_name(key, accept_ms), mtime) == (
-            key, accept_ms,
-        )
-        # legacy bare form: key comes back verbatim, age = mtime
-        assert _marker_parse(key, mtime) == (key, mtime)
+    @given(key=hex_key, accept_ms=st.integers(min_value=0, max_value=2**53))
+    def roundtrip(key, accept_ms):
+        assert marker_parse(marker_name(key, accept_ms)) == (key, accept_ms)
+        with pytest.raises(ValueError):
+            marker_parse(key)
 
     roundtrip()
 
     @settings(max_examples=100, deadline=None)
     @given(batch_id=st.text(min_size=1, max_size=64))
     def key_alphabet(batch_id):
-        k = _batch_key(batch_id)
+        k = batch_key(batch_id)
         assert len(k) == 32 and "." not in k
         assert all(c in "0123456789abcdef" for c in k)
 

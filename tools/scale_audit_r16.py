@@ -44,8 +44,8 @@ def main() -> None:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
+    from idhub_spark.commit import INGEST_LOG_HORIZON_S
     from idhub_spark.operators.dedup_index import (
-        INGEST_LOG_HORIZON_S,
         minhash_index_compact,
         minhash_index_fold_delta,
         minhash_index_write,
