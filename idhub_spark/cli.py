@@ -394,17 +394,8 @@ def _cmd_dedup_index(args) -> int:
         # error instead of a raw scan failure
         n_hashes, bands, pb, db = _load_params(spark, args.index.rstrip("/"))
         rows = minhash_index_stats(spark, args.index).collect()
-        from idhub_spark.operators.dedup_index import _RERUN_MARKER
-        from idhub_spark import commit
-
-        fs_m, jmark = commit.hadoop_fs(
-            spark, f"{args.index.rstrip('/')}/{_RERUN_MARKER}"
-        )
         print(json.dumps({
             "index": args.index, "action": "stats",
-            # True iff a crashed delete's rollback restored retracted
-            # rows — rerun the delete to re-complete the takedown
-            "delete_rerun_needed": bool(fs_m.exists(jmark)),
             "params": {"n_hashes": n_hashes, "bands": bands,
                        "pb_buckets": pb, "db_buckets": db},
             "tables": {

@@ -11,9 +11,10 @@ point settles it:
   absent       nothing to do;
   uncommitted  the writer died before committing — nothing was applied,
                delete the staging;
-  committed    run the caller's apply step (idempotent: every file moves
-               by one rename and lives in exactly one place), record the
-               staging's ingest-log entries, then delete the staging;
+  committed    run the caller's apply step (idempotent: every file or
+               directory moves by one rename and lives in exactly one
+               place), record the staging's ingest-log entries, then
+               delete the staging;
   unreadable   committed, but the record the apply step needs cannot be
                read — raise and leave the staging for inspection.
 
@@ -21,6 +22,12 @@ Because the apply step runs only after _COMMITTED and is idempotent, a
 crash at any point of it is finished by the next settle, and the
 ingest-log entry of a batch exists iff the batch's rows are fully live.
 The fscks classify with the same state() the settle acts on.
+
+Appends apply by moving files (move_tree). Rewrites of existing
+partitions (deletes, the pruned upsert) apply by moving directories
+(StagedCommit.promote): the staged image of each touched partition
+replaces its live twin, so no table is ever written twice or over the
+path its own plan reads.
 
 Engine modules call hadoop_fs through this module's attribute
 (commit.hadoop_fs), so a test can inject filesystem faults in one place.
@@ -114,9 +121,9 @@ _SMALL_PARQUET_FILE = "part-00000-driver.snappy.parquet"
 
 
 def write_small_parquet(spark, dir_path: str, rows: list[tuple], schema: str) -> None:
-    """Land a tiny all-integer parquet directory without a Spark job:
-    the bytes are built driver-side with pyarrow ('int' -> int32,
-    'bigint'/'long' -> int64, the types a Spark write produces) and
+    """Land a tiny parquet directory without a Spark job: the bytes are
+    built driver-side with pyarrow ('int' -> int32, 'bigint'/'long' ->
+    int64, 'string' -> string, the types a Spark write produces) and
     streamed through the Hadoop FileSystem API. The directory is
     cleared first; the file is streamed to a dot-prefixed temporary
     name (invisible to parquet readers) and renamed into place, so a
@@ -124,11 +131,15 @@ def write_small_parquet(spark, dir_path: str, rows: list[tuple], schema: str) ->
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    pa_types = {"int": pa.int32(), "bigint": pa.int64(), "long": pa.int64()}
+    pa_types = {"int": pa.int32(), "bigint": pa.int64(), "long": pa.int64(),
+                "string": pa.string()}
     fields = [f.strip().rsplit(" ", 1) for f in schema.split(",")]
     table = pa.table(
         {
-            name.strip(): pa.array([int(row[i]) for row in rows], pa_types[typ])
+            name.strip(): pa.array(
+                [row[i] if typ == "string" else int(row[i]) for row in rows],
+                pa_types[typ],
+            )
             for i, (name, typ) in enumerate(fields)
         }
     )
@@ -284,10 +295,10 @@ def ingest_log_report(spark, root: str, horizon_s: float | None) -> dict:
 
 class StagedCommit:
     """One staging directory <root>/<name> under the _COMMITTED rule
-    (module docstring). `record` names an optional one-column int
-    parquet under the staging (e.g. the cold clusters of a merge) that
-    the apply step needs; a committed staging whose record cannot be
-    read is 'unreadable'."""
+    (module docstring). `record` names an optional one-column parquet
+    under the staging (the cold clusters of a merge, the emptied
+    partitions of a rewrite) that the apply step needs; a committed
+    staging whose record cannot be read is 'unreadable'."""
 
     def __init__(self, spark, root: str, name: str, *, record: str | None = None):
         self.spark = spark
@@ -296,7 +307,7 @@ class StagedCommit:
         self.path = f"{self.root}/{name}"
         self.label = name.lstrip("_").replace("_", " ")
         self.record = record
-        self._ids: list[int] | None = None
+        self._vals: list | None = None
 
     def exists(self, rel: str | None = None) -> bool:
         """Whether the staging (or `rel` inside it) exists."""
@@ -311,22 +322,23 @@ class StagedCommit:
             if st.getPath().getName().startswith(_BATCH)
         ]
 
-    def write_record(self, ids) -> None:
-        """Stage the record as a one-column `cluster int` parquet
+    def write_record(self, vals) -> None:
+        """Stage the record, ints or strings, as a one-column parquet
         (before commit())."""
-        self._ids = [int(i) for i in ids]
+        self._vals = [v if isinstance(v, str) else int(v) for v in vals]
+        typ = "string" if any(isinstance(v, str) for v in self._vals) else "int"
         write_small_parquet(
-            self.spark, f"{self.path}/{self.record}", [(i,) for i in self._ids],
-            "cluster int",
+            self.spark, f"{self.path}/{self.record}", [(v,) for v in self._vals],
+            f"{self.record.lstrip('_')} {typ}",
         )
 
-    def record_ids(self) -> list[int]:
-        if self._ids is None:
-            self._ids = [
-                int(r[0])
+    def record_values(self) -> list:
+        if self._vals is None:
+            self._vals = [
+                r[0]
                 for r in self.spark.read.parquet(f"{self.path}/{self.record}").collect()
             ]
-        return self._ids
+        return self._vals
 
     def commit(self, *, batch_id: str | None = None, markers: tuple = ()) -> None:
         """Write the markers, the batch's _BATCH_<key>, then _COMMITTED
@@ -338,6 +350,53 @@ class StagedCommit:
             fs, jm = hadoop_fs(self.spark, f"{self.path}/{name}")
             fs.create(jm, True).close()
 
+    def promote(self, tables: dict) -> None:
+        """Apply step of a staged table rewrite: promote each staged
+        table image into its live twin by directory rename, then delete
+        every live directory the record (paths relative to root) names
+        as emptied.
+
+        `tables` maps a table's path relative to root ('' for root
+        itself) to its partition column, None for a flat table. Each
+        staged <rel>/<part_col>=<v> dir replaces <root>/<rel>/<part_col>=<v>;
+        a flat table's staged dir replaces the live one whole. The live
+        twin is deleted first: Hadoop's rename into an existing
+        directory nests the source inside it instead of replacing it.
+        The emptied set must be recorded before commit(): once a dir
+        has moved, the staging cannot tell 'moved' from 'emptied'.
+
+        One code path on every filesystem, idempotent: a moved dir is no
+        longer staged, so a rerun redoes only what is left, and a rename
+        cut short before it removed any source file is redone whole.
+        On local disk and HDFS a directory rename is atomic; an object
+        store copies then deletes, so a crash inside one partition's
+        rename can still lose the files it already moved."""
+        fs, _ = hadoop_fs(self.spark, self.path)
+        for rel, part_col in tables.items():
+            staged = f"{self.path}/{rel}".rstrip("/")
+            live = f"{self.root}/{rel}".rstrip("/")
+            _, jstaged = hadoop_fs(self.spark, staged)
+            if not fs.exists(jstaged):
+                continue
+            if part_col is None:
+                moves = [(staged, live)]
+            else:
+                moves = [
+                    (f"{staged}/{n}", f"{live}/{n}")
+                    for n in (st.getPath().getName() for st in fs.listStatus(jstaged))
+                    if n.startswith(f"{part_col}=")
+                ]
+            for src, dst in moves:
+                _, jdst = hadoop_fs(self.spark, dst)
+                fs.delete(jdst, True)
+                if not fs.rename(hadoop_fs(self.spark, src)[1], jdst):
+                    raise RuntimeError(
+                        f"staged commit: rename failed for {src} -> {dst}; "
+                        "staging left in place for resume"
+                    )
+        for rel in self.record_values():
+            fs.delete(hadoop_fs(self.spark, f"{self.root}/{rel}")[1], True)
+
     def state(self) -> str:
         """absent | uncommitted | committed | unreadable — read-only."""
         if not self.exists():
@@ -346,7 +405,7 @@ class StagedCommit:
             return UNCOMMITTED
         if self.record is not None:
             try:
-                self.record_ids()
+                self.record_values()
             except Exception:
                 return UNREADABLE
         return COMMITTED_STATE
@@ -390,7 +449,7 @@ class StagedCommit:
                "batch_keys": self.batch_keys()}
         if self.record is not None:
             rep[self.record.lstrip("_")] = (
-                self.record_ids() if state == COMMITTED_STATE else None
+                self.record_values() if state == COMMITTED_STATE else None
             )
         findings.append(
             f"{self.label} pending ({state}; settle would {rep['settle_action']})"

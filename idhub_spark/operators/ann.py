@@ -980,6 +980,7 @@ def _ivf_index_materialize(
 _APPEND_STAGING = "_append_staging"
 _SPLIT_STAGING = "_split_staging"
 _MERGE_STAGING = "_merge_staging"
+_DELETE_STAGING = "_delete_staging"
 
 
 def _apply_append_staging(spark, root: str) -> None:
@@ -989,9 +990,18 @@ def _apply_append_staging(spark, root: str) -> None:
     commit.move_tree(spark, f"{root}/{_APPEND_STAGING}/data", root)
 
 
+def _delete_commit(spark, root: str) -> commit.StagedCommit:
+    """The staging a delete commits through: the touched clusters'
+    survivor dirs plus the _emptied record of the clusters it empties."""
+    return commit.StagedCommit(spark, root, _DELETE_STAGING, record="_emptied")
+
+
 def _recover(spark, root: str, *, best_effort: bool = False):
     """Settle every pending IVF staging through commit.StagedCommit, in
-    this order: split, merge, then append. Maintenance goes first
+    this order: delete, split, merge, then append. A pending delete
+    predates any other staging (every entry point settles before it
+    stages), and its survivor dirs must land before a later
+    maintenance moves their rows. Maintenance goes before the append
     because an append staging's cluster assignment may predate a
     crashed split/merge: applying it first could rename its rows into
     a cold/victim directory the maintenance apply then deletes.
@@ -1005,14 +1015,16 @@ def _recover(spark, root: str, *, best_effort: bool = False):
     out = [None, None]
 
     def apply_split():
-        (src,) = split.record_ids()
+        (src,) = split.record_values()
         out[:] = [src, _staged_centroids(spark, split)]
         _apply_split_staging(spark, root, src, out[1])
 
     def apply_merge():
         out[1] = _staged_centroids(spark, merge)
-        _apply_merge_staging(spark, root, merge.record_ids(), out[1])
+        _apply_merge_staging(spark, root, merge.record_values(), out[1])
 
+    dele = _delete_commit(spark, root)
+    dele.settle(lambda: dele.promote({"": "cluster"}), best_effort=best_effort)
     split.settle(apply_split, best_effort=best_effort)
     merge.settle(apply_merge, best_effort=best_effort)
     commit.StagedCommit(spark, root, _APPEND_STAGING).settle(
@@ -1911,17 +1923,19 @@ def ivf_index_delete(
     index — the id column is a few bytes/row against the code+vector
     payload, so the scan is metadata-weight; there is no id→cluster
     map to consult (and maintaining one would tax every append). The
-    touched-cluster set is bounded by k and collected as literals; the
-    rewrite is the partition_pruned_upsert discipline
-    (operators/merge_into.py): stage each touched cluster's SURVIVING
-    rows to _delete_staging, dynamic-overwrite the live dirs from the
-    staged copy, and explicitly drop any cluster directory whose every
-    row was deleted (dynamic overwrite cannot replace a partition with
-    empty). Centroids are left alone — an emptied cluster simply
-    yields no candidates; reclaim it at the next re-fit or via
-    split/compact maintenance. Rerunning after a crash is idempotent
-    (already-deleted ids match nothing). Untouched directories are
-    never rewritten (mtime-stable, test-pinned).
+    touched-cluster set is bounded by k and collected as literals.
+
+    The rewrite is one commit.StagedCommit under <path>/_delete_staging:
+    each touched cluster's SURVIVING rows are staged as its new
+    directory, the clusters left with no rows go into the _emptied
+    record, then _COMMITTED; the apply step (StagedCommit.promote)
+    renames each staged dir over its live twin and drops the emptied
+    ones. A crash before the commit retracts nothing (the staging is
+    discarded and a rerun redoes the work); a crash after it is
+    finished by the next entry point. Centroids are left alone — an
+    emptied cluster simply yields no candidates; reclaim it at the
+    next re-fit or via split/compact maintenance. Untouched
+    directories are never rewritten (mtime-stable, test-pinned).
 
     Returns {"rows_deleted", "clusters_rewritten", "clusters_dropped"}.
     """
@@ -1973,7 +1987,7 @@ def _delete_ids(spark, root: str, ids_df: DataFrame, id_col: str) -> dict:
     if not touched:
         return {"rows_deleted": 0, "clusters_rewritten": 0, "clusters_dropped": 0}
 
-    staging = f"{root}/_delete_staging"
+    sc = _delete_commit(spark, root)
     survivors = (
         spark.read.parquet(root)
         .filter(F.col("cluster").isin(touched))
@@ -1983,32 +1997,22 @@ def _delete_ids(spark, root: str, ids_df: DataFrame, id_col: str) -> dict:
         survivors.repartition(F.col("cluster"))
         .write.mode("overwrite")
         .partitionBy("cluster")
-        .parquet(staging)
+        .parquet(sc.path)
     )
     # present set from the staged DIRECTORY listing, not an Observation
     # on the write: observing a write that lands ZERO rows (every row
     # of every touched cluster deleted) never fires the metric row and
     # the retrieval throws — the listing is free and empty-safe
-    fs0, jstag0 = commit.hadoop_fs(spark, staging)
+    fs, jstag = commit.hadoop_fs(spark, sc.path)
     present = {
         int(st.getPath().getName().split("=", 1)[1])
-        for st in fs0.listStatus(jstag0)
+        for st in fs.listStatus(jstag)
         if st.getPath().getName().startswith("cluster=")
     }
-    if present:
-        (
-            spark.read.parquet(staging)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("cluster")
-            .parquet(root)
-        )
-    fs, jstag = commit.hadoop_fs(spark, staging)
     dropped = set(touched) - present
-    for c in dropped:
-        _, jdir = commit.hadoop_fs(spark, f"{root}/cluster={c}")
-        fs.delete(jdir, True)
-    fs.delete(jstag, True)
+    sc.write_record([f"cluster={c}" for c in sorted(dropped)])
+    sc.commit()
+    sc.settle(lambda: sc.promote({"": "cluster"}))
     return {
         "rows_deleted": rows_deleted,
         "clusters_rewritten": len(present),
@@ -2279,7 +2283,7 @@ def ivf_index_fsck(
 
     Returns {"healthy", "findings": [str...], "pending_append_staging",
     "pending_split_staging", "pending_merge_staging",
-    "stale_delete_staging", "zombie_clusters", "orphan_centroids",
+    "pending_delete_staging", "zombie_clusters", "orphan_centroids",
     "n_cluster_dirs", "fits", "ingest_log"}. healthy == no findings;
     informational rows (prunable ingest entries) never flag by
     themselves. Cost: a handful of fs calls + k-bounded centroid
@@ -2291,18 +2295,12 @@ def ivf_index_fsck(
     pending = {}
     for name, record in ((_APPEND_STAGING, None),
                          (_SPLIT_STAGING, "_source_cluster"),
-                         (_MERGE_STAGING, "_cold_clusters")):
+                         (_MERGE_STAGING, "_cold_clusters"),
+                         (_DELETE_STAGING, "_emptied")):
         sc = commit.StagedCommit(spark, root, name, record=record)
         pending[name] = None
         with commit.fsck_guard(findings, sc.label):
             pending[name] = sc.report(findings)
-
-    stale_del = fs.exists(commit.hadoop_fs(spark, f"{root}/_delete_staging")[1])
-    if stale_del:
-        findings.append(
-            "delete staging present (a retraction crashed mid-run or is "
-            "in flight — rerun the takedown to completion)"
-        )
 
     fits_present = []
     on_disk = set()
@@ -2360,7 +2358,7 @@ def ivf_index_fsck(
         "pending_append_staging": pending[_APPEND_STAGING],
         "pending_split_staging": pending[_SPLIT_STAGING],
         "pending_merge_staging": pending[_MERGE_STAGING],
-        "stale_delete_staging": stale_del,
+        "pending_delete_staging": pending[_DELETE_STAGING],
         "zombie_clusters": zombies,
         "orphan_centroids": orphans,
         "n_cluster_dirs": len(on_disk),

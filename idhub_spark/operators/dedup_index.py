@@ -66,9 +66,12 @@ is complete iff _COMMITTED exists: the next entry point applies a
 committed staging (FS-renames its files into the live layout —
 append-only, each file lives in exactly one place, so the apply is
 idempotent and rows are never duplicated) and discards an uncommitted
-one. A full rebuild (minhash_index_write) deletes _params FIRST and
-rewrites it LAST, so a crashed rebuild raises 'no _params' on the next
-probe instead of serving a half-old, half-new index. Reference
+one. Every delete is a StagedCommit under <path>/_delete_staging whose
+apply renames staged partition dirs over their live twins
+(minhash_index_delete). A full rebuild (minhash_index_write) deletes
+_params FIRST and rewrites it LAST, so a crashed rebuild raises 'no
+_params' on the next probe instead of serving a half-old, half-new
+index. Reference
 anchor: the reference has no dedup at all — this extends
 plans/dedup_q.py's training-data operators to the incremental regime.
 
@@ -119,21 +122,7 @@ from idhub_spark import commit
 _STAGING = "_append_staging"
 _DELTA = "delta"
 _FOLD = "_FOLD_DELTA"
-# root-level flag (dot-prefixed: invisible to every parquet scan) set
-# by _settle_delta_rewrite's rollback branch — the one settle outcome
-# that RESTORES rows a crashed delete had already retracted. Root-level
-# (not inside delta/) on purpose: a later fold that empties the buffer
-# drops the delta dir while the doomed rows it folded are now LIVE, so
-# the flag must outlive the buffer. Cleared by the next completed
-# delete that plausibly covered the restored rows (ADVICE r16: one
-# that rewrote the delta buffer, or ran after a fold consumed it —
-# an unrelated delete that never touched the buffer keeps the flag;
-# the clear site in minhash_index_delete has the full argument), by a
-# rebuild (new generation), and carried by compact (the copy holds the
-# same rows). The caller-side contract is at-least-once retry of the
-# SAME takedown until it returns (docs/operations.md §dedup-index).
-# Surfaced as a warning by minhash_index_stats (ADVICE r15).
-_RERUN_MARKER = "._delete_rerun_needed"
+_DELETE_STAGING = "_delete_staging"
 
 
 def _doc_state(
@@ -363,10 +352,8 @@ def _par_jobs(*thunks) -> None:
     descriptions/groups are thread-local and Py4J allocates one
     gateway connection per thread, so a plain pool is safe; every
     thunk is awaited and the first exception re-raises BEFORE the
-    caller proceeds to its commit marker — crash-safety ordering is
-    unchanged (both tables staged, then marked). NOT used where
-    write ORDER is load-bearing (minhash_index_delete's bands-first
-    rewrite)."""
+    caller proceeds to its commit marker — every table is staged, then
+    marked."""
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=len(thunks)) as ex:
@@ -394,13 +381,35 @@ def _promote_staging(spark, root: str) -> None:
         fs.delete(jdelta, True)
 
 
+def _delete_commit(spark, root: str) -> commit.StagedCommit:
+    """The staging every delete commits through: the survivor images of
+    the tables it rewrites plus the _emptied record (paths relative to
+    root) of the partitions, or the whole delta buffer, it empties."""
+    return commit.StagedCommit(spark, root, _DELETE_STAGING, record="_emptied")
+
+
+def _delete_tables(pb_buckets: int, db_buckets: int) -> dict:
+    """The tables a delete stages, with their partition columns (the
+    delta tables are flat)."""
+    return {
+        "bands": "pb" if pb_buckets else None,
+        "docs": "db" if db_buckets else None,
+        f"{_DELTA}/bands": None,
+        f"{_DELTA}/docs": None,
+    }
+
+
 def _recover(spark, root: str, *, best_effort: bool = False) -> None:
-    """Entry settle of every dedup-index operation: the delete's pending
-    delta rewrite first (a promoted buffered append re-creates the live
-    delta dir, which would make its aside+live state ambiguous), then
-    the append/fold staging. best_effort: read-only entry points warn
-    and read live files only."""
-    _settle_delta_rewrite(spark, root, best_effort=best_effort)
+    """Entry settle of every dedup-index operation: a pending delete
+    first, then the append/fold staging — creation order, since every
+    entry point settles before it stages, so a pending delete predates
+    any other staging. best_effort: read-only entry points warn and
+    read live files only."""
+    dele = _delete_commit(spark, root)
+    dele.settle(
+        lambda: dele.promote(_delete_tables(*_load_params(spark, root)[2:])),
+        best_effort=best_effort,
+    )
     _append_commit(spark, root).settle(
         lambda: _promote_staging(spark, root), best_effort=best_effort
     )
@@ -435,102 +444,6 @@ def _read_state_table(
     return df
 
 
-def _settle_delta_rewrite(spark, root: str, *, best_effort: bool = False) -> None:
-    """Settle a delete's pending DELTA-TABLE rewrite (ADVICE r14): the
-    retraction path replaces a delta table's image with its survivor
-    set through a rename swap — stage survivors to
-    _delete_staging/delta_<t>, rename the live table ASIDE to
-    delta/._old_<t>, rename the staged dir in, drop the aside — so no
-    crash point ever leaves a directory that fs.exists passes but
-    parquet can't read (the old second-overwrite protocol's failure
-    mode: dst cleared, only _temporary written). Each state is
-    unambiguous:
-
-      aside + live present          → crash between the staged
-                                      rename-in and the aside drop;
-                                      the live table IS the survivor
-                                      set — drop the aside.
-      aside present, live absent,
-      staged survivors present      → crash between the aside rename
-                                      and the staged rename-in —
-                                      rename the survivors in, drop
-                                      the aside.
-      aside present, both absent    → staged survivors vanished
-                                      (manual staging cleanup); the
-                                      aside still holds the only copy
-                                      of the survivor rows — roll BACK
-                                      (rename aside to live; the
-                                      doomed rows it also holds are
-                                      re-retracted by the delete
-                                      rerun this state implies).
-
-    Runs FIRST at every entry point (before the append-staging
-    settle): promotion of a buffered append re-creates the live delta
-    dir additively, which would make the aside+live state ambiguous —
-    settling the rewrite first keeps each state's meaning exact. Two
-    fs.exists calls when nothing is pending. best_effort mirrors
-    the append-staging settle (read-only entry points warn and read
-    the live files only)."""
-    staging = f"{root}/_delete_staging"
-    for table in ("docs", "bands"):
-        aside = f"{root}/{_DELTA}/._old_{table}"
-        try:
-            fs, jaside = commit.hadoop_fs(spark, aside)
-            if not fs.exists(jaside):
-                continue
-            live = f"{root}/{_DELTA}/{table}"
-            st = f"{staging}/delta_{table}"
-            _, jlive = commit.hadoop_fs(spark, live)
-            _, jst = commit.hadoop_fs(spark, st)
-            if fs.exists(jlive):
-                fs.delete(jaside, True)
-            elif fs.exists(jst):
-                if not fs.rename(jst, jlive):
-                    raise RuntimeError(
-                        f"dedup index {root!r}: delta rewrite settle "
-                        f"could not rename {st} -> {live}"
-                    )
-                fs.delete(jaside, True)
-            else:
-                # ADVICE r15: the aside holds the SURVIVORS AND the
-                # doomed rows — rolling it back makes documents a
-                # crashed delete had retracted reappear in probe
-                # results until the delete is rerun. Never let that be
-                # silent: persist a root-level flag (BEFORE the rename,
-                # so a crash between the two re-enters this branch and
-                # re-creates it — idempotent overwrite) and warn here;
-                # minhash_index_stats re-warns while the flag stands,
-                # and the next completed delete clears it.
-                _, jmark = commit.hadoop_fs(spark, f"{root}/{_RERUN_MARKER}")
-                fs.create(jmark, True).close()
-                if not fs.rename(jaside, jlive):
-                    raise RuntimeError(
-                        f"dedup index {root!r}: delta rewrite settle "
-                        f"could not roll back {aside} -> {live}"
-                    )
-                import warnings
-
-                warnings.warn(
-                    f"dedup index {root!r}: delta rewrite rolled back — "
-                    f"the restored {table!r} delta still holds rows a "
-                    "crashed delete had retracted; rerun the delete to "
-                    "re-complete the takedown "
-                    f"({_RERUN_MARKER} set until one completes)",
-                    stacklevel=2,
-                )
-        except Exception:
-            if not best_effort:
-                raise
-            import warnings
-
-            warnings.warn(
-                f"dedup index {root!r}: could not settle pending delta "
-                "rewrite (concurrent writer or read-only storage); "
-                "reading live files only",
-                stacklevel=2,
-            )
-
-
 def minhash_index_write(
     docs: DataFrame,
     path: str,
@@ -556,7 +469,7 @@ def minhash_index_write(
     every upsert in this engine already follows).
 
     A rebuild also clears any leftover _append_staging/_delete_staging
-    FIRST (ADVICE r12): a staging committed against the OLD build's
+    FIRST: a staging committed against the OLD build's
     parameters (possibly different n_hashes/bands/pb/db) must never be
     promoted into the new index — the next append's resume would mix
     signature lengths and partition layouts, silently breaking probes
@@ -571,8 +484,7 @@ def minhash_index_write(
     # writes would never touch the sibling delta dir — clear it first;
     # the ingest log likewise (its batch ids name batches of the old
     # corpus — a post-rebuild retry of one is a NEW ingest decision)
-    for stale in (_STAGING, "_delete_staging", _DELTA, commit.INGEST_LOG,
-                  _RERUN_MARKER):
+    for stale in (_STAGING, _DELETE_STAGING, _DELTA, commit.INGEST_LOG):
         _, jst = commit.hadoop_fs(spark, f"{root}/{stale}")
         if fs.exists(jst):
             fs.delete(jst, True)
@@ -751,8 +663,9 @@ def minhash_index_fold_delta(
     Protocol: the buffered rows are staged in the direct layout and
     committed with the _FOLD_DELTA marker; the apply step renames the
     staged files in and — because of the marker — deletes the delta
-    dir. Every crash point resumes through the ordinary settle (the
-    staged files and the
+    dir. The entry settle first finishes any committed delete, so the
+    buffer read here is whole. Every crash point resumes through the
+    ordinary settle (the staged files and the
     delta never hold a row visible TWICE except in the narrow
     half-promoted window, which only a failed best-effort settle on a
     concurrent read-only replica could observe — the single-writer
@@ -780,32 +693,6 @@ def minhash_index_fold_delta(
     commit.prune_ingest_log(spark, root, ingest_log_horizon_s)
     fs, jdelta = commit.hadoop_fs(spark, f"{root}/{_DELTA}")
     if not fs.exists(jdelta):
-        return {"folded_rows": 0, "files_written": 0}
-    # gate per SUBTABLE, not just the parent dir (ADVICE r14): a
-    # crashed minhash_index_delete can leave (a) an empty delta/ dir
-    # (both subtables dropped, parent drop not reached) or (b) bands
-    # gone with docs still present — the all-buffered-docs-doomed
-    # path drops bands via surv==0 first. (a) is cleaned up here; (b)
-    # must NO-OP, not fold: bands absent + docs present proves every
-    # buffered doc is doomed (each doc has >=1 band row, and only the
-    # surv==0 branch drops a dir), so folding would push retracted
-    # doc rows into the live layout — the crashed delete's rerun is
-    # the resume path for that state, exactly as for the live tables.
-    have_docs = fs.exists(commit.hadoop_fs(spark, f"{root}/{_DELTA}/docs")[1])
-    have_bands = fs.exists(commit.hadoop_fs(spark, f"{root}/{_DELTA}/bands")[1])
-    if not have_docs and not have_bands:
-        fs.delete(jdelta, True)
-        return {"folded_rows": 0, "files_written": 0}
-    if have_docs != have_bands:
-        import warnings
-
-        warnings.warn(
-            f"dedup index {root!r}: delta buffer holds only "
-            f"{'docs' if have_docs else 'bands'} — crashed-delete "
-            "debris; rerun the delete to finish the retraction (fold "
-            "is a no-op until then)",
-            stacklevel=2,
-        )
         return {"folded_rows": 0, "files_written": 0}
     staging = f"{root}/{_STAGING}"
     # lazy persist + count = one materialization job (r20); the cached
@@ -903,7 +790,7 @@ def minhash_index_probe(
     (band, bkey), never per doc.
 
     Like every other entry point, the probe first settles any pending
-    append staging (ADVICE r12): between a crash mid-promotion and the
+    staging: between a crash mid-promotion and the
     next append, half the batch's files are live and half staged — a
     promoted band row whose doc row is still staged would silently
     drop its pair in the estimate join. The settle is two fs.exists
@@ -1057,22 +944,11 @@ def minhash_index_stats(spark, path: str) -> DataFrame:
     a flat index); n_rows/n_files/hot_bucket_rows cover the LOGICAL
     table (live ∪ delta buffer — the delta is unpartitioned by
     design, so its rows never count as partitions) from the same
-    single scan per table. Settles any pending append staging first,
-    BEST-EFFORT (read-only entry point — ADVICE r13), so the counts
-    never read the single writer's half-promoted crash debris."""
+    single scan per table. Settles any pending staging first,
+    BEST-EFFORT (read-only entry point), so the counts never read the
+    single writer's half-applied commit."""
     root = path.rstrip("/")
     _recover(spark, root, best_effort=True)
-    fs_m, jmark = commit.hadoop_fs(spark, f"{root}/{_RERUN_MARKER}")
-    if fs_m.exists(jmark):
-        import warnings
-
-        warnings.warn(
-            f"dedup index {root!r}: a crashed delete's delta rewrite "
-            "was rolled back — retracted documents are live again "
-            "until the delete is rerun (flag cleared when one "
-            "completes)",
-            stacklevel=2,
-        )
     rows = []
     for tbl, part_col, bucket_cols in (
         ("docs", "db", None),
@@ -1143,32 +1019,26 @@ def minhash_index_delete(
     Pruning needs no index scan to FIND the work: a doc's db partition
     is pmod(xxhash64(doc_id), D) — computable from the ids alone — and
     its band partitions derive from its stored sig (a projection over
-    the db-pruned doomed rows). Per-table rewrite is the
-    partition_pruned_upsert discipline (operators/merge_into.py):
-    stage the touched partitions' SURVIVING image to a sibling
-    _delete_staging, dynamic-overwrite the live table from the staged
-    copy, and explicitly drop any partition directory whose every row
-    was deleted (dynamic overwrite can only replace partitions present
-    in the written data). On a FLAT (pb/db=0) index there is nothing
-    to prune and both tables rewrite wholesale — correct, I/O ∝ table;
-    use the bucketed layout where deletes are routine.
+    the db-pruned doomed rows). On a FLAT (pb/db=0) index there is
+    nothing to prune and both tables rewrite wholesale — correct, I/O ∝
+    table; use the bucketed layout where deletes are routine.
 
-    Order is load-bearing: BANDS rewrite first. Band partitions are
-    derived from the doomed docs' stored sigs, so deleting the docs
-    rows first would strand unreachable band rows if the run crashed
-    between the two rewrites. Bands-first is idempotently resumable:
-    a rerun re-derives everything from the still-present docs rows
-    (the bands anti-join is a no-op where already applied). A stale
-    _delete_staging from a crashed run is overwritten by the next run
-    and invisible to scans (underscore prefix).
+    The delta buffer is a third retraction surface: a doomed doc
+    accepted since the last fold lives in <root>/delta, not the Hive
+    layout, so BOTH delta tables are anti-joined whenever the buffer
+    holds doomed rows (one small file each); a buffer the delete
+    empties is dropped whole.
 
-    The delta buffer is a third retraction surface (r14): a doomed doc
-    accepted since the last compaction lives in <root>/delta, not the
-    Hive layout, so BOTH delta tables are anti-joined through a staged
-    copy whenever the buffer holds doomed rows (the buffer is tiny by
-    construction — one file per small append — so its rewrite is one
-    cheap job; an emptied buffer drops its directory). Same bands-
-    first order across both layers.
+    Protocol: one commit.StagedCommit under <path>/_delete_staging. The
+    surviving image of every table the delete touches — the pruned
+    bands and docs partitions and both delta tables, all derived from
+    the pre-delete state — is staged concurrently, then the _emptied
+    record (the partitions, or the buffer, left with no rows), then
+    _COMMITTED. The apply step (StagedCommit.promote) renames each
+    staged dir over its live twin and drops the emptied ones. A crash
+    before the commit retracts nothing: the next entry point discards
+    the staging and the caller retries the takedown. A crash after it
+    is finished by the next entry point's settle.
 
     Returns {"rows_deleted", "docs_partitions_rewritten",
     "bands_partitions_rewritten", "delta_rows_deleted"} (0-partition
@@ -1178,21 +1048,18 @@ def minhash_index_delete(
 
     root = path.rstrip("/")
     n_hashes, bands, pb_buckets, db_buckets = _load_params(spark, root)
-    # settle any pending append staging first (ADVICE r12): a retract
-    # that scans only the live files while a committed batch sits half
-    # (or fully) staged would miss its rows — the doomed-doc scan must
-    # see every accepted document. The delta-rewrite settle runs FIRST
-    # (its docstring's ordering argument).
+    # settle every pending staging first: a retract that scans only the
+    # live files while a committed batch sits staged would miss its
+    # rows — the doomed-doc scan must see every accepted document
     _recover(spark, root)
     if isinstance(ids, DataFrame):
-        # materialize the retraction set ONCE (r19): it feeds the db
-        # prune collect, the doomed semi-join, the delta semi count,
-        # and all four anti-join rewrites — seven consumers that each
-        # re-ran the caller's id lineage (scan + distinct exchange)
-        # otherwise. Bounded by the takedown list by construction.
-        # LAZY persist (r20): the db prune collect (or, flat, the
-        # doomed-stats job) is its first action and caches it in the
-        # same job — the standalone checkpoint job is gone.
+        # materialize the retraction set ONCE: it feeds the db prune
+        # collect, the doomed semi-join, the delta semi count and all
+        # four anti-join images, each of which would re-run the
+        # caller's id lineage (scan + distinct exchange) otherwise.
+        # Bounded by the takedown list by construction. LAZY persist:
+        # the db prune collect (or, flat, the doomed-stats job) is its
+        # first action and caches it in the same job.
         ids_df = (
             ids.select(F.col(id_col).alias("doc_id"))
             .distinct()
@@ -1222,7 +1089,9 @@ def _delete_ids(
     n_hashes: int, bands: int, pb_buckets: int, db_buckets: int,
 ) -> dict:
     """minhash_index_delete's body over the materialized id set."""
-    staging = f"{root}/_delete_staging"
+    sc = _delete_commit(spark, root)
+    fs, _ = commit.hadoop_fs(spark, root)
+    emptied: list[str] = []  # root-relative dirs the delete empties
 
     def _pruned(table, part_col, buckets, parts):
         df = spark.read.parquet(f"{root}/{table}")
@@ -1230,9 +1099,10 @@ def _delete_ids(
             df = df.filter(F.col(part_col).isin(parts))
         return df
 
-    def _rewrite(table, part_col, buckets, parts, survivors):
-        """Stage survivors, dynamic-overwrite live, drop emptied dirs."""
-        st = f"{staging}/{table}"
+    def _stage(table, part_col, buckets, parts, survivors):
+        """Stage one live table's surviving image: the touched
+        partitions, or the whole table when flat."""
+        st = f"{sc.path}/{table}"
         if buckets:
             (
                 survivors.repartition(F.col(part_col))
@@ -1244,109 +1114,52 @@ def _delete_ids(
             # Observation on a ZERO-row staged write (every row of
             # every touched partition deleted) never fires its metric
             # row and the retrieval throws; the listing is empty-safe
-            fs_st, jst = commit.hadoop_fs(spark, st)
             present = {
-                int(s.getPath().getName().split("=", 1)[1])
-                for s in fs_st.listStatus(jst)
-                if s.getPath().getName().startswith(f"{part_col}=")
+                s.getPath().getName()
+                for s in fs.listStatus(commit.hadoop_fs(spark, st)[1])
             }
-            if present:
-                (
-                    spark.read.parquet(st)
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy(part_col)
-                    .parquet(f"{root}/{table}")
-                )
-            fs, _ = commit.hadoop_fs(spark, root)
-            for p in set(parts) - present:
-                _, jdir = commit.hadoop_fs(spark, f"{root}/{table}/{part_col}={p}")
-                fs.delete(jdir, True)
-        else:
-            # flat layout: whole-table rewrite through the staged copy
-            # (never overwrite a path the plan also reads)
-            survivors.write.mode("overwrite").parquet(st)
-            fs_st, jst = commit.hadoop_fs(spark, st)
-            has_data = any(
-                not s.getPath().getName().startswith(("_", "."))
-                for s in fs_st.listStatus(jst)
+            emptied.extend(
+                f"{table}/{part_col}={p}" for p in parts
+                if f"{part_col}={p}" not in present
             )
-            if has_data:
-                staged = spark.read.parquet(st)
-            else:
-                # every row deleted: the staged write landed zero
-                # part-files and read.parquet(st) would throw 'unable
-                # to infer schema' (ADVICE r12 — the bucketed branch's
-                # directory-listing guard, mirrored). Rewrite the live
-                # table as a schema-preserving EMPTY parquet instead:
-                # range(0) keeps the frame JVM-literal (no Python
-                # partition computes — literal_frame discipline) and
-                # repartition(1) forces one real footer-bearing file
-                # so later probes read an empty table, not an error.
-                staged = spark.range(0).select(
-                    *[
-                        F.lit(None).cast(f.dataType).alias(f.name)
-                        for f in survivors.schema.fields
-                    ]
-                ).repartition(1)
-            staged.write.mode("overwrite").parquet(f"{root}/{table}")
-
-    def _delta_df(table):
-        """The delta buffer's image of one table (None when absent),
-        db-pruned where computable — the delta is one tiny file per
-        buffered append, so a row filter is all the pruning it needs."""
-        p = f"{root}/{_DELTA}/{table}"
-        fs, jp = commit.hadoop_fs(spark, p)
-        if not fs.exists(jp):
-            return None
-        return spark.read.parquet(p)
-
-    def _rewrite_delta(table):
-        """Anti-join the doomed ids out of one delta table; a fully
-        emptied table drops its directory outright — probes treat a
-        missing delta as 'no buffered appends', so the empty case
-        needs no schema-preserving placeholder (and a staged 0-row
-        write is no emptiness signal anyway: Spark writes a schema-
-        bearing empty part-file for this flat coalesce(1) shape —
-        verified empirically on Spark 4.1).
-
-        An ABSENT table is 'already emptied' (ADVICE r14): when every
-        buffered doc is doomed the bands leg drops its dir (the
-        no-survivors branch), so a crash before the docs leg makes the
-        rerun re-enter here with bands gone — reading it would throw
-        PATH_NOT_FOUND, not re-derive an empty survivor set
-        (spark.read.parquet of an absent path raises).
-
-        Emptiness is read off the STAGED write itself (r20): an
-        Observation on the staged write returns the survivor count in
-        the SAME job (measured to fire even at zero rows for this
-        flat coalesce(1) shape — unlike the dynamic-partitioned writes
-        in _rewrite, where zero rows prune the metrics node, hence the
-        directory-listing guard there), so the old pre-count job is
-        gone. The metric is read via the non-blocking getOrEmpty with
-        a tiny read-back count as the fallback — a plan shape that
-        pruned the metrics could never hang the delete. Every crash
-        point still resolves: a crash after the staged write re-runs
-        the takedown per the at-least-once contract; a crash between
-        the live drop and the staging cleanup leaves only stale
-        staging the next delete overwrites.
-
-        Survivors promote by RENAME SWAP, never a second overwrite
-        over the path the anti-join just read (ADVICE r14): stage the
-        survivor file, rename the live dir aside, rename the staged
-        dir in, drop the aside. A crash between any two steps leaves
-        a state _settle_delta_rewrite resolves exactly — the old
-        overwrite-write could die with dst cleared and only
-        _temporary written, a directory that passes fs.exists but
-        fails every read until manual repair."""
-        live = f"{root}/{_DELTA}/{table}"
-        st = f"{staging}/delta_{table}"
-        fs, jlive = commit.hadoop_fs(spark, live)
-        if not fs.exists(jlive):
             return
+        survivors.write.mode("overwrite").parquet(st)
+        if not any(
+            not s.getPath().getName().startswith(("_", "."))
+            for s in fs.listStatus(commit.hadoop_fs(spark, st)[1])
+        ):
+            # every row deleted: the staged write landed zero part-files
+            # and the live table must stay readable — stage a
+            # schema-preserving EMPTY parquet instead. range(0) keeps
+            # the frame JVM-literal (no Python partition computes) and
+            # repartition(1) forces one real footer-bearing file, so
+            # later probes read an empty table, not an error.
+            spark.range(0).select(
+                *[
+                    F.lit(None).cast(f.dataType).alias(f.name)
+                    for f in survivors.schema.fields
+                ]
+            ).repartition(1).write.mode("overwrite").parquet(st)
+
+    def _stage_delta(table):
+        """Stage one delta table's survivors as one file. The docs leg
+        reads its survivor count off the staged write's Observation
+        (it fires even at zero rows for this flat coalesce(1) shape,
+        unlike the partitioned writes in _stage): zero survivors
+        records the whole buffer as emptied — docs and bands empty
+        together, since every buffered doc has its band rows in the
+        same buffer. The metric is read via the non-blocking
+        getOrEmpty with a read-back count as the fallback, so a plan
+        shape that pruned the metrics could never hang the delete."""
         from pyspark.sql import Observation
 
-        surv = spark.read.parquet(live).join(ids_df, "doc_id", "anti")
+        surv = spark.read.parquet(f"{root}/{_DELTA}/{table}").join(
+            ids_df, "doc_id", "anti"
+        )
+        st = f"{sc.path}/{_DELTA}/{table}"
+        if table == "bands":
+            surv.coalesce(1).write.mode("overwrite").parquet(st)
+            return
         obs = Observation()
         (
             surv.observe(obs, F.count(F.lit(1)).alias("n"))
@@ -1354,9 +1167,6 @@ def _delete_ids(
             .write.mode("overwrite")
             .parquet(st)
         )
-        # getOrEmpty is the NON-BLOCKING presence probe (obs.get would
-        # wait forever if a plan shape ever pruned the metrics node);
-        # once present, obs.get returns immediately
         try:
             observed = not obs._jo.getOrEmpty().isEmpty()
         except Exception:  # private handle absent: take the read-back
@@ -1365,24 +1175,7 @@ def _delete_ids(
             int(obs.get["n"]) if observed else spark.read.parquet(st).count()
         )
         if n_surv == 0:
-            fs.delete(jlive, True)
-            _, jst_dir = commit.hadoop_fs(spark, st)
-            fs.delete(jst_dir, True)
-            return
-        aside = f"{root}/{_DELTA}/._old_{table}"
-        _, jaside = commit.hadoop_fs(spark, aside)
-        _, jst = commit.hadoop_fs(spark, st)
-        if not fs.rename(jlive, jaside):
-            raise RuntimeError(
-                f"dedup index {root!r}: delta rewrite could not rename "
-                f"{live} aside; staging left in place for resume"
-            )
-        if not fs.rename(jst, jlive):
-            raise RuntimeError(
-                f"dedup index {root!r}: delta rewrite could not promote "
-                f"{st} -> {live}; settle resumes from the aside"
-            )
-        fs.delete(jaside, True)
+            emptied.append(_DELTA)
 
     dbs = None
     if db_buckets:
@@ -1406,13 +1199,11 @@ def _delete_ids(
     res: dict = {}
 
     def _doomed_stats():
-        # ONE job (r20): materializes `doomed` into the cache AND
-        # returns the live doomed count plus the pb prune set — was an
-        # eager checkpoint + a count + a distinct collect (three jobs).
-        # Each doomed doc row emits exactly `bands` band rows (explode
-        # of a bands-element array literal over a non-null sig), so the
-        # doomed row count is nb / bands EXACTLY — duplicate doc_ids
-        # included, same value the old doomed.count() returned.
+        # ONE job: materializes `doomed` into the cache AND returns the
+        # live doomed count plus the pb prune set. Each doomed doc row
+        # emits exactly `bands` band rows (explode of a bands-element
+        # array literal over a non-null sig), so the doomed row count
+        # is nb / bands EXACTLY — duplicate doc_ids included.
         if pb_buckets:
             row = (
                 _bands_from_state(
@@ -1435,87 +1226,40 @@ def _delete_ids(
             res["pbs"] = None
 
     def _delta_doomed():
-        delta_docs = _delta_df("docs")
-        if delta_docs is None:
+        if not fs.exists(commit.hadoop_fs(spark, f"{root}/{_DELTA}/docs")[1]):
             res["rows_delta"] = 0
             return
-        dd = delta_docs
+        dd = spark.read.parquet(f"{root}/{_DELTA}/docs")
         if db_buckets and dbs is not None:
             dd = dd.filter(F.col("db").isin(dbs))
         res["rows_delta"] = int(dd.join(ids_df, "doc_id", "semi").count())
 
     # the two doomed scans touch disjoint surfaces (pruned live docs vs
-    # the tiny delta) — overlap them on driver threads (guide §2.6)
+    # the tiny delta) — overlap them on driver threads
     _par_jobs(_doomed_stats, _delta_doomed)
     rows_live = res["rows_live"]
     rows_delta = res["rows_delta"]
     pbs = res["pbs"]
-    # bands-first across BOTH layers (crash between the table rewrites
-    # resumes by re-deriving from the still-present docs rows), and
-    # each layer skipped when it provably holds no doomed rows. WITHIN
-    # a layer the live-partition rewrite and the delta rewrite are
-    # independent surfaces (disjoint paths, each with its own resume
-    # protocol), so they overlap on driver threads (r19 _par_jobs) —
-    # the bands-before-docs ordering is preserved by the barrier
-    # between the two layer passes.
-    def _layer(table, part_col, buckets, parts, pruned_tbl):
-        jobs = []
-        if rows_live:
-            jobs.append(
-                lambda: _rewrite(
-                    table,
-                    part_col,
-                    buckets,
-                    parts,
-                    pruned_tbl.join(ids_df, "doc_id", "anti"),
-                )
-            )
-        if rows_delta:
-            jobs.append(lambda: _rewrite_delta(table))
-        if jobs:
-            _par_jobs(*jobs)
-
-    _layer("bands", "pb", pb_buckets, pbs,
-           _pruned("bands", "pb", pb_buckets, pbs) if rows_live else None)
-    _layer("docs", "db", db_buckets, dbs, docs_tbl)
-    # drop the buffer dir whenever BOTH subtables are gone — checked
-    # unconditionally (ADVICE r14), not only on the rows_delta path: a
-    # prior run that emptied both tables but crashed before this drop
-    # leaves an empty delta/ dir that the rerun (rows_delta now 0)
-    # must still clean up, or the fold/compact entry reads of a
-    # 'present' buffer hit absent subtables. Both tables empty
-    # together by construction (appends write them as one batch,
-    # deletes remove the same ids).
-    fs, jdelta = commit.hadoop_fs(spark, f"{root}/{_DELTA}")
-    if fs.exists(jdelta):
-        fs_d, jdd = commit.hadoop_fs(spark, f"{root}/{_DELTA}/docs")
-        fs_b, jdb = commit.hadoop_fs(spark, f"{root}/{_DELTA}/bands")
-        if not fs_d.exists(jdd) and not fs_b.exists(jdb):
-            fs.delete(jdelta, True)
-
-    fs, jstag = commit.hadoop_fs(spark, staging)
-    fs.delete(jstag, True)
-    # a COMPLETED delete is the rerun the rollback flag demands (the
-    # at-least-once retry discipline: the caller retries the same
-    # takedown until it returns) — clear it last, after every rewrite
-    # and cleanup above, so a crash anywhere in this run leaves the
-    # flag standing. Clear only when this delete plausibly covered the
-    # rollback's restored rows (ADVICE r16 — an UNRELATED delete used
-    # to clear the flag while the restored retracted rows stayed live):
-    # the rollback restored a DELTA table, so a delete that never
-    # touched the buffer (rows_delta == 0, buffer still present) is
-    # provably unrelated and keeps the flag (stats keeps warning).
-    # rows_delta > 0 means the buffer was rewritten through this
-    # delete's anti-join; an ABSENT buffer means a fold/compact moved
-    # the restored rows into the live layout since the rollback, where
-    # only the documented same-takedown retry contract
-    # (docs/operations.md §dedup-index) can vouch for coverage — the
-    # pre-r17 any-delete-clears semantics, now confined to that case.
-    _, jmark = commit.hadoop_fs(spark, f"{root}/{_RERUN_MARKER}")
-    if fs.exists(jmark):
-        _, jdelta_m = commit.hadoop_fs(spark, f"{root}/{_DELTA}")
-        if rows_delta > 0 or not fs.exists(jdelta_m):
-            fs.delete(jmark, False)
+    # every image derives from the pre-delete state, so the four stage
+    # concurrently; a layer with no doomed rows is skipped
+    jobs = []
+    if rows_live:
+        bands_tbl = _pruned("bands", "pb", pb_buckets, pbs)
+        jobs += [
+            lambda: _stage("bands", "pb", pb_buckets, pbs,
+                           bands_tbl.join(ids_df, "doc_id", "anti")),
+            lambda: _stage("docs", "db", db_buckets, dbs,
+                           docs_tbl.join(ids_df, "doc_id", "anti")),
+        ]
+    if rows_delta:
+        jobs += [lambda: _stage_delta("bands"), lambda: _stage_delta("docs")]
+    if jobs:
+        _par_jobs(*jobs)
+        if _DELTA in emptied:
+            fs.delete(commit.hadoop_fs(spark, f"{sc.path}/{_DELTA}")[1], True)
+        sc.write_record(emptied)
+        sc.commit()
+        sc.settle(lambda: sc.promote(_delete_tables(pb_buckets, db_buckets)))
     return {
         "rows_deleted": int(rows_live + rows_delta),
         "docs_partitions_rewritten": (
@@ -1549,10 +1293,11 @@ def minhash_index_compact(
     sequential driver round-trips; measured, r13 audit) and the state
     tables are 100-1000x smaller than the corpus, so one bounded
     shuffle is the right trade. A FLAT table (pb/db=0) keeps the
-    zero-shuffle compact_small_files path. Settles any pending append
-    staging on the SOURCE first (ADVICE r12 class): a committed but
-    unpromoted batch lives under an '_'-dir both engines skip, so it
-    would silently be LEFT OUT of the compacted copy.
+    zero-shuffle compact_small_files path. Settles any pending staging
+    on the SOURCE first: a committed but unapplied batch lives under an
+    '_'-dir both engines skip, so it would silently be LEFT OUT of the
+    compacted copy, and a committed but unapplied delete would carry
+    its retracted rows into it.
 
     Compaction is also the LSM MERGE (r14): a delta buffer on the
     source FOLDS into the compacted layout — its rows carry the
@@ -1568,34 +1313,13 @@ def minhash_index_compact(
     _recover(spark, src)
     n_hashes, bands, pb_buckets, db_buckets = _load_params(spark, src)
     fs, _ = commit.hadoop_fs(spark, src)
-    # one-sided delta = crashed-delete debris (bands dropped with docs
-    # still present, reachable only on the all-buffered-docs-doomed
-    # path — fold docstring's proof): the remaining delta rows are all
-    # RETRACTED, so folding them into the compacted copy would undo
-    # the takedown (ADVICE r14's 'silently folded back' gap). Exclude
-    # the debris — the compacted copy completes the retraction — and
-    # say so.
-    _dd = fs.exists(commit.hadoop_fs(spark, f"{src}/{_DELTA}/docs")[1])
-    _db = fs.exists(commit.hadoop_fs(spark, f"{src}/{_DELTA}/bands")[1])
-    skip_delta = _dd != _db
-    if skip_delta:
-        import warnings
-
-        warnings.warn(
-            f"dedup index {src!r}: delta buffer holds only "
-            f"{'docs' if _dd else 'bands'} — crashed-delete debris of "
-            "retracted rows; excluded from the compacted copy",
-            stacklevel=2,
-        )
     n_src = n_out = 0
     for table, part_col, buckets in (
         ("docs", "db", db_buckets),
         ("bands", "pb", pb_buckets),
     ):
         delta_tbl = f"{src}/{_DELTA}/{table}"
-        has_delta = not skip_delta and fs.exists(
-            commit.hadoop_fs(spark, delta_tbl)[1]
-        )
+        has_delta = fs.exists(commit.hadoop_fs(spark, delta_tbl)[1])
         if buckets:
             s, o = compact_partitioned(
                 spark,
@@ -1648,13 +1372,6 @@ def minhash_index_compact(
     # the compacted copy holds the same accepted batches: their
     # in-horizon keys must keep rejecting retries
     commit.carry_ingest_log(spark, src, dst, ingest_log_horizon_s)
-    # carry the delete-rerun flag (ADVICE r15): the compacted copy
-    # holds the same rows, restored-doomed included — the pending
-    # takedown transfers with them
-    jmark_src = commit.hadoop_fs(spark, f"{src}/{_RERUN_MARKER}")[1]
-    if fs.exists(jmark_src):
-        _, jmark_dst = commit.hadoop_fs(spark, f"{dst}/{_RERUN_MARKER}")
-        fs.create(jmark_dst, True).close()
     return n_src, n_out
 
 
@@ -1674,21 +1391,18 @@ def minhash_index_fsck(
     point, or stats for best-effort) with full knowledge.
 
     Returns {"healthy", "findings": [str...], "pending_append_staging",
-    "pending_delta_rewrite": {table: state}, "delete_rerun_needed",
-    "stale_delete_staging", "delta": {present, files}, "ingest_log",
+    "pending_delete_staging", "delta": {present, files}, "ingest_log",
     "duplicate_doc_ids", "params"}. healthy == no findings;
     informational rows (prunable ingest entries, buffered delta files)
-    never flag by themselves. duplicate_doc_ids (r20) counts ids
-    holding more than one docs row across live ∪ delta — one bounded
-    aggregate, the only Spark job fsck runs.
+    never flag by themselves. duplicate_doc_ids counts ids holding more
+    than one docs row across live ∪ delta — one bounded aggregate, the
+    only Spark job fsck runs besides reading a committed staging's
+    _emptied record.
 
-    The append staging's state and settle action come from
-    commit.StagedCommit.state() — the same call the settle acts on
-    (uncommitted -> discard, committed -> apply). The delta rewrite's
-    states mirror _settle_delta_rewrite: aside+live ->
-    'aside drop pending', aside+staged -> 'promote pending',
-    aside-only -> 'ROLLBACK pending (restores retracted rows — rerun
-    the takedown after settling)'."""
+    Each staging's state and settle action come from
+    commit.StagedCommit.report() — the same state() the settle acts on
+    (uncommitted -> discard, committed -> apply, unreadable -> the
+    settle raises). A pending delete reports the dirs it empties."""
     root = path.rstrip("/")
     # raises the clear no-_params error on a non-index path
     n_hashes, bands, pb_buckets, db_buckets = _load_params(spark, root)
@@ -1702,42 +1416,9 @@ def minhash_index_fsck(
         if append_state is not None:
             append_state["is_fold"] = sc.exists(_FOLD)
 
-    rewrite = {}
-    for table in ("docs", "bands"):
-        with commit.fsck_guard(findings, f"delta rewrite state of {table!r}"):
-            aside = f"{root}/{_DELTA}/._old_{table}"
-            if not fs.exists(commit.hadoop_fs(spark, aside)[1]):
-                continue
-            live_ok = fs.exists(
-                commit.hadoop_fs(spark, f"{root}/{_DELTA}/{table}")[1]
-            )
-            staged_ok = fs.exists(
-                commit.hadoop_fs(spark, f"{root}/_delete_staging/delta_{table}")[1]
-            )
-            if live_ok:
-                rewrite[table] = "aside drop pending"
-            elif staged_ok:
-                rewrite[table] = "promote pending"
-            else:
-                rewrite[table] = (
-                    "ROLLBACK pending (restores retracted rows — rerun "
-                    "the takedown after settling)"
-                )
-            findings.append(
-                f"delta rewrite pending on {table!r}: {rewrite[table]}"
-            )
-
-    rerun = fs.exists(commit.hadoop_fs(spark, f"{root}/{_RERUN_MARKER}")[1])
-    if rerun:
-        findings.append(
-            "delete rerun needed (a rollback restored retracted rows)"
-        )
-    stale_del = fs.exists(commit.hadoop_fs(spark, f"{root}/_delete_staging")[1])
-    if stale_del:
-        findings.append(
-            "delete staging present (a retraction crashed mid-run or is "
-            "in flight — rerun the takedown to completion)"
-        )
+    delete_state = None
+    with commit.fsck_guard(findings, "delete staging"):
+        delete_state = _delete_commit(spark, root).report(findings)
 
     jdelta = commit.hadoop_fs(spark, f"{root}/{_DELTA}")[1]
     delta_info = {"present": False, "files": 0}
@@ -1787,9 +1468,7 @@ def minhash_index_fsck(
         "healthy": not findings,
         "findings": findings,
         "pending_append_staging": append_state,
-        "pending_delta_rewrite": rewrite,
-        "delete_rerun_needed": rerun,
-        "stale_delete_staging": stale_del,
+        "pending_delete_staging": delete_state,
         "delta": delta_info,
         "ingest_log": log_report,
         "duplicate_doc_ids": dup_doc_ids,

@@ -302,10 +302,17 @@ def partition_pruned_upsert(
       an incoming key by construction (same bucket function);
     - buckets whose every incoming row classified 'unchanged' are
       dropped from the write set — a no-op batch rewrites nothing;
-    - the write uses dynamic partition overwrite, which replaces
-      exactly the partitions present in the written data and leaves
-      every other partition's files untouched (mtime-asserted in
-      tests/test_storage.py).
+    - the rewrite is one commit.StagedCommit under
+      <table_root>/_upsert_staging (the underscore keeps it out of
+      every scan and out of the bucket listing): the merged image of
+      each rewritten bucket is staged as its new directory, buckets
+      left with no rows go into the _emptied record, then _COMMITTED;
+      the apply step (StagedCommit.promote) renames each staged bucket
+      dir over its live twin and drops the emptied ones. Every other
+      bucket's files stay untouched (mtime-asserted in
+      tests/test_storage.py). A crash before the commit changes
+      nothing; a crash after it is finished by the next upsert's entry
+      settle.
 
     The two `.collect()`s are bucket-id lists, bounded by n_buckets
     ints — driver-safe at any table size.
@@ -322,6 +329,8 @@ def partition_pruned_upsert(
         bucket_of = lambda df: bucket_expr(natural_key, n_buckets)  # noqa: E731
     if evolve not in ("reject", "rewrite"):
         raise ValueError(f"evolve must be reject|rewrite, got {evolve!r}")
+    sc = commit.StagedCommit(spark, table_root, "_upsert_staging", record="_emptied")
+    sc.settle(lambda: sc.promote({"": bucket_col}))
     check_layout(
         spark, table_root, n_buckets=n_buckets, natural_key=natural_key,
         custom_bucket_of=custom, bucket_col=bucket_col,
@@ -465,7 +474,6 @@ def partition_pruned_upsert(
     cls = mr.classified.persist()
     rows_rewritten = 0
     present: set = set()
-    staging = table_root.rstrip("/") + "_staging"
     try:
         if widen:
             # evolving batch: every bucket rewrites so the new columns /
@@ -481,20 +489,15 @@ def partition_pruned_upsert(
             # deletion-only buckets rewrite as well
             rewrite = rewrite + [b for b in del_buckets if b not in set(rewrite)]
         if rewrite:
-            # Two-phase write: the merged image's lineage READS the very
-            # partitions the overwrite replaces (self-overwrite — task
-            # re-execution after commit would find its input files gone).
-            # Stage the touched-bucket image to a sibling dir, then
-            # dynamic-overwrite FROM the staged copy. Cost: 2x the touched
-            # partitions' write I/O — still bounded by the batch, never by
-            # table size — and the staged copy doubles as the crash-recovery
-            # artifact (rerunning phase 2 is idempotent).
+            # the merged image's lineage READS the very partitions it
+            # replaces, so it is staged first and promoted by rename
+            # only after the write job is done with its input
             merged = mr.merged.withColumn(
                 bucket_col, F.coalesce(F.col(bucket_col), bucket_of(mr.merged))
             )
             to_write = merged.filter(F.col(bucket_col).isin(rewrite))
             # row count + present-bucket set are observed as side effects
-            # of the phase-1 write itself (aggregate metrics over the rows
+            # of the staged write itself (aggregate metrics over the rows
             # flowing through), replacing a full read-back count() of the
             # staged data — one fewer scan of the touched buckets per
             # upsert; collect_set is bounded by n_buckets values
@@ -517,43 +520,21 @@ def partition_pruned_upsert(
                 .sortWithinPartitions(*natural_key)
                 .write.mode("overwrite")
                 .partitionBy(bucket_col)
-                .parquet(staging)
+                .parquet(sc.path)
             )
             rows_rewritten = obs.get["rows"]
             present = set(obs.get["bkts"])
     finally:
         # release the classification cache on every exit path (a
         # long-running ingest loop must not leak a cache per failed
-        # trigger), and always BEFORE the phase-2 overwrite (its
-        # lineage reads the files phase 2 replaces; nothing consumes it
-        # past this point)
+        # trigger), and always BEFORE the promote (its lineage reads
+        # the files the promote replaces; nothing consumes it past
+        # this point)
         cls.unpersist()
     if rewrite:
-        if rows_rewritten:
-            (
-                spark.read.parquet(staging)
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(bucket_col)
-                .parquet(table_root)
-            )
-        jsc = spark.sparkContext
-        if del_buckets:
-            # dynamic partition overwrite replaces only partitions
-            # PRESENT in the written data — a bucket whose every row
-            # was deleted is absent from the staged image, so its old
-            # files would silently survive. Drop those partition
-            # directories explicitly (hadoop fs: s3a-safe).
-            for b in rewrite:
-                if b in present:
-                    continue
-                jdir = jsc._jvm.org.apache.hadoop.fs.Path(
-                    table_root.rstrip("/") + f"/{bucket_col}={b}"
-                )
-                jdir.getFileSystem(jsc._jsc.hadoopConfiguration()).delete(jdir, True)
-        # hadoop fs delete (not shutil): table_root may be s3a://
-        jpath = jsc._jvm.org.apache.hadoop.fs.Path(staging)
-        jpath.getFileSystem(jsc._jsc.hadoopConfiguration()).delete(jpath, True)
+        sc.write_record([f"{bucket_col}={b}" for b in rewrite if b not in present])
+        sc.commit()
+        sc.settle(lambda: sc.promote({"": bucket_col}))
     return PrunedUpsertStats(
         n_buckets_total=n_total,
         n_buckets_touched=len(touched),

@@ -2118,6 +2118,15 @@ def test_ivf_index_fsck(spark, tmp_path, monkeypatch):
     assert os.path.isdir(f"{path}/_append_staging")  # not settled
     shutil.rmtree(f"{path}/_append_staging")
 
+    # an uncommitted delete staging: classified 'discard', left in place
+    os.makedirs(f"{path}/_delete_staging/cluster=1")
+    rep = ivf_index_fsck(spark, path)
+    assert rep["pending_delete_staging"]["state"] == "uncommitted"
+    assert rep["pending_delete_staging"]["settle_action"] == "discard"
+    assert any("delete staging pending" in f for f in rep["findings"])
+    assert os.path.isdir(f"{path}/_delete_staging/cluster=1")  # not settled
+    shutil.rmtree(f"{path}/_delete_staging")
+
     # concurrent-writer race: a staging vanishing mid-inspection must
     # degrade to a 'rerun fsck' finding, never crash the check
     from idhub_spark import commit

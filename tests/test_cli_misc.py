@@ -504,8 +504,6 @@ def test_cli_dedup_index_roundtrip(spark, tmp_path, capsys):
     # n_rows already includes it — live-only = n_rows - delta_rows)
     assert rep["tables"]["docs"]["delta_rows"] == 1
     assert rep["tables"]["docs"]["delta_files"] == 1
-    # no crashed-delete rollback pending (ADVICE r15 flag, surfaced)
-    assert rep["delete_rerun_needed"] is False
 
     # fold: the buffered append re-lays into the Hive layout in place
     rc = cli.main(["dedup-index", "fold", "--index", idx])

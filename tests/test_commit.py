@@ -16,7 +16,8 @@ from pyspark.sql import functions as F
 from idhub_spark import commit
 from tests.conftest import SF_DIR as SF
 
-_STAGINGS = ("_append_staging", "_split_staging", "_merge_staging")
+_STAGINGS = ("_append_staging", "_split_staging", "_merge_staging",
+             "_delete_staging", "_upsert_staging")
 
 
 class _InjectedCrash(RuntimeError):
@@ -131,15 +132,116 @@ def _dedup_fold(spark, docs, vectors, tpl):
     return lambda idx: minhash_index_fold_delta(spark, idx), check
 
 
-def _ivf_check(spark, n_rows, gone=()):
+def _dedup_delete(shape):
+    """A retraction of three live docs plus, by shape: nothing else
+    ('live'); two docs of a buffered append, so it hits both layers
+    ('delta' — the benchmark's dedup cycle); every buffered doc
+    ('all-delta' — the buffer is dropped)."""
+
+    def build(spark, docs, vectors, tpl):
+        from idhub_spark.operators.dedup_index import (
+            _read_state_table,
+            minhash_index_append,
+            minhash_index_delete,
+            minhash_index_write,
+        )
+
+        base = docs.filter(F.col("doc_id") % 2 == 0)
+        appended = docs.filter(F.col("doc_id") % 2 == 1)
+        minhash_index_write(docs if shape == "live" else base, tpl,
+                            n_hashes=8, bands=2, pb_buckets=4, db_buckets=4)
+        if shape != "live":
+            assert minhash_index_append(appended, tpl, mode="delta") == "delta"
+        app_ids = sorted(r.doc_id for r in appended.select("doc_id").collect())
+        victims = sorted(r.doc_id for r in base.select("doc_id").collect())[:3]
+        victims += {"live": [], "delta": app_ids[:2], "all-delta": app_ids}[shape]
+        rows = _dedup_check(spark, docs.count() - len(victims), 2)
+
+        def check(idx):
+            rows(idx)
+            for t in ("docs", "bands"):
+                assert _read_state_table(spark, idx, t).filter(
+                    F.col("doc_id").isin(victims)).count() == 0
+            assert os.path.isdir(f"{idx}/delta") == (shape == "delta")
+
+        return lambda idx: minhash_index_delete(spark, idx, victims), check
+
+    return build
+
+
+def _ivf_check(spark, n_rows, gone=(), absent_ids=()):
     def check(idx):
         got = spark.read.parquet(idx)
         assert got.count() == n_rows
         assert got.select("vec_id").distinct().count() == n_rows
+        assert got.filter(F.col("vec_id").isin(list(absent_ids))).count() == 0
         for c in gone:
             assert not os.path.isdir(f"{idx}/cluster={c}")
 
     return check
+
+
+def _ivf_delete(spark, docs, vectors, tpl):
+    """The whole smallest cluster (its dir is dropped) plus two rows of
+    the others."""
+    from idhub_spark.operators.ann import (
+        ivf_index_delete,
+        ivf_index_stats,
+        ivf_sq8_index_write,
+        kmeans_fit,
+        sq8_fit,
+    )
+
+    ivf_sq8_index_write(vectors, kmeans_fit(vectors, k=4, max_iter=2),
+                        sq8_fit(vectors), tpl)
+    stats = {r.cluster: r.n_rows for r in ivf_index_stats(spark, tpl).collect()}
+    small = min((c for c in stats if c >= 0), key=lambda c: stats[c])
+    live = spark.read.parquet(tpl)
+    victims = [int(r.vec_id) for r in
+               live.filter(F.col("cluster") == small).select("vec_id").collect()]
+    victims += [int(r.vec_id) for r in live.filter(F.col("cluster") != small)
+                .select("vec_id").orderBy("vec_id").limit(2).collect()]
+    return (
+        lambda idx: ivf_index_delete(spark, idx, victims),
+        _ivf_check(spark, vectors.count() - len(victims), gone=(small,),
+                   absent_ids=victims),
+    )
+
+
+def _pruned_upsert(spark, docs, vectors, tpl):
+    """An upsert (one update, one insert) whose delete_keys empty
+    bucket 3."""
+    from idhub_spark.operators.merge_into import (
+        partition_pruned_upsert,
+        seed_bucketed_table,
+    )
+
+    def bucket_of(df):
+        return (F.col("k") % 8).cast("int")
+
+    seed_bucketed_table(
+        spark.createDataFrame([(k, f"name{k}", float(k)) for k in range(16)],
+                              ["k", "name", "val"]),
+        tpl, ["k"], n_buckets=8, bucket_of=bucket_of,
+    )
+    incoming = spark.createDataFrame(
+        [(0, "name0", 99.0), (100, "new", 0.0)], ["k", "name", "val"])
+    deletes = spark.createDataFrame([(3,), (11,)], ["k"])
+    want = {k: float(k) for k in range(16) if k not in (3, 11)}
+    want.update({0: 99.0, 100: 0.0})
+
+    def check(idx):
+        got = spark.read.parquet(idx)
+        assert got.count() == len(want)
+        assert {r.k: r.val for r in got.collect()} == want
+        assert not os.path.isdir(f"{idx}/_bucket=3")
+
+    return (
+        lambda idx: partition_pruned_upsert(
+            spark, idx, incoming, ["k"], n_buckets=8, bucket_of=bucket_of,
+            delete_keys=deletes),
+        check,
+    )
 
 
 def _ivf_append(spark, docs, vectors, tpl):
@@ -237,18 +339,24 @@ _CASES = {
     "ivf-split": _ivf_split,
     "ivf-merge-cold": _ivf_merge_cold,
     "ivf-adopt": _ivf_adopt,
+    "dedup-delete-live": _dedup_delete("live"),
+    "dedup-delete-delta": _dedup_delete("delta"),
+    "dedup-delete-all-delta": _dedup_delete("all-delta"),
+    "ivf-delete": _ivf_delete,
+    "pruned-upsert": _pruned_upsert,
 }
 
 
 @pytest.mark.parametrize("case", list(_CASES))
 def test_crash_injection_sweep(spark, docs, vectors, tmp_path, monkeypatch,
                                case):
-    """Every staged commit of both index families, killed at strided
-    driver fs-call boundaries and rerun, converges: rows exactly once,
-    ids distinct, no staging left. A crash before _COMMITTED discards
-    the staging and the rerun redoes the work; after it, the rerun's
-    entry settle finishes the apply (and a keyed append then returns
-    'duplicate')."""
+    """Every staged commit — both index families and the pruned
+    upsert — killed at strided driver fs-call boundaries and rerun,
+    converges: rows exactly once, ids distinct, no retracted id left,
+    no staging left. A crash before _COMMITTED discards the staging and
+    the rerun redoes the work; after it, the rerun's entry settle
+    finishes the apply (a keyed append then returns 'duplicate', a
+    delete or upsert then finds nothing left to do)."""
     tpl = str(tmp_path / "tpl")
     op, check = _CASES[case](spark, docs, vectors, tpl)
 
@@ -532,3 +640,23 @@ def test_delete_delta_rewrite_without_observation_handle(
         results.append((rep, ids))
     assert results[0] == results[1]
     assert results[0][0]["delta_rows_deleted"] == 2
+
+
+def test_hadoop_fs_is_the_only_path_builder():
+    """Every engine filesystem call goes through commit.hadoop_fs, the
+    one name fault injection patches: no other module builds a Hadoop
+    Path, and no write relies on dynamic partition overwrite (partition
+    rewrites are promoted by rename under StagedCommit)."""
+    import pathlib
+
+    import idhub_spark
+
+    pkg = pathlib.Path(idhub_spark.__file__).parent
+    offenders = []
+    for f in sorted(pkg.rglob("*.py")):
+        text = f.read_text()
+        if "partitionOverwriteMode" in text:
+            offenders.append(f"{f.relative_to(pkg)}: partitionOverwriteMode")
+        if f.name != "commit.py" and "hadoop.fs.Path" in text:
+            offenders.append(f"{f.relative_to(pkg)}: builds a Hadoop Path")
+    assert not offenders, offenders

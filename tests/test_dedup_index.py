@@ -1031,17 +1031,24 @@ def test_incremental_index_equals_single_build_randomized(spark, docs, tmp_path)
         assert got_inc == got_ref and got_ref, f"seed {seed}"
 
 
-def test_delete_all_doomed_delta_crash_resume(spark, docs, tmp_path):
-    """ADVICE r14 medium: when every buffered doc is doomed the bands
-    leg drops its delta dir (surv==0); a crash before the docs leg
-    used to make the rerun throw PATH_NOT_FOUND on the absent bands
-    path — and a later compact would silently fold the stranded doomed
-    docs back into the live table (an incomplete GDPR retraction).
-    The rerun must now complete: absent subtable = already emptied,
-    and the emptied parent dir drops regardless of which run sees it."""
-    import shutil
+class _InjectedCrash(RuntimeError):
+    pass
 
+
+def _crash(*_a, **_kw):
+    raise _InjectedCrash("injected")
+
+
+def test_delete_all_doomed_delta_crash_resume(spark, docs, tmp_path, monkeypatch):
+    """A delete that dooms every buffered doc drops the whole delta
+    buffer. Crashed before its commit it retracts nothing: the next
+    entry point discards the staging and the retry redoes the work.
+    Crashed after its commit it completes at the next entry point —
+    here the fold, which must find no buffer left rather than fold the
+    retracted docs into the live layout."""
+    from idhub_spark import commit
     from idhub_spark.operators.dedup_index import (
+        _read_state_table,
         minhash_index_delete,
         minhash_index_fold_delta,
     )
@@ -1053,34 +1060,38 @@ def test_delete_all_doomed_delta_crash_resume(spark, docs, tmp_path):
                         db_buckets=8)
     assert minhash_index_append(appended, path) == "delta"
     doomed = [r.doc_id for r in appended.select("doc_id").collect()]
+    staging = f"{path}/_delete_staging"
 
-    # the crash debris: bands dropped, docs (all doomed) still present
-    shutil.rmtree(f"{path}/delta/bands")
-    rep = minhash_index_delete(spark, path, doomed)  # the rerun
-    assert rep["delta_rows_deleted"] == len(doomed)
-    assert not os.path.isdir(f"{path}/delta")
-    a_id = doomed[0]
-    ghost = _exact_copies(docs.filter(F.col("doc_id") == a_id), 1, 830_000)
+    monkeypatch.setattr(commit.StagedCommit, "commit", _crash)
+    with pytest.raises(_InjectedCrash):
+        minhash_index_delete(spark, path, doomed)
+    monkeypatch.undo()
+    assert os.path.isdir(staging) and not os.path.exists(f"{staging}/_COMMITTED")
+    assert spark.read.parquet(f"{path}/delta/docs").count() == len(doomed)
+
+    monkeypatch.setattr(commit.StagedCommit, "promote", _crash)
+    with pytest.raises(_InjectedCrash):
+        minhash_index_delete(spark, path, doomed)  # the retry
+    monkeypatch.undo()
+    assert os.path.isfile(f"{staging}/_COMMITTED")
+    assert os.path.isdir(f"{path}/delta")  # committed, not yet applied
+
+    assert minhash_index_fold_delta(spark, path) == {
+        "folded_rows": 0, "files_written": 0,
+    }
+    assert not os.path.isdir(f"{path}/delta") and not os.path.isdir(staging)
+    assert _read_state_table(spark, path, "docs").count() == base.count()
+    ghost = _exact_copies(docs.filter(F.col("doc_id") == doomed[0]), 1, 830_000)
     got = minhash_index_probe(spark, path, ghost, include_batch_pairs=False)
-    assert not any(r.dup_id == a_id for r in got.collect())
-
-    # empty-parent debris (crash between the subtable drops and the
-    # parent delete): the next delete's unconditional check cleans it
-    os.makedirs(f"{path}/delta")
-    live_victim = int(base.select(F.min("doc_id")).first()[0])
-    minhash_index_delete(spark, path, [live_victim])
-    assert not os.path.isdir(f"{path}/delta")
+    assert not any(r.dup_id == doomed[0] for r in got.collect())
 
 
-def test_fold_delta_tolerates_delete_debris(spark, docs, tmp_path):
-    """ADVICE r14 medium: the fold used to gate only on the parent
-    delta dir and then read both subtables unconditionally — the
-    delete-crash debris states (one subtable dropped; empty parent)
-    made it throw instead of no-op. One-sided debris must NOT fold
-    (the surviving rows are provably all retracted); the delete rerun
-    finishes the retraction and the fold then no-ops clean."""
-    import shutil
-
+def test_fold_delta_tolerates_delete_debris(spark, docs, tmp_path, monkeypatch):
+    """A delete of one buffered doc that crashed after its commit leaves
+    the buffer's survivor images staged, not applied. The fold's entry
+    settle applies them before the fold reads the buffer, so the
+    retracted doc never reaches the live layout."""
+    from idhub_spark import commit
     from idhub_spark.operators.dedup_index import (
         minhash_index_delete,
         minhash_index_fold_delta,
@@ -1092,38 +1103,32 @@ def test_fold_delta_tolerates_delete_debris(spark, docs, tmp_path):
     minhash_index_write(base, path, n_hashes=8, bands=2, pb_buckets=8,
                         db_buckets=8)
     assert minhash_index_append(appended, path) == "delta"
+    victim = int(appended.select(F.min("doc_id")).first()[0])
 
-    shutil.rmtree(f"{path}/delta/bands")
-    with pytest.warns(UserWarning, match="crashed-delete debris"):
-        rep = minhash_index_fold_delta(spark, path)
-    assert rep == {"folded_rows": 0, "files_written": 0}
-    assert os.path.isdir(f"{path}/delta/docs")  # untouched, not folded
+    monkeypatch.setattr(commit.StagedCommit, "promote", _crash)
+    with pytest.raises(_InjectedCrash):
+        minhash_index_delete(spark, path, [victim])
+    monkeypatch.undo()
+    assert os.path.isfile(f"{path}/_delete_staging/_COMMITTED")
 
-    doomed = [r.doc_id for r in appended.select("doc_id").collect()]
-    minhash_index_delete(spark, path, doomed)
+    rep = minhash_index_fold_delta(spark, path)
+    assert rep["folded_rows"] == appended.count() - 1
     assert not os.path.isdir(f"{path}/delta")
-    assert minhash_index_fold_delta(spark, path) == {
-        "folded_rows": 0, "files_written": 0,
-    }
-
-    # empty-parent debris: the fold itself cleans it up
-    os.makedirs(f"{path}/delta")
-    assert minhash_index_fold_delta(spark, path) == {
-        "folded_rows": 0, "files_written": 0,
-    }
-    assert not os.path.isdir(f"{path}/delta")
+    assert not os.path.isdir(f"{path}/_delete_staging")
+    live = spark.read.parquet(f"{path}/docs")
+    assert live.count() == base.count() + appended.count() - 1
+    assert live.filter(F.col("doc_id") == victim).count() == 0
 
 
-def test_delta_rewrite_rename_swap_and_settle(spark, docs, tmp_path):
-    """ADVICE r14 low: a partial-doom delta rewrite promotes survivors
-    by RENAME SWAP (stage -> live aside -> staged in -> aside drop),
-    never a second overwrite over the path the anti-join read — no
-    crash point leaves a dir that passes fs.exists but fails reads.
-    Each swap crash window settles exactly at the next entry point."""
-    import shutil
-
+def test_delta_rewrite_rename_swap_and_settle(spark, docs, tmp_path, monkeypatch):
+    """A partial-doom delta rewrite promotes the staged survivors by
+    directory rename — never a second write over the path the anti-join
+    read — and leaves exactly one data file per delta table. A delete
+    committed but not applied is settled by the next read-only entry
+    point (probe, best-effort) and by stats; an uncommitted one is
+    discarded with nothing retracted."""
+    from idhub_spark import commit
     from idhub_spark.operators.dedup_index import (
-        _read_state_table,
         minhash_index_delete,
         minhash_index_stats,
     )
@@ -1135,17 +1140,18 @@ def test_delta_rewrite_rename_swap_and_settle(spark, docs, tmp_path):
                         db_buckets=8)
     assert minhash_index_append(appended, path) == "delta"
     n_app = appended.count()
+    app_ids = sorted(r.doc_id for r in appended.select("doc_id").collect())
+    v1, v2, v3, keep = app_ids[:4]
+    staging = f"{path}/_delete_staging"
 
-    # healthy partial doom: live delta readable, exactly one data file
-    victim = int(appended.select(F.min("doc_id")).first()[0])
-    keep = int(appended.filter(F.col("doc_id") != victim)
-               .select(F.min("doc_id")).first()[0])
-    rep = minhash_index_delete(spark, path, [victim])
+    rep = minhash_index_delete(spark, path, [v1])
     assert rep["delta_rows_deleted"] == 1
     assert spark.read.parquet(f"{path}/delta/docs").count() == n_app - 1
-    data = [f for f in os.listdir(f"{path}/delta/docs")
-            if not f.startswith(("_", "."))]
-    assert len(data) == 1 and not os.path.isdir(f"{path}/delta/._old_docs")
+    for t in ("docs", "bands"):
+        data = [f for f in os.listdir(f"{path}/delta/{t}")
+                if not f.startswith(("_", "."))]
+        assert len(data) == 1, t
+    assert not os.path.isdir(staging)
 
     def _probe_keep_found():
         ghost = _exact_copies(
@@ -1155,44 +1161,45 @@ def test_delta_rewrite_rename_swap_and_settle(spark, docs, tmp_path):
         return any(r.dup_id == keep and r.est_jaccard == 1.0
                    for r in got.collect())
 
-    # window A — crash between the aside rename and the staged
-    # rename-in: aside present, live absent, staged survivors present.
-    # The next read-only entry (probe) settles best-effort and heals.
-    shutil.copytree(f"{path}/delta/docs",
-                    f"{path}/_delete_staging/delta_docs")
-    os.rename(f"{path}/delta/docs", f"{path}/delta/._old_docs")
+    # committed, not applied: the probe's entry settle applies it
+    monkeypatch.setattr(commit.StagedCommit, "promote", _crash)
+    with pytest.raises(_InjectedCrash):
+        minhash_index_delete(spark, path, [v2])
+    monkeypatch.undo()
+    assert os.path.isfile(f"{staging}/_COMMITTED")
     assert _probe_keep_found()
-    assert os.path.isdir(f"{path}/delta/docs")
-    assert not os.path.isdir(f"{path}/delta/._old_docs")
-    shutil.rmtree(f"{path}/_delete_staging", ignore_errors=True)
+    assert not os.path.isdir(staging)
+    assert spark.read.parquet(f"{path}/delta/docs").count() == n_app - 2
 
-    # window B — crash between the staged rename-in and the aside
-    # drop: live IS the survivor set; settle drops the aside only
-    shutil.copytree(f"{path}/delta/docs", f"{path}/delta/._old_docs")
+    # same state, settled by stats
+    monkeypatch.setattr(commit.StagedCommit, "promote", _crash)
+    with pytest.raises(_InjectedCrash):
+        minhash_index_delete(spark, path, [v3])
+    monkeypatch.undo()
     st = {r.tbl: r for r in minhash_index_stats(spark, path).collect()}
-    assert st["docs"].delta_rows == n_app - 1
-    assert not os.path.isdir(f"{path}/delta/._old_docs")
+    assert st["docs"].delta_rows == n_app - 3
+    assert not os.path.isdir(staging)
+
+    # uncommitted: discarded by the next entry point, nothing retracted
+    monkeypatch.setattr(commit.StagedCommit, "commit", _crash)
+    with pytest.raises(_InjectedCrash):
+        minhash_index_delete(spark, path, [keep])
+    monkeypatch.undo()
     assert _probe_keep_found()
-
-    # window C — staged survivors vanished (manual staging cleanup):
-    # the aside still holds the only copy; settle rolls it back
-    os.rename(f"{path}/delta/docs", f"{path}/delta/._old_docs")
-    rep2 = minhash_index_delete(spark, path, [victim])  # idempotent rerun
-    assert rep2["delta_rows_deleted"] == 0
-    assert os.path.isdir(f"{path}/delta/docs")
-    assert not os.path.isdir(f"{path}/delta/._old_docs")
-    assert _probe_keep_found()
+    assert not os.path.isdir(staging)
+    assert spark.read.parquet(f"{path}/delta/docs").count() == n_app - 3
 
 
-def test_compact_excludes_delete_debris(spark, docs, tmp_path):
-    """ADVICE r14 medium (second half): a one-sided delta buffer is a
-    crashed delete's debris and its rows are provably all RETRACTED —
-    minhash_index_compact must not fold them back into the compacted
-    copy (that silently undid the takedown); excluding them completes
-    the retraction."""
-    import shutil
-
-    from idhub_spark.operators.dedup_index import minhash_index_compact
+def test_compact_excludes_delete_debris(spark, docs, tmp_path, monkeypatch):
+    """A delete committed but not applied still holds its retracted
+    rows in the live files. minhash_index_compact settles the source
+    first, so the compacted copy excludes them (folding them in would
+    silently undo the takedown)."""
+    from idhub_spark import commit
+    from idhub_spark.operators.dedup_index import (
+        minhash_index_compact,
+        minhash_index_delete,
+    )
 
     path = str(tmp_path / "mh_cmp_debris")
     dst = str(tmp_path / "mh_cmp_debris_out")
@@ -1201,12 +1208,17 @@ def test_compact_excludes_delete_debris(spark, docs, tmp_path):
     minhash_index_write(base, path, n_hashes=8, bands=2, pb_buckets=8,
                         db_buckets=8)
     assert minhash_index_append(appended, path) == "delta"
-    shutil.rmtree(f"{path}/delta/bands")
+    doomed = [r.doc_id for r in appended.select("doc_id").collect()]
+    monkeypatch.setattr(commit.StagedCommit, "promote", _crash)
+    with pytest.raises(_InjectedCrash):
+        minhash_index_delete(spark, path, doomed)
+    monkeypatch.undo()
+    assert os.path.isdir(f"{path}/delta")
 
-    with pytest.warns(UserWarning, match="excluded from the compacted"):
-        minhash_index_compact(spark, path, dst)
+    minhash_index_compact(spark, path, dst)
     assert spark.read.parquet(f"{dst}/docs").count() == base.count()
     assert not os.path.isdir(f"{dst}/delta")
+    assert not os.path.isdir(f"{path}/_delete_staging")
     a_id = int(appended.select(F.min("doc_id")).first()[0])
     ghost = _exact_copies(docs.filter(F.col("doc_id") == a_id), 1, 850_000)
     got = minhash_index_probe(spark, dst, ghost, include_batch_pairs=False)
@@ -1232,117 +1244,6 @@ def test_minhash_index_stopbucket_state_ready(spark, duck):
         df, duck, MINHASH_STOPBUCKET_STATE_ORACLE,
         name="minhash_index_stopbucket_state",
     )
-
-
-class _InjectedCrash(RuntimeError):
-    pass
-
-
-def test_delete_crash_injection_sweep(spark, docs, tmp_path, monkeypatch):
-    """Exhaustive driver-crash coverage of the retraction path: a
-    delete killed at EVERY driver-side filesystem-call boundary (the
-    points where the protocol's ordering logic lives) must leave a
-    state from which RERUNNING the same delete converges to exactly
-    the never-crashed outcome — same logical doc/band row sets, no
-    aside/staging debris, delta dir either gone or whole. The hand-
-    built window tests above pin the named crash states; this sweep
-    proves there are no UNNAMED ones. Injection wraps
-    commit.hadoop_fs (called through the module attribute by every
-    dedup_index fs touchpoint) to raise after K calls; Spark write jobs sit
-    between those calls, so every write/fs boundary is crossed."""
-    import shutil
-
-    from idhub_spark import commit
-    from idhub_spark.operators.dedup_index import (
-        _read_state_table,
-        minhash_index_delete,
-    )
-
-    base = docs.filter(F.col("doc_id") % 2 == 0)
-    appended = docs.filter(F.col("doc_id") % 2 == 1)
-    app_ids = sorted(r.doc_id for r in appended.select("doc_id").collect())
-    live_victim = int(base.select(F.min("doc_id")).first()[0])
-
-    # template index: live history + a buffered (delta) batch
-    tpl = str(tmp_path / "mh_tpl")
-    minhash_index_write(base, tpl, n_hashes=8, bands=2, pb_buckets=4,
-                        db_buckets=4)
-    assert minhash_index_append(appended, tpl) == "delta"
-    real_fs = commit.hadoop_fs
-
-    def state_sets(path):
-        d = {tuple(sorted(r.doc_id for r in
-             _read_state_table(spark, path, t).select("doc_id").collect()))
-             for t in ("docs",)}
-        b = _read_state_table(spark, path, "bands").count()
-        return d, b
-
-    # scenario A: mixed live + partial-delta victims (rename-swap path)
-    # scenario B: live + ALL delta victims (surv==0 drop path)
-    scenarios = {
-        "partial": [live_victim] + app_ids[:2],
-        "all_delta": [live_victim] + app_ids,
-    }
-    for name, victims in scenarios.items():
-        clean = str(tmp_path / f"mh_clean_{name}")
-        shutil.copytree(tpl, clean)
-        minhash_index_delete(spark, clean, victims)
-        want = state_sets(clean)
-
-        # count the clean run's fs-call boundaries on a fresh copy
-        counter = {"n": 0}
-
-        def counting(s, p):
-            counter["n"] += 1
-            return real_fs(s, p)
-
-        probe_run = str(tmp_path / f"mh_count_{name}")
-        shutil.copytree(tpl, probe_run)
-        monkeypatch.setattr(commit, "hadoop_fs", counting)
-        minhash_index_delete(spark, probe_run, victims)
-        monkeypatch.setattr(commit, "hadoop_fs", real_fs)
-        total = counter["n"]
-        assert total > 10, f"{name}: expected a real fs-call sweep"
-
-        # stride the sweep to bound wall (~12 points incl. first/last)
-        ks = sorted(set(range(1, total + 1, max(1, total // 10))) | {1, total})
-        for k in ks:
-            idx = str(tmp_path / f"mh_k_{name}_{k}")
-            shutil.copytree(tpl, idx)
-            calls = {"n": 0}
-
-            def crashing(s, p, _limit=k):
-                calls["n"] += 1
-                if calls["n"] > _limit:
-                    raise _InjectedCrash(f"fs call {calls['n']}")
-                return real_fs(s, p)
-
-            monkeypatch.setattr(commit, "hadoop_fs", crashing)
-            try:
-                minhash_index_delete(spark, idx, victims)
-                crashed = False
-            except (_InjectedCrash, RuntimeError):
-                # RuntimeError: move_tree/the settle raise their own
-                # wrapper around an injected failure — still a crash
-                crashed = True
-            finally:
-                monkeypatch.setattr(commit, "hadoop_fs", real_fs)
-            assert crashed or k == total, f"{name} K={k}"
-
-            minhash_index_delete(spark, idx, victims)  # the rerun
-            assert state_sets(idx) == want, f"{name} K={k}"
-            assert not os.path.isdir(f"{idx}/_delete_staging"), (
-                f"{name} K={k}"
-            )
-            for t in ("docs", "bands"):
-                assert not os.path.isdir(f"{idx}/delta/._old_{t}"), (
-                    f"{name} K={k}"
-                )
-            if os.path.isdir(f"{idx}/delta"):
-                assert os.path.isdir(f"{idx}/delta/docs") == os.path.isdir(
-                    f"{idx}/delta/bands"
-                ), f"{name} K={k}"
-            shutil.rmtree(idx, ignore_errors=True)
 
 
 def test_append_batch_id_exactly_once(spark, docs, tmp_path):
@@ -1390,98 +1291,6 @@ def test_append_batch_id_exactly_once(spark, docs, tmp_path):
                         db_buckets=4)
     assert not os.path.isdir(f"{path}/_ingest_log")
     assert minhash_index_append(appended, path, batch_id="crawl-7") == "delta"
-
-
-def test_delta_rewrite_rollback_warns_and_flags(spark, docs, tmp_path):
-    """ADVICE r15 low: the settle's rollback branch restores rows a
-    crashed delete had already retracted — it must never be silent.
-    The rollback warns and sets the root-level rerun flag; stats
-    re-warns while the flag stands; compact carries it; a rebuild
-    clears it with the old generation. r17 narrows the CLEAR (ADVICE
-    r16): an UNRELATED delete — one that never touched the delta
-    buffer (rows_delta == 0, buffer present) — used to clear the flag
-    while the restored retracted rows stayed live; now only a delete
-    that rewrote the buffer clears it, and once a fold consumes the
-    buffer (restored rows now LIVE, untraceable) any completed delete
-    clears under the documented same-takedown retry contract
-    (docs/operations.md)."""
-    import warnings as _warnings
-
-    from idhub_spark.operators.dedup_index import (
-        _RERUN_MARKER,
-        minhash_index_compact,
-        minhash_index_delete,
-        minhash_index_fold_delta,
-        minhash_index_stats,
-    )
-
-    path = str(tmp_path / "mh_rb")
-    base = docs.filter(F.col("doc_id") % 2 == 0)
-    appended = docs.filter(F.col("doc_id") % 2 == 1)
-    minhash_index_write(base, path, n_hashes=8, bands=2, pb_buckets=8,
-                        db_buckets=8)
-    assert minhash_index_append(appended, path) == "delta"
-    odd_ids = [
-        r.doc_id
-        for r in appended.select("doc_id").orderBy("doc_id").limit(3).collect()
-    ]
-    victim1, victim2 = int(odd_ids[0]), int(odd_ids[1])
-    minhash_index_delete(spark, path, [victim1])
-    assert not os.path.exists(f"{path}/{_RERUN_MARKER}")
-
-    # fabricate the rollback state (window C of the rename-swap
-    # protocol): aside present, live AND staged survivors absent —
-    # models a delete of victim2 that crashed mid-swap
-    os.rename(f"{path}/delta/docs", f"{path}/delta/._old_docs")
-    with pytest.warns(UserWarning, match="rolled back"):
-        minhash_index_stats(spark, path)
-    assert os.path.isdir(f"{path}/delta/docs")
-    assert os.path.exists(f"{path}/{_RERUN_MARKER}")
-
-    # every later stats read keeps surfacing the pending takedown
-    with pytest.warns(UserWarning, match="live again"):
-        minhash_index_stats(spark, path)
-
-    # compact carries the flag with the rows it still holds
-    dst = str(tmp_path / "mh_rb_packed")
-    minhash_index_compact(spark, path, dst)
-    assert os.path.exists(f"{dst}/{_RERUN_MARKER}")
-
-    # ADVICE r16: an unrelated delete (live-only ids, buffer present
-    # and untouched) must NOT clear the flag
-    bystander = int(base.select(F.min("doc_id")).first()[0])
-    rep_unrel = minhash_index_delete(spark, path, [bystander])
-    assert rep_unrel["delta_rows_deleted"] == 0
-    assert os.path.exists(f"{path}/{_RERUN_MARKER}")
-    with pytest.warns(UserWarning, match="live again"):
-        minhash_index_stats(spark, path)
-
-    # the same-takedown rerun rewrites the buffer and clears the flag
-    rep_rerun = minhash_index_delete(spark, path, [victim2])
-    assert rep_rerun["delta_rows_deleted"] > 0
-    assert not os.path.exists(f"{path}/{_RERUN_MARKER}")
-    with _warnings.catch_warnings(record=True) as caught:
-        _warnings.simplefilter("always")
-        minhash_index_stats(spark, path)
-    assert not [w for w in caught if "live again" in str(w.message)]
-
-    # once a FOLD consumes the buffer, the restored rows are live and
-    # untraceable — any completed delete clears, per the documented
-    # same-takedown contract (the pre-r17 semantics, confined here)
-    os.rename(f"{path}/delta/docs", f"{path}/delta/._old_docs")
-    with pytest.warns(UserWarning, match="rolled back"):
-        minhash_index_stats(spark, path)
-    assert os.path.exists(f"{path}/{_RERUN_MARKER}")
-    minhash_index_fold_delta(spark, path)
-    assert not os.path.isdir(f"{path}/delta")
-    assert os.path.exists(f"{path}/{_RERUN_MARKER}")  # fold never clears
-    minhash_index_delete(spark, path, [bystander])
-    assert not os.path.exists(f"{path}/{_RERUN_MARKER}")
-
-    # rebuild clears it with the rest of the old generation
-    minhash_index_write(base, dst, n_hashes=8, bands=2, pb_buckets=8,
-                        db_buckets=8)
-    assert not os.path.exists(f"{dst}/{_RERUN_MARKER}")
 
 
 def _log_entry(path, key):
@@ -1700,11 +1509,11 @@ def test_ingest_log_horizon_survives_mtime_reset(spark, docs, tmp_path):
 def test_minhash_index_fsck(spark, docs, tmp_path, monkeypatch):
     """minhash_index_fsck: READ-ONLY classification of every pending
     state — it must report exactly what the settle functions would do
-    WITHOUT doing any of it (replica-safe diagnosis), surface the
-    rollback hazard before a settle triggers it, and stay quiet on a
-    healthy index."""
+    WITHOUT doing any of it (replica-safe diagnosis), and stay quiet on
+    a healthy index."""
+    from idhub_spark import cli as _cli
     from idhub_spark.operators.dedup_index import (
-        _RERUN_MARKER,
+        minhash_index_delete,
         minhash_index_fsck,
         minhash_index_stats,
     )
@@ -1740,34 +1549,31 @@ def test_minhash_index_fsck(spark, docs, tmp_path, monkeypatch):
     os.rmdir(f"{path}/_append_staging/docs")
     os.rmdir(f"{path}/_append_staging")
 
-    # fabricate the rollback window (aside only): fsck names the
-    # hazard WITHOUT settling — aside intact, no rerun flag created
-    os.rename(f"{path}/delta/docs", f"{path}/delta/._old_docs")
+    # a delete committed but not applied: fsck reports it with the
+    # dirs it empties and MUTATES NOTHING; stats (best-effort) settles it
+    from idhub_spark import commit
+
+    victims = [r.doc_id for r in appended.select("doc_id").collect()]
+    monkeypatch.setattr(commit.StagedCommit, "promote", _crash)
+    with pytest.raises(_InjectedCrash):
+        minhash_index_delete(spark, path, victims)
+    monkeypatch.undo()
     rep = minhash_index_fsck(spark, path)
     assert rep["healthy"] is False
-    assert "ROLLBACK" in rep["pending_delta_rewrite"]["docs"]
-    assert os.path.isdir(f"{path}/delta/._old_docs")  # still pending
-    assert not os.path.exists(f"{path}/{_RERUN_MARKER}")  # not settled
-
-    # after a real settle (stats, best-effort) the flag exists and
-    # fsck keeps surfacing it
-    with pytest.warns(UserWarning, match="rolled back"):
-        minhash_index_stats(spark, path)
+    pend = rep["pending_delete_staging"]
+    assert pend["state"] == "committed" and pend["settle_action"] == "apply"
+    assert pend["emptied"] == ["delta"]
+    assert any("delete staging pending" in f for f in rep["findings"])
+    assert os.path.isdir(f"{path}/delta")  # read-only proof
+    assert _cli.main(["dedup-index", "fsck", "--index", path]) == 3
+    minhash_index_stats(spark, path)
     rep = minhash_index_fsck(spark, path)
-    assert rep["delete_rerun_needed"] is True
-    assert any("rerun" in f for f in rep["findings"])
-
-    # CLI front: exit 3 on findings (cron-friendly)
-    from idhub_spark import cli as _cli
-
-    rc = _cli.main(["dedup-index", "fsck", "--index", path])
-    assert rc == 3
+    assert rep["healthy"] is True and rep["pending_delete_staging"] is None
+    assert not os.path.isdir(f"{path}/delta")
 
     # concurrent-writer race: a settle promoting the staging between
     # fsck's exists and its follow-up calls must degrade to a
     # 'rerun fsck' finding, never crash the advisory check
-    from idhub_spark import commit
-
     os.makedirs(f"{path}/_append_staging/docs", exist_ok=True)
     real_fs = commit.hadoop_fs
 

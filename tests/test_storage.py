@@ -248,7 +248,7 @@ def test_partition_pruned_upsert_rewrites_only_touched_buckets(spark, tmp_path):
     # staging dir cleaned up
     import os
 
-    assert not os.path.exists(root + "_staging")
+    assert not os.path.exists(f"{root}/_upsert_staging")
 
 
 def test_partition_pruned_upsert_modes(spark, tmp_path):
