@@ -206,9 +206,13 @@ def _cmd_load_batch(args) -> int:
                 delete_keys=res.deleted_keys,
             )
         else:
+            from idhub_spark import commit
+
             tmp = args.out + ".staged"
             res.merge.merged.write.mode("overwrite").parquet(tmp)
             spark.read.parquet(tmp).write.mode("overwrite").parquet(args.out)
+            fs, jtmp = commit.hadoop_fs(spark, tmp)
+            fs.delete(jtmp, True)
     return 0
 
 
@@ -365,6 +369,7 @@ def _cmd_dedup_index(args) -> int:
     near-duplicate pairs. One JSON line per invocation."""
     from idhub_spark.operators.dedup_index import (
         _load_params,
+        check_buckets,
         minhash_index_append,
         minhash_index_delete,
         minhash_index_fold_delta,
@@ -388,6 +393,7 @@ def _cmd_dedup_index(args) -> int:
             f"fsck; ignored for {args.action!r}",
             file=sys.stderr,
         )
+    check_buckets(args.pb_buckets, args.db_buckets)
     spark = get_spark("dedup-index")
     if args.action == "stats":
         # params first: a non-index path gets the clear 'no _params'
@@ -824,10 +830,11 @@ def main(argv: list[str] | None = None) -> int:
     di.add_argument("--bands", type=int, default=4)
     di.add_argument(
         "--pb-buckets", type=int, default=64,
-        help="band-table partition count (0 = flat layout; size a few "
+        help="build: band-table partition count, >= 1 (size a few "
         "times the typical batch's band rows — docs/operations.md)",
     )
-    di.add_argument("--db-buckets", type=int, default=64)
+    di.add_argument("--db-buckets", type=int, default=64,
+                    help="build: doc-table partition count, >= 1")
     di.add_argument("--threshold", type=float, default=0.5,
                     help="probe: min est_jaccard to report")
     di.add_argument(

@@ -24,10 +24,16 @@ ingest-log entry of a batch exists iff the batch's rows are fully live.
 The fscks classify with the same state() the settle acts on.
 
 Appends apply by moving files (move_tree). Rewrites of existing
-partitions (deletes, the pruned upsert) apply by moving directories
+partitions (deletes, the pruned upsert) stage through
+StagedCommit.stage_partitions and apply by moving directories
 (StagedCommit.promote): the staged image of each touched partition
 replaces its live twin, so no table is ever written twice or over the
 path its own plan reads.
+
+No partitioned table is ever left without a data file: a write or a
+rewrite that would leave none lands one zero-row file carrying the
+schema in one partition (write_empty_partition), so an emptied table
+reads back as empty instead of failing schema inference.
 
 Engine modules call hadoop_fs through this module's attribute
 (commit.hadoop_fs), so a test can inject filesystem faults in one place.
@@ -159,6 +165,39 @@ def write_small_parquet(spark, dir_path: str, rows: list[tuple], schema: str) ->
         out.close()
     if not fs.rename(jtmp, hadoop_fs(spark, f"{d}/{_SMALL_PARQUET_FILE}")[1]):
         raise RuntimeError(f"write_small_parquet: could not rename into {d}")
+
+
+def write_partitions(df, path: str, part_col: str) -> set[str]:
+    """Overwrite `path` with df partitioned by part_col and return the
+    part_col values that landed, as directory-name strings, from one
+    listStatus: no Spark job, and correct at zero rows, where an
+    Observation on the write never fires."""
+    df.write.mode("overwrite").partitionBy(part_col).parquet(path)
+    return partition_values(df.sparkSession, path, part_col)
+
+
+def partition_values(spark, path: str, part_col: str) -> set[str]:
+    """part_col values of path's <part_col>=<v> directories, as
+    directory-name strings; one listStatus."""
+    fs, jp = hadoop_fs(spark, path)
+    pfx = f"{part_col}="
+    return {
+        n[len(pfx):]
+        for n in (st.getPath().getName() for st in fs.listStatus(jp))
+        if n.startswith(pfx)
+    }
+
+
+def write_empty_partition(df, path: str, part_col: str, value) -> None:
+    """One zero-row parquet file carrying df's schema (part_col aside)
+    under <path>/<part_col>=<value>. range(0) keeps the frame
+    JVM-literal; repartition(1) forces one footer-bearing file."""
+    from pyspark.sql import functions as F
+
+    df.sparkSession.range(0).select(
+        *[F.lit(None).cast(f.dataType).alias(f.name)
+          for f in df.schema.fields if f.name != part_col]
+    ).repartition(1).write.mode("overwrite").parquet(f"{path}/{part_col}={value}")
 
 
 # ---------------------------------------------------------------------------
@@ -298,7 +337,11 @@ class StagedCommit:
     (module docstring). `record` names an optional one-column parquet
     under the staging (the cold clusters of a merge, the emptied
     partitions of a rewrite) that the apply step needs; a committed
-    staging whose record cannot be read is 'unreadable'."""
+    staging whose record cannot be read is 'unreadable'.
+
+    stage_partitions is the only place that finds a rewrite's emptied
+    partitions: it collects them in `emptied`, which the caller writes
+    as the record before commit()."""
 
     def __init__(self, spark, root: str, name: str, *, record: str | None = None):
         self.spark = spark
@@ -308,6 +351,32 @@ class StagedCommit:
         self.label = name.lstrip("_").replace("_", " ")
         self.record = record
         self._vals: list | None = None
+        self.emptied: list[str] = []
+
+    def stage_partitions(self, df, rel: str, part_col: str, touched) -> set[str]:
+        """Stage the rewritten image of the live table <root>/<rel>: the
+        caller-shaped df is written partitioned by part_col under
+        <staging>/<rel>, and every touched value whose partition did not
+        land is added to `emptied` as '<rel>/<part_col>=<v>'. Returns
+        the values that landed, as directory-name strings.
+
+        When nothing landed and the live table has no partition outside
+        `touched`, the promote would leave it with no file at all, so
+        one zero-row file is staged in a touched partition (not counted
+        as landed, not recorded as emptied). The common path adds no
+        job and no file."""
+        staged = f"{self.path}/{rel}".rstrip("/")
+        landed = write_partitions(df, staged, part_col)
+        touched = [str(v) for v in touched]
+        if not landed and touched:
+            live = partition_values(self.spark, f"{self.root}/{rel}".rstrip("/"), part_col)
+            if live <= set(touched):
+                write_empty_partition(df, staged, part_col, touched[0])
+                touched = touched[1:]
+        self.emptied += [
+            f"{rel}/{part_col}={v}".lstrip("/") for v in touched if v not in landed
+        ]
+        return landed
 
     def exists(self, rel: str | None = None) -> bool:
         """Whether the staging (or `rel` inside it) exists."""
@@ -354,7 +423,7 @@ class StagedCommit:
         """Apply step of a staged table rewrite: promote each staged
         table image into its live twin by directory rename, then delete
         every live directory the record (paths relative to root) names
-        as emptied.
+        as emptied (stage_partitions collects them).
 
         `tables` maps a table's path relative to root ('' for root
         itself) to its partition column, None for a flat table. Each

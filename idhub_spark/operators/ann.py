@@ -1605,8 +1605,9 @@ def ivf_index_stats(spark, path: str) -> DataFrame:
     )
     total = per.agg(
         F.lit(-1).alias("cluster"),
-        F.sum("n_rows").alias("n_rows"),
-        F.sum("n_files").alias("n_files"),
+        # an emptied index totals 0, not NULL
+        F.coalesce(F.sum("n_rows"), F.lit(0)).alias("n_rows"),
+        F.coalesce(F.sum("n_files"), F.lit(0)).alias("n_files"),
     )
     return per.unionByName(total).orderBy("cluster")
 
@@ -1930,7 +1931,8 @@ def ivf_index_delete(
     directory, the clusters left with no rows go into the _emptied
     record, then _COMMITTED; the apply step (StagedCommit.promote)
     renames each staged dir over its live twin and drops the emptied
-    ones. A crash before the commit retracts nothing (the staging is
+    ones (a delete of every vector leaves one zero-row file, so the
+    index reads back as empty). A crash before the commit retracts nothing (the staging is
     discarded and a rerun redoes the work); a crash after it is
     finished by the next entry point. Centroids are left alone — an
     emptied cluster simply yields no candidates; reclaim it at the
@@ -1993,30 +1995,16 @@ def _delete_ids(spark, root: str, ids_df: DataFrame, id_col: str) -> dict:
         .filter(F.col("cluster").isin(touched))
         .join(ids_df, id_col, "anti")
     )
-    (
-        survivors.repartition(F.col("cluster"))
-        .write.mode("overwrite")
-        .partitionBy("cluster")
-        .parquet(sc.path)
+    present = sc.stage_partitions(
+        survivors.repartition(F.col("cluster")), "", "cluster", touched
     )
-    # present set from the staged DIRECTORY listing, not an Observation
-    # on the write: observing a write that lands ZERO rows (every row
-    # of every touched cluster deleted) never fires the metric row and
-    # the retrieval throws — the listing is free and empty-safe
-    fs, jstag = commit.hadoop_fs(spark, sc.path)
-    present = {
-        int(st.getPath().getName().split("=", 1)[1])
-        for st in fs.listStatus(jstag)
-        if st.getPath().getName().startswith("cluster=")
-    }
-    dropped = set(touched) - present
-    sc.write_record([f"cluster={c}" for c in sorted(dropped)])
+    sc.write_record(sc.emptied)
     sc.commit()
     sc.settle(lambda: sc.promote({"": "cluster"}))
     return {
         "rows_deleted": rows_deleted,
         "clusters_rewritten": len(present),
-        "clusters_dropped": len(dropped),
+        "clusters_dropped": len(touched) - len(present),
     }
 
 
@@ -2201,12 +2189,7 @@ def ivf_index_adopt_unrouted(
         centroids = fits["centroids"]
 
     cent_ids = {int(r.cluster) for r in centroids.select("cluster").collect()}
-    fs, jroot = commit.hadoop_fs(spark, root)
-    on_disk = {
-        int(st.getPath().getName().split("=", 1)[1])
-        for st in fs.listStatus(jroot)
-        if st.isDirectory() and st.getPath().getName().startswith("cluster=")
-    }
+    on_disk = {int(v) for v in commit.partition_values(spark, root, "cluster")}
     zombies = sorted(on_disk - cent_ids)
     if not zombies:
         return {"adopted_rows": 0, "dropped_clusters": []}
@@ -2289,7 +2272,7 @@ def ivf_index_fsck(
     themselves. Cost: a handful of fs calls + k-bounded centroid
     collect + tiny marker reads when stagings exist; no data scan."""
     root = path.rstrip("/")
-    fs, jroot = commit.hadoop_fs(spark, root)
+    fs, _ = commit.hadoop_fs(spark, root)
     findings: list[str] = []
 
     pending = {}
@@ -2318,12 +2301,7 @@ def ivf_index_fsck(
         if centroids is None and "centroids" in fits_present:
             centroids = ivf_index_load_fits(spark, path)["centroids"]
 
-        on_disk = {
-            int(st.getPath().getName().split("=", 1)[1])
-            for st in fs.listStatus(jroot)
-            if st.isDirectory()
-            and st.getPath().getName().startswith("cluster=")
-        }
+        on_disk = {int(v) for v in commit.partition_values(spark, root, "cluster")}
         if centroids is not None:
             cent_ids = {
                 int(r.cluster) for r in centroids.select("cluster").collect()

@@ -32,10 +32,12 @@ metastore, but this index is SELF-CONTAINED on a path — the round
 driver (and any production reader) opens it from a bare SparkSession
 where catalog bucket info would silently vanish and the table would
 read as plain parquet. Path-based partition pruning needs no catalog
-and shows up verifiably in the executed plan. Set pb_buckets /
-db_buckets to 0 at write time for the flat (unpruned, stream-all)
-layout; probe results are byte-identical either way (pruning only
-removes partitions that cannot join).
+and shows up verifiably in the executed plan. pb_buckets and
+db_buckets are at least 1 (one partition prunes nothing); probe
+results are byte-identical at any bucket count (pruning only removes
+partitions that cannot join). A table is never left without a data
+file: a build of an empty frame, or a delete of every doc, leaves one
+zero-row file in one partition, so the index reads back as empty.
 
 Signatures are int64 minima of per-component xxhash64 — 8 bytes per
 component vs the 32-byte md5 hex the in-memory path uses (an index
@@ -69,7 +71,7 @@ idempotent and rows are never duplicated) and discards an uncommitted
 one. Every delete is a StagedCommit under <path>/_delete_staging whose
 apply renames staged partition dirs over their live twins
 (minhash_index_delete). A full rebuild (minhash_index_write) deletes
-_params FIRST and rewrites it LAST, so a crashed rebuild raises 'no
+_params FIRST and creates it LAST, so a crashed rebuild raises 'no
 _params' on the next probe instead of serving a half-old, half-new
 index. Reference
 anchor: the reference has no dedup at all — this extends
@@ -248,99 +250,88 @@ def _bands_from_state(state: DataFrame, *, n_hashes: int, bands: int) -> DataFra
     ).select("doc_id", "_b.band", "_b.bkey")
 
 
-# r19: the build parameters are ALSO encoded in a marker FILENAME
-# (_params/_META.<n_hashes>.<bands>.<pb>.<db>) so the per-entry-point
-# parameter load is one globStatus RPC (~3 ms) instead of a full Spark
-# job over the 1-row parquet (~150-300 ms measured — every maintenance
-# entry point pays it, 7x per cadence-query run). The parquet row
-# stays authoritative and is still written (it is the rebuild's commit
-# marker and the pre-r19 readers' format); the marker is written
-# beside it AFTER the parquet lands, so a crash between the two just
-# means the next load takes the parquet fallback. Same
-# metadata-in-the-filename discipline as the ingest log's
-# <key>.<accept_ms> markers (storage-independent, no stream reads).
+# The build parameters live in ONE empty marker file,
+# _params/_META.<n_hashes>.<bands>.<pb>.<db>: the index's only
+# parameter record and its build's commit marker (deleted first,
+# created last). Loading it is one globStatus RPC, no Spark job; the
+# metadata-in-the-filename discipline of the ingest log's
+# <key>.<accept_ms> entries (storage-independent, no stream reads).
 _PARAMS_META = "_META"
 
 
-def _write_params_meta(spark, root: str, vals: tuple[int, int, int, int]) -> None:
+def check_buckets(pb_buckets: int, db_buckets: int) -> None:
+    """The index has one layout: both tables hash-partitioned, at least
+    one partition each."""
+    if pb_buckets < 1 or db_buckets < 1:
+        raise ValueError(
+            "minhash index: pb_buckets and db_buckets must be >= 1 (one "
+            f"partition prunes nothing); got pb={pb_buckets}, db={db_buckets}"
+        )
+
+
+def _write_params(spark, root: str, vals: tuple[int, int, int, int]) -> None:
+    """Replace root's _params with the one marker for vals (written last
+    by every build and compact)."""
     name = ".".join(str(int(v)) for v in vals)
-    # use the fs RESOLVED FOR THIS PATH, never a caller's (ADVICE r19:
-    # compact passed its src-resolved fs while creating the marker
-    # under dst — a cross-filesystem compact threw 'Wrong FS' after
-    # dst data and _params were already written)
-    fs, jm = commit.hadoop_fs(spark, f"{root}/_params/{_PARAMS_META}.{name}")
-    fs.create(jm, True).close()
-
-
-def _write_params_parquet(
-    spark, root: str, vals: tuple[int, int, int, int]
-) -> None:
-    """The authoritative 1-row _params parquet, driver-side (no Spark
-    job — commit.write_small_parquet)."""
-    commit.write_small_parquet(
-        spark,
-        f"{root}/_params",
-        [tuple(int(v) for v in vals)],
-        "n_hashes int, bands int, pb_buckets int, db_buckets int",
-    )
+    fs, jp = commit.hadoop_fs(spark, f"{root}/_params")
+    fs.delete(jp, True)
+    fs.create(commit.hadoop_fs(spark, f"{root}/_params/{_PARAMS_META}.{name}")[1],
+              True).close()
 
 
 def _load_params(spark, root: str) -> tuple[int, int, int, int]:
-    fs, jp = commit.hadoop_fs(spark, f"{root}/_params")
-    if not fs.exists(jp):
+    """(n_hashes, bands, pb_buckets, db_buckets) from the one _params
+    marker; raises unless exactly one well-formed marker exists."""
+    fs, jglob = commit.hadoop_fs(
+        spark, f"{commit.glob_escape(root.rstrip('/'))}/_params/{_PARAMS_META}.*"
+    )
+    matches = list(fs.globStatus(jglob) or [])
+    if not matches:
         raise ValueError(
             f"minhash index at {root!r} has no _params — not an index, "
             "or a rebuild crashed mid-write (rerun minhash_index_write)"
         )
-    # fast path: parameters from the marker filename (glob-escaped
-    # root — a caller path)
-    _, jglob = commit.hadoop_fs(
-        spark, f"{commit.glob_escape(root.rstrip('/'))}/_params/{_PARAMS_META}.*"
-    )
-    matches = fs.globStatus(jglob)
-    if matches is not None and len(matches) == 1:
-        parts = matches[0].getPath().getName().split(".")[1:]
-        if len(parts) == 4 and all(p.lstrip("-").isdigit() for p in parts):
-            n_hashes, bands, pb, db = (int(p) for p in parts)
-            return n_hashes, bands, pb, db
-    row = spark.read.parquet(f"{root}/_params").collect()[0]
-    return (int(row.n_hashes), int(row.bands), int(row.pb_buckets),
-            int(row.db_buckets))
+    names = sorted(m.getPath().getName() for m in matches)
+    parts = names[0].split(".")[1:]
+    if len(names) != 1 or len(parts) != 4 or not all(
+        p.lstrip("-").isdigit() for p in parts
+    ):
+        raise ValueError(
+            f"minhash index at {root!r}: _params must hold exactly one "
+            f"{_PARAMS_META}.<n_hashes>.<bands>.<pb>.<db> marker, found "
+            f"{names} (rerun minhash_index_write)"
+        )
+    n_hashes, bands, pb, db = (int(p) for p in parts)
+    check_buckets(pb, db)
+    return n_hashes, bands, pb, db
 
 
 def _tables(
     state: DataFrame, *, n_hashes: int, bands: int, pb_buckets: int, db_buckets: int
 ) -> tuple[DataFrame, DataFrame]:
-    """The index's two tables for one batch's state, with partition
-    columns attached when the layout is bucketed. Both derive from the
-    same (checkpointed) state — one shingle pass per batch, no history
+    """The index's two tables for one batch's state, with their
+    partition columns attached. Both derive from the same
+    (checkpointed) state — one shingle pass per batch, no history
     read (the r11 append re-scanned history's docs table to re-derive
     the batch's bands; deriving from the live state makes append I/O
     strictly ∝ batch)."""
-    docs_df = state
-    bands_df = _bands_from_state(state, n_hashes=n_hashes, bands=bands)
-    if db_buckets:
-        docs_df = docs_df.withColumn(
-            "db", F.pmod(F.xxhash64(F.col("doc_id")), F.lit(db_buckets))
-        )
-    if pb_buckets:
-        bands_df = bands_df.withColumn(
-            "pb", F.pmod(F.col("bkey"), F.lit(pb_buckets))
-        )
+    docs_df = state.withColumn(
+        "db", F.pmod(F.xxhash64(F.col("doc_id")), F.lit(db_buckets))
+    )
+    bands_df = _bands_from_state(
+        state, n_hashes=n_hashes, bands=bands
+    ).withColumn("pb", F.pmod(F.col("bkey"), F.lit(pb_buckets)))
     return docs_df, bands_df
 
 
-def _write_table(df: DataFrame, path: str, part_col: str | None) -> None:
+def _write_table(df: DataFrame, path: str, part_col: str) -> None:
     """One file per touched partition (pre-write repartition by the
     partition column — the IVF index writer's file-count discipline),
-    Hive layout for PartitionFilters pruning; flat write when the
-    layout is unbucketed."""
-    if part_col:
-        df.repartition(F.col(part_col)).write.mode("overwrite").partitionBy(
-            part_col
-        ).parquet(path)
-    else:
-        df.write.mode("overwrite").parquet(path)
+    Hive layout for PartitionFilters pruning. A write that lands no
+    partition (an empty build) leaves one zero-row file under
+    <part_col>=0, so the table reads back as empty."""
+    if not commit.write_partitions(df.repartition(F.col(part_col)), path, part_col):
+        commit.write_empty_partition(df, path, part_col, 0)
 
 
 def _par_jobs(*thunks) -> None:
@@ -388,15 +379,10 @@ def _delete_commit(spark, root: str) -> commit.StagedCommit:
     return commit.StagedCommit(spark, root, _DELETE_STAGING, record="_emptied")
 
 
-def _delete_tables(pb_buckets: int, db_buckets: int) -> dict:
-    """The tables a delete stages, with their partition columns (the
-    delta tables are flat)."""
-    return {
-        "bands": "pb" if pb_buckets else None,
-        "docs": "db" if db_buckets else None,
-        f"{_DELTA}/bands": None,
-        f"{_DELTA}/docs": None,
-    }
+# the tables a delete stages, with their partition columns (the delta
+# tables are flat)
+_DELETE_TABLES = {"bands": "pb", "docs": "db", f"{_DELTA}/bands": None,
+                  f"{_DELTA}/docs": None}
 
 
 def _recover(spark, root: str, *, best_effort: bool = False) -> None:
@@ -406,10 +392,7 @@ def _recover(spark, root: str, *, best_effort: bool = False) -> None:
     any other staging. best_effort: read-only entry points warn and
     read live files only."""
     dele = _delete_commit(spark, root)
-    dele.settle(
-        lambda: dele.promote(_delete_tables(*_load_params(spark, root)[2:])),
-        best_effort=best_effort,
-    )
+    dele.settle(lambda: dele.promote(_DELETE_TABLES), best_effort=best_effort)
     _append_commit(spark, root).settle(
         lambda: _promote_staging(spark, root), best_effort=best_effort
     )
@@ -431,16 +414,16 @@ def _read_state_table(
     the live prune: a row whose pb/db is outside the batch's set
     cannot join. Every reader goes through here so bands∪delta is
     byte-equivalent to the folded layout by construction."""
-    df = spark.read.parquet(f"{root}/{table}")
-    if prune_col and prune_vals is not None and prune_col in df.columns:
-        df = df.filter(F.col(prune_col).isin(prune_vals))
+
+    def read(p):
+        df = spark.read.parquet(p)
+        return df if prune_col is None else df.filter(F.col(prune_col).isin(prune_vals))
+
+    df = read(f"{root}/{table}")
     delta = f"{root}/{_DELTA}/{table}"
     fs, jd = commit.hadoop_fs(spark, delta)
     if fs.exists(jd):
-        d = spark.read.parquet(delta)
-        if prune_col and prune_vals is not None and prune_col in d.columns:
-            d = d.filter(F.col(prune_col).isin(prune_vals))
-        df = df.unionByName(d)
+        df = df.unionByName(read(delta))
     return df
 
 
@@ -463,8 +446,9 @@ def minhash_index_write(
     with different parameters would silently find NOTHING; append and
     probe read the stored parameters instead of trusting the caller.
     _params doubles as the build's COMMIT marker (deleted first,
-    rewritten last), so a crashed rebuild raises on the next use
-    instead of serving a half-written index. doc_ids are assumed
+    created last), so a crashed rebuild raises on the next use
+    instead of serving a half-written index. pb_buckets and db_buckets
+    below 1 raise ValueError. doc_ids are assumed
     unique across the index's lifetime (the ingest key discipline
     every upsert in this engine already follows).
 
@@ -476,20 +460,20 @@ def minhash_index_write(
     and the lossless-pruning invariant. The old staging's batch was
     part of the old index generation; the rebuild's input corpus is
     the new truth."""
+    check_buckets(pb_buckets, db_buckets)
     root = path.rstrip("/")
     spark = docs.sparkSession
-    fs, jparams = commit.hadoop_fs(spark, f"{root}/_params")
-    # the delta buffer belongs to the OLD generation too: its rows
-    # carry the old parameters' signatures, and docs/bands overwrite
-    # writes would never touch the sibling delta dir — clear it first;
-    # the ingest log likewise (its batch ids name batches of the old
-    # corpus — a post-rebuild retry of one is a NEW ingest decision)
-    for stale in (_STAGING, _DELETE_STAGING, _DELTA, commit.INGEST_LOG):
+    fs, _ = commit.hadoop_fs(spark, root)
+    # _params (the commit marker) goes first; the delta buffer belongs
+    # to the OLD generation too: its rows carry the old parameters'
+    # signatures, and docs/bands overwrite writes would never touch the
+    # sibling delta dir; the ingest log likewise (its batch ids name
+    # batches of the old corpus — a post-rebuild retry of one is a NEW
+    # ingest decision)
+    for stale in ("_params", _STAGING, _DELETE_STAGING, _DELTA, commit.INGEST_LOG):
         _, jst = commit.hadoop_fs(spark, f"{root}/{stale}")
         if fs.exists(jst):
             fs.delete(jst, True)
-    if fs.exists(jparams):
-        fs.delete(jparams, True)
     # LAZY persist instead of an eager checkpoint job (r20): the two
     # overlapped table writes below are the state's first actions — the
     # first write job computes each partition into the cache, the
@@ -507,24 +491,11 @@ def minhash_index_write(
         db_buckets=db_buckets,
     )
     _par_jobs(
-        lambda: _write_table(
-            docs_df, f"{root}/docs", "db" if db_buckets else None
-        ),
-        lambda: _write_table(
-            bands_df, f"{root}/bands", "pb" if pb_buckets else None
-        ),
+        lambda: _write_table(docs_df, f"{root}/docs", "db"),
+        lambda: _write_table(bands_df, f"{root}/bands", "pb"),
     )
     state.unpersist()
-    # driver-side parquet bytes — no Spark job (r20; format and the
-    # delete-first/rewrite-last commit protocol unchanged)
-    _write_params_parquet(
-        spark, root, (n_hashes, bands, pb_buckets, db_buckets)
-    )
-    # after the parquet (the commit marker) — a crash between the two
-    # leaves a valid index whose loads take the parquet fallback
-    _write_params_meta(
-        spark, root, (n_hashes, bands, pb_buckets, db_buckets)
-    )
+    _write_params(spark, root, (n_hashes, bands, pb_buckets, db_buckets))
 
 
 def minhash_index_append(
@@ -557,9 +528,8 @@ def minhash_index_append(
     staged-marker crash protocol (the staging carries a delta/
     subtree instead of partition trees). direct_min_docs defaults to
     32·(pb_buckets+db_buckets) — the point where the direct path
-    writes ≥~32 rows per file it creates; flat (pb=db=0) layouts
-    default to direct (their append is already O(write partitions)
-    files). mode='delta'/'direct' force a route. Probes/deletes read
+    writes ≥~32 rows per file it creates. mode='delta'/'direct' force
+    a route. Probes/deletes read
     bands ∪ delta, so placement never changes results;
     minhash_index_compact folds the delta back into the layout.
 
@@ -631,12 +601,8 @@ def minhash_index_append(
         )
     else:
         _par_jobs(
-            lambda: _write_table(
-                docs_df, f"{staging}/docs", "db" if db_buckets else None
-            ),
-            lambda: _write_table(
-                bands_df, f"{staging}/bands", "pb" if pb_buckets else None
-            ),
+            lambda: _write_table(docs_df, f"{staging}/docs", "db"),
+            lambda: _write_table(bands_df, f"{staging}/bands", "pb"),
         )
     state.unpersist()
     sc = _append_commit(spark, root)
@@ -685,7 +651,7 @@ def minhash_index_fold_delta(
 
     Returns {"folded_rows", "files_written"}."""
     root = path.rstrip("/")
-    _, _, pb_buckets, db_buckets = _load_params(spark, root)
+    _load_params(spark, root)  # the clear error on a non-index path
     _recover(spark, root)
     # the fold IS the maintenance cadence, so it also bounds the
     # ingest log (retention rationale at commit.INGEST_LOG_HORIZON_S)
@@ -701,12 +667,8 @@ def minhash_index_fold_delta(
     bands_df = spark.read.parquet(f"{root}/{_DELTA}/bands")
     n_rows = docs_df.count()
     _par_jobs(
-        lambda: _write_table(
-            docs_df, f"{staging}/docs", "db" if db_buckets else None
-        ),
-        lambda: _write_table(
-            bands_df, f"{staging}/bands", "pb" if pb_buckets else None
-        ),
+        lambda: _write_table(docs_df, f"{staging}/docs", "db"),
+        lambda: _write_table(bands_df, f"{staging}/bands", "pb"),
     )
     docs_df.unpersist()
 
@@ -758,19 +720,15 @@ def minhash_index_probe(
     are bounded literal lists of PARTITION ids (≤ pb_buckets /
     ≤ db_buckets values), so file-level PartitionFilters do the work;
     a batch touching t of P band partitions reads t/P of history's
-    band files at ANY history size. On a flat (unbucketed) index the
-    probe degrades to streaming the two narrow tables — the r11
-    behavior, still 100-1000x less I/O than re-shingling raw text.
-    The returned frame is deterministic and byte-identical across
-    layouts.
+    band files at ANY history size. The returned frame is
+    deterministic and byte-identical at any bucket count.
 
-    Bulk-backfill caveat: on a db-bucketed index the candidate set is
-    cached (executor memory/disk, ∝ matched candidates) to
-    derive the doc-partition prune set without recomputing the join —
-    right for the ingest-batch cadence this index serves; a backfill
-    the size of history touches every bucket anyway, so run those
-    against a flat (pb=db=0) index, which skips both the checkpoint
-    and the pointless prune (docs/operations.md sizing note).
+    Bulk-backfill caveat: the candidate set is cached (executor
+    memory/disk, ∝ matched candidates) to derive the doc-partition
+    prune set without recomputing the join — right for the
+    ingest-batch cadence this index serves; a backfill the size of
+    history touches every bucket anyway, so the prune saves nothing
+    there (docs/operations.md sizing note).
 
     max_bucket_rows — the STOP-BUCKET guard, minhash_index_stats'
     hot-bucket finding turned into an action (the stop-shingle idea
@@ -800,10 +758,9 @@ def minhash_index_probe(
     _recover(spark, root, best_effort=True)
     # LAZY persist (r20): the pb prune-set collect below is the state's
     # first action and materializes it into the cache in the SAME job —
-    # the standalone eager-checkpoint job is gone (on a flat index the
-    # first consumer of the returned frame materializes it instead).
-    # Every downstream consumer still computes the batch's shingle
-    # state exactly once, from the cache.
+    # the standalone eager-checkpoint job is gone. Every downstream
+    # consumer still computes the batch's shingle state exactly once,
+    # from the cache.
     b_state = _doc_state(
         batch, n_hashes=n_hashes, id_col=id_col, text_col=text_col
     ).persist()
@@ -820,20 +777,17 @@ def minhash_index_probe(
         )
         return bands_df.join(ok, ["band", "bkey"], "semi")
 
-    pbs = None
-    if pb_buckets:
-        pbs = [
-            r.pb
-            for r in b_bands.select(
-                F.pmod(F.col("bkey"), F.lit(pb_buckets)).alias("pb")
-            )
-            .distinct()
-            .collect()
-        ]
+    pbs = [
+        r.pb
+        for r in b_bands.select(
+            F.pmod(F.col("bkey"), F.lit(pb_buckets)).alias("pb")
+        )
+        .distinct()
+        .collect()
+    ]
     # live Hive layout ∪ delta buffer, same bounded prune on both
     idx_bands = _read_state_table(
-        spark, root, "bands", prune_col="pb" if pb_buckets else None,
-        prune_vals=pbs,
+        spark, root, "bands", prune_col="pb", prune_vals=pbs
     )
     idx_bands = _drop_hot(idx_bands.select("band", "bkey", "doc_id"))
 
@@ -874,28 +828,23 @@ def minhash_index_probe(
         )
         .distinct()
     )
-    dbs = None
-    if db_buckets:
-        # the estimate join needs only matched candidates' doc rows;
-        # their db partitions are a bounded literal set (≤ db_buckets
-        # ids). LAZY persist + collect (r20): the prune-set collect is
-        # the candidate join's first action and caches it in the same
-        # job (was an eager checkpoint job + a collect job), so the
-        # estimate join still never re-runs the candidate join.
-        hist_cand = hist_cand.persist()
-        dbs = [
-            r.db
-            for r in hist_cand.select(
-                F.pmod(F.xxhash64(F.col("dup_id")), F.lit(db_buckets)).alias(
-                    "db"
-                )
-            )
-            .distinct()
-            .collect()
-        ]
+    # the estimate join needs only matched candidates' doc rows; their
+    # db partitions are a bounded literal set (≤ db_buckets ids). LAZY
+    # persist + collect (r20): the prune-set collect is the candidate
+    # join's first action and caches it in the same job (was an eager
+    # checkpoint job + a collect job), so the estimate join still never
+    # re-runs the candidate join.
+    hist_cand = hist_cand.persist()
+    dbs = [
+        r.db
+        for r in hist_cand.select(
+            F.pmod(F.xxhash64(F.col("dup_id")), F.lit(db_buckets)).alias("db")
+        )
+        .distinct()
+        .collect()
+    ]
     idx_docs = _read_state_table(
-        spark, root, "docs", prune_col="db" if db_buckets else None,
-        prune_vals=dbs,
+        spark, root, "docs", prune_col="db", prune_vals=dbs
     ).select("doc_id", "sig", "n_sh")
 
     out = scored(hist_cand, idx_docs, "history")
@@ -940,8 +889,8 @@ def minhash_index_stats(spark, path: str) -> DataFrame:
     (boilerplate stripping, or raising bands/rows so templated docs
     stop colliding) — this report is what tells an operator it's
     needed, and its aggregate shuffles one row per (band, bkey), not
-    per doc. n_partitions counts the Hive layout's directories (0 on
-    a flat index); n_rows/n_files/hot_bucket_rows cover the LOGICAL
+    per doc. n_partitions counts the Hive layout's directories that
+    hold rows; n_rows/n_files/hot_bucket_rows cover the LOGICAL
     table (live ∪ delta buffer — the delta is unpartitioned by
     design, so its rows never count as partitions) from the same
     single scan per table. Settles any pending staging first,
@@ -954,22 +903,15 @@ def minhash_index_stats(spark, path: str) -> DataFrame:
         ("docs", "db", None),
         ("bands", "pb", ["band", "bkey"]),
     ):
-        df = spark.read.parquet(f"{root}/{tbl}")
-        has_part = part_col in df.columns
-
         def sel(frame, is_delta):
             return frame.select(
                 F.input_file_name().alias("_f"),
-                *(
-                    [F.col(part_col).alias("_p")]
-                    if has_part
-                    else [F.lit(0).alias("_p")]
-                ),
+                F.col(part_col).alias("_p"),
                 F.lit(is_delta).alias("_d"),
                 *(bucket_cols or []),
             )
 
-        agg = sel(df, False)
+        agg = sel(spark.read.parquet(f"{root}/{tbl}"), False)
         delta = f"{root}/{_DELTA}/{tbl}"
         fs, jd = commit.hadoop_fs(spark, delta)
         if fs.exists(jd):
@@ -977,13 +919,11 @@ def minhash_index_stats(spark, path: str) -> DataFrame:
         base = agg.agg(
             F.count(F.lit(1)).alias("n_rows"),
             F.countDistinct("_f").alias("n_files"),
-            (
-                # countDistinct skips nulls: delta rows (whose _p is a
-                # data column, not a directory) never count
-                F.countDistinct(F.when(~F.col("_d"), F.col("_p")))
-                if has_part
-                else F.lit(0).cast("bigint")
-            ).alias("n_partitions"),
+            # countDistinct skips nulls: delta rows (whose _p is a data
+            # column, not a directory) never count
+            F.countDistinct(F.when(~F.col("_d"), F.col("_p"))).alias(
+                "n_partitions"
+            ),
             F.count(F.when(F.col("_d"), F.lit(1))).alias("delta_rows"),
             F.countDistinct(F.when(F.col("_d"), F.col("_f"))).alias(
                 "delta_files"
@@ -1019,9 +959,7 @@ def minhash_index_delete(
     Pruning needs no index scan to FIND the work: a doc's db partition
     is pmod(xxhash64(doc_id), D) — computable from the ids alone — and
     its band partitions derive from its stored sig (a projection over
-    the db-pruned doomed rows). On a FLAT (pb/db=0) index there is
-    nothing to prune and both tables rewrite wholesale — correct, I/O ∝
-    table; use the bucketed layout where deletes are routine.
+    the db-pruned doomed rows).
 
     The delta buffer is a third retraction surface: a doomed doc
     accepted since the last fold lives in <root>/delta, not the Hive
@@ -1035,15 +973,17 @@ def minhash_index_delete(
     the pre-delete state — is staged concurrently, then the _emptied
     record (the partitions, or the buffer, left with no rows), then
     _COMMITTED. The apply step (StagedCommit.promote) renames each
-    staged dir over its live twin and drops the emptied ones. A crash
+    staged dir over its live twin and drops the emptied ones; a delete
+    of every doc leaves one zero-row file per table
+    (StagedCommit.stage_partitions), so the index reads back as empty.
+    A crash
     before the commit retracts nothing: the next entry point discards
     the staging and the caller retries the takedown. A crash after it
     is finished by the next entry point's settle.
 
     Returns {"rows_deleted", "docs_partitions_rewritten",
-    "bands_partitions_rewritten", "delta_rows_deleted"} (0-partition
-    values on flat layouts mean 'whole table'; rows_deleted counts
-    live + delta)."""
+    "bands_partitions_rewritten", "delta_rows_deleted"} (rows_deleted
+    counts live + delta)."""
     from idhub_spark.session import literal_frame
 
     root = path.rstrip("/")
@@ -1058,8 +998,8 @@ def minhash_index_delete(
         # four anti-join images, each of which would re-run the
         # caller's id lineage (scan + distinct exchange) otherwise.
         # Bounded by the takedown list by construction. LAZY persist:
-        # the db prune collect (or, flat, the doomed-stats job) is its
-        # first action and caches it in the same job.
+        # the db prune collect is its first action and caches it in the
+        # same job.
         ids_df = (
             ids.select(F.col(id_col).alias("doc_id"))
             .distinct()
@@ -1091,66 +1031,22 @@ def _delete_ids(
     """minhash_index_delete's body over the materialized id set."""
     sc = _delete_commit(spark, root)
     fs, _ = commit.hadoop_fs(spark, root)
-    emptied: list[str] = []  # root-relative dirs the delete empties
 
-    def _pruned(table, part_col, buckets, parts):
-        df = spark.read.parquet(f"{root}/{table}")
-        if buckets and parts is not None:
-            df = df.filter(F.col(part_col).isin(parts))
-        return df
-
-    def _stage(table, part_col, buckets, parts, survivors):
-        """Stage one live table's surviving image: the touched
-        partitions, or the whole table when flat."""
-        st = f"{sc.path}/{table}"
-        if buckets:
-            (
-                survivors.repartition(F.col(part_col))
-                .write.mode("overwrite")
-                .partitionBy(part_col)
-                .parquet(st)
-            )
-            # present set from the staged DIRECTORY listing: an
-            # Observation on a ZERO-row staged write (every row of
-            # every touched partition deleted) never fires its metric
-            # row and the retrieval throws; the listing is empty-safe
-            present = {
-                s.getPath().getName()
-                for s in fs.listStatus(commit.hadoop_fs(spark, st)[1])
-            }
-            emptied.extend(
-                f"{table}/{part_col}={p}" for p in parts
-                if f"{part_col}={p}" not in present
-            )
-            return
-        survivors.write.mode("overwrite").parquet(st)
-        if not any(
-            not s.getPath().getName().startswith(("_", "."))
-            for s in fs.listStatus(commit.hadoop_fs(spark, st)[1])
-        ):
-            # every row deleted: the staged write landed zero part-files
-            # and the live table must stay readable — stage a
-            # schema-preserving EMPTY parquet instead. range(0) keeps
-            # the frame JVM-literal (no Python partition computes) and
-            # repartition(1) forces one real footer-bearing file, so
-            # later probes read an empty table, not an error.
-            spark.range(0).select(
-                *[
-                    F.lit(None).cast(f.dataType).alias(f.name)
-                    for f in survivors.schema.fields
-                ]
-            ).repartition(1).write.mode("overwrite").parquet(st)
+    def _pruned(table, part_col, parts):
+        return spark.read.parquet(f"{root}/{table}").filter(
+            F.col(part_col).isin(parts)
+        )
 
     def _stage_delta(table):
         """Stage one delta table's survivors as one file. The docs leg
         reads its survivor count off the staged write's Observation
         (it fires even at zero rows for this flat coalesce(1) shape,
-        unlike the partitioned writes in _stage): zero survivors
-        records the whole buffer as emptied — docs and bands empty
-        together, since every buffered doc has its band rows in the
-        same buffer. The metric is read via the non-blocking
-        getOrEmpty with a read-back count as the fallback, so a plan
-        shape that pruned the metrics could never hang the delete."""
+        unlike a partitioned write): zero survivors records the whole
+        buffer as emptied — docs and bands empty together, since every
+        buffered doc has its band rows in the same buffer. The metric
+        is read via the non-blocking getOrEmpty with a read-back count
+        as the fallback, so a plan shape that pruned the metrics could
+        never hang the delete."""
         from pyspark.sql import Observation
 
         surv = spark.read.parquet(f"{root}/{_DELTA}/{table}").join(
@@ -1175,21 +1071,17 @@ def _delete_ids(
             int(obs.get["n"]) if observed else spark.read.parquet(st).count()
         )
         if n_surv == 0:
-            emptied.append(_DELTA)
+            sc.emptied.append(_DELTA)
 
-    dbs = None
-    if db_buckets:
-        dbs = [
-            r.db
-            for r in ids_df.select(
-                F.pmod(F.xxhash64(F.col("doc_id")), F.lit(db_buckets)).alias(
-                    "db"
-                )
-            )
-            .distinct()
-            .collect()
-        ]
-    docs_tbl = _pruned("docs", "db", db_buckets, dbs)
+    dbs = [
+        r.db
+        for r in ids_df.select(
+            F.pmod(F.xxhash64(F.col("doc_id")), F.lit(db_buckets)).alias("db")
+        )
+        .distinct()
+        .collect()
+    ]
+    docs_tbl = _pruned("docs", "db", dbs)
     # live and delta doomed counted separately: the live count drives
     # the pb prune set (delta docs' bands live in the delta, never in
     # the Hive layout — appends write both tables to one place), the
@@ -1204,34 +1096,30 @@ def _delete_ids(
         # emits exactly `bands` band rows (explode of a bands-element
         # array literal over a non-null sig), so the doomed row count
         # is nb / bands EXACTLY — duplicate doc_ids included.
-        if pb_buckets:
-            row = (
-                _bands_from_state(
-                    doomed.select("doc_id", "sig", "n_sh"),
-                    n_hashes=n_hashes,
-                    bands=bands,
-                )
-                .agg(
-                    F.count(F.lit(1)).alias("nb"),
-                    F.collect_set(
-                        F.pmod(F.col("bkey"), F.lit(pb_buckets))
-                    ).alias("pbs"),
-                )
-                .first()
+        row = (
+            _bands_from_state(
+                doomed.select("doc_id", "sig", "n_sh"),
+                n_hashes=n_hashes,
+                bands=bands,
             )
-            res["rows_live"] = int(row.nb) // bands
-            res["pbs"] = sorted(int(p) for p in row.pbs)
-        else:
-            res["rows_live"] = doomed.count()
-            res["pbs"] = None
+            .agg(
+                F.count(F.lit(1)).alias("nb"),
+                F.collect_set(F.pmod(F.col("bkey"), F.lit(pb_buckets))).alias(
+                    "pbs"
+                ),
+            )
+            .first()
+        )
+        res["rows_live"] = int(row.nb) // bands
+        res["pbs"] = sorted(int(p) for p in row.pbs)
 
     def _delta_doomed():
         if not fs.exists(commit.hadoop_fs(spark, f"{root}/{_DELTA}/docs")[1]):
             res["rows_delta"] = 0
             return
-        dd = spark.read.parquet(f"{root}/{_DELTA}/docs")
-        if db_buckets and dbs is not None:
-            dd = dd.filter(F.col("db").isin(dbs))
+        dd = spark.read.parquet(f"{root}/{_DELTA}/docs").filter(
+            F.col("db").isin(dbs)
+        )
         res["rows_delta"] = int(dd.join(ids_df, "doc_id", "semi").count())
 
     # the two doomed scans touch disjoint surfaces (pruned live docs vs
@@ -1244,30 +1132,30 @@ def _delete_ids(
     # concurrently; a layer with no doomed rows is skipped
     jobs = []
     if rows_live:
-        bands_tbl = _pruned("bands", "pb", pb_buckets, pbs)
+        bands_tbl = _pruned("bands", "pb", pbs)
         jobs += [
-            lambda: _stage("bands", "pb", pb_buckets, pbs,
-                           bands_tbl.join(ids_df, "doc_id", "anti")),
-            lambda: _stage("docs", "db", db_buckets, dbs,
-                           docs_tbl.join(ids_df, "doc_id", "anti")),
+            lambda: sc.stage_partitions(
+                bands_tbl.join(ids_df, "doc_id", "anti").repartition(F.col("pb")),
+                "bands", "pb", pbs,
+            ),
+            lambda: sc.stage_partitions(
+                docs_tbl.join(ids_df, "doc_id", "anti").repartition(F.col("db")),
+                "docs", "db", dbs,
+            ),
         ]
     if rows_delta:
         jobs += [lambda: _stage_delta("bands"), lambda: _stage_delta("docs")]
     if jobs:
         _par_jobs(*jobs)
-        if _DELTA in emptied:
+        if _DELTA in sc.emptied:
             fs.delete(commit.hadoop_fs(spark, f"{sc.path}/{_DELTA}")[1], True)
-        sc.write_record(emptied)
+        sc.write_record(sc.emptied)
         sc.commit()
-        sc.settle(lambda: sc.promote(_delete_tables(pb_buckets, db_buckets)))
+        sc.settle(lambda: sc.promote(_DELETE_TABLES))
     return {
         "rows_deleted": int(rows_live + rows_delta),
-        "docs_partitions_rewritten": (
-            len(dbs) if (dbs is not None and rows_live) else 0
-        ),
-        "bands_partitions_rewritten": (
-            len(pbs) if (pbs is not None and rows_live) else 0
-        ),
+        "docs_partitions_rewritten": len(dbs) if rows_live else 0,
+        "bands_partitions_rewritten": len(pbs) if rows_live else 0,
         "delta_rows_deleted": int(rows_delta),
     }
 
@@ -1285,18 +1173,16 @@ def minhash_index_compact(
     one file per touched partition, so a year of batch cadence is
     10^4-10^5 small files per table.
 
-    Engine choice per table (r13): a BUCKETED table goes through
-    storage.compact_partitioned — one scan + one hash-shuffle on its
-    partition column + one partitioned write, ~1 file per partition —
-    because the generic per-leaf compactor's job-per-directory loop is
-    the dominant cost at this layout's 4096+1024 dirs (>5000
-    sequential driver round-trips; measured, r13 audit) and the state
-    tables are 100-1000x smaller than the corpus, so one bounded
-    shuffle is the right trade. A FLAT table (pb/db=0) keeps the
-    zero-shuffle compact_small_files path. Settles any pending staging
-    on the SOURCE first: a committed but unapplied batch lives under an
-    '_'-dir both engines skip, so it would silently be LEFT OUT of the
-    compacted copy, and a committed but unapplied delete would carry
+    Each table goes through storage.compact_partitioned — one scan +
+    one hash-shuffle on its partition column + one partitioned write,
+    ~1 file per partition — because the generic per-leaf compactor's
+    job-per-directory loop is the dominant cost at this layout's
+    4096+1024 dirs (>5000 sequential driver round-trips; measured,
+    r13 audit) and the state tables are 100-1000x
+    smaller than the corpus, so one bounded shuffle is the right
+    trade. Settles any pending staging on the SOURCE first: a
+    committed but unapplied batch lives under an '_'-dir the compactor
+    skips, so it would silently be LEFT OUT of the compacted copy, and a committed but unapplied delete would carry
     its retracted rows into it.
 
     Compaction is also the LSM MERGE (r14): a delta buffer on the
@@ -1306,7 +1192,7 @@ def minhash_index_compact(
     compacted copy has NO delta dir; probes against it read the Hive
     layout alone. Delta files count as source files. Returns summed
     (n_source_files, n_output_files)."""
-    from idhub_spark.storage import compact_partitioned, compact_small_files
+    from idhub_spark.storage import compact_partitioned
 
     src = src_path.rstrip("/")
     dst = dst_path.rstrip("/")
@@ -1314,61 +1200,20 @@ def minhash_index_compact(
     n_hashes, bands, pb_buckets, db_buckets = _load_params(spark, src)
     fs, _ = commit.hadoop_fs(spark, src)
     n_src = n_out = 0
-    for table, part_col, buckets in (
-        ("docs", "db", db_buckets),
-        ("bands", "pb", pb_buckets),
-    ):
+    for table, part_col in (("docs", "db"), ("bands", "pb")):
         delta_tbl = f"{src}/{_DELTA}/{table}"
         has_delta = fs.exists(commit.hadoop_fs(spark, delta_tbl)[1])
-        if buckets:
-            s, o = compact_partitioned(
-                spark,
-                f"{src}/{table}",
-                f"{dst}/{table}",
-                part_col,
-                target_bytes=target_bytes,
-                extra_paths=[delta_tbl] if has_delta else None,
-            )
-        elif has_delta:
-            # flat + delta (forced-delta appends on an unbucketed
-            # layout): one union write — both inputs are plain parquet
-            # dirs with identical columns, no partition routing needed
-            import math
-
-            def _data_files(p):
-                return [
-                    st
-                    for st in fs.listStatus(commit.hadoop_fs(spark, p)[1])
-                    if st.isFile()
-                    and not st.getPath().getName().startswith(("_", "."))
-                ]
-
-            sizes = _data_files(f"{src}/{table}") + _data_files(delta_tbl)
-            n_files = max(
-                1, math.ceil(sum(st.getLen() for st in sizes) / target_bytes)
-            )
-            (
-                spark.read.parquet(f"{src}/{table}")
-                .unionByName(spark.read.parquet(delta_tbl))
-                .repartition(n_files)
-                .write.mode("overwrite")
-                .parquet(f"{dst}/{table}")
-            )
-            s, o = len(sizes), len(_data_files(f"{dst}/{table}"))
-        else:
-            s, o = compact_small_files(
-                spark, f"{src}/{table}", f"{dst}/{table}", target_bytes=target_bytes
-            )
+        s, o = compact_partitioned(
+            spark,
+            f"{src}/{table}",
+            f"{dst}/{table}",
+            part_col,
+            target_bytes=target_bytes,
+            extra_paths=[delta_tbl] if has_delta else [],
+        )
         n_src += s
         n_out += o
-    # params for the copy (driver-side, no Spark job): parquet first,
-    # marker second — the write-side ordering contract
-    _write_params_parquet(
-        spark, dst, (n_hashes, bands, pb_buckets, db_buckets)
-    )
-    _write_params_meta(
-        spark, dst, (n_hashes, bands, pb_buckets, db_buckets)
-    )
+    _write_params(spark, dst, (n_hashes, bands, pb_buckets, db_buckets))
     # the compacted copy holds the same accepted batches: their
     # in-horizon keys must keep rejecting retries
     commit.carry_ingest_log(spark, src, dst, ingest_log_horizon_s)

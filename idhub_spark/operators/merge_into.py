@@ -305,8 +305,9 @@ def partition_pruned_upsert(
     - the rewrite is one commit.StagedCommit under
       <table_root>/_upsert_staging (the underscore keeps it out of
       every scan and out of the bucket listing): the merged image of
-      each rewritten bucket is staged as its new directory, buckets
-      left with no rows go into the _emptied record, then _COMMITTED;
+      each rewritten bucket is staged as its new directory
+      (StagedCommit.stage_partitions), buckets left with no rows go
+      into the _emptied record, then _COMMITTED;
       the apply step (StagedCommit.promote) renames each staged bucket
       dir over its live twin and drops the emptied ones. Every other
       bucket's files stay untouched (mtime-asserted in
@@ -369,22 +370,13 @@ def partition_pruned_upsert(
             "rewrite), or align the incoming schema."
         )
     # bucket_col is a partition column, so its value set IS the
-    # directory-name set: ONE driver-side listStatus replaces the
-    # listing-bound Spark job the old select(bucket_col).distinct()
-    # ran per upsert (r20, guide §1.2 — same values, zero jobs; an
-    # object store answers this with a single LIST). Listed BEFORE the
-    # overwrite, trivially.
-    fs_root, jroot = commit.hadoop_fs(spark, table_root)
-    _pfx = f"{bucket_col}="
-    # directory names parse to bucket_of's output type, so on_disk
-    # compares equal to bucket_of values (touched, delete buckets)
+    # directory-name set: ONE driver-side listStatus, no Spark job (an
+    # object store answers it with a single LIST). Directory names
+    # parse to bucket_of's output type, so on_disk compares equal to
+    # bucket_of values (touched, delete buckets)
     int_buckets = isinstance(inc.schema[bucket_col].dataType, IntegralType)
     on_disk = set()
-    for _st in fs_root.listStatus(jroot):
-        _nm = _st.getPath().getName()
-        if not (_st.isDirectory() and _nm.startswith(_pfx)):
-            continue
-        _v = _nm[len(_pfx):]
+    for _v in commit.partition_values(spark, table_root, bucket_col):
         if _v == "__HIVE_DEFAULT_PARTITION__":
             # null bucket: no bucket_of value maps here, so it is never
             # scanned, rewritten or counted
@@ -397,8 +389,8 @@ def partition_pruned_upsert(
             # Spark reads bucket=05 as bucket 5, but the overwrite
             # writes bucket=5: the same keys would live in two dirs
             raise ValueError(
-                f"non-canonical bucket directory {_nm!r} under {table_root}: "
-                f"{bucket_col} is an integer bucket id, written as "
+                f"non-canonical bucket directory '{bucket_col}={_v}' under "
+                f"{table_root}: {bucket_col} is an integer bucket id, written as "
                 f"{bucket_col}=<int>; repair or reseed the layout"
             )
     n_total = len(on_disk)
@@ -473,7 +465,6 @@ def partition_pruned_upsert(
     # bounded by batch + touched-bucket rows.
     cls = mr.classified.persist()
     rows_rewritten = 0
-    present: set = set()
     try:
         if widen:
             # evolving batch: every bucket rewrites so the new columns /
@@ -496,34 +487,26 @@ def partition_pruned_upsert(
                 bucket_col, F.coalesce(F.col(bucket_col), bucket_of(mr.merged))
             )
             to_write = merged.filter(F.col(bucket_col).isin(rewrite))
-            # row count + present-bucket set are observed as side effects
-            # of the staged write itself (aggregate metrics over the rows
-            # flowing through), replacing a full read-back count() of the
-            # staged data — one fewer scan of the touched buckets per
-            # upsert; collect_set is bounded by n_buckets values
+            # the row count is observed as a side effect of the staged
+            # write itself, replacing a full read-back count() of the
+            # staged data; a write that lands no bucket never fires the
+            # observation, so it is read only when some bucket landed
             from pyspark.sql import Observation
 
             obs = Observation()
-            # co-partition on the bucket before writing: one task -> one
-            # bucket directory -> one file, instead of every shuffle task
-            # spraying a sliver into every touched bucket (small-files
-            # explosion: tasks x buckets files per batch)
-            (
-                to_write.observe(
-                    obs,
-                    F.count(F.lit(1)).alias("rows"),
-                    F.collect_set(F.col(bucket_col)).alias("bkts"),
-                )
+            landed = sc.stage_partitions(
+                to_write.observe(obs, F.count(F.lit(1)).alias("rows"))
+                # co-partition on the bucket before writing: one task ->
+                # one bucket directory -> one file, instead of every
+                # shuffle task spraying a sliver into every touched
+                # bucket (small-files explosion: tasks x buckets files)
                 .repartition(len(rewrite), F.col(bucket_col))
                 # keep the seed's sorted-by-key property so row-group
                 # min/max pruning of keyed lookups survives rewrites
-                .sortWithinPartitions(*natural_key)
-                .write.mode("overwrite")
-                .partitionBy(bucket_col)
-                .parquet(sc.path)
+                .sortWithinPartitions(*natural_key),
+                "", bucket_col, rewrite,
             )
-            rows_rewritten = obs.get["rows"]
-            present = set(obs.get["bkts"])
+            rows_rewritten = obs.get["rows"] if landed else 0
     finally:
         # release the classification cache on every exit path (a
         # long-running ingest loop must not leak a cache per failed
@@ -532,7 +515,7 @@ def partition_pruned_upsert(
         # this point)
         cls.unpersist()
     if rewrite:
-        sc.write_record([f"{bucket_col}={b}" for b in rewrite if b not in present])
+        sc.write_record(sc.emptied)
         sc.commit()
         sc.settle(lambda: sc.promote({"": bucket_col}))
     return PrunedUpsertStats(

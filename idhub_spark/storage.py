@@ -393,12 +393,9 @@ def compact_partitioned(
     total = sum(f.getLen() for f in files) + sum(
         f.getLen() for f in extra_files
     )
-    # partition count from the directory listing — free, no extra job
-    n_parts = sum(
-        1
-        for st in fs.listStatus(jsrc)
-        if st.getPath().getName().startswith(f"{part_col}=")
-    )
+    # partition values from the directory listing — free, no extra job
+    src_parts = commit.partition_values(spark, src_dir, part_col)
+    n_parts = len(src_parts)
     if n_parts == 0:
         raise ValueError(
             f"compact_partitioned: {src_dir!r} has no {part_col}= "
@@ -424,7 +421,9 @@ def compact_partitioned(
                 F.lit(k),
             ),
         )
-    out.write.mode("overwrite").partitionBy(part_col).parquet(dst_dir)
+    if not commit.write_partitions(out, dst_dir, part_col):
+        # a source of zero-row files only: keep the copy readable too
+        commit.write_empty_partition(df, dst_dir, part_col, min(src_parts))
     fs_d, jdst = commit.hadoop_fs(spark, dst_dir)
 
     def walk_d(jp):

@@ -18,12 +18,10 @@ open windows only within the lateness horizon.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from idhub_spark import commit
 from idhub_spark.operators.merge import merge_upsert
 
 
@@ -165,13 +163,17 @@ def incremental_file_merge(
     def _merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         s = batch_df.sparkSession
         batch_df = _dedupe(batch_df)
+        # through the session's Hadoop FS: table_dir may be a URI
+        # (file://, hdfs://, s3a://) that os.path cannot see
+        fs, jtable = commit.hadoop_fs(s, table_dir)
+        table_exists = fs.exists(jtable)
         if layout == "bucketed":
             from idhub_spark.operators.merge_into import (
                 partition_pruned_upsert,
                 seed_bucketed_table,
             )
 
-            if os.path.exists(table_dir):
+            if table_exists:
                 partition_pruned_upsert(
                     s, table_dir, batch_df, natural_key,
                     n_buckets=n_buckets, bucket_of=bucket_of, evolve=evolve,
@@ -182,7 +184,7 @@ def incremental_file_merge(
                     n_buckets=n_buckets, bucket_of=bucket_of,
                 )
             return
-        if os.path.exists(table_dir):
+        if table_exists:
             current = s.read.parquet(table_dir)
             merged = merge_upsert(
                 batch_df, current, natural_key, table_name=table_name,
@@ -196,7 +198,7 @@ def incremental_file_merge(
         merged.write.mode("overwrite").parquet(tmp)
         out = s.read.parquet(tmp)
         out.write.mode("overwrite").parquet(table_dir)
-        shutil.rmtree(tmp, ignore_errors=True)  # local FS; object stores: delete prefix
+        fs.delete(commit.hadoop_fs(s, tmp)[1], True)
 
     stream = (
         spark.readStream.schema(schema)

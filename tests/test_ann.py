@@ -1149,6 +1149,43 @@ def test_ivf_index_delete(spark, vectors, tmp_path):
     }
 
 
+def test_ivf_index_delete_everything_leaves_readable_index(
+    spark, vectors, tmp_path
+):
+    """Deleting every vector empties every cluster; the staged rewrite
+    keeps one zero-row file (StagedCommit.stage_partitions), so the
+    index reads back as empty, search returns no rows and stats total
+    0, instead of every read failing schema inference."""
+    import os
+
+    from idhub_spark.operators.ann import (
+        ivf_index_delete,
+        ivf_index_stats,
+        ivf_sq8_index_write,
+        ivf_sq8_search_index,
+        kmeans_fit,
+        sq8_fit,
+    )
+
+    path = str(tmp_path / "idx_all")
+    ivf_sq8_index_write(vectors, kmeans_fit(vectors, k=4, max_iter=2),
+                        sq8_fit(vectors), path)
+    ids = [int(r.vec_id) for r in vectors.select("vec_id").collect()]
+    n_clusters = spark.read.parquet(path).select("cluster").distinct().count()
+    rep = ivf_index_delete(spark, path, ids)
+    assert rep["rows_deleted"] == len(ids)
+    assert rep["clusters_rewritten"] == 0
+    assert rep["clusters_dropped"] == n_clusters
+    assert not os.path.isdir(f"{path}/_delete_staging")
+    assert spark.read.parquet(path).count() == 0
+    got = ivf_sq8_search_index(
+        spark, path, vectors.filter(F.col("vec_id") < 4), k=5, nprobe=4
+    )
+    assert got.count() == 0
+    total = ivf_index_stats(spark, path).collect()[0]
+    assert (total.cluster, total.n_rows) == (-1, 0)
+
+
 def test_ivf_index_split_discards_corrupt_marker_staging(
     spark, vectors, tmp_path
 ):

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import json
+import os
 
 from pyspark.sql import functions as F
 
@@ -89,6 +90,8 @@ def test_cli_validate_and_load_roundtrip(spark, tmp_path, capsys):
     stats = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert stats["stats"] == {"new": 2}
     assert spark.read.parquet(str(table_out)).count() == 2
+    # the staged image is deleted once it is copied into --out
+    assert not os.path.exists(f"{table_out}.staged")
 
 
 def test_cli_rejects_bad_batch_id(tmp_path, capsys):

@@ -169,6 +169,29 @@ def _dedup_delete(shape):
     return build
 
 
+def _dedup_delete_everything(spark, docs, vectors, tpl):
+    """Every doc retracted: each table keeps one zero-row file, so the
+    index stays readable and probes as empty."""
+    from idhub_spark.operators.dedup_index import (
+        minhash_index_delete,
+        minhash_index_probe,
+        minhash_index_write,
+    )
+
+    subset = docs.filter(F.col("doc_id") % 10 == 0)
+    minhash_index_write(subset, tpl, n_hashes=8, bands=2, pb_buckets=4,
+                        db_buckets=4)
+    ids = [r.doc_id for r in subset.select("doc_id").collect()]
+    rows = _dedup_check(spark, 0, 2)
+
+    def check(idx):
+        rows(idx)
+        assert minhash_index_probe(spark, idx, subset,
+                                   include_batch_pairs=False).count() == 0
+
+    return lambda idx: minhash_index_delete(spark, idx, ids), check
+
+
 def _ivf_check(spark, n_rows, gone=(), absent_ids=()):
     def check(idx):
         got = spark.read.parquet(idx)
@@ -208,13 +231,33 @@ def _ivf_delete(spark, docs, vectors, tpl):
     )
 
 
-def _pruned_upsert(spark, docs, vectors, tpl):
-    """An upsert (one update, one insert) whose delete_keys empty
-    bucket 3."""
-    from idhub_spark.operators.merge_into import (
-        partition_pruned_upsert,
-        seed_bucketed_table,
+def _ivf_delete_everything(spark, docs, vectors, tpl):
+    """Every vector retracted: the index reads back empty and a search
+    returns no rows."""
+    from idhub_spark.operators.ann import (
+        ivf_index_delete,
+        ivf_sq8_index_write,
+        ivf_sq8_search_index,
+        kmeans_fit,
+        sq8_fit,
     )
+
+    ivf_sq8_index_write(vectors, kmeans_fit(vectors, k=4, max_iter=2),
+                        sq8_fit(vectors), tpl)
+    ids = [int(r.vec_id) for r in vectors.select("vec_id").collect()]
+    rows = _ivf_check(spark, 0)
+
+    def check(idx):
+        rows(idx)
+        assert ivf_sq8_search_index(
+            spark, idx, vectors.filter(F.col("vec_id") < 4), k=5, nprobe=4
+        ).count() == 0
+
+    return lambda idx: ivf_index_delete(spark, idx, ids), check
+
+
+def _seed_upsert_table(spark, tpl):
+    from idhub_spark.operators.merge_into import seed_bucketed_table
 
     def bucket_of(df):
         return (F.col("k") % 8).cast("int")
@@ -224,6 +267,38 @@ def _pruned_upsert(spark, docs, vectors, tpl):
                               ["k", "name", "val"]),
         tpl, ["k"], n_buckets=8, bucket_of=bucket_of,
     )
+    return bucket_of
+
+
+def _pruned_upsert_delete_only_bucket(spark, docs, vectors, tpl):
+    """An unchanged incoming row plus delete_keys that empty bucket 3,
+    the only bucket the upsert rewrites."""
+    from idhub_spark.operators.merge_into import partition_pruned_upsert
+
+    bucket_of = _seed_upsert_table(spark, tpl)
+    incoming = spark.createDataFrame([(0, "name0", 0.0)], ["k", "name", "val"])
+    deletes = spark.createDataFrame([(3,), (11,)], ["k"])
+    want = {k: float(k) for k in range(16) if k not in (3, 11)}
+
+    def check(idx):
+        got = spark.read.parquet(idx)
+        assert {r.k: r.val for r in got.collect()} == want
+        assert not os.path.isdir(f"{idx}/_bucket=3")
+
+    return (
+        lambda idx: partition_pruned_upsert(
+            spark, idx, incoming, ["k"], n_buckets=8, bucket_of=bucket_of,
+            delete_keys=deletes),
+        check,
+    )
+
+
+def _pruned_upsert(spark, docs, vectors, tpl):
+    """An upsert (one update, one insert) whose delete_keys empty
+    bucket 3."""
+    from idhub_spark.operators.merge_into import partition_pruned_upsert
+
+    bucket_of = _seed_upsert_table(spark, tpl)
     incoming = spark.createDataFrame(
         [(0, "name0", 99.0), (100, "new", 0.0)], ["k", "name", "val"])
     deletes = spark.createDataFrame([(3,), (11,)], ["k"])
@@ -344,6 +419,9 @@ _CASES = {
     "dedup-delete-all-delta": _dedup_delete("all-delta"),
     "ivf-delete": _ivf_delete,
     "pruned-upsert": _pruned_upsert,
+    "dedup-delete-everything": _dedup_delete_everything,
+    "ivf-delete-everything": _ivf_delete_everything,
+    "pruned-upsert-delete-only-bucket": _pruned_upsert_delete_only_bucket,
 }
 
 

@@ -118,21 +118,23 @@ def test_append_only_and_param_discipline(spark, docs, tmp_path):
     pairs = {(r.new_id, r.dup_id, r.est_jaccard) for r in got.collect()}
     assert (odd_id + 900_000, odd_id, 1.0) in pairs
 
-    # _params rides inside the index, invisible to data reads
-    assert spark.read.parquet(f"{path}/_params").collect()[0].n_hashes == 8
+    # _params rides inside the index as one marker, invisible to reads
+    assert [os.path.basename(p) for p in glob.glob(f"{path}/_params/*")] == [
+        "_META.8.2.64.64"
+    ]
     assert "n_hashes" not in spark.read.parquet(f"{path}/docs").columns
 
 
 def test_bucketed_probe_matches_flat_and_prunes(spark, docs, tmp_path):
-    """The partitioned (pb/db) layout is a pure LAYOUT change: probe
-    results must be byte-identical to the flat index (pruning only
-    removes partitions that cannot join), and the executed plans of
-    both history reads must show file-level PartitionFilters — the
-    scan ∝ batch-buckets contract."""
+    """The bucket counts are a pure LAYOUT choice: probe results must be
+    byte-identical to a one-partition (pb = db = 1) index, where no
+    partition can be pruned (pruning only removes partitions that
+    cannot join), and the executed plan must show file-level
+    PartitionFilters — the scan ∝ batch-buckets contract."""
     flat = str(tmp_path / "mh_flat")
     buck = str(tmp_path / "mh_buck")
     minhash_index_write(
-        docs, flat, n_hashes=16, bands=4, pb_buckets=0, db_buckets=0
+        docs, flat, n_hashes=16, bands=4, pb_buckets=1, db_buckets=1
     )
     minhash_index_write(
         docs, buck, n_hashes=16, bands=4, pb_buckets=32, db_buckets=32
@@ -148,47 +150,55 @@ def test_bucketed_probe_matches_flat_and_prunes(spark, docs, tmp_path):
     assert rows_flat == rows_buck and rows_buck
 
     # the docs-side db pruning is visible in the probe's own executed
-    # plan; the bands-side pb pruning runs inside the candidate
-    # checkpoint job (test_probe_reads_only_batch_band_partitions pins
-    # it on a pb-only index where the scan stays in the main plan)
+    # plan (test_probe_reads_only_batch_band_partitions pins the
+    # bands-side pb pruning by its effect)
     plan = got_buck._jdf.queryExecution().executedPlan().toString()
     import re
 
     pf = re.findall(r"PartitionFilters: \[([^\]]+)\]", plan)
     assert any("db" in f for f in pf), plan[:3000]
-    # the flat plan must NOT carry partition filters (nothing to prune)
-    plan_flat = got_flat._jdf.queryExecution().executedPlan().toString()
-    assert not re.findall(r"PartitionFilters: \[[^\]]*(?:pb|db)[^\]]*\]", plan_flat)
 
 
 def test_probe_reads_only_batch_band_partitions(spark, docs, tmp_path):
-    """File-level pruning measured from the scan itself: a one-band-key
-    probe batch must read at most its touched pb partitions of the
-    band table, not all of them (the linear band-scan term the
-    bucketed layout exists to remove)."""
+    """File-level band pruning proven by its effect: a one-doc probe
+    batch may read only its touched pb partitions of the band table.
+    Every OTHER pb partition gets planted band rows that carry the
+    batch's band keys for a fake doc (whose docs row carries the batch
+    doc's signature): read, they would surface as a history pair at
+    est_jaccard 1.0; pruned, they cannot."""
+    from idhub_spark.operators.dedup_index import _bands_from_state, _doc_state
+
     path = str(tmp_path / "mh_pr")
-    # db_buckets=0 keeps the bands scan in the probe's main plan (with
-    # doc pruning on, the candidate stage runs inside a checkpoint job
-    # whose plan isn't attached to the returned frame)
     minhash_index_write(
-        docs, path, n_hashes=16, bands=4, pb_buckets=32, db_buckets=0
+        docs, path, n_hashes=16, bands=4, pb_buckets=32, db_buckets=32
     )
     n_part_total = len(glob.glob(f"{path}/bands/pb=*"))
     assert n_part_total > 8  # corpus populates most partitions
 
     one = _exact_copies(docs.filter(F.col("doc_id") == 7), 1, 500_000)
+    state = _doc_state(one, n_hashes=16, id_col="doc_id", text_col="text")
+    b_bands = _bands_from_state(state, n_hashes=16, bands=4)
+    batch_pbs = {r.bkey % 32 for r in b_bands.collect()}  # pmod(bkey, 32)
+    assert len(batch_pbs) <= 4 < n_part_total
+    fake = F.lit(-1).cast(spark.read.parquet(f"{path}/docs").schema["doc_id"].dataType)
+    others = spark.createDataFrame(
+        [(p,) for p in range(32) if p not in batch_pbs], "pb int"
+    )
+    b_bands.select(fake.alias("doc_id"), "band", "bkey").crossJoin(
+        others
+    ).write.mode("append").partitionBy("pb").parquet(f"{path}/bands")
+    state.select(
+        fake.alias("doc_id"), "sig", "n_sh",
+        F.pmod(F.xxhash64(fake), F.lit(32)).alias("db"),
+    ).write.mode("append").partitionBy("db").parquet(f"{path}/docs")
+    planted = spark.read.parquet(f"{path}/bands").filter(F.col("doc_id") == -1)
+    assert planted.select("pb").distinct().count() == 32 - len(batch_pbs)
+
     got = minhash_index_probe(
         spark, path, one, threshold_est=0.5, include_batch_pairs=False
-    )
-    assert got.count() >= 1  # the planted copy is found
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    import re
-
-    m = re.search(r"pb#\d+ (?:IN|INSET) \(?([0-9, ]+)\)?", plan)
-    assert m, plan[:3000]
-    n_probed = len(m.group(1).split(","))
-    # one doc has at most `bands` distinct band keys -> <= 4 partitions
-    assert n_probed <= 4 < n_part_total
+    ).collect()
+    assert (500_007, 7) in {(r.new_id, r.dup_id) for r in got}
+    assert not [r for r in got if r.dup_id == -1], got
 
 
 def test_append_crash_protocol(spark, docs, tmp_path):
@@ -230,8 +240,8 @@ def test_append_crash_protocol(spark, docs, tmp_path):
     docs_df, bands_df = _tables(
         state, n_hashes=n_hashes, bands=bands, pb_buckets=pb_b, db_buckets=db_b
     )
-    _write_table(docs_df, f"{staging}/docs", "db" if db_b else None)
-    _write_table(bands_df, f"{staging}/bands", "pb" if pb_b else None)
+    _write_table(docs_df, f"{staging}/docs", "db")
+    _write_table(bands_df, f"{staging}/bands", "pb")
     pathlib.Path(staging, _COMMITTED).touch()
 
     empty = b2.limit(0)
@@ -290,21 +300,11 @@ def test_minhash_index_stats(spark, docs, tmp_path):
     assert st["docs"].hot_bucket_rows is None
     assert st["docs"].n_files >= st["docs"].n_partitions
 
-    # flat layout: no partitions, stats still well-formed
-    flat = str(tmp_path / "mh_stats_flat")
-    minhash_index_write(
-        corpus, flat, n_hashes=8, bands=2, pb_buckets=0, db_buckets=0
-    )
-    st2 = {r.tbl: r for r in minhash_index_stats(spark, flat).collect()}
-    assert st2["docs"].n_partitions == 0 and st2["bands"].n_partitions == 0
-    assert st2["bands"].n_rows == 2 * n
-
 
 def test_minhash_index_delete(spark, docs, tmp_path):
     """Retraction: deleted docs vanish from BOTH state tables, their
-    exact copies stop probing as duplicates, untouched partitions'
-    files are never rewritten, and the flat layout deletes correctly
-    too (whole-table rewrite)."""
+    exact copies stop probing as duplicates, and untouched partitions'
+    files are never rewritten."""
     from idhub_spark.operators.dedup_index import minhash_index_delete
 
     path = str(tmp_path / "mh_del")
@@ -351,19 +351,6 @@ def test_minhash_index_delete(spark, docs, tmp_path):
     assert (keep_id + 800_000, keep_id, 1.0, "history") in {
         tuple(r) for r in got.collect()
     }
-
-    # flat layout: same semantics, whole-table rewrite
-    flat = str(tmp_path / "mh_del_flat")
-    minhash_index_write(docs, flat, n_hashes=8, bands=2, pb_buckets=0,
-                        db_buckets=0)
-    rep2 = minhash_index_delete(spark, flat, victims)
-    assert rep2["rows_deleted"] == 3
-    assert rep2["docs_partitions_rewritten"] == 0  # 0 = whole table
-    assert spark.read.parquet(f"{flat}/docs").count() == n0 - 3
-    assert (
-        spark.read.parquet(f"{flat}/bands")
-        .filter(F.col("doc_id").isin(victims)).count() == 0
-    )
 
 
 def test_minhash_index_compact(spark, docs, tmp_path):
@@ -608,29 +595,34 @@ def test_probe_and_delete_settle_committed_staging(spark, docs, tmp_path):
     )
 
 
-def test_flat_delete_all_leaves_readable_empty_index(spark, docs, tmp_path):
-    """ADVICE r12 low: on a FLAT (pb/db=0) layout, deleting every row
-    of a table used to stage a zero-part-file write whose read-back
-    threw 'unable to infer schema'. The live table must come back as
-    a schema-preserving EMPTY parquet: probes return no rows instead
-    of erroring."""
+def test_delete_all_leaves_readable_empty_index(spark, docs, tmp_path):
+    """Deleting every doc of a bucketed index empties every partition
+    it touches; the staged rewrite keeps one zero-row file per table
+    (StagedCommit.stage_partitions), so docs and bands read back as
+    empty, a probe is a clean no-match and stats count 0 rows, instead
+    of every read failing schema inference; so does its compacted
+    copy. A later append refills it."""
     from idhub_spark.operators.dedup_index import (
+        minhash_index_compact,
         minhash_index_delete,
         minhash_index_stats,
     )
 
-    path = str(tmp_path / "mh_flat_all")
+    path = str(tmp_path / "mh_all")
     subset = docs.filter(F.col("doc_id") % 50 == 0)
-    minhash_index_write(subset, path, n_hashes=8, bands=2, pb_buckets=0, db_buckets=0)
+    minhash_index_write(subset, path, n_hashes=8, bands=2, pb_buckets=4,
+                        db_buckets=4)
     n = subset.count()
     assert n > 0
 
     res = minhash_index_delete(spark, path, subset.select("doc_id"))
     assert res["rows_deleted"] == n
+    assert not os.path.isdir(f"{path}/_delete_staging")
     assert spark.read.parquet(f"{path}/docs").count() == 0
     assert spark.read.parquet(f"{path}/bands").count() == 0
+    assert len(glob.glob(f"{path}/docs/db=*")) == 1
+    assert len(glob.glob(f"{path}/bands/pb=*")) == 1
 
-    # a probe against the emptied index is a clean no-match, not an error
     probe_batch = _exact_copies(subset, 50, 600_000)
     got = minhash_index_probe(
         spark, path, probe_batch, include_batch_pairs=False
@@ -638,29 +630,49 @@ def test_flat_delete_all_leaves_readable_empty_index(spark, docs, tmp_path):
     assert got.count() == 0
     st = {r.tbl: r for r in minhash_index_stats(spark, path).collect()}
     assert st["docs"].n_rows == 0 and st["bands"].n_rows == 0
+    # its compacted copy keeps the same rule
+    copy = str(tmp_path / "mh_all_copy")
+    minhash_index_compact(spark, path, copy)
+    assert minhash_index_probe(
+        spark, copy, probe_batch, include_batch_pairs=False
+    ).count() == 0
+
+    assert minhash_index_append(subset, path, mode="direct") == "direct"
+    assert spark.read.parquet(f"{path}/docs").count() == n
 
 
-def test_minhash_index_compact_flat_layout(spark, docs, tmp_path):
-    """A FLAT (pb/db=0) index compacts through the zero-shuffle
-    per-leaf engine (single leaf per table) and stays probe-identical
-    — the engine dispatch in minhash_index_compact keys on _params."""
-    from idhub_spark.operators.dedup_index import minhash_index_compact
+def test_write_empty_frame_is_probeable(spark, docs, tmp_path):
+    """A build of an empty frame lands one zero-row file per table (the
+    same never-leave-a-table-without-a-file rule), so the index probes
+    as empty instead of failing schema inference."""
+    path = str(tmp_path / "mh_empty")
+    minhash_index_write(docs.limit(0), path, n_hashes=8, bands=2,
+                        pb_buckets=4, db_buckets=4)
+    assert spark.read.parquet(f"{path}/docs").count() == 0
+    got = minhash_index_probe(
+        spark, path, _exact_copies(docs, 50, 600_000),
+        include_batch_pairs=False,
+    )
+    assert got.count() == 0
 
-    src = str(tmp_path / "mh_flat_src")
-    dst = str(tmp_path / "mh_flat_dst")
-    parts = [docs.filter(F.col("doc_id") % 2 == i) for i in range(2)]
-    minhash_index_write(parts[0], src, n_hashes=8, bands=2, pb_buckets=0,
-                        db_buckets=0)
-    minhash_index_append(parts[1], src)
 
-    batch = _exact_copies(docs, 9, 600_000)
-    before = sorted(map(tuple, minhash_index_probe(
-        spark, src, batch, include_batch_pairs=False).collect()))
-    n_src, n_out = minhash_index_compact(spark, src, dst)
-    assert n_out <= n_src
-    after = sorted(map(tuple, minhash_index_probe(
-        spark, dst, batch, include_batch_pairs=False).collect()))
-    assert before == after and before
+def test_bucket_counts_below_one_rejected(spark, docs, tmp_path):
+    """The index has one layout, at least one partition per table: a
+    build, the CLI and a stored 0 all raise the same ValueError."""
+    from idhub_spark import cli
+    from idhub_spark.operators.dedup_index import _load_params
+
+    path = str(tmp_path / "mh_zero")
+    for pb, db in ((0, 4), (4, 0)):
+        with pytest.raises(ValueError, match="must be >= 1"):
+            minhash_index_write(docs.limit(5), path, pb_buckets=pb, db_buckets=db)
+    with pytest.raises(ValueError, match="must be >= 1"):
+        cli.main(["dedup-index", "build", "--index", path, "--docs", path,
+                  "--pb-buckets", "0"])
+    os.makedirs(f"{path}/_params")
+    open(f"{path}/_params/_META.8.2.0.0", "w").close()
+    with pytest.raises(ValueError, match="must be >= 1"):
+        _load_params(spark, path)
 
 
 # ---------------------------------------------------------------- #
@@ -1710,44 +1722,27 @@ def test_doc_state_plan_shape_and_ab_values(spark, docs):
     assert set(new) == {1, 2, 3, 4, 5, 7}  # null text excluded
 
 
-def test_load_params_marker_fallback_and_driver_side_parquet(
-    spark, docs, tmp_path
-):
-    """_load_params crash-ordering pins (ADVICE r19): the _META marker
-    is a fast path, the parquet row stays authoritative — a missing
-    marker (crash between parquet and marker) and an ambiguous marker
-    set (two _META files) both fall back to the parquet read with the
-    same values. Also pins the r20 driver-side _params write: the
-    parquet is a readable 1-row file with the exact int32 schema the
-    Spark write produced."""
-    import glob as _glob
-
+def test_load_params_requires_exactly_one_marker(spark, docs, tmp_path):
+    """The _META marker is the build's only parameter record: it loads
+    with one glob and no Spark job, and a missing or ambiguous marker
+    set raises instead of guessing."""
     from idhub_spark.operators.dedup_index import _load_params
 
     path = str(tmp_path / "mh_params")
     minhash_index_write(
         docs.limit(40), path, n_hashes=8, bands=2, pb_buckets=4, db_buckets=4
     )
-    want = (8, 2, 4, 4)
-    assert _load_params(spark, path) == want
+    assert _load_params(spark, path) == (8, 2, 4, 4)
+    (marker,) = glob.glob(f"{path}/_params/_META.*")
+    assert os.path.basename(marker) == "_META.8.2.4.4"
 
-    # the authoritative parquet: 1 row, int32 columns (format pin for
-    # the r20 driver-side pyarrow write — byte-compatible with the old
-    # Spark write)
-    p = spark.read.parquet(f"{path}/_params")
-    assert [f.dataType.simpleString() for f in p.schema.fields] == ["int"] * 4
-    assert p.collect()[0].asDict() == {
-        "n_hashes": 8, "bands": 2, "pb_buckets": 4, "db_buckets": 4,
-    }
-
-    (marker,) = _glob.glob(f"{path}/_params/_META.*")
-    os.remove(marker)
-    assert _load_params(spark, path) == want  # parquet fallback
-
-    # ambiguous marker set (exactly-1-match guard) -> parquet fallback
     open(f"{path}/_params/_META.9.9.9.9", "w").close()
-    open(f"{path}/_params/_META.7.7.7.7", "w").close()
-    assert _load_params(spark, path) == want
+    with pytest.raises(ValueError, match="exactly one"):
+        _load_params(spark, path)
+    os.remove(f"{path}/_params/_META.9.9.9.9")
+    os.remove(marker)
+    with pytest.raises(ValueError, match="no _params"):
+        _load_params(spark, path)
 
 
 def test_par_jobs_propagates_first_exception(spark):

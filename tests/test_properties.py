@@ -516,8 +516,8 @@ def test_cc_one_giant_component_pointer_join(spark):
     skewed. Fixture: 16 chained stars (one bridge record in two
     adjacent stars), diameter ~32, forcing several pointer-doubling
     iterations with a giant component throughout. Correctness pinned
-    here; the AQE-split question is measured standalone in
-    tools/scale_audit.py --r10 (docs/operations.md note: at test
+    here; the AQE-split question was measured standalone
+    (docs/scale_audit_r10.md §4; docs/operations.md note: at test
     bytes the skewed partition is far below
     skewedPartitionThresholdInBytes, so AQE leaves it whole — one
     task absorbs the giant comp's rows; at production bytes the same

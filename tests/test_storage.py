@@ -527,6 +527,52 @@ def test_partition_pruned_upsert_delete_keys(spark, tmp_path):
     assert s3.n_buckets_touched == 0
 
 
+def test_partition_pruned_upsert_delete_keys_empty_rewritten_buckets(
+    spark, tmp_path
+):
+    """delete_keys that empty every bucket the upsert rewrites: the
+    zero-row staged write never fires its row Observation, so the
+    upsert reports rows_rewritten == 0 from the staged listing. With
+    other buckets on disk the emptied bucket's dir is dropped; when
+    the delete empties the whole table, one zero-row file stays, so
+    the table still reads back (as empty)."""
+    import os
+
+    from idhub_spark.operators.merge_into import partition_pruned_upsert
+
+    bucket_of = lambda df: (F.col("k") % 8).cast("int")  # noqa: E731
+    none = spark.createDataFrame([], "k bigint, name string, val double")
+
+    root = str(tmp_path / "reg_del_only")
+    _seed_small_registry(spark, root)
+    stats = partition_pruned_upsert(
+        spark, root, none, ["k"], n_buckets=8, bucket_of=bucket_of,
+        delete_keys=spark.createDataFrame([(3,), (11,)], "k bigint"),
+    )
+    assert (stats.rows_deleted, stats.rows_rewritten) == (2, 0)
+    assert stats.n_buckets_rewritten == 1
+    assert not os.path.isdir(f"{root}/_bucket=3")
+    assert spark.read.parquet(root).count() == 14
+
+    root = str(tmp_path / "reg_del_all")
+    _seed_small_registry(spark, root)
+    stats = partition_pruned_upsert(
+        spark, root, none, ["k"], n_buckets=8, bucket_of=bucket_of,
+        delete_keys=spark.createDataFrame([(k,) for k in range(16)], "k bigint"),
+    )
+    assert (stats.rows_deleted, stats.rows_rewritten) == (16, 0)
+    assert stats.n_buckets_rewritten == 8
+    got = spark.read.parquet(root)
+    assert got.count() == 0
+    assert set(got.columns) == {"k", "name", "val", "_bucket"}
+    # and the emptied table takes new rows again
+    partition_pruned_upsert(
+        spark, root, spark.createDataFrame([(5, "back", 5.0)], ["k", "name", "val"]),
+        ["k"], n_buckets=8, bucket_of=bucket_of,
+    )
+    assert {r.k: r.val for r in spark.read.parquet(root).collect()} == {5: 5.0}
+
+
 def test_apply_merge_view_hygiene(spark, tmp_path):
     """apply_merge must not leak (or reuse) its temp source view: two
     calls in one session get distinct names and both drop afterwards —

@@ -140,37 +140,52 @@ def test_hourly_rollup_batch_query_streaming_parity(spark):
     assert batch == twin
 
 
-def test_incremental_file_merge_exactly_once(spark, tmp_path):
+def _assert_exactly_once(spark, tmp_path, table, layout="snapshot"):
+    """Two fragments, then a rerun with nothing new: every batch's rows
+    are in the table exactly once and the snapshot swap leaves no
+    .tmp- dir."""
     staging = str(tmp_path / "staging")
-    table = str(tmp_path / "table")
     ckpt = str(tmp_path / "ckpt")
     os.makedirs(staging)
+    kw = {"layout": layout}
+    if layout == "bucketed":
+        kw.update(n_buckets=4, bucket_of=lambda df: (F.col("k") % 4).cast("int"))
+
+    def run():
+        incremental_file_merge(
+            spark, staging_dir=staging, table_dir=table, checkpoint_dir=ckpt,
+            schema=SCHEMA, natural_key=["k"], **kw,
+        )
 
     b1 = spark.createDataFrame([(1, "a", 1.0), (2, "b", 2.0)], ["k", "s", "v"])
     b1.coalesce(1).write.mode("append").parquet(staging)
-    incremental_file_merge(
-        spark, staging_dir=staging, table_dir=table, checkpoint_dir=ckpt,
-        schema=SCHEMA, natural_key=["k"],
-    )
+    run()
     assert {r.k: r.v for r in spark.read.parquet(table).collect()} == {1: 1.0, 2: 2.0}
 
     # second fragment: one update + one insert
     b2 = spark.createDataFrame([(2, "b", 9.0), (3, "c", 3.0)], ["k", "s", "v"])
     b2.coalesce(1).write.mode("append").parquet(staging)
-    incremental_file_merge(
-        spark, staging_dir=staging, table_dir=table, checkpoint_dir=ckpt,
-        schema=SCHEMA, natural_key=["k"],
-    )
+    run()
     assert {r.k: r.v for r in spark.read.parquet(table).collect()} == {
         1: 1.0, 2: 9.0, 3: 3.0,
     }
 
     # re-run with nothing new: checkpoint makes it a no-op
-    incremental_file_merge(
-        spark, staging_dir=staging, table_dir=table, checkpoint_dir=ckpt,
-        schema=SCHEMA, natural_key=["k"],
-    )
+    run()
     assert spark.read.parquet(table).count() == 3
+    assert not [p for p in os.listdir(str(tmp_path)) if ".tmp-" in p]
+
+
+def test_incremental_file_merge_exactly_once(spark, tmp_path):
+    _assert_exactly_once(spark, tmp_path, str(tmp_path / "table"))
+
+
+@pytest.mark.parametrize("layout", ["snapshot", "bucketed"])
+def test_incremental_file_merge_uri_table_dir(spark, tmp_path, layout):
+    """A URI table_dir is resolved through the session's Hadoop FS:
+    every trigger merges into the table instead of re-seeding or
+    overwriting it, and the staged snapshot is deleted."""
+    _assert_exactly_once(spark, tmp_path, f"file://{tmp_path}/table", layout)
 
 
 def test_incremental_merge_dedupes_within_trigger(spark, tmp_path):
