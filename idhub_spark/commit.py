@@ -43,8 +43,10 @@ from __future__ import annotations
 
 import contextlib
 import hashlib
+import logging
 import time
-import warnings
+
+log = logging.getLogger("idhub_spark")
 
 COMMITTED = "_COMMITTED"
 _BATCH = "_BATCH_"
@@ -483,7 +485,8 @@ class StagedCommit:
         """Act on state(): committed -> apply(), record the ingest-log
         entries, delete the staging; uncommitted -> delete the staging;
         unreadable -> raise. With best_effort (read-only entry points) a
-        failed settle warns and the caller reads live files only."""
+        failed settle is logged as a warning on the "idhub_spark" logger
+        and the caller reads live files only."""
         try:
             state = self.state()
             if state == ABSENT:
@@ -502,10 +505,12 @@ class StagedCommit:
         except Exception:
             if not best_effort:
                 raise
-            warnings.warn(
-                f"index {self.root!r}: could not settle pending {self.label} "
-                "(concurrent writer or read-only storage); reading live files only",
-                stacklevel=2,
+            log.warning(
+                "index %r: could not settle pending %s (concurrent writer or "
+                "read-only storage); reading live files only",
+                self.root,
+                self.label,
+                exc_info=True,
             )
 
     def report(self, findings: list) -> dict | None:

@@ -230,6 +230,10 @@ def _base32_expr(num: Column, width: int) -> Column:
     return F.concat(*digits)
 
 
+# mint time of a gsid_expr call that passes no ts_ms
+MINT_EPOCH_MS = 1700000000000
+
+
 def gsid_expr(seed: Column, ts_ms: Column | None = None) -> Column:
     """Mint a GSID: 'GSID-' + base32(ms timestamp)[5] + base32(seed-hash)[11].
 
@@ -243,7 +247,7 @@ def gsid_expr(seed: Column, ts_ms: Column | None = None) -> Column:
     unix_millis(current_timestamp()) in production jobs.
     """
     if ts_ms is None:
-        ts_ms = F.lit(1700000000000)
+        ts_ms = F.lit(MINT_EPOCH_MS)
     ts_part = _base32_expr(ts_ms.cast("bigint").bitwiseAND(F.lit((1 << 25) - 1)), 5)
     rand_bits = F.abs(F.xxhash64(seed)).bitwiseAND(F.lit((1 << 55) - 1))
     rand_part = _base32_expr(rand_bits, 11)

@@ -22,22 +22,32 @@ unresolved component. Matching against the existing registry stays a
 single equi-join; components that touch an existing GSID adopt the
 oldest such GSID exactly like the reference's tie-break.
 
-Scale notes (100 TB): everything below is equi-joins + groupBys on
-the normalized identifier key; the registry join partitions on
-lower(local_subject_id) (same hash both sides -> no extra exchange).
-The CC loop converges in O(log d) iterations where d = component
-diameter (identifier-sharing chains are short in practice, 2-3 hops);
-each iteration is one shuffle on the same key. Skewed identifiers
-(one ID shared by millions of rows) are exactly the AQE skew-join
-case — enabled in session.py.
+Scale notes: resolve_identities has two paths with one result. A
+batch of at most _LOCAL_MAX_ROWS candidate rows (a fragment upload)
+resolves on the driver: three Spark jobs collect its ids, their
+registry hits and the registry's copies of its minted GSIDs, and the
+graph work runs in Python. Anything larger runs that first job, then
+takes the Spark path, the bulk path and the oracle the driver path is
+tested against: equi-joins + groupBys on the normalized identifier
+key; the registry join partitions on lower(local_subject_id) (same
+hash both sides -> no extra exchange). Its CC loop converges in
+O(log d) iterations where d = component diameter (identifier-sharing
+chains are short in practice, 2-3 hops); each iteration is one
+shuffle on the same key. Skewed identifiers (one ID shared by
+millions of rows) are exactly the AQE skew-join case — enabled in
+session.py.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+import re
 
-from idhub_spark.functions.expressions import gsid_expr, null_normalize_expr
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, BooleanType, StringType, StructField, StructType
+
+from idhub_spark.functions.expressions import MINT_EPOCH_MS, gsid_expr, null_normalize_expr
+from idhub_spark.session import records_frame
 
 
 def _cc_runtime(df: DataFrame, checkpoint_dir: str | None):
@@ -61,8 +71,8 @@ def _cc_runtime(df: DataFrame, checkpoint_dir: str | None):
     `spark.idhub.cc.checkpointDir` (cc_checkpoint_dir) is consulted,
     so one `--conf` at submit time flips EVERY CC consumer —
     dedup_cluster_canonical, leakage_safe_split, identity_components,
-    resolve_identities — to the reliable mode with no per-call
-    threading.
+    resolve_identities' Spark path — to the reliable mode with no
+    per-call threading.
 
     Returns (ckpt_fn, edge_storage_level).
     """
@@ -80,9 +90,10 @@ def cc_checkpoint_dir(spark) -> str | None:
     """Deployment knob for every CC consumer: set
     `--conf spark.idhub.cc.checkpointDir=hdfs://.../ckpt` (any
     fault-tolerant path) and dedup_cluster_canonical /
-    leakage_safe_split / identity_components / resolve_identities all
-    switch from localCheckpoint to reliable checkpointing
-    (_cc_runtime). Unset -> executor-local, the single-node default."""
+    leakage_safe_split / identity_components / resolve_identities'
+    Spark path all switch from localCheckpoint to reliable
+    checkpointing (_cc_runtime); the driver path checkpoints nothing.
+    Unset -> executor-local, the single-node default."""
     return spark.conf.get("spark.idhub.cc.checkpointDir", None)
 
 
@@ -142,6 +153,17 @@ def match_registry(
     identically; if the registry is dimension-sized Catalyst broadcasts
     it (AQE decides from runtime stats).
     """
+    return _normalized(ids_long).join(_lookup(registry, aliases), "_norm_id", "left")
+
+
+def _normalized(ids_long: DataFrame) -> DataFrame:
+    """ids_long + its join key `_norm_id` (Spark's lower())."""
+    return ids_long.withColumn("_norm_id", F.lower(F.col("local_subject_id")))
+
+
+def _lookup(registry: DataFrame, aliases: DataFrame | None) -> DataFrame:
+    """match_registry's lookup side: (_norm_id, matched_gsid,
+    matched_created_at) over the registry and the aliases."""
     reg = registry.select(
         F.lower(F.col("local_subject_id")).alias("_norm_id"),
         F.col("global_subject_id").alias("matched_gsid"),
@@ -155,9 +177,7 @@ def match_registry(
                 F.col("created_at").alias("matched_created_at"),
             )
         )
-    return ids_long.withColumn("_norm_id", F.lower(F.col("local_subject_id"))).join(
-        reg, "_norm_id", "left"
-    )
+    return reg
 
 
 def dispatch_matches(matched: DataFrame) -> DataFrame:
@@ -463,6 +483,234 @@ def connected_components_pairs(
     return labels.select(F.col("u").alias("record_key"), F.col("comp").alias("component"))
 
 
+# The largest batch resolve_identities resolves on the driver, counted
+# in candidate rows (ids_long rows: one per record and identifier).
+# Larger batches take the Spark path. It is the largest size at which
+# the driver path measured faster in two local[4] sessions; the paths
+# crossed between 50k and 75k rows (docs/operations.md, "Identity
+# resolution: two paths").
+_LOCAL_MAX_ROWS = 50_000
+
+
+def _components(ids_of: dict) -> dict:
+    """Union-find twin of the Spark path's connected components: record
+    key -> the smallest record key of its component, where only an
+    identifier held by two or more records links them."""
+    holders: dict = {}
+    for k, ids in ids_of.items():
+        for i in ids:
+            holders.setdefault(i, []).append(k)
+    parent = {k: k for k in ids_of}
+
+    def find(k):
+        while parent[k] != k:
+            parent[k] = parent[parent[k]]
+            k = parent[k]
+        return k
+
+    for recs in holders.values():
+        for k in recs[1:]:
+            a, b = find(recs[0]), find(k)
+            if a != b:
+                # the smaller root wins, so every root is its set's minimum
+                parent[max(a, b)] = min(a, b)
+    return {k: find(k) for k in ids_of}
+
+
+_PLAIN = re.compile(r"[\w .:@#/+-]*")
+
+
+def _in_list(column: str, values) -> Column:
+    """`column IN (values)` for a set of strings, as one SQL expression:
+    Column.isin ships each value through its own Py4J call (~0.5 ms
+    apiece), one parsed string ships them all at once. A value with any
+    character outside letters, digits and ` _.:@#/+-` is written as a
+    binary literal, so neither the parser's escaping mode nor its
+    ${var} substitution can change it."""
+
+    def lit(v: str) -> str:
+        if _PLAIN.fullmatch(v):
+            return f"'{v}'"
+        return f"CAST(X'{v.encode().hex()}' AS STRING)"
+
+    return F.expr(f"`{column}` IN ({', '.join(lit(v) for v in sorted(values))})")
+
+
+def _mint_local(spark, registry: DataFrame, seed: dict, mint_ts_ms) -> dict:
+    """The Spark path's mint chain over driver-side seeds (component ->
+    seed): first choice, the within-batch duplicate rank ('#<rank>'),
+    the registry retry ('!') and the double-collision flag. Returns
+    component -> (GSID, collision).
+
+    Every GSID comes from gsid_expr over a local relation, a projection
+    the optimizer folds without a Spark job; later evaluations reuse the
+    first one's mint time, so a per-query time (current_timestamp())
+    stays one value per batch. The registry check of both retry rounds
+    is one job."""
+    minted: dict = {}
+    ts = F.lit(MINT_EPOCH_MS) if mint_ts_ms is None else mint_ts_ms
+
+    def mint(seeds) -> None:
+        nonlocal ts
+        todo = sorted(set(seeds) - minted.keys())
+        if todo:
+            rows = (
+                records_frame(spark, [{"_s": x} for x in todo], "_s string")
+                .withColumn("_ts", ts.cast("bigint"))
+                .select("_s", "_ts", gsid_expr(F.col("_s"), ts_ms=F.col("_ts")))
+                .collect()
+            )
+            minted.update((r[0], r[2]) for r in rows)
+            ts = F.lit(rows[0][1])
+
+    retry = {c: "!" + x for c, x in seed.items()}
+    mint([*seed.values(), *retry.values()])
+    # within-batch duplicates keep the first choice for the smallest
+    # component and re-mint the rest with their rank (the Spark path's
+    # row_number over _minted ordered by component)
+    dupes: dict = {}
+    for c in sorted(seed):
+        dupes.setdefault(minted[seed[c]], []).append(c)
+    first = {
+        c: seed[c] if r == 1 else f"{seed[c]}#{r}"
+        for cs in dupes.values()
+        for r, c in enumerate(cs, 1)
+    }
+    mint(first.values())
+    cands = {minted[x] for x in first.values()} | {minted[x] for x in retry.values()}
+    hits = set(
+        registry.select("global_subject_id")
+        .filter(_in_list("global_subject_id", cands))
+        .toArrow()
+        .column(0)
+        .to_pylist()
+    )
+    out = {}
+    for c in seed:
+        g = minted[first[c]]
+        if g in hits:
+            g = minted[retry[c]]
+        out[c] = (g, g in hits)
+    return out
+
+
+def _resolve_local(
+    ids_long: DataFrame,
+    registry: DataFrame,
+    aliases: DataFrame | None,
+    within_batch_cc: bool,
+    mint_ts_ms,
+    batch_salt: str,
+) -> DataFrame | None:
+    """resolve_identities on the driver: the same rows as the Spark
+    path, or None when the batch has more than _LOCAL_MAX_ROWS
+    candidate rows or a null record key.
+
+    One job collects the candidates with their normalized ids
+    (_normalized: Spark's lower()), one collects their registry and
+    alias hits (_lookup filtered to those ids; a scan, whatever the
+    registry's size), both as Arrow. J2 dispatch, the shared-identifier
+    components, component adoption and the mint seeds run in Python;
+    _mint_local mints. The result is a local relation with the Spark
+    path's schema, so every action on it reads the same rows."""
+    spark = ids_long.sparkSession
+    cand = (
+        _normalized(ids_long)
+        .select("record_key", "_norm_id")
+        .limit(_LOCAL_MAX_ROWS + 1)
+        .toArrow()
+    )
+    if cand.num_rows > _LOCAL_MAX_ROWS:
+        return None
+    keys, norm_ids = cand.column(0).to_pylist(), cand.column(1).to_pylist()
+    if None in keys:
+        return None
+    wanted = set(norm_ids) - {None}
+    lookup: dict = {}  # normalized id -> its hits as (no created_at, created_at, gsid)
+    if wanted:
+        hits = (
+            _lookup(registry, aliases)
+            .filter(_in_list("_norm_id", wanted))
+            .filter(F.col("matched_gsid").isNotNull())
+            .toArrow()
+        )
+        for i, g, t in zip(*(hits.column(n).to_pylist() for n in range(3))):
+            # the tuple order is dispatch_matches' oldest-first key:
+            # (created_at NULLS LAST, gsid)
+            lookup.setdefault(i, set()).add((t is None, t, g))
+    ids_of: dict = {}  # record key -> its normalized identifiers
+    hits_of: dict = {}  # record key -> its hits
+    for k, i in zip(keys, norm_ids):
+        ids_of.setdefault(k, set())
+        hits_of.setdefault(k, set())
+        if i is not None:
+            ids_of[k].add(i)
+            hits_of[k] |= lookup.get(i, set())
+
+    oldest = {k: min(h) for k, h in hits_of.items() if h}
+    comp = _components(ids_of) if within_batch_cc else {k: k for k in ids_of}
+    # component -> [its oldest match, the distinct GSIDs its records chose]
+    best: dict = {}
+    if within_batch_cc:
+        for k, o in oldest.items():
+            b = best.setdefault(comp[k], [o, set()])
+            b[0] = min(b[0], o)
+            b[1].add(o[2])
+
+    rows = []
+    for k, hits in hits_of.items():
+        matched = sorted({g for _, _, g in hits})
+        gsid = oldest[k][2] if k in oldest else None
+        n = len(matched)
+        action = "create_new" if n == 0 else "link_existing" if n == 1 else "conflict_resolved"
+        review = n > 1
+        if comp[k] in best:
+            (_, _, comp_gsid), chosen = best[comp[k]]
+            if gsid is None:
+                action = "link_existing"
+            elif gsid != comp_gsid:
+                action = "conflict_resolved"
+            gsid = comp_gsid
+            review = review or len(chosen) > 1
+        rows.append(
+            {
+                "record_key": k,
+                "matched_gsids": matched,
+                "action": action,
+                "global_subject_id": gsid,
+                "requires_review": review,
+                "component": comp[k],
+            }
+        )
+
+    unresolved = {r["component"] for r in rows if r["global_subject_id"] is None}
+    if unresolved:
+        members: dict = {}
+        for k, c in comp.items():
+            if c in unresolved:
+                members.setdefault(c, set()).update(ids_of[k])
+        salt = [] if batch_salt is None else [batch_salt]
+        seed = {c: "\x1f".join([*salt, "|".join(sorted(ids))]) for c, ids in members.items()}
+        mints = _mint_local(spark, registry, seed, mint_ts_ms)
+        for r in rows:
+            if r["global_subject_id"] is None:
+                r["global_subject_id"], collision = mints[r["component"]]
+                r["requires_review"] = r["requires_review"] or collision
+
+    key = ids_long.schema["record_key"]
+    schema = StructType(
+        [
+            StructField("record_key", key.dataType, key.nullable),
+            StructField("matched_gsids", ArrayType(StringType(), False), False),
+            StructField("action", StringType(), False),
+            StructField("global_subject_id", StringType(), True),
+            StructField("requires_review", BooleanType(), False),
+            StructField("component", key.dataType, key.nullable),
+        ]
+    )
+    return records_frame(spark, rows, schema)
+
+
 def resolve_identities(
     ids_long: DataFrame,
     registry: DataFrame,
@@ -482,13 +730,18 @@ def resolve_identities(
       (record_key, action, global_subject_id, matched_gsids,
        requires_review, component)
 
-    The returned frame is MATERIALIZED: the call runs its jobs eagerly
-    and returns a lineage-truncated frame (checkpointed through
-    _cc_runtime, like the CC loop: localCheckpoint by default, reliable
-    checkpoint under spark.idhub.cc.checkpointDir). Every action on it
-    reads the same rows without re-running the resolution, so a
-    pipeline's report, conflict check and sinks agree on every minted
-    GSID, and their plans stay small.
+    Two paths, the same rows and schema (tests/test_properties.py
+    compares them). A batch of at most _LOCAL_MAX_ROWS candidate rows
+    resolves on the driver (_resolve_local): at most three Spark jobs,
+    and the result is a local relation. A larger batch, or one with a
+    null record key, takes the Spark path (_resolve_spark), which runs
+    its jobs eagerly and returns a lineage-truncated frame
+    (checkpointed through _cc_runtime, like the CC loop:
+    localCheckpoint by default, reliable checkpoint under
+    spark.idhub.cc.checkpointDir, which governs this path only). Either way the returned frame is MATERIALIZED: every
+    action on it reads the same rows without re-running the
+    resolution, so a pipeline's report, conflict check and sinks agree
+    on every minted GSID, and their plans stay small.
 
     create_new components mint ONE deterministic GSID per component,
     so two records sharing an unseen identifier inside the batch agree
@@ -507,11 +760,33 @@ def resolve_identities(
          the registry side so only actual hits are deduplicated) and
          colliding components re-mint with a retry salt; a second
          check flags the ~2^-55-probability double collision as
-         requires_review instead of looping forever on the cluster.
+         requires_review instead of looping forever on the cluster
+         (the driver path checks both rounds' candidates in one job).
     Pass batch_salt=<batch id> at the pipeline layer; pass mint_ts_ms
     (e.g. unix_millis(current_timestamp())) in production jobs so the
     GSID timestamp prefix is the true mint time.
     """
+    local = _resolve_local(
+        ids_long, registry, aliases, within_batch_cc, mint_ts_ms, batch_salt
+    )
+    if local is not None:
+        return local
+    return _resolve_spark(
+        ids_long, registry, aliases, within_batch_cc, mint_ts_ms, batch_salt, checkpoint_dir
+    )
+
+
+def _resolve_spark(
+    ids_long: DataFrame,
+    registry: DataFrame,
+    aliases: DataFrame | None,
+    within_batch_cc: bool,
+    mint_ts_ms,
+    batch_salt: str,
+    checkpoint_dir: str | None,
+) -> DataFrame:
+    """resolve_identities as Spark jobs, for a batch of any size: the
+    bulk path, and the oracle the driver path is tested against."""
     ckpt, _ = _cc_runtime(ids_long, checkpoint_dir)
     # materialized once: read by dispatch, the CC edges and the mint seeds
     matched = ckpt(match_registry(ids_long, registry, aliases))

@@ -11,13 +11,15 @@ ThreadPool HTTP -> pandas pipeline:
   staging write + validation report.
 
 Where the resolution is materialized: resolve_identities runs its
-jobs inside this call and returns a checkpointed, lineage-truncated
-frame (its registry match, its component-adopted dispatch and its
-result are each materialized once; operators/identity.py). The
-conflict count, the report's stats and the staged sinks (`mapped`,
-`local_id_records`) all read that frame: what each of them executes
-is the fragment scan, the unpivot and joins onto the resolved rows,
-never the resolution itself.
+jobs inside this call and returns a materialized frame
+(operators/identity.py). A fragment-sized batch resolves on the
+driver in at most three Spark jobs and comes back as a local
+relation; a batch over the driver path's cap runs one probe job, then
+takes the Spark path, whose registry match, component-adopted
+dispatch and result are each checkpointed once. The conflict count, the report's stats and the
+staged sinks (`mapped`, `local_id_records`) all read that frame: what
+each of them executes is the fragment scan, the unpivot and joins
+onto the resolved rows, never the resolution itself.
 """
 
 from __future__ import annotations

@@ -10,10 +10,14 @@ Pandas-UDF code paths.
 
 from __future__ import annotations
 
+import logging
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+log = logging.getLogger("idhub_spark")
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
@@ -106,6 +110,48 @@ def load_tables(spark: SparkSession, sf_dir: str, *names: str):
         df.createOrReplaceTempView(name)
         out[name] = df
     return out
+
+
+def records_frame(
+    spark: SparkSession, records: list[dict], schema: StructType | str
+) -> DataFrame:
+    """Driver-side records (dicts; a missing key is null) -> a local
+    relation over the Arrow path.
+
+    spark.createDataFrame(list_of_dicts) takes the pickled-RDD route:
+    the rows are parallelized over defaultParallelism Python slices and
+    every downstream action pays a Python-worker round-trip per task.
+    A pyarrow Table built column by column with the schema's exact
+    Arrow types becomes a LocalRelation instead: no action over it
+    touches a Python worker, and a projection over it is folded by the
+    optimizer without a Spark job. Value semantics are identical: None
+    -> null via pa.array (never a pandas NaN coercion), ints, strings
+    and doubles exact. If the Arrow conversion fails, the classic path
+    is taken and the fallback is logged on the "idhub_spark" logger.
+    """
+    struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+    try:
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_type
+
+        tbl = pa.table(
+            {
+                f.name: pa.array(
+                    [r.get(f.name) for r in records], type=to_arrow_type(f.dataType)
+                )
+                for f in struct.fields
+            }
+        )
+        return spark.createDataFrame(tbl, schema=struct)
+    except Exception as e:  # noqa: BLE001 - any Arrow failure takes the classic path
+        log.warning(
+            "records_frame: Arrow path failed (%s: %s); falling back to the "
+            "pickled-RDD createDataFrame (slower on every action)",
+            type(e).__name__,
+            e,
+            exc_info=True,
+        )
+        return spark.createDataFrame(records, schema=struct)
 
 
 ALL_TABLES = (

@@ -25,6 +25,8 @@ from collections.abc import Callable, Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from idhub_spark.session import records_frame
+
 
 def fetch_with_retry(
     fn: Callable[[], object],
@@ -59,57 +61,6 @@ REDCAP_METADATA_SCHEMA = (
 _METADATA_FIELDS = [c.split()[0] for c in REDCAP_METADATA_SCHEMA.split(", ")]
 
 
-
-def _records_frame(spark: SparkSession, records: list[dict], schema: StructType | str) -> DataFrame:
-    """Driver-side records -> DataFrame over the ARROW path (r19).
-
-    spark.createDataFrame(list_of_dicts) takes the pickled-RDD route:
-    the rows are parallelized over defaultParallelism Python slices and
-    EVERY downstream action pays a Python-worker round-trip per task —
-    measured 0.4 s fresh but 2-7 s in long benchmark sessions on the
-    r19 host (the degradation tracked Python-task paths specifically).
-    Building a pyarrow Table column-by-column with the schema's exact
-    Arrow types and handing IT to createDataFrame ships the records as
-    Arrow batches into the JVM once; actions over the frame never
-    touch a Python worker. Value semantics are identical: None -> null
-    via pa.array (never a pandas NaN coercion), ints/strings/doubles
-    exact. Any Arrow-unsupported type falls back to the classic path.
-    """
-    struct = (
-        schema
-        if isinstance(schema, StructType)
-        else StructType.fromDDL(schema)
-    )
-    try:
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_type
-
-        tbl = pa.table(
-            {
-                f.name: pa.array(
-                    [r.get(f.name) for r in records],
-                    type=to_arrow_type(f.dataType),
-                )
-                for f in struct.fields
-            }
-        )
-        return spark.createDataFrame(tbl, schema=struct)
-    except Exception as e:
-        # ADVICE r19: never fall back SILENTLY — the pickled-RDD path
-        # is the exact 2-7 s/query degradation this function removes,
-        # and a quiet Arrow regression (type drift, pyarrow absent)
-        # would resurface as an unexplained bench slowdown.
-        import warnings
-
-        warnings.warn(
-            "_records_frame: Arrow path failed "
-            f"({type(e).__name__}: {e}); falling back to the "
-            "pickled-RDD createDataFrame (slower on every action)",
-            stacklevel=2,
-        )
-        return spark.createDataFrame(records, schema=struct)
-
-
 def redcap_metadata(
     spark: SparkSession,
     fetch_dictionary: Callable[[], list[dict]],
@@ -125,7 +76,7 @@ def redcap_metadata(
     """
     records = fetch_with_retry(fetch_dictionary, sleep=sleep)
     rows = [{k: (r.get(k) if r.get(k) != "" else None) for k in _METADATA_FIELDS} for r in records]
-    return _records_frame(spark, rows, REDCAP_METADATA_SCHEMA)
+    return records_frame(spark, rows, REDCAP_METADATA_SCHEMA)
 
 
 class RestSource:
@@ -194,4 +145,4 @@ class RestSource:
         records: list[dict] = []
         for page in self.pages(start_offset):
             records.extend(page)
-        return _records_frame(spark, records, schema)
+        return records_frame(spark, records, schema)

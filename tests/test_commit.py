@@ -738,3 +738,26 @@ def test_hadoop_fs_is_the_only_path_builder():
         if f.name != "commit.py" and "hadoop.fs.Path" in text:
             offenders.append(f"{f.relative_to(pkg)}: builds a Hadoop Path")
     assert not offenders, offenders
+
+
+def test_best_effort_settle_logs_on_idhub_logger(spark, tmp_path, caplog):
+    """A read-only entry point's failed settle is a warning on the
+    "idhub_spark" logger, with the cause attached; the staging stays,
+    and a writing entry point's settle still raises."""
+    import logging
+
+    sc = commit.StagedCommit(spark, str(tmp_path / "idx"), "_delete_staging")
+    sc.commit()
+
+    def apply():
+        raise RuntimeError("read-only storage")
+
+    with caplog.at_level(logging.WARNING, logger="idhub_spark"):
+        sc.settle(apply, best_effort=True)
+    (rec,) = [r for r in caplog.records if r.name == "idhub_spark"]
+    assert rec.levelno == logging.WARNING
+    assert "could not settle pending delete staging" in rec.getMessage()
+    assert "read-only storage" in str(rec.exc_info[1])
+    assert sc.exists()
+    with pytest.raises(RuntimeError, match="read-only storage"):
+        sc.settle(apply)

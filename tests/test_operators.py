@@ -24,6 +24,7 @@ from idhub_spark.functions.expressions import (
 from idhub_spark.operators.centers import fuzzy_match_names, levenshtein_ratio
 from idhub_spark.operators.changes import classify_changes
 from idhub_spark.operators.conflicts import apply_resolutions, detect_conflicts, find_duplicates
+from idhub_spark.operators import identity
 from idhub_spark.operators.identity import (
     link_back,
     resolve_identities,
@@ -334,37 +335,49 @@ def _mixed_batch(spark):
 
 
 def test_resolution_result_is_materialized(spark):
-    """resolve_identities returns a materialized frame: the mint runs
-    once, so a per-query mint time (current_timestamp() freezes when a
-    query is planned) yields the same GSIDs in every query over the
-    result. A derived frame is planned anew, as each pipeline sink is."""
+    """resolve_identities returns a materialized frame on both paths:
+    the mint runs once, so a per-query mint time (current_timestamp()
+    freezes when a query is planned) yields the same GSIDs in every
+    query over the result. A derived frame is planned anew, as each
+    pipeline sink is."""
     import time
 
-    res = resolve_identities(
-        _mixed_batch(spark),
-        _registry(spark),
-        batch_salt="b",
-        mint_ts_ms=F.unix_millis(F.current_timestamp()),
-    )
-    first = sorted(res.collect())
-    time.sleep(0.05)
-    second = sorted(res.select("*").collect())
-    assert first == second
-    assert {r.action for r in first} >= {"create_new", "link_existing"}
+    args = (_mixed_batch(spark), _registry(spark), None, True)
+    mint_ts = F.unix_millis(F.current_timestamp())
+    for path, res in (
+        ("spark", identity._resolve_spark(*args, mint_ts, "b", None)),
+        ("driver", identity._resolve_local(*args, mint_ts, "b")),
+    ):
+        first = sorted(res.collect())
+        time.sleep(0.05)
+        second = sorted(res.select("*").collect())
+        assert first == second, path
+        assert {r.action for r in first} >= {"create_new", "link_existing"}
 
 
 def test_resolution_reliable_checkpoint_same_rows(spark, tmp_path):
-    """With spark.idhub.cc.checkpointDir set, the resolution's
+    """With spark.idhub.cc.checkpointDir set, the Spark path's
     materialization points checkpoint reliably like the CC loop does,
-    and the rows match the executor-local default."""
+    and the rows match the executor-local default. The driver path
+    checkpoints nothing."""
     import os
 
     reg = _registry(spark)
 
-    def run(**kw):
-        return sorted(resolve_identities(_mixed_batch(spark), reg, batch_salt="b", **kw).collect())
+    def run(cc=True):
+        res = identity._resolve_spark(_mixed_batch(spark), reg, None, cc, None, "b", None)
+        return sorted(res.collect())
 
-    local, local_no_cc = run(), run(within_batch_cc=False)
+    driver_ck = tmp_path / "ckpt_driver"
+    try:
+        spark.conf.set("spark.idhub.cc.checkpointDir", str(driver_ck))
+        driver = sorted(resolve_identities(_mixed_batch(spark), reg, batch_salt="b").collect())
+    finally:
+        spark.conf.unset("spark.idhub.cc.checkpointDir")
+    assert not [d for _, dirs, _ in os.walk(driver_ck) for d in dirs if d.startswith("rdd-")]
+
+    local, local_no_cc = run(), run(cc=False)
+    assert local == driver
     ck = tmp_path / "ckpt_no_cc"
     try:
         spark.conf.set("spark.idhub.cc.checkpointDir", str(tmp_path / "ckpt"))
@@ -372,13 +385,62 @@ def test_resolution_reliable_checkpoint_same_rows(spark, tmp_path):
         # without the CC loop every checkpoint written is one of the
         # resolution's own materialization points
         spark.conf.set("spark.idhub.cc.checkpointDir", str(ck))
-        reliable_no_cc = run(within_batch_cc=False)
+        reliable_no_cc = run(cc=False)
     finally:
         spark.conf.unset("spark.idhub.cc.checkpointDir")
     assert reliable == local
     assert reliable_no_cc == local_no_cc
     rdds = [d for _, dirs, _ in os.walk(ck) for d in dirs if d.startswith("rdd-")]
     assert rdds, "the materialization points ignored the reliable mode"
+
+
+def _fragment_batch(spark, n=500):
+    """n candidate rows shaped like an upload: registry links (mixed
+    case), a conflict, lone mints and three-record chains over new ids."""
+    rows = []
+    for k in range(n // 2):
+        if k % 50 == 0:
+            rows += [(k, "ibdgc-001", "consortium"), (k, "SHARED-X", "site")]
+        elif k % 3 == 0:
+            rows += [(k, f"CH-{k}", "consortium"), (k, f"CH-{k + 1}", "site")]
+        elif k % 3 == 1:
+            rows += [(k, f"CH-{k}", "consortium"), (k, f"NEW-{k}", "site")]
+        else:
+            rows += [(k, f"IBDGC-00{1 + k % 3}", "consortium"), (k, f"LONE-{k}", "site")]
+    return spark.createDataFrame(rows[:n], ["record_key", "local_subject_id", "identifier_type"])
+
+
+def test_local_resolution_job_budget_and_cap(spark, monkeypatch):
+    """A 500-row batch resolves on the driver in at most 3 Spark jobs
+    (its ids, their registry hits, the registry's copies of its mints);
+    one row over the cap takes the Spark path and returns the same
+    rows."""
+    batch, reg = _fragment_batch(spark), _registry(spark)
+    n = batch.count()
+    spark_path = []
+    cc_runtime = identity._cc_runtime
+    monkeypatch.setattr(
+        identity, "_cc_runtime", lambda *a, **k: spark_path.append(1) or cc_runtime(*a, **k)
+    )
+
+    def run(cap):
+        monkeypatch.setattr(identity, "_LOCAL_MAX_ROWS", cap)
+        return resolve_identities(batch, reg, batch_salt="b")
+
+    sc = spark.sparkContext
+    sc.setJobGroup("idhub-local-resolve", "driver-path resolve_identities")
+    try:
+        local = run(n)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("idhub-local-resolve")
+    assert not spark_path
+    assert 1 <= len(jobs) <= 3, jobs
+    rows = sorted(local.collect())
+    assert {r.action for r in rows} == {"create_new", "link_existing", "conflict_resolved"}
+    assert sorted(run(n - 1).collect()) == rows
+    assert spark_path
 
 
 # --- change classification / merge ----------------------------------------

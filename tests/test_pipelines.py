@@ -242,6 +242,32 @@ def test_redcap_sync_end_to_end(spark):
     assert frags["GSID-EXISTING000100A"] == {"blood": ["SP-1"], "wes": ["WES-1"]}
 
 
+def test_records_frame_arrow_fallback_is_logged(spark, monkeypatch, caplog):
+    """records_frame builds a local relation over Arrow; when the Arrow
+    conversion fails it takes the classic path with the same rows and
+    says so on the "idhub_spark" logger."""
+    import logging
+
+    import pyarrow
+
+    from idhub_spark.session import records_frame
+
+    rows = [{"k": 1, "s": "a"}, {"k": 2}]
+    arrow = records_frame(spark, rows, "k int, s string")
+    assert "LocalTableScan" in arrow._jdf.queryExecution().executedPlan().toString()
+
+    def broken(*a, **k):
+        raise pyarrow.ArrowInvalid("no arrow today")
+
+    monkeypatch.setattr(pyarrow, "table", broken)
+    with caplog.at_level(logging.WARNING, logger="idhub_spark"):
+        classic = records_frame(spark, rows, "k int, s string")
+    assert sorted(classic.collect()) == sorted(arrow.collect())
+    (rec,) = [r for r in caplog.records if r.name == "idhub_spark"]
+    assert rec.levelno == logging.WARNING
+    assert "records_frame: Arrow path failed (ArrowInvalid: no arrow today)" in rec.getMessage()
+
+
 def test_rest_source_pagination_and_retry(spark):
     pages = {0: [{"id": 1}, {"id": 2}], 2: [{"id": 3}], 3: []}
     calls = {"n": 0, "fail_once": True}

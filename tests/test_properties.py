@@ -105,6 +105,170 @@ def test_mint_uniqueness_randomized(spark):
             seen[r.global_subject_id] = key
 
 
+def _assert_paths_agree(label, ids_long, registry, *, aliases=None, within_batch_cc=True,
+                        mint_ts_ms=None, batch_salt=""):
+    """resolve_identities' Spark path and its driver path return the
+    same schema and rows for one batch; returns the rows, sorted by
+    record_key."""
+    from idhub_spark.operators import identity
+
+    args = (ids_long, registry, aliases, within_batch_cc, mint_ts_ms, batch_salt)
+    local = identity._resolve_local(*args)
+    assert local is not None, label
+    out = [
+        (df.schema, sorted(df.collect(), key=lambda r: r.record_key))
+        for df in (identity._resolve_spark(*args, None), local)
+    ]
+    (spark_schema, spark_rows), (local_schema, local_rows) = out
+    assert local_schema == spark_schema, label
+    assert local_rows == spark_rows, label
+    return spark_rows
+
+
+def test_local_resolution_matches_spark_path(spark):
+    """The driver path of resolve_identities returns the Spark path's
+    rows and schema exactly: record_key, action, GSID, matched_gsids,
+    requires_review and component, over randomized graphs, chains,
+    bridged registry GSIDs, aliases, every created_at shape, mixed-case
+    and non-ASCII ids, within_batch_cc=False and an empty batch."""
+    from tests.test_operators import _mixed_batch, _registry
+
+    def reg_of(rows, created_type="string"):
+        return spark.createDataFrame(
+            rows, "local_subject_id string, global_subject_id string, created_at string"
+        ).withColumn("created_at", F.col("created_at").cast(created_type))
+
+    for seed in range(6):
+        edges, registry_ids = _scenario(seed)
+        ids = spark.createDataFrame([(rec, f"ID-{i}", "t") for rec, i in edges], COLS)
+        # every third registry row has no created_at: it sorts last
+        registry = reg_of(
+            [
+                (f"id-{i}", f"GSID-REG{i:04d}AAAAAAAAA", f"20{10 + i}-01-01" if i % 3 else None)
+                for i in registry_ids
+            ]
+        )
+        for cc in (True, False):
+            _assert_paths_agree(
+                f"seed {seed} cc={cc}", ids, registry, within_batch_cc=cc, batch_salt=f"s{seed}"
+            )
+
+    for cc in (True, False):
+        rows = _assert_paths_agree(
+            f"mixed batch cc={cc}",
+            _mixed_batch(spark),
+            _registry(spark),
+            batch_salt="b",
+            within_batch_cc=cc,
+        )
+        assert {r.action for r in rows} == {"create_new", "link_existing", "conflict_resolved"}
+
+    # one component bridging two registry GSIDs, with the older one
+    # lexically last; plus records holding the same identifier set, whose
+    # mints collide within the batch when within_batch_cc is off
+    bridge = spark.createDataFrame(
+        [
+            (40, "OLDEST-ID", "t"), (40, "BR-X", "t"),
+            (41, "NEWER-ID", "t"), (41, "BR-X", "t"),
+            (42, "BR-X", "t"),
+            (43, "TWIN", "t"), (44, "twin", "t"), (45, "TWIN", "t"),
+        ],
+        COLS,
+    )
+    for created_type, old, new in (
+        ("string", "2019-01-01", "2023-01-01"),
+        ("timestamp", "2019-01-01 00:00:00", "2023-01-01 00:00:00"),
+        ("string", None, "2023-01-01"),  # NULL created_at sorts last
+        ("string", None, None),  # then the lexically smaller GSID wins
+    ):
+        registry = reg_of(
+            [("OLDEST-ID", "GSID-ZZZ9", old), ("NEWER-ID", "GSID-AAA1", new)], created_type
+        )
+        for cc in (True, False):
+            rows = _assert_paths_agree(
+                f"bridge {created_type} {old} cc={cc}",
+                bridge,
+                registry,
+                batch_salt="x",
+                within_batch_cc=cc,
+            )
+            twins = {r.global_subject_id for r in rows if r.record_key in (43, 44, 45)}
+            assert len(twins) == (1 if cc else 3)
+
+    aliases = spark.createDataFrame(
+        [
+            ("OLD-ALIAS", "GSID-VIAALIAS", "2010-01-01"),
+            ("Ünï-Alias", "GSID-UNI", None),
+            ("O'Brien\\${spark.app.name}", "GSID-QUOTED", "2012-01-01"),
+        ],
+        ["alias", "global_subject_id", "created_at"],
+    )
+    # string record keys (the component is their minimum), mixed case
+    # and non-ASCII ids, an id the driver path's IN list must write as a
+    # binary literal, and a minted component whose seed order is byte
+    # order ('zeta_b' < 'zetab', unlike their upper case)
+    text = spark.createDataFrame(
+        [
+            ("r-b", "old-alias", "t"), ("r-b", "IBDGC-001", "t"),
+            ("r-a", "ünï-alias", "t"),
+            ("r-é", "Straße-1", "t"), ("r-é", "Zeta-1", "t"), ("r-é", "zetab", "t"),
+            ("r-z", "STRASSE-1", "t"), ("r-z", "zeta-1", "t"), ("r-z", "Ωmega", "t"),
+            ("r-z", "Zeta_b", "t"),
+            ("r-Ω", "ÉCOLE", "t"), ("r-e", "école", "t"), ("r-e", "İstanbul", "t"),
+            ("r-q", "o'brien\\${spark.app.name}", "t"),
+        ],
+        "record_key string not null, local_subject_id string, identifier_type string",
+    )
+    for cc in (True, False):
+        _assert_paths_agree(
+            f"text keys cc={cc}",
+            text,
+            _registry(spark),
+            aliases=aliases,
+            batch_salt="ü",
+            within_batch_cc=cc,
+            mint_ts_ms=F.lit(1712345678901),
+        )
+
+    empty = spark.createDataFrame(
+        [], "record_key int, local_subject_id string, identifier_type string"
+    )
+    rows = _assert_paths_agree("empty batch", empty, _registry(spark))
+    assert rows == []
+
+
+def test_local_resolution_mint_collisions_match_spark_path(spark):
+    """A registry holding a component's first-choice mint re-mints it
+    with the '!' retry salt and no review flag; a registry holding both
+    the first choice and the retry flags requires_review. Both paths
+    agree on each step."""
+    from tests.test_operators import _mixed_batch, _registry
+
+    def resolve(registry):
+        return _assert_paths_agree(
+            "mint collision", _mixed_batch(spark), registry, batch_salt="s"
+        )
+
+    def poisoned(gsids):
+        return _registry(spark).union(
+            spark.createDataFrame(
+                [(f"OTHER-{n}", g, "2020-06-06") for n, g in enumerate(gsids)],
+                ["local_subject_id", "global_subject_id", "created_at"],
+            )
+        )
+
+    first = {r.record_key: r for r in resolve(_registry(spark))}
+    lone = first[3].global_subject_id  # record 3 mints alone
+    retried = {r.record_key: r for r in resolve(poisoned([lone]))}
+    assert retried[3].global_subject_id != lone
+    assert retried[3].action == "create_new" and not retried[3].requires_review
+    assert retried[4] == first[4]
+    both = {r.record_key: r for r in resolve(poisoned([lone, retried[3].global_subject_id]))}
+    assert both[3].requires_review
+    assert both[3].global_subject_id == retried[3].global_subject_id
+    assert not both[4].requires_review
+
+
 def test_merge_random_schema_subsets(spark):
     """merge_upsert with a randomly-narrowed incoming schema never
     loses current-only columns and stays idempotent."""
